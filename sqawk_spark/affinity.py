@@ -13,8 +13,9 @@ string→numeric coercion in comparisons/arithmetic.
 
 SQLite's cross-type ordering (NULL < numbers < text < blob,
 datatype3.html §4.1) is reproduced at query time: every loaded column
-records its storage treatment in :data:`COLUMN_CLASSES`, and the
-dialect layer rewrites comparisons / ORDER BY / min-max over columns
+records its storage treatment in its run's column-class map
+(``TableLoader.classes``, filled by ``sources.base.build_table``), and
+the dialect layer rewrites comparisons / ORDER BY / min-max over columns
 that can hold mixed storage classes onto an order-preserving struct
 key (``dialect._aff_key_col_sql``) whose Spark struct comparison IS the SQLite
 value order — including integers beyond 2^53 and the int64/real
@@ -85,13 +86,9 @@ def normalize_affinity(decl: str) -> str:
 #
 # sqawk column names are globally unique (each file gets its own
 # prefix: a1.., b1..), so one flat map keyed by lowercase name serves
-# every statement; a resident session's next CLI run re-records its
-# tables over the old entries.
-COLUMN_CLASSES: dict[str, str] = {}
-
-
-def record_column_class(name: str, cls: str) -> None:
-    COLUMN_CLASSES[name.lower()] = cls
+# every statement. The map belongs to the run: sources.base.TableLoader
+# owns it (``loader.classes``), build_table fills it, and the CLI hands
+# it to the dialect and DML layers.
 
 
 def column_class_for(decl: str, promoted: bool) -> str:

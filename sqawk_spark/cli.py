@@ -255,11 +255,6 @@ def run(argv: list[str], out=None) -> int:
         if t.isTemporary and t.namespace == []:
             spark.catalog.dropTempView(t.name)
     register_udfs(spark)
-    # fresh storage-class catalog too: a resident session must not
-    # classify this run's columns from a previous run's declarations
-    from sqawk_spark.affinity import COLUMN_CLASSES
-
-    COLUMN_CLASSES.clear()
     loader = TableLoader(spark)
 
     tmp_files = []
@@ -303,7 +298,7 @@ def run(argv: list[str], out=None) -> int:
             # the driver (toLocalIterator); a big result belongs in
             # columnar files written by the executors instead
             return _run_parquet_output(
-                spark, serializer_spec, script, dbfile=opts["dbfile"]
+                spark, serializer_spec, script, loader.classes, opts["dbfile"]
             )
         if serializer_spec.startswith("awk"):
             # OFS/ORS come from the global flags for the awk serializer
@@ -348,13 +343,16 @@ def run(argv: list[str], out=None) -> int:
                 target = maybe_run_dml(
                     spark,
                     stmt,
-                    lambda sql: _run_statement(spark, sql, known_cols),
+                    lambda sql: _run_statement_with(
+                        spark, sql, known_cols, loader.classes
+                    ),
+                    loader.classes,
                 )
                 if target:
                     mutated.append(target)
                     continue
                 stmt = append_scan_order(stmt, nr_by_table)
-                df = _run_statement(spark, stmt, known_cols)
+                df = _run_statement_with(spark, stmt, known_cols, loader.classes)
                 names = df.columns
                 for row in df.toLocalIterator():
                     ser.row(names, [render_value(v) for v in row])
@@ -375,23 +373,6 @@ def run(argv: list[str], out=None) -> int:
                 os.unlink(p)
             except OSError:
                 pass
-        # a resident session must not accumulate executor storage
-        # across unrelated CLI runs (dedup index/pair caches persist
-        # DataFrames keyed by session)
-        try:
-            from sqawk_spark.operators.dedup import clear_caches
-
-            clear_caches(spark)
-        except Exception:
-            pass
-        try:
-            from sqawk_spark.operators.textstats import (
-                clear_caches as clear_text_caches,
-            )
-
-            clear_text_caches(spark)
-        except Exception:
-            pass
         # large -dbfile read-backs spill to /tmp parquet dirs; their
         # temp views die with this run, so reclaim the disk now
         try:
@@ -403,7 +384,11 @@ def run(argv: list[str], out=None) -> int:
 
 
 def _run_parquet_output(
-    spark, serializer_spec: str, script: str, dbfile: str | None = None
+    spark,
+    serializer_spec: str,
+    script: str,
+    classes: dict[str, str],
+    dbfile: str | None = None,
 ) -> int:
     """``-output parquet,dir=D[,mode=overwrite][,partitionBy=c1+c2]``:
     each SELECT's result is written by the executors as parquet — no
@@ -434,14 +419,16 @@ def _run_parquet_output(
     stmts = split_statements(script)
     selects = []
     mutated: list[str] = []
+
+    def run_sql(sql: str):
+        return _run_statement_with(spark, sql, known_cols, classes)
+
     for stmt in stmts:
-        t = maybe_run_dml(
-            spark, stmt, lambda sql: _run_statement(spark, sql, known_cols)
-        )
+        t = maybe_run_dml(spark, stmt, run_sql, classes)
         if t:
             mutated.append(t)
             continue
-        selects.append(_run_statement(spark, stmt, known_cols))
+        selects.append(run_sql(stmt))
     for i, df in enumerate(selects, start=1):
         dest = target if len(selects) == 1 else os.path.join(target, f"s{i}")
         writer = df.write.mode(mode)
@@ -455,18 +442,11 @@ def _run_parquet_output(
     return 0
 
 
-def _run_statement(spark, stmt: str, known_cols: set[str]):
-    """spark.sql with SQLite's per-statement double-quote resolution
-    and the load-time storage-class catalog (affinity semantics)."""
-    from sqawk_spark.affinity import COLUMN_CLASSES
-
-    return _run_statement_with(spark, stmt, known_cols, dict(COLUMN_CLASSES))
-
-
 def _run_statement_with(
     spark, stmt: str, known_cols: set[str], classes: dict[str, str]
 ):
-    """spark.sql with SQLite's per-statement double-quote resolution.
+    """spark.sql with SQLite's per-statement double-quote resolution,
+    under the loaded columns' storage classes (affinity semantics).
 
     The rewriter flips ``"name"`` to an identifier whenever *any*
     loaded table has that column, but SQLite resolves the fallback in

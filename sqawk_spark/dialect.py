@@ -3855,7 +3855,7 @@ def rewrite_date_calls(stmt: str) -> str:
 # ---------------------------------------------------------------------
 # SQLite storage-class comparison semantics (datatype3.html §4).
 #
-# Loaded columns record a storage treatment in affinity.COLUMN_CLASSES
+# Loaded columns record a storage treatment in TableLoader.classes
 # ('long' | 'dynamic' | 'text' | 'none' — affinity.py). SQLite orders
 # values NULL < numeric < text and first applies affinity to the other
 # comparison operand; Spark instead coerces both sides to one type
@@ -8509,7 +8509,7 @@ def rewrite_predicate_values(stmt: str, classes: dict[str, str]) -> str:
 
 def rewrite_affinity_semantics(stmt: str, classes: dict[str, str]) -> str:
     """All SQLite storage-class passes, driven by the load-time column
-    catalog (affinity.COLUMN_CLASSES, snapshotted by the CLI); a no-op
+    catalog (TableLoader.classes, passed in by the CLI); a no-op
     when no affinity-typed tables are loaded."""
     if not classes:
         # raw SQLite type names (TEXT/NUMERIC) must always translate,

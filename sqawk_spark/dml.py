@@ -106,13 +106,14 @@ def _split_top_commas(s: str) -> list[str]:
 
 
 def maybe_run_dml(
-    spark: SparkSession, stmt: str, run_sql
+    spark: SparkSession, stmt: str, run_sql, classes: dict[str, str]
 ) -> str | None:
     """Execute ``stmt`` if it is a DML/DDL statement; return the name
     of the mutated table (truthy — callers branch on it, and the CLI
     uses it to write mutated views back to ``-dbfile``), or None for
     non-DML. ``run_sql(sql) -> DataFrame`` is the CLI's statement
-    runner (dialect rewrites + double-quote resolution applied)."""
+    runner (dialect rewrites + double-quote resolution applied);
+    ``classes`` maps the loaded columns to their storage classes."""
     s = stmt.strip().rstrip(";").strip()
 
     m = _DROP_RE.match(stmt)
@@ -244,10 +245,9 @@ def maybe_run_dml(
             # numeric-as-boolean coercion must apply HERE — wrapped
             # under IS NOT TRUE the statement-level pass reads the
             # body as already-boolean
-            from sqawk_spark.affinity import COLUMN_CLASSES
             from sqawk_spark.dialect import boolify_condition
 
-            cond = boolify_condition(rest[5:], dict(COLUMN_CLASSES))
+            cond = boolify_condition(rest[5:], classes)
             new = run_sql(
                 f"SELECT * FROM {name} WHERE ({cond}) IS NOT TRUE"
             )

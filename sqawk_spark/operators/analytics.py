@@ -26,6 +26,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sqawk_spark.operators.registry import query
+from sqawk_spark.operators.session_cache import SessionCache
 from sqawk_spark.operators.tables import load_tables
 
 
@@ -423,9 +424,9 @@ def udaf_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# bucketed tables are written once per (session, sf_dir); the tag keeps
-# scale factors apart in the shared warehouse database
-_BUCKETED: set[tuple[int, str]] = set()
+# bucketed tables are written once per session and sf_dir; the tag
+# keeps scale factors apart in the shared warehouse database
+_BUCKETED = SessionCache()
 N_BUCKETS = 16
 
 
@@ -449,8 +450,8 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-located buckets. Result identical to the plain join (oracle)."""
     tag = "sf" + "".join(c for c in sf_dir if c.isdigit())
     li_name, o_name = f"bucketdb.lineitem_{tag}", f"bucketdb.orders_{tag}"
-    key = (id(spark), sf_dir)
-    if key not in _BUCKETED:
+
+    def write() -> bool:
         # fresh per-process location: the default warehouse dir outlives
         # the in-memory catalog, and saveAsTable refuses to create a
         # "new" table over a leftover directory
@@ -477,7 +478,9 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .format("parquet")
             .saveAsTable(o_name)
         )
-        _BUCKETED.add(key)
+        return True
+
+    _BUCKETED.get_or_build(spark, (sf_dir,), write)
     li = spark.table(li_name)
     o = spark.table(o_name)
     return (

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqawk_spark.operators.registry import query
+from sqawk_spark.operators.session_cache import SessionCache
 from sqawk_spark.operators.tables import load_tables
 
 # Shingles seen in more than MAX_DF documents are dropped from the
@@ -111,33 +112,14 @@ _SHINGLE_SQL = f"""
 
 # The filtered inverted index is reused by four downstream plans (both
 # self-join sides, the size table, and the MinHash verifier); persist
-# it per (session, sf_dir) so the text parse + explode runs once.
+# it so the text parse + explode runs once.
 # At cluster scale this is the standard persist-the-index pattern
 # (MEMORY_AND_DISK: spills instead of OOMing on big corpora).
-_INDEX_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def clear_caches(spark: SparkSession | None = None) -> None:
-    """Unpersist and drop the per-session index/pair caches.
-
-    A resident session (the CLI, a notebook) otherwise accumulates
-    executor storage for every (session, sf_dir) it ever deduped
-    (VERDICT r02 next-round #8). With ``spark`` given, only that
-    session's entries are released; with None, all of them.
-    """
-    for cache in (_INDEX_CACHE, _PAIRS_CACHE):
-        for key in [
-            k for k in cache if spark is None or k[0] == id(spark)
-        ]:
-            try:
-                cache.pop(key).unpersist()
-            except Exception:  # session already stopped — nothing to free
-                pass
+_INDEX_CACHE = SessionCache()
 
 
 def _shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _INDEX_CACHE:
+    def build() -> DataFrame:
         from pyspark import StorageLevel
 
         # The index holds xxhash64 gram ids (hashed inside _shingles):
@@ -160,14 +142,14 @@ def _shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # partitioning and ordering). Without the pin the layout
         # depended on whether AQE broadcast the df-cap side, which
         # varies by scale factor.
-        filtered = (
+        return (
             grams.join(df_cap, "g")
             .repartition("g")
             .sortWithinPartitions("g")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        _INDEX_CACHE[key] = filtered
-    return _INDEX_CACHE[key]
+
+    return _INDEX_CACHE.get_or_build(spark, (sf_dir,), build)
 
 
 def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -785,10 +767,26 @@ _CLUSTER_SQL = f"""
 """
 
 
-# Materialized near-dup pair graph per (session, sf_dir) — reused
-# across the component paths and repeated calls (same pattern as
-# _INDEX_CACHE: a resident engine keeps its inverted structures warm).
-_PAIRS_CACHE: dict[tuple[int, str], DataFrame] = {}
+# Materialized near-dup pair graph — reused across the component paths,
+# the graph family and repeated calls (same pattern as _INDEX_CACHE: a
+# resident engine keeps its inverted structures warm).
+_PAIRS_CACHE = SessionCache()
+
+
+def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b) edges of the exact near-dup graph, persisted."""
+
+    def build() -> DataFrame:
+        from pyspark import StorageLevel
+
+        return (
+            _jaccard_pairs(spark, sf_dir)
+            .select("doc_a", "doc_b")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+
+    return _PAIRS_CACHE.get_or_build(spark, (sf_dir,), build)
+
 
 # Above this many near-dup pairs the components are solved by
 # distributed label propagation; below it, driver-side union-find
@@ -828,17 +826,9 @@ def dedup_clusters(
     components as a recursive-CTE transitive closure — feasible for
     DuckDB at test SF, quadratic at scale, which is exactly why the
     engine side doesn't."""
-    key = (id(spark), sf_dir)
-    if key not in _PAIRS_CACHE:
-        from pyspark import StorageLevel
-
-        _PAIRS_CACHE[key] = (
-            _jaccard_pairs(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    pairs = _PAIRS_CACHE[key]
-    return _connected_components(spark, pairs, driver_limit)
+    return _connected_components(
+        spark, _near_dup_pairs(spark, sf_dir), driver_limit
+    )
 
 
 def _connected_components(
@@ -1111,25 +1101,25 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE transitive closure — feasible for DuckDB at test
     SF, quadratic at scale, which is exactly why the engine side
     doesn't."""
-    # persist the pair graph (same cache clear_caches drains): the
-    # component solver consumes it twice (count + collect/propagate),
-    # and without a persist the whole block-pair GEMM would recompute
-    key = (id(spark), sf_dir + "#embedding")
-    if key not in _PAIRS_CACHE:
+    # persist the pair graph: the component solver consumes it twice
+    # (count + collect/propagate), and without a persist the whole
+    # block-pair GEMM would recompute
+    def build() -> DataFrame:
         from pyspark import StorageLevel
 
         t = load_tables(spark, sf_dir, ("embeddings",))
         e = t["embeddings"].select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
-        _PAIRS_CACHE[key] = (
+        return (
             _embedding_pairs_blocked(e, 0.4)
             .select(
                 F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-    pairs = _PAIRS_CACHE[key]
+
+    pairs = _PAIRS_CACHE.get_or_build(spark, (sf_dir, "embedding"), build)
     return _connected_components(spark, pairs, _DRIVER_PAIR_LIMIT).select(
         F.col("doc_id").alias("vec_id"),
         F.col("canonical_doc_id").alias("canonical_vec_id"),

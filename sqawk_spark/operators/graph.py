@@ -24,13 +24,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqawk_spark.operators.registry import query
+from sqawk_spark.operators.session_cache import SessionCache
 
 _PR_SCALE = 1_000_000_000_000  # rank units: 1e-12 of total mass
 _PR_ROUNDS = 3
 
 
 # Shared symmetric-edge frame with BOTH endpoint degrees attached,
-# persisted per (session, sf_dir): PageRank consumes (src, dst, deg);
+# cached per session: PageRank consumes (src, dst, deg);
 # triangle counting orients edges by comparing (deg, src) to
 # (deg_dst, dst) with ZERO further joins. One build serves the family
 # — the same resident-structure pattern as dedup's _PAIRS_CACHE.
@@ -53,10 +54,10 @@ _PR_ROUNDS = 3
 # replaces the lineage with a LogicalRDD leaf that KEEPS the pinned
 # hash(src) partitioning and src ordering, so consumers see the same
 # layout from a ~50-line plan. Recomputability of the cached frame is
-# lost on executor failure (acceptable for a session-scoped derived
-# cache: the builder just re-derives it), and the node count rides
+# lost on executor failure (the entry stays until _GRAPH_CACHE.release
+# drops it and the next call rebuilds), and the node count rides
 # along so PageRank stops paying one count() job per run.
-_GRAPH_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame, int]] = {}
+_GRAPH_CACHE = SessionCache()
 
 
 def _graph_frames(
@@ -64,19 +65,10 @@ def _graph_frames(
 ) -> tuple[DataFrame, DataFrame, int]:
     """(edges_with_degrees, degrees, n_nodes) — frames materialized by
     localCheckpoint, edges partitioned and sorted by src."""
-    from pyspark import StorageLevel
+    from sqawk_spark.operators.dedup import _near_dup_pairs
 
-    from sqawk_spark.operators.dedup import _PAIRS_CACHE, _jaccard_pairs
-
-    key = (id(spark), sf_dir)
-    if key not in _GRAPH_CACHE:
-        if key not in _PAIRS_CACHE:
-            _PAIRS_CACHE[key] = (
-                _jaccard_pairs(spark, sf_dir)
-                .select("doc_a", "doc_b")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-        pairs = _PAIRS_CACHE[key]
+    def build() -> tuple[DataFrame, DataFrame, int]:
+        pairs = _near_dup_pairs(spark, sf_dir)
         edges = pairs.select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
         ).unionAll(
@@ -112,9 +104,9 @@ def _graph_frames(
         # cache: the teleport scalar is a property of the graph, and
         # re-running a count() job per PageRank run was pure overhead
         # (same footer-stats lesson as events_late_drop, guide §5)
-        n = deg.count()
-        _GRAPH_CACHE[key] = (edges_deg, deg, n)
-    return _GRAPH_CACHE[key]
+        return edges_deg, deg, deg.count()
+
+    return _GRAPH_CACHE.get_or_build(spark, (sf_dir,), build)
 
 
 def _sym_edges_with_deg(spark: SparkSession, sf_dir: str) -> DataFrame:

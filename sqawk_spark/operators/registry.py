@@ -33,6 +33,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sqawk_spark.operators.session_cache import SessionCache
+
 Builder = Callable[[SparkSession, str], DataFrame]
 
 # r12: session-scoped PREPARED-PLAN handles — the query-level analogue
@@ -134,26 +136,7 @@ PREPARED_PLAN_QUERIES = frozenset(
     }
 )
 
-_PREPARED: dict[tuple[int, str, str, str], DataFrame] = {}
-
-
-def _session_key(spark: SparkSession) -> tuple[int, str]:
-    """(id, applicationId): id() alone can be reused by a new session
-    after GC (ADVICE r11 #3); the applicationId makes a stale hit
-    impossible."""
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:  # stopped context — never cache against it
-        app = "<stopped>"
-    return (id(spark), app)
-
-
-def clear_prepared(spark: SparkSession | None = None) -> None:
-    """Drop prepared-plan handles (all sessions, or one)."""
-    for key in [
-        k for k in _PREPARED if spark is None or k[0] == id(spark)
-    ]:
-        _PREPARED.pop(key, None)
+_PREPARED = SessionCache()
 
 
 def _prepare(name: str, fn: Builder) -> Builder:
@@ -163,13 +146,9 @@ def _prepare(name: str, fn: Builder) -> Builder:
             # parameterized call (non-default threshold/limit): the
             # plan is no longer the per-(session, sf_dir) constant
             return fn(spark, sf_dir, *args, **kwargs)
-        sid, app = _session_key(spark)
-        key = (sid, app, sf_dir, name)
-        df = _PREPARED.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            _PREPARED[key] = df
-        return df
+        return _PREPARED.get_or_build(
+            spark, (sf_dir, name), lambda: fn(spark, sf_dir)
+        )
 
     return wrapper
 

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sqawk_spark.operators.session_cache import SessionCache
+
 TABLES = (
     "region",
     "nation",
@@ -41,12 +43,11 @@ TABLES = (
 #     session's default parallelism — i.e. the scan is actually
 #     starved, which on any real 100 TB layout (thousands of row
 #     groups) is never true, making this a no-op at scale; and
-#   * the table is small enough (SQAWK_SPARK_SPREAD_MAX_BYTES,
-#     default 1 GiB) that the extra round-robin exchange is trivially
-#     cheap relative to the serial map work it unlocks.
+#   * the table is at most 1 GiB, so the extra round-robin exchange
+#     is trivially cheap relative to the serial map work it unlocks.
 # Call sites opt in per table (`spread=` below) where the downstream
-# map work is known to dominate; SQAWK_SPARK_SPREAD=off disables the
-# whole mechanism.
+# map work is known to dominate.
+_SPREAD_MAX_BYTES = 1 << 30
 _SPLITS_CACHE: dict[str, tuple[int, int]] = {}
 
 
@@ -99,14 +100,9 @@ def table_rows(sf_dir: str, name: str) -> int | None:
 
 
 def _maybe_spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    if os.environ.get("SQAWK_SPARK_SPREAD", "auto") == "off":
-        return df
     target = spark.sparkContext.defaultParallelism
-    max_bytes = int(
-        os.environ.get("SQAWK_SPARK_SPREAD_MAX_BYTES", str(1 << 30))
-    )
     groups, size = _natural_splits(path)
-    if groups >= target or size > max_bytes:
+    if groups >= target or size > _SPREAD_MAX_BYTES:
         return df
     return df.repartition(target)
 
@@ -119,19 +115,30 @@ def _maybe_spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
 # ~100 ms of driver-side listing + footer reads PER TABLE PER QUERY
 # (measured; a resident engine registers its catalog once, which is
 # what this is).
-# r12 (ADVICE r11 #3): the key carries the applicationId in addition
-# to id(spark) — CPython can reuse an id after a stopped session is
-# garbage-collected, which would hand back handles bound to a dead
-# SparkContext.
-_DF_CACHE: dict[tuple[int, str, str, str, bool], DataFrame] = {}
+_DF_CACHE = SessionCache()
 
 
-def _session_key(spark: SparkSession) -> tuple[int, str]:
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:  # stopped context — never match a cached entry
-        app = "<stopped>"
-    return (id(spark), app)
+def _read_table(
+    spark: SparkSession, sf_dir: str, name: str, spread: bool
+) -> DataFrame:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events":
+        # Normalize events.ts to TIMESTAMP (LTZ; session tz is
+        # pinned to UTC) regardless of how the data generation
+        # wrote it. TIMESTAMP(NANOS) parquet, which Spark refuses
+        # by default, is read as raw nanos and truncated to micros
+        # — exactly what DuckDB's reader does; TIMESTAMP(MICROS)
+        # arrives as TIMESTAMP_NTZ and is reinterpreted in UTC.
+        # Either way both engines see identical timestamps.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
+        if isinstance(df.schema["ts"].dataType, T.LongType):
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    else:
+        df = spark.read.parquet(path)
+    return _maybe_spread(spark, df, path) if spread else df
 
 
 def load_tables(
@@ -148,42 +155,13 @@ def load_tables(
     (see `_maybe_spread` above) when the gate allows it.
     """
     out: dict[str, DataFrame] = {}
-    sid, app = _session_key(spark)
     for name in names:
-        do_spread = (
-            name in spread
-            or os.environ.get("SQAWK_SPARK_SPREAD") == "all"
+        do_spread = name in spread
+        df = _DF_CACHE.get_or_build(
+            spark,
+            (sf_dir, name, do_spread),
+            lambda: _read_table(spark, sf_dir, name, do_spread),
         )
-        key = (sid, app, sf_dir, name, do_spread)
-        cached = _DF_CACHE.get(key)
-        if cached is not None:
-            cached.createOrReplaceTempView(name)
-            out[name] = cached
-            continue
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if name == "events":
-            # Normalize events.ts to TIMESTAMP (LTZ; session tz is
-            # pinned to UTC) regardless of how the data generation
-            # wrote it. TIMESTAMP(NANOS) parquet, which Spark refuses
-            # by default, is read as raw nanos and truncated to micros
-            # — exactly what DuckDB's reader does; TIMESTAMP(MICROS)
-            # arrives as TIMESTAMP_NTZ and is reinterpreted in UTC.
-            # Either way both engines see identical timestamps.
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-            if isinstance(df.schema["ts"].dataType, T.LongType):
-                df = df.withColumn(
-                    "ts", F.timestamp_micros(F.expr("ts div 1000"))
-                )
-            elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        else:
-            df = spark.read.parquet(path)
-        if do_spread:
-            # "all" is a measurement override (A/B the gate globally);
-            # production call sites opt in per table instead.
-            df = _maybe_spread(spark, df, path)
         df.createOrReplaceTempView(name)
-        _DF_CACHE[key] = df
         out[name] = df
     return out

@@ -15,6 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sqawk_spark.operators.registry import query
+from sqawk_spark.operators.session_cache import SessionCache
 from sqawk_spark.operators.tables import load_tables
 
 # Stopword sets for the language-ID heuristic and quality scoring.
@@ -1330,28 +1331,13 @@ def text_collapse_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ReuseExchange cannot canonicalize them equal — persist instead, the
 # same pattern as dedup's inverted-index cache (one tokenize+explode
 # scan and one corpus-sized exchange total; MEMORY_AND_DISK spills
-# rather than OOMing). Keyed per (session, sf_dir); the CLI releases
-# entries run-to-run via clear_caches.
-_BIGRAM_CACHE: dict[tuple[int, str], DataFrame] = {}
+# rather than OOMing).
+_BIGRAM_CACHE = SessionCache()
 
 # (doc_id, dl, hits) per document for BM25 — persisted so the corpus
 # is tokenized once while both the stats and posting-list branches
-# read it (see text_bm25_topk's docstring). Same lifecycle as
-# _BIGRAM_CACHE.
-_BM25_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-def clear_caches(spark: SparkSession | None = None) -> None:
-    """Unpersist and drop the per-session bigram-count and BM25
-    doc-hits caches (same contract as
-    :func:`sqawk_spark.operators.dedup.clear_caches`)."""
-    for cache in (_BIGRAM_CACHE, _BM25_CACHE):
-        for key in [
-            k for k in cache if spark is None or k[0] == id(spark)
-        ]:
-            try:
-                cache.pop(key).unpersist()
-            except Exception:  # session already stopped — nothing to free
-                pass
+# read it (see text_bm25_topk's docstring).
+_BM25_CACHE = SessionCache()
 
 
 def _bm25_doc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1363,14 +1349,14 @@ def _bm25_doc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter evaluates interpreted, but once per document inside the
     only text scan; the frame it leaves behind is doc-count-sized
     (two ints and a near-empty array per row)."""
-    key = (id(spark), sf_dir)
-    if key not in _BM25_CACHE:
+
+    def build() -> DataFrame:
         from pyspark import StorageLevel
 
         t = load_tables(spark, sf_dir, ("documents",))
         terms_sql = ", ".join("'" + x + "'" for x in _BM25_TERMS)
         toks = t["documents"].select("doc_id", _tokens().alias("t"))
-        _BM25_CACHE[key] = (
+        return (
             toks.select(
                 "doc_id",
                 F.size("t").alias("dl"),
@@ -1379,15 +1365,16 @@ def _bm25_doc_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("hits"),
             ).persist(StorageLevel.MEMORY_AND_DISK)
         )
-    return _BM25_CACHE[key]
+
+    return _BM25_CACHE.get_or_build(spark, (sf_dir,), build)
 
 
 def _bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, w1, w2, k): count of each distinct adjacent token pair
     per document — the one corpus-sized frame the bigram-LM entry
     derives everything from."""
-    key = (id(spark), sf_dir)
-    if key not in _BIGRAM_CACHE:
+
+    def build() -> DataFrame:
         from pyspark import StorageLevel
 
         t = load_tables(spark, sf_dir, ("documents",))
@@ -1417,14 +1404,15 @@ def _bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exchange- and sort-free too. The only per-run corpus-sized
         # exchange left in the bigram entry is the final per-document
         # rollup (guide §2.4).
-        _BIGRAM_CACHE[key] = (
+        return (
             big.groupBy("doc_id", "w1", "w2")
             .agg(F.count("*").alias("k"))
             .repartition("w1", "w2")
             .sortWithinPartitions("w1", "w2")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-    return _BIGRAM_CACHE[key]
+
+    return _BIGRAM_CACHE.get_or_build(spark, (sf_dir,), build)
 
 
 @query(

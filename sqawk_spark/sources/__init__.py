@@ -13,7 +13,7 @@ Registry mirrors the reference's parser namespace discovery
 from __future__ import annotations
 
 from sqawk_spark.sources import awk, csv, json, parquet, tcl
-from sqawk_spark.sources.base import FileSpec, load_file, TableLoader
+from sqawk_spark.sources.base import FileSpec, TableLoader
 
 PARSERS = {
     "awk": awk.parse,
@@ -57,5 +57,4 @@ __all__ = [
     "COMMON_OPTIONS",
     "FileSpec",
     "TableLoader",
-    "load_file",
 ]

@@ -119,6 +119,8 @@ class TableLoader:
         self._order: list[str] = []
         self.tables: dict[str, DataFrame] = {}
         self.specs: dict[str, FileSpec] = {}
+        # storage class per loaded column (affinity.column_class_for)
+        self.classes: dict[str, str] = {}
 
     def add(self, records: DataFrame, spec: FileSpec, table: str) -> None:
         self._streams.setdefault(table, [])
@@ -141,7 +143,9 @@ class TableLoader:
 
                 shaped = shape_typed_table(records, spec, table)
             else:
-                shaped = build_table(self.spark, records, spec, table)
+                shaped = build_table(
+                    self.spark, records, spec, table, self.classes
+                )
             shaped.createOrReplaceTempView(table)
             self.tables[table] = shaped
             self.specs[table] = spec
@@ -188,9 +192,15 @@ def _resolve_names(
 
 
 def build_table(
-    spark: SparkSession, records: DataFrame, spec: FileSpec, table: str
+    spark: SparkSession,
+    records: DataFrame,
+    spec: FileSpec,
+    table: str,
+    classes: dict[str, str],
 ) -> DataFrame:
-    """Shape a records stream into the reference table layout."""
+    """Shape a records stream into the reference table layout, and
+    record each column's storage class in ``classes`` (keyed by
+    lowercase name)."""
     prefix = spec.prefix or table
 
     # header is consumed before any width/NF accounting, like the
@@ -270,21 +280,21 @@ def build_table(
         for i in promotable:
             int_flags[i] = bool(probe[f"c{i}"])
 
-    from sqawk_spark.affinity import column_class_for, record_column_class
+    from sqawk_spark.affinity import column_class_for
 
     cols = [
         F.col("anr"),
         F.size("fields").alias(f"{prefix}nf"),
     ]
     # record storage treatments so the dialect can reproduce SQLite's
-    # cross-class comparison order (affinity.py COLUMN_CLASSES)
-    record_column_class(f"{prefix}nr", "long")
-    record_column_class(f"{prefix}nf", "long")
+    # cross-class comparison order (affinity.py storage classes)
+    classes[f"{prefix}nr".lower()] = "long"
+    classes[f"{prefix}nf".lower()] = "long"
     if spec.f0:
         cols.append(F.col("a0").alias(f"{prefix}0"))
         # the reference declares the raw-record column TEXT
         # (lib/classes/table.tcl: `a0 TEXT`)
-        record_column_class(f"{prefix}0", "text")
+        classes[f"{prefix}0".lower()] = "text"
     for i in range(nf):
         decl = datatypes[i] if i < len(datatypes) else "integer"
         # NULL beyond anf; try_ variant stays NULL under ANSI mode too
@@ -293,15 +303,7 @@ def build_table(
             cols.append(raw.try_cast("long").alias(names[i]))
         else:
             cols.append(apply_affinity(raw, decl).alias(names[i]))
-        record_column_class(names[i], column_class_for(decl, int_flags[i]))
+        classes[names[i].lower()] = column_class_for(decl, int_flags[i])
 
     out = numbered.select(*cols).withColumnRenamed("anr", f"{prefix}nr")
     return out
-
-
-def load_file(
-    spark: SparkSession, spec: FileSpec, records: DataFrame, table: str
-) -> DataFrame:
-    shaped = build_table(spark, records, spec, table)
-    shaped.createOrReplaceTempView(table)
-    return shaped

@@ -27,9 +27,9 @@ def plan(spark, sf_dir, name: str, mode: str = "formatted") -> str:
     # ReusedExchange / query-stage nodes) and the pins below — written
     # against the initial plan — misfire. Drop the handle so every
     # pin inspects a freshly compiled plan.
-    from sqawk_spark.operators.registry import clear_prepared
+    from sqawk_spark.operators.registry import _PREPARED
 
-    clear_prepared(spark)
+    _PREPARED.release(spark)
     df = REGISTRY[name].builder(spark, sf_dir)
     buf = io.StringIO()
     with redirect_stdout(buf):

@@ -10,9 +10,9 @@ pin the caching mechanics and the exclusions).
 from __future__ import annotations
 
 from sqawk_spark.operators.registry import (
+    _PREPARED,
     PREPARED_PLAN_QUERIES,
     REGISTRY,
-    clear_prepared,
 )
 
 SF2 = "/root/testdata/sf0.01"
@@ -61,7 +61,7 @@ def test_parameterized_call_bypasses_cache(spark, sf_dir):
 def test_clear_prepared_drops_handles(spark, sf_dir):
     spec = REGISTRY["tpch_q6_forecast_revenue"]
     a = spec.builder(spark, sf_dir)
-    clear_prepared(spark)
+    _PREPARED.release(spark)
     b = spec.builder(spark, sf_dir)
     assert a is not b
 
