@@ -430,8 +430,14 @@ def main() -> None:
         "queries": short_q,
         "detail": "stderr + bench_history.jsonl",
     }
-    # drop optional fields (never the contract fields or queries) until
-    # the line fits the window with margin for the trailing newline
+    print(_fit_line(line_fields))
+
+
+def _fit_line(line_fields: dict) -> str:
+    """The stdout JSON line: optional fields (never the contract
+    fields or queries) are dropped until it fits the 2000-char tail
+    window it is parsed from, with margin for the trailing newline; a
+    line that still does not fit exits non-zero instead of printing."""
     line = json.dumps(line_fields)
     for droppable in (
         "worst_vs_hist",
@@ -443,7 +449,12 @@ def main() -> None:
             break
         line_fields.pop(droppable, None)
         line = json.dumps(line_fields)
-    print(line)
+    if len(line) >= 1950:
+        sys.exit(
+            f"bench.py: the stdout line is {len(line)} chars even without "
+            "its optional fields; the 2000-char tail window would clip it"
+        )
+    return line
 
 
 if __name__ == "__main__":

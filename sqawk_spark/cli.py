@@ -68,43 +68,21 @@ def substitute_escapes(s: str) -> str:
 
 
 def split_statements(script: str) -> list[str]:
-    """Quote-aware split on ';' ('...;...' and "..." protected,
-    SQL '' escaping honored).  Each statement's string literals get
-    their backslashes doubled here — the one place every user
-    statement passes through — so Spark's escape-processing literal
-    parser reads SQLite's verbatim-literal semantics; dialect passes
-    that read literal TEXT undo the doubling (_sql_literal_text)."""
-    stmts: list[str] = []
-    cur: list[str] = []
-    i, n = 0, len(script)
-    quote: str | None = None
-    while i < n:
-        c = script[i]
-        if quote:
-            cur.append(c)
-            if c == quote:
-                if i + 1 < n and script[i + 1] == quote:  # '' escape
-                    cur.append(script[i + 1])
-                    i += 1
-                else:
-                    quote = None
-        elif c in ("'", '"', "`"):
-            quote = c
-            cur.append(c)
-        elif c == ";":
-            stmts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    stmts.append("".join(cur))
+    """Split on every ';' outside quoted tokens, at any paren depth.
+    Each statement's string literals get their backslashes doubled
+    here — the one place every user statement passes through — so
+    Spark's escape-processing literal parser reads SQLite's
+    verbatim-literal semantics; dialect passes that read literal TEXT
+    undo the doubling (_sql_literal_text)."""
+    from sqawk_spark import sqllex
     from sqawk_spark.dialect import _escape_backslash_literals
 
-    return [
-        _escape_backslash_literals(s.strip())
-        for s in stmts
-        if s.strip()
-    ]
+    cuts = [i for i, _ in sqllex.scan(script) if script[i] == ";"]
+    stmts = (
+        script[a + 1 : b].strip()
+        for a, b in zip([-1, *cuts], [*cuts, len(script)])
+    )
+    return [_escape_backslash_literals(s) for s in stmts if s]
 
 
 class UsageError(Exception):

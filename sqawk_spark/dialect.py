@@ -2,97 +2,36 @@
 Spark SQL.
 
 The reference passes scripts verbatim to SQLite (lib/classes/
-sqawk.tcl:216), so the whole SQLite grammar is reachable. Almost all
-of it is valid Spark SQL too; the gaps this module closes:
+sqawk.tcl:216), so the whole SQLite grammar is reachable.  Most of it
+is valid Spark SQL too; this module rewrites the rest: SQLite-only
+syntax (infix GLOB, two-argument group_concat, ``LIMIT n, m``,
+double-quoted identifiers resolved as SQLite does, quirks.html
+#dblquote) and the shapes whose VALUES differ between the engines
+(storage classes and affinity, NOCASE collation, comparisons used as
+values, bare columns, GROUPS frames, date functions, ...).
 
-- infix ``GLOB``: ``X GLOB Y`` / ``X NOT GLOB Y`` is SQLite-only
-  syntax (equivalent to ``glob(Y, X)``, which we register as a UDF in
-  functions/__init__.py). Rewritten to the function form.
-- two-argument ``group_concat(X, SEP)``: Spark UDF registration is
-  fixed-arity, so the one-arg form is registered as ``group_concat``
-  and the two-arg form as ``group_concat2``; this rewrite maps call
-  sites with two top-level arguments onto the latter.
-- double-quoted identifiers: SQLite resolves ``"name"`` as a column
-  when it exists, else a string literal (quirks.html#dblquote, relied
-  on by reference test header-1.2); with the loaded schemas in hand
-  the same fallback is applied here.
-
-Both rewrites are quote-aware (single/double/backtick quoting with
-SQL '' escaping) and operate on token boundaries only. The GLOB
-operand grammar covers the practical cases — identifiers (dotted,
-backtick-quoted), literals, function calls, and parenthesized
-expressions — matching how the operator appears in real scripts;
-SQLite gives GLOB comparison-level precedence, so its operands are
-primaries in practice.
+Every rewrite is a pure ``str -> str`` pass, and ``rewrite_statement``
+runs them in one fixed order; its comments record which pass must see
+which other pass's output.  No pass lexes SQL on its own: quoted
+tokens (single, double and backtick quoting with SQL's doubled-quote
+escape) and paren depth come from sqawk_spark/sqllex.py, which lexes
+each distinct string once.  Passes match keywords and operators on
+token boundaries outside quoted tokens.
 """
 
 from __future__ import annotations
 
 import re
 
+from sqawk_spark import sqllex
+
 _IDENT = re.compile(r"[A-Za-z_0-9$.]")
-
-
-def _scan_string(s: str, i: int) -> int:
-    """Index one past a quoted token starting at s[i] (quote char at
-    s[i]); honors doubled-quote escaping."""
-    q = s[i]
-    i += 1
-    n = len(s)
-    while i < n:
-        if s[i] == q:
-            if i + 1 < n and s[i + 1] == q:
-                i += 2
-                continue
-            return i + 1
-        i += 1
-    return n
 
 
 def _skip_ws(s: str, i: int) -> int:
     while i < len(s) and s[i].isspace():
         i += 1
     return i
-
-
-def _match_paren_fwd(s: str, i: int) -> int:
-    """s[i] == '(' → index one past the balanced close paren."""
-    depth = 0
-    n = len(s)
-    while i < n:
-        c = s[i]
-        if c in "'\"`":
-            i = _scan_string(s, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return n
-
-
-# (the canonical _operand_fwd lives below, next to _operand_back —
-# keywords-aware and call-consuming; a second simpler definition here
-# once shadowed it and silently broke signed-operand parsing)
-
-
-def _string_spans(s: str) -> list[tuple[int, int]]:
-    """(start, end) spans of every quoted token, found by a single
-    forward scan — the only direction in which SQL's doubled-quote
-    escaping ('it''s') is unambiguous."""
-    spans = []
-    i, n = 0, len(s)
-    while i < n:
-        if s[i] in "'\"`":
-            j = _scan_string(s, i)
-            spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
 
 
 def _operand_back(s: str, i: int) -> int:
@@ -104,13 +43,11 @@ def _operand_back(s: str, i: int) -> int:
     if j < 0:
         return 0
     c = s[j]
-    if c in "'\"`":
-        # locate the literal via a forward tokenization pass so the
-        # doubled-quote escape ('it''s') resolves correctly
-        for start, end in _string_spans(s):
-            if end == j + 1:
-                return start
-        return max(j, 0)
+    if c in sqllex.QUOTES:
+        # the lexer's forward pass resolves the doubled-quote escape
+        # ('it''s'), which no backward scan can
+        span = sqllex.string_at(s, j)
+        return span[0] if span and span[1] == j + 1 else j
     if c == ")":
         depth = 0
         k = j
@@ -183,9 +120,7 @@ def rewrite_glob(stmt: str) -> str:
     sit inside a compound expression are skipped (see
     ``_compound_context``). Single right-to-left pass, so replacements
     never shift the positions of candidates still to be processed."""
-    cands = [
-        m for m in _GLOB_RE.finditer(stmt) if not _in_quotes(stmt, m.start())
-    ]
+    cands = list(sqllex.finditer(_GLOB_RE, stmt))
     for m in reversed(cands):
         lstart = _operand_back(stmt, m.start())
         inner = stmt[lstart : m.start()].strip()
@@ -209,18 +144,6 @@ def rewrite_glob(stmt: str) -> str:
     return stmt
 
 
-def _in_quotes(s: str, pos: int) -> bool:
-    i = 0
-    while i < pos:
-        if s[i] in "'\"`":
-            i = _scan_string(s, i)
-            if i > pos:
-                return True
-            continue
-        i += 1
-    return False
-
-
 _ALIAS_RES = (
     # SQLite 3.44 string_agg(X, SEP) is group_concat's two-arg form
     # under the PostgreSQL name; 3.38 format() is printf() verbatim
@@ -237,9 +160,7 @@ def rewrite_function_aliases(stmt: str) -> str:
     for pat, repl in _ALIAS_RES:
         out = []
         last = 0
-        for m in pat.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
+        for m in sqllex.finditer(pat, stmt):
             if m.start() > 0 and _IDENT.match(stmt[m.start() - 1]):
                 continue  # suffix of a longer identifier
             out.append(stmt[last : m.start()])
@@ -273,20 +194,13 @@ def rewrite_values_clause(stmt: str) -> str:
     if re.match(r"\s*(insert|replace)\b", stmt, re.IGNORECASE):
         return stmt
     while True:
-        m = next(
-            (
-                m
-                for m in _VALUES_RE.finditer(stmt)
-                if not _in_quotes(stmt, m.start())
-            ),
-            None,
-        )
+        m = next(sqllex.finditer(_VALUES_RE, stmt), None)
         if m is None:
             return stmt
         selects = []
         i = m.end() - 1
         while True:
-            close = _match_paren_fwd(stmt, i)
+            close = sqllex.close_paren(stmt, i)
             args = _split_call_args(stmt, i)
             if not args or close <= i:
                 return stmt  # malformed: keep the loud native error
@@ -324,10 +238,8 @@ def rewrite_group_concat_distinct(stmt: str) -> str:
     loud error (SQLite errors too)."""
     while True:
         edited = False
-        for m in _GC_CALL_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
-            close = _match_paren_fwd(stmt, m.end() - 1)
+        for m in sqllex.finditer(_GC_CALL_RE, stmt):
+            close = sqllex.close_paren(stmt, m.end() - 1)
             args = _split_call_args(stmt, m.end() - 1)
             if not args or len(args) != 1:
                 continue
@@ -357,10 +269,8 @@ def strip_group_concat_collate(stmt: str) -> str:
         return stmt
     while True:
         edited = False
-        for m in _GC_CALL_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
-            close = _match_paren_fwd(stmt, m.end() - 1)
+        for m in sqllex.finditer(_GC_CALL_RE, stmt):
+            close = sqllex.close_paren(stmt, m.end() - 1)
             args = _split_call_args(stmt, m.end() - 1)
             if not args:
                 continue
@@ -384,30 +294,13 @@ def rewrite_group_concat(stmt: str) -> str:
     SEP)`` (fixed-arity UDF registration; SQLite overloads the name)."""
     out = []
     last = 0
-    for m in _GC_RE.finditer(stmt):
-        if _in_quotes(stmt, m.start()):
-            continue
+    for m in sqllex.finditer(_GC_RE, stmt):
         if m.start() > 0 and _IDENT.match(stmt[m.start() - 1]):
             continue  # suffix of a longer identifier
         open_paren = m.end() - 1
-        close = _match_paren_fwd(stmt, open_paren)
-        # count top-level commas inside the call
-        depth = 0
-        commas = 0
-        i = open_paren
-        while i < close:
-            c = stmt[i]
-            if c in "'\"`":
-                i = _scan_string(stmt, i)
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif c == "," and depth == 1:
-                commas += 1
-            i += 1
-        if commas == 1:
+        close = sqllex.close_paren(stmt, open_paren)
+        commas = sqllex.top_positions(stmt, ",", open_paren + 1, close)
+        if len(commas) == 1:
             out.append(stmt[last : m.start()])
             out.append("group_concat2(")
             last = m.end()
@@ -421,7 +314,7 @@ _OTHER_AGG_RE = re.compile(
     r"|group_concat2|group_concat_distinct(?:_nocase)?)\s*\(",
     re.IGNORECASE,
 )
-_OVER_RE = re.compile(r"\bover\b", re.IGNORECASE)
+_OVER_KW_RE = re.compile(r"\bover\b", re.IGNORECASE)
 _SELECT_RE = re.compile(r"\bselect\b", re.IGNORECASE)
 _PLAIN_IDENT_ITEM_RE = re.compile(
     r"^\s*(?:([A-Za-z_][A-Za-z_0-9]*)\s*\.\s*)?([A-Za-z_][A-Za-z_0-9]*)"
@@ -455,20 +348,15 @@ def rewrite_bare_minmax_columns(
     1`` beside a min/max) wrap whole — SQLite evaluates them on the
     winning row too."""
     classes = classes or {}
-    spans = _string_spans(stmt)
-
-    def outside(i: int) -> bool:
-        return not any(s <= i < e for s, e in spans)
-
-    selects = [m for m in _SELECT_RE.finditer(stmt) if outside(m.start())]
+    selects = list(sqllex.finditer(_SELECT_RE, stmt))
     if len(selects) != 1:
         return stmt
-    if any(outside(m.start()) for m in _OVER_RE.finditer(stmt)):
+    if any(sqllex.finditer(_OVER_KW_RE, stmt)):
         return stmt
     # other aggregates (count/sum/…) do NOT disable the rule: probed —
     # ``select v, max(nr), count(*) … group by g`` still returns v
     # from the max row (round 10; the guard used to bail here)
-    aggs = [m for m in _MINMAX_AGG_RE.finditer(stmt) if outside(m.start())]
+    aggs = list(sqllex.finditer(_MINMAX_AGG_RE, stmt))
     if len(aggs) != 1:
         return stmt
     agg = aggs[0]
@@ -501,7 +389,7 @@ def rewrite_bare_minmax_columns(
     if group_c is not None:
         tail = [c for c in clauses if c[1] > group_c[2]]
         g_end = tail[0][1] if tail else len(stmt)
-        for expr in _split_args_top(stmt[group_c[2] : g_end]):
+        for expr in sqllex.split_top(stmt[group_c[2] : g_end]):
             # a trailing COLLATE still GROUPS the expression —
             # the term must register as grouped or the bare-
             # column rewrite fires on the grouping key itself
@@ -549,8 +437,7 @@ def rewrite_bare_minmax_columns(
             norm = re.sub(r"\s+", "", body).lower()
             refs_col = any(
                 im.group().split(".")[-1].lower() in classes
-                for im in _AFF_IDENT_SCAN_RE.finditer(body)
-                if not _in_quotes(body, im.start())
+                for im in sqllex.finditer(_AFF_IDENT_SCAN_RE, body)
             )
             if (
                 norm in grouped
@@ -619,19 +506,12 @@ def rewrite_bare_group_columns(stmt: str, classes: dict[str, str]) -> str:
     rewritten — plus a known arrival column (single loaded table), the
     thing that makes "scan order" reproducible at all.  Joins and
     subqueries keep Spark's loud error."""
-    spans = _string_spans(stmt)
-
-    def outside(i: int) -> bool:
-        return not any(s <= i < e for s, e in spans)
-
-    selects = [m for m in _SELECT_RE.finditer(stmt) if outside(m.start())]
+    selects = list(sqllex.finditer(_SELECT_RE, stmt))
     if len(selects) != 1:
         return stmt
-    if any(outside(m.start()) for m in _OVER_RE.finditer(stmt)):
+    if any(sqllex.finditer(_OVER_KW_RE, stmt)):
         return stmt
-    if any(
-        outside(m.start()) for m in _MINMAX_AGG_RE.finditer(stmt)
-    ):
+    if any(sqllex.finditer(_MINMAX_AGG_RE, stmt)):
         return stmt  # the winning-row pass owns min/max queries
     arrival = _scope_arrival_col(stmt, classes, deep_scan=True)
     if arrival is None:
@@ -646,8 +526,8 @@ def rewrite_bare_group_columns(stmt: str, classes: dict[str, str]) -> str:
         return stmt
     group_c = next((c for c in clauses if c[0] == "group_by"), None)
     has_agg = any(
-        outside(m.start()) and list_start <= m.start() < list_end
-        for m in _OTHER_AGG_RE.finditer(stmt)
+        list_start <= m.start() < list_end
+        for m in sqllex.finditer(_OTHER_AGG_RE, stmt)
     )
     # GROUP BY with no aggregate and a global aggregate both take the
     # first row (probed); a plain SELECT with neither is no aggregate
@@ -658,7 +538,7 @@ def rewrite_bare_group_columns(stmt: str, classes: dict[str, str]) -> str:
     if group_c is not None:
         tail = [c for c in clauses if c[1] > group_c[2]]
         g_end = tail[0][1] if tail else len(stmt)
-        for expr in _split_args_top(stmt[group_c[2] : g_end]):
+        for expr in sqllex.split_top(stmt[group_c[2] : g_end]):
             # a trailing COLLATE still GROUPS the expression —
             # the term must register as grouped or the bare-
             # column rewrite fires on the grouping key itself
@@ -698,8 +578,7 @@ def rewrite_bare_group_columns(stmt: str, classes: dict[str, str]) -> str:
             norm = re.sub(r"\s+", "", body).lower()
             refs_col = any(
                 im.group().split(".")[-1].lower() in classes
-                for im in _AFF_IDENT_SCAN_RE.finditer(body)
-                if not _in_quotes(body, im.start())
+                for im in sqllex.finditer(_AFF_IDENT_SCAN_RE, body)
             )
             if (
                 norm in grouped
@@ -760,7 +639,7 @@ def rewrite_limit_comma(stmt: str) -> str:
             continue
         end = clauses[idx + 1][1] if idx + 1 < len(clauses) else len(stmt)
         body = stmt[kw_end:end]
-        parts = _split_args_top(body)
+        parts = sqllex.split_top(body)
         if len(parts) != 2 or not parts[0] or not parts[1]:
             continue
         stmt = (
@@ -792,9 +671,8 @@ def rewrite_is_equality(stmt: str) -> str:
     ):
         matches = [
             m
-            for m in rex.finditer(out)
-            if not _in_quotes(out, m.start())
-            and not keep.match(out, m.end())
+            for m in sqllex.finditer(rex, out)
+            if not keep.match(out, m.end())
         ]
         for m in reversed(matches):
             out = out[: m.start()] + repl + out[m.end() :]
@@ -839,10 +717,10 @@ def _unwrap_nocase(text: str):
     fold-kind is False (no marker), True (NOCASE), or 'rtrim'."""
     t = text.strip()
     m = _NOCASE_CALL_RE.match(t)
-    if m and _match_paren_fwd(t, m.end() - 1) == len(t):
+    if m and sqllex.close_paren(t, m.end() - 1) == len(t):
         return t[m.end() : -1].strip(), True
     m = _RTRIM_CALL_RE.match(t)
-    if m and _match_paren_fwd(t, m.end() - 1) == len(t):
+    if m and sqllex.close_paren(t, m.end() - 1) == len(t):
         return t[m.end() : -1].strip(), "rtrim"
     return text, False
 
@@ -855,14 +733,14 @@ def _strip_nocase(stmt: str) -> str:
         m = _RTRIM_CALL_RE.search(stmt)
         if m is None:
             break
-        close = _match_paren_fwd(stmt, m.end() - 1)
+        close = sqllex.close_paren(stmt, m.end() - 1)
         inner = stmt[m.end() : close - 1]
         stmt = stmt[: m.start()] + f"rtrim({inner})" + stmt[close:]
     while True:
         m = _NOCASE_CALL_RE.search(stmt)
         if m is None:
             return stmt
-        close = _match_paren_fwd(stmt, m.end() - 1)
+        close = sqllex.close_paren(stmt, m.end() - 1)
         inner = stmt[m.end() : close - 1]
         stmt = (
             stmt[: m.start()]
@@ -878,10 +756,8 @@ def _over_spans(stmt: str) -> list[tuple[int, int]]:
     """Character spans of every window specification's parens:
     ``over ( ... )`` bodies, quotes-aware."""
     spans = []
-    for m in _OVER_OPEN_RE.finditer(stmt):
-        if _in_quotes(stmt, m.start()):
-            continue
-        spans.append((m.end(), _match_paren_fwd(stmt, m.end() - 1) - 1))
+    for m in sqllex.finditer(_OVER_OPEN_RE, stmt):
+        spans.append((m.end(), sqllex.close_paren(stmt, m.end() - 1) - 1))
     return spans
 
 
@@ -944,11 +820,7 @@ def rewrite_like_nocase(stmt: str) -> str:
 
     Numeric operands pass through Spark's implicit string cast first,
     exactly as SQLite renders them to text."""
-    matches = [
-        m
-        for m in _LIKE_KW_RE.finditer(stmt)
-        if not _in_quotes(stmt, m.start())
-    ]
+    matches = list(sqllex.finditer(_LIKE_KW_RE, stmt))
     n = len(stmt)
     for m in reversed(matches):
         ls = _operand_back(stmt, m.start())
@@ -966,7 +838,7 @@ def rewrite_like_nocase(stmt: str) -> str:
             k0 = _skip_ws(stmt, m.end())
             if k0 >= n or stmt[k0] != "(":
                 continue
-            close = _match_paren_fwd(stmt, k0)
+            close = sqllex.close_paren(stmt, k0)
             args = _split_call_args(stmt, k0)
             if args is None or len(args) not in (2, 3):
                 continue
@@ -1065,7 +937,7 @@ def rewrite_positional_order_by(stmt: str) -> str:
     ob = clauses[names.index("order_by")]
     after = [c for c in clauses if c[1] > ob[2]]
     ob_end = after[0][1] if after else len(stmt)
-    terms = _split_args_top(stmt[ob[2] : ob_end])
+    terms = sqllex.split_top(stmt[ob[2] : ob_end])
     out_terms = []
     changed = False
     for term in terms:
@@ -1114,33 +986,21 @@ def rewrite_positional_order_by(stmt: str) -> str:
 
 def _in_subselect(s: str, pos: int) -> bool:
     """Is ``pos`` inside a parenthesized SELECT nested in ``s``?"""
-    opens: list[int] = []
-    i = 0
-    while i < pos:
-        c = s[i]
-        if c in "'\"`":
-            i = _scan_string(s, i)
-            continue
-        if c == "(":
-            opens.append(i)
-        elif c == ")" and opens:
-            opens.pop()
-        i += 1
-    for o in opens:
-        j = _skip_ws(s, o + 1)
-        if re.match(r"select\b", s[j:], re.IGNORECASE):
-            return True
-    return False
+    return any(
+        s[o] == "("
+        and sqllex.close_paren(s, o) > pos
+        and re.match(r"select\b", s[_skip_ws(s, o + 1) :], re.IGNORECASE)
+        for o, _ in sqllex.scan(s, 0, pos)
+    )
 
 
 def _item_has_nocase(expr: str) -> bool:
     """Explicit COLLATE NOCASE anywhere in the item's own subtree —
     outside strings and outside nested (select ...) scopes."""
-    for m in _COLLATE_NOCASE_RE.finditer(expr):
-        if _in_quotes(expr, m.start()) or _in_subselect(expr, m.start()):
-            continue
-        return True
-    return False
+    return any(
+        not _in_subselect(expr, m.start())
+        for m in sqllex.finditer(_COLLATE_NOCASE_RE, expr)
+    )
 
 
 def _case_with_collate_textish(
@@ -1156,7 +1016,7 @@ def _case_with_collate_textish(
     literal, where a string compare would differ from SQLite's
     class-aware one."""
     t = text.strip()
-    while t.startswith("(") and _match_paren_fwd(t, 0) == len(t):
+    while t.startswith("(") and sqllex.close_paren(t, 0) == len(t):
         t = t[1:-1].strip()
     m = _CASE_ITEM_RE.match(t)
     if m is None or m.group(4) is not None:
@@ -1191,20 +1051,14 @@ def _propagate_case_comparison_collates(
     comparisons into string ones."""
     while True:
         changed = False
-        i, n = 0, len(stmt)
-        while i < n:
-            c = stmt[i]
-            if c in "'\"`":
-                i = _scan_string(stmt, i)
-                continue
-            if c not in "<>=!":
-                i += 1
+        skip = 0
+        for i, _ in sqllex.scan(stmt):
+            if i < skip or stmt[i] not in "<>=!":
                 continue
             op = next(
                 (o for o in _CMP_OPS if stmt.startswith(o, i)), None
             )
             if op is None:
-                i += 1
                 continue
             ls = _operand_back(stmt, i)
             lhs = stmt[ls:i].strip()
@@ -1218,7 +1072,7 @@ def _propagate_case_comparison_collates(
                     if (
                         (stmt[k].isalpha() or stmt[k] == "_")
                         and (k == 0 or not _IDENT.match(stmt[k - 1]))
-                        and not _in_quotes(stmt, k)
+                        and not sqllex.in_string(stmt, k)
                     ):
                         m2 = _BOOL_WORD_RE.match(stmt, k)
                         w = m2.group(0).lower()
@@ -1236,35 +1090,24 @@ def _propagate_case_comparison_collates(
                 # unparenthesized CASE on the right: extend forward to
                 # the matching END (the operand scan stops at the
                 # keyword)
-                k = r_end
                 depth_c = 1
-                nn = len(stmt)
-                while k < nn and depth_c:
+                for k, _ in sqllex.scan(stmt, r_end):
                     ch = stmt[k]
-                    if ch in "'\"`":
-                        k = _scan_string(stmt, k)
-                        continue
                     if (ch.isalpha() or ch == "_") and not _IDENT.match(
                         stmt[k - 1]
                     ):
-                        m2 = _BOOL_WORD_RE.match(stmt, k)
-                        w = m2.group(0).lower()
-                        if w == "case":
-                            depth_c += 1
-                        elif w == "end":
-                            depth_c -= 1
-                            if depth_c == 0:
-                                r_end = m2.end()
-                        k = m2.end()
-                        continue
-                    k += 1
+                        w = _BOOL_WORD_RE.match(stmt, k).group(0).lower()
+                        depth_c += {"case": 1, "end": -1}.get(w, 0)
+                        if depth_c == 0:
+                            r_end = k + len(w)
+                            break
                 if depth_c == 0:
                     rhs = stmt[i + len(op) : r_end].strip()
             j = _skip_ws(stmt, r_end)
             if re.match(r"collate\b", stmt[j:], re.IGNORECASE) or not (
                 lhs and rhs
             ):
-                i = max(r_end, i + len(op))
+                skip = max(r_end, i + len(op))
                 continue
 
             def _textish_other(o: str) -> bool:
@@ -1311,7 +1154,7 @@ def _propagate_case_comparison_collates(
                 )
                 changed = True
                 break
-            i = max(r_end, i + len(op))
+            skip = max(r_end, i + len(op))
         if not changed:
             return stmt
 
@@ -1439,7 +1282,7 @@ def rewrite_collate_propagation(
         gb = clauses[names.index("group_by")]
         after = [c for c in clauses if c[1] > gb[2]]
         gb_end = after[0][1] if after else len(stmt)
-        terms = _split_args_top(stmt[gb[2] : gb_end])
+        terms = sqllex.split_top(stmt[gb[2] : gb_end])
         new_terms, edited_gb = [], False
         for term in terms:
             tm = _TRAILING_COLLATE_RE.match(term.strip())
@@ -1493,7 +1336,7 @@ def rewrite_collate_propagation(
         ob = clauses[names.index("order_by")]
         after = [c for c in clauses if c[1] > ob[2]]
         ob_end = after[0][1] if after else len(stmt)
-        terms = _split_args_top(stmt[ob[2] : ob_end])
+        terms = sqllex.split_top(stmt[ob[2] : ob_end])
         new_terms = []
         edited = False
         for term in terms:
@@ -1572,7 +1415,7 @@ def _rewrite_nocase_group_by(
     gb = clauses[names.index("group_by")]
     after = [c for c in clauses if c[1] > gb[2]]
     gb_end = after[0][1] if after else len(stmt)
-    terms = _split_args_top(stmt[gb[2] : gb_end])
+    terms = sqllex.split_top(stmt[gb[2] : gb_end])
     hit: dict[int, str] = {}  # item position → folded key SQL
     new_terms = []
     for term in terms:
@@ -1680,7 +1523,7 @@ def _rewrite_nocase_distinct(
         return stmt
     list_start, list_end, _items = span
     sel = _SELECT_RE.search(stmt)
-    if sel is None or _stmt_depth(stmt, sel.start()) != 0:
+    if sel is None or sqllex.depth(stmt, sel.start()) != 0:
         return stmt
     tail_start = len(stmt)
     for kw in ("order_by", "limit"):
@@ -1693,7 +1536,7 @@ def _rewrite_nocase_distinct(
         ob = clauses[names.index("order_by")]
         after = [c for c in clauses if c[1] > ob[2]]
         ob_end = after[0][1] if after else len(stmt)
-        for term in _split_args_top(stmt[ob[2] : ob_end]):
+        for term in sqllex.split_top(stmt[ob[2] : ob_end]):
             m = _OB_TERM_DIR_RE.match(term.strip())
             core = m.group(1).strip()
             core = re.sub(
@@ -1783,11 +1626,9 @@ def rewrite_collate_positions(
     # --- aggregate arguments ---------------------------------------
     while True:
         edited = False
-        for m in _COLLAGG_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
+        for m in sqllex.finditer(_COLLAGG_RE, stmt):
             fn = m.group(1).lower()
-            close = _match_paren_fwd(stmt, m.end() - 1)
+            close = sqllex.close_paren(stmt, m.end() - 1)
             args = _split_call_args(stmt, m.end() - 1)
             if not args:
                 continue
@@ -1864,7 +1705,10 @@ def rewrite_collate_positions(
     for both, rx in zip((False, True), _BETWEEN_COLLATE_RES):
         while True:
             m = rx.search(stmt)
-            if m is None or _in_quotes(stmt, m.start()):
+            # X may be a string literal: a match opening on its quote
+            # is code, one starting inside a string is not
+            span = m and sqllex.string_at(stmt, m.start())
+            if m is None or (span and span[0] < m.start()):
                 break
             x, neg, a, b = (
                 m.group(1),
@@ -1888,13 +1732,11 @@ def rewrite_collate_positions(
     # for Spark's loud error (no silent half-fold).
     while True:
         m = _COLLATE_IN_RE.search(stmt)
-        if m is None:
-            break
-        if _in_quotes(stmt, m.start()):
+        if m is None or sqllex.in_string(stmt, m.start()):
             break
         x_start = _operand_back(stmt, m.start())
         x = stmt[x_start : m.start()].strip()
-        close = _match_paren_fwd(stmt, m.end() - 1)
+        close = sqllex.close_paren(stmt, m.end() - 1)
         items = _split_call_args(stmt, m.end() - 1)
         if not x or not items or any(
             re.match(r"\s*select\b", it, re.IGNORECASE) for it in items
@@ -1911,9 +1753,7 @@ def rewrite_collate_positions(
     # --- simple CASE base with a collated WHEN operand ---------------
     while True:
         edited = False
-        for m in _SIMPLE_CASE_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
+        for m in sqllex.finditer(_SIMPLE_CASE_RE, stmt):
             base_end = _bool_cond_end(
                 stmt, m.end(), frozenset({"when", "end"})
             )
@@ -1923,20 +1763,12 @@ def rewrite_collate_positions(
             ):
                 continue
             # collect this CASE's own-level WHEN operands
-            whens = []
-            i, n, depth, cd = base_end, len(stmt), 0, 0
-            while i < n:
+            whens, cd = [], 0
+            for i, depth in sqllex.scan(stmt, base_end):
                 c = stmt[i]
-                if c in "'\"`":
-                    i = _scan_string(stmt, i)
-                    continue
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    if depth == 0:
-                        break
-                    depth -= 1
-                elif (
+                if c == ")" and depth == 0:
+                    break
+                if (
                     depth == 0
                     and (c.isalpha() or c == "_")
                     and not _IDENT.match(stmt[i - 1])
@@ -1946,17 +1778,13 @@ def rewrite_collate_positions(
                     if w == "case":
                         cd += 1
                     elif w == "end":
-                        if cd:
-                            cd -= 1
-                        else:
+                        if not cd:
                             break
+                        cd -= 1
                     elif w == "when" and cd == 0:
                         whens.append(
                             (wm.end(), _when_then_end(stmt, wm.end()))
                         )
-                    i = wm.end()
-                    continue
-                i += 1
             if not any(
                 _TRAILING_COLLATE_RE.match(stmt[s:e].strip())
                 for s, e in whens
@@ -2005,8 +1833,8 @@ def rewrite_distinct_class_identity(
     m = _DISTINCT_HEAD_RE.search(stmt)
     if (
         m is None
-        or _in_quotes(stmt, m.start())
-        or _stmt_depth(stmt, m.start()) != 0
+        or sqllex.in_string(stmt, m.start())
+        or sqllex.depth(stmt, m.start()) != 0
     ):
         return stmt
     if _COLLATE_NOCASE_RE.search(stmt) or _setop_cuts(stmt):
@@ -2057,7 +1885,7 @@ def rewrite_distinct_class_identity(
         ob = clauses[names.index("order_by")]
         after = [c for c in clauses if c[1] > ob[2]]
         ob_end = after[0][1] if after else len(stmt)
-        for term in _split_args_top(stmt[ob[2] : ob_end]):
+        for term in sqllex.split_top(stmt[ob[2] : ob_end]):
             tm = _OB_TERM_DIR_RE.match(term.strip())
             core = tm.group(1).strip()
             if not (
@@ -2109,11 +1937,7 @@ def rewrite_collate_nocase(stmt: str) -> str:
     Spark's loud parse error."""
     clauses = _top_level_clauses(stmt)
     order_c = next((c for c in clauses if c[0] == "order_by"), None)
-    matches = [
-        m
-        for m in _COLLATE_ANY_RE.finditer(stmt)
-        if not _in_quotes(stmt, m.start())
-    ]
+    matches = list(sqllex.finditer(_COLLATE_ANY_RE, stmt))
     if not matches:
         return stmt
     # window ORDER BY / PARTITION BY keys: mark the operand (same
@@ -2134,11 +1958,7 @@ def rewrite_collate_nocase(stmt: str) -> str:
         )
     clauses = _top_level_clauses(stmt)
     order_c = next((c for c in clauses if c[0] == "order_by"), None)
-    matches = [
-        m
-        for m in _COLLATE_ANY_RE.finditer(stmt)
-        if not _in_quotes(stmt, m.start())
-    ]
+    matches = list(sqllex.finditer(_COLLATE_ANY_RE, stmt))
     if order_c is None or not matches:
         return stmt
     tail = [c for c in clauses if c[1] > order_c[2]]
@@ -2169,13 +1989,11 @@ def _operand_fwd(s: str, i: int) -> int:
     if j >= len(s):
         return j
     c = s[j]
-    if c in "'\"`":
-        for start, end in _string_spans(s):
-            if start == j:
-                return end
-        return j + 1
+    if c in sqllex.QUOTES:
+        span = sqllex.string_at(s, j)
+        return span[1] if span and span[0] == j else j + 1
     if c == "(":
-        return min(_match_paren_fwd(s, j), len(s))
+        return sqllex.close_paren(s, j)
     if c in "+-":  # unary sign: the operand continues after it
         e = _operand_fwd(s, j + 1)
         return e if e > j + 1 else j
@@ -2189,7 +2007,7 @@ def _operand_fwd(s: str, i: int) -> int:
     while m < len(s) and s[m].isspace():
         m += 1
     if m < len(s) and s[m] == "(" and s[j:k].lower() not in _KEYWORDS:
-        return min(_match_paren_fwd(s, m), len(s))
+        return sqllex.close_paren(s, m)
     return k
 
 
@@ -2213,11 +2031,7 @@ def rewrite_collate_nocase_comparison(stmt: str) -> str:
     tests/test_dialect.py and tests/test_cli_fuzz.py."""
 
     while True:
-        matches = [
-            m
-            for m in _COLLATE_ANY_RE.finditer(stmt)
-            if not _in_quotes(stmt, m.start())
-        ]
+        matches = list(sqllex.finditer(_COLLATE_ANY_RE, stmt))
         clauses = _top_level_clauses(stmt)
         order_c = next((c for c in clauses if c[0] == "order_by"), None)
         if order_c is not None:
@@ -2301,15 +2115,11 @@ def rewrite_filter_clause(stmt: str) -> str:
     one code path and makes ``... FILTER (WHERE ..) OVER w`` work —
     the window suffix sits after the replaced span and survives
     verbatim."""
-    matches = [
-        m
-        for m in _FILTER_RE.finditer(stmt)
-        if not _in_quotes(stmt, m.start())
-    ]
+    matches = list(sqllex.finditer(_FILTER_RE, stmt))
     # right-to-left: replacements never disturb earlier match offsets
     for m in reversed(matches):
         open_f = stmt.index("(", m.start())
-        close_f = _match_paren_fwd(stmt, open_f)
+        close_f = sqllex.close_paren(stmt, open_f)
         if close_f > len(stmt) or stmt[close_f - 1] != ")":
             continue
         inner = stmt[open_f + 1 : close_f - 1].strip()
@@ -2361,29 +2171,10 @@ def rewrite_filter_clause(stmt: str) -> str:
 def _split_call_args(stmt: str, open_paren: int) -> list[str] | None:
     """Top-level argument texts of the call whose ``(`` is at
     ``open_paren``; None when the parens never close."""
-    close = _match_paren_fwd(stmt, open_paren)
-    if close > len(stmt) or stmt[close - 1] != ")":
+    call = stmt[open_paren : sqllex.close_paren(stmt, open_paren)]
+    if sqllex.depth(call, len(call)) != 0:
         return None
-    args: list[str] = []
-    depth = 0
-    i = open_paren
-    last = open_paren + 1
-    while i < close:
-        c = stmt[i]
-        if c in "'\"`":
-            i = _scan_string(stmt, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                args.append(stmt[last:i].strip())
-        elif c == "," and depth == 1:
-            args.append(stmt[last:i].strip())
-            last = i + 1
-        i += 1
-    return args
+    return sqllex.split_top(call, 1, len(call) - 1)
 
 
 def _escape_backslash_literals(stmt: str) -> str:
@@ -2398,22 +2189,12 @@ def _escape_backslash_literals(stmt: str) -> str:
     (identifiers after rewrite_double_quoted_idents)."""
     if "\\" not in stmt:
         return stmt
-    out = []
-    i = 0
-    n = len(stmt)
-    while i < n:
-        c = stmt[i]
-        if c == "'":
-            j = _scan_string(stmt, i)
-            out.append(stmt[i:j].replace("\\", "\\\\"))
-            i = j
-        elif c in '"`':
-            j = _scan_string(stmt, i)
-            out.append(stmt[i:j])
-            i = j
-        else:
-            out.append(c)
-            i += 1
+    out, last = [], 0
+    for a, b in sqllex.string_spans(stmt):
+        if stmt[a] == "'":
+            out += [stmt[last:a], stmt[a:b].replace("\\", "\\\\")]
+            last = b
+    out.append(stmt[last:])
     return "".join(out)
 
 
@@ -2423,7 +2204,7 @@ def _sql_literal_text(arg: str) -> str | None:
     undoubled to invert _escape_backslash_literals) — or None when
     ``arg`` is any other expression."""
     a = arg.strip()
-    if len(a) >= 2 and a[0] == "'" and _scan_string(a, 0) == len(a):
+    if len(a) >= 2 and a[0] == "'" and sqllex.string_at(a, 0)[1] == len(a):
         return a[1:-1].replace("''", "'").replace("\\\\", "\\")
     return None
 
@@ -2519,13 +2300,12 @@ def rewrite_regex_calls(stmt: str) -> str:
     for name, call_re in _CALL_RES.items():
         cands = [
             m
-            for m in call_re.finditer(stmt)
-            if not _in_quotes(stmt, m.start())
-            and not (m.start() > 0 and _IDENT.match(stmt[m.start() - 1]))
+            for m in sqllex.finditer(call_re, stmt)
+            if not (m.start() > 0 and _IDENT.match(stmt[m.start() - 1]))
         ]
         for m in reversed(cands):  # right-to-left: stable positions
             open_paren = m.end() - 1
-            close = _match_paren_fwd(stmt, open_paren)
+            close = sqllex.close_paren(stmt, open_paren)
             args = _split_call_args(stmt, open_paren)
             if args is None:
                 continue
@@ -2556,10 +2336,8 @@ def rewrite_regex_calls(stmt: str) -> str:
     return stmt
 
 
-_OVER_RE = re.compile(r"\bover\s*\(", re.IGNORECASE)
 _GROUPS_KW_RE = re.compile(r"\bgroups\b", re.IGNORECASE)
 _ORDER_BY_RE = re.compile(r"\border\s+by\b", re.IGNORECASE)
-_FROM_RE = re.compile(r"\bfrom\b", re.IGNORECASE)
 
 # Top-level clause keywords, tried in order at each identifier start.
 # ``order by`` inside window specs sits at paren depth > 0, so the
@@ -2580,40 +2358,24 @@ def _top_level_clauses(stmt: str) -> list[tuple[str, int, int]]:
     """Depth-0, outside-strings occurrences of statement clause
     keywords, as ``(name, kw_start, kw_end)`` in source order."""
     found: list[tuple[str, int, int]] = []
-    depth = 0
-    i = 0
-    n = len(stmt)
-    while i < n:
+    for i, depth in sqllex.scan(stmt):
         c = stmt[i]
-        if c in "'\"`":
-            i = _scan_string(stmt, i)
+        if depth or not (c.isalpha() or c == "_"):
             continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and (c.isalpha() or c == "_"):
-            if i == 0 or not _IDENT.match(stmt[i - 1]):
-                for name, rex in _CLAUSE_RES:
-                    m = rex.match(stmt, i)
-                    if m:
-                        # 'FROM' inside IS [NOT] DISTINCT FROM is an
-                        # operator token, not the statement clause
-                        if name == "from" and re.search(
-                            r"\bdistinct\s*$",
-                            stmt[max(0, i - 12) : i],
-                            re.IGNORECASE,
-                        ):
-                            i = m.end()
-                            break
-                        found.append((name, m.start(), m.end()))
-                        i = m.end()
-                        break
-                else:
-                    while i < n and _IDENT.match(stmt[i]):
-                        i += 1
-                continue
-        i += 1
+        if i and _IDENT.match(stmt[i - 1]):
+            continue
+        for name, rex in _CLAUSE_RES:
+            m = rex.match(stmt, i)
+            if m:
+                # 'FROM' inside IS [NOT] DISTINCT FROM is an
+                # operator token, not the statement clause
+                if name != "from" or not re.search(
+                    r"\bdistinct\s*$",
+                    stmt[max(0, i - 12) : i],
+                    re.IGNORECASE,
+                ):
+                    found.append((name, m.start(), m.end()))
+                break
     return found
 
 
@@ -2774,7 +2536,9 @@ def _rewrite_excluded_agg(
     elif len(args) != 1:
         return None
     arg = args[0]
-    if re.match(r"^\s*distinct\b", arg, re.IGNORECASE) or _OVER_RE.search(arg):
+    if re.match(
+        r"^\s*distinct\b", arg, re.IGNORECASE
+    ) or _OVER_OPEN_RE.search(arg):
         return None
     star = arg.strip() == "*"
     if star and fn != "count":
@@ -2987,20 +2751,11 @@ def rewrite_groups_frames(stmt: str) -> str:
     silent wrong answer."""
     windows: list[tuple[int, int, str]] = []  # (start, end, replacement)
     drs: list[str] = []
-    for m in _OVER_RE.finditer(stmt):
-        if _in_quotes(stmt, m.start()):
-            continue
+    for m in sqllex.finditer(_OVER_OPEN_RE, stmt):
         open_p = m.end() - 1
-        close = _match_paren_fwd(stmt, open_p)  # one past ')'
+        close = sqllex.close_paren(stmt, open_p)  # one past ')'
         win = stmt[open_p + 1 : close - 1]
-        gm = next(
-            (
-                g
-                for g in _GROUPS_KW_RE.finditer(win)
-                if not _in_quotes(win, g.start())
-            ),
-            None,
-        )
+        gm = next(sqllex.finditer(_GROUPS_KW_RE, win), None)
         if gm is None:
             continue
         ex_m = _EXCLUDE_RE.search(win)
@@ -3159,32 +2914,16 @@ def rewrite_plain_frame_excludes(stmt: str, classes: dict[str, str]) -> str:
         return stmt
     edits: list[tuple[int, int, str]] = []
     swapped = False
-    for m in _OVER_RE.finditer(stmt):
-        if _in_quotes(stmt, m.start()):
-            continue
+    for m in sqllex.finditer(_OVER_OPEN_RE, stmt):
         open_p = m.end() - 1
-        close = _match_paren_fwd(stmt, open_p)
+        close = sqllex.close_paren(stmt, open_p)
         win = stmt[open_p + 1 : close - 1]
         if not re.search(r"\bexclude\b", win, re.IGNORECASE):
             continue
-        ex_m = next(
-            (
-                g
-                for g in _EXCLUDE_RE.finditer(win)
-                if not _in_quotes(win, g.start())
-            ),
-            None,
-        )
+        ex_m = next(sqllex.finditer(_EXCLUDE_RE, win), None)
         if ex_m is None or win[ex_m.end() :].strip():
             return stmt  # malformed / trailing text — Spark raises
-        fm = next(
-            (
-                g
-                for g in _FRAME_KW_RE.finditer(win)
-                if not _in_quotes(win, g.start())
-            ),
-            None,
-        )
+        fm = next(sqllex.finditer(_FRAME_KW_RE, win), None)
         if fm is None or fm.start() > ex_m.start():
             return stmt  # no ROWS/RANGE frame — not a shape we handle
         kw = fm.group(1).lower()
@@ -3207,14 +2946,7 @@ def rewrite_plain_frame_excludes(stmt: str, classes: dict[str, str]) -> str:
             )
             swapped = True
             continue
-        om = next(
-            (
-                g
-                for g in _ORDER_BY_RE.finditer(win)
-                if not _in_quotes(win, g.start())
-            ),
-            None,
-        )
+        om = next(sqllex.finditer(_ORDER_BY_RE, win), None)
         if om is None or om.start() > fm.start():
             return stmt  # frame precedes ORDER BY — malformed
         outside = s_off > 0 or e_off < 0
@@ -3284,26 +3016,13 @@ def rewrite_double_quoted_idents(stmt: str, columns: set[str]) -> str:
     ``"..."`` as a literal, so rewrite resolvable ones to backtick
     quoting. Only exact matches against loaded-table column names flip
     — anything else stays a literal, same as SQLite."""
-    out = []
-    i, n = 0, len(stmt)
-    while i < n:
-        c = stmt[i]
-        if c in "'`":
-            j = _scan_string(stmt, i)
-            out.append(stmt[i:j])
-            i = j
-            continue
-        if c == '"':
-            j = _scan_string(stmt, i)
-            inner = stmt[i + 1 : j - 1].replace('""', '"')
-            if inner in columns:
-                out.append("`" + inner + "`")
-            else:
-                out.append(stmt[i:j])
-            i = j
-            continue
-        out.append(c)
-        i += 1
+    out, last = [], 0
+    for a, b in sqllex.string_spans(stmt):
+        inner = stmt[a + 1 : b - 1].replace('""', '"')
+        if stmt[a] == '"' and inner in columns:
+            out += [stmt[last:a], "`" + inner + "`"]
+            last = b
+    out.append(stmt[last:])
     return "".join(out)
 
 
@@ -3319,43 +3038,22 @@ def rewrite_hint_funcs(stmt: str) -> str:
         m = next(
             (
                 m
-                for m in _HINT_RE.finditer(stmt)
-                if not _in_quotes(stmt, m.start())
-                and (m.start() == 0 or not _IDENT.match(stmt[m.start() - 1]))
+                for m in sqllex.finditer(_HINT_RE, stmt)
+                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
             ),
             None,
         )
         if m is None:
             return stmt
         open_p = m.end() - 1
-        close = _match_paren_fwd(stmt, open_p)  # one past ')'
+        close = sqllex.close_paren(stmt, open_p)  # one past ')'
         inner = stmt[open_p + 1 : close - 1]
         if m.group(1).lower() == "likelihood":
-            args = _split_args_top(inner)
+            args = sqllex.split_top(inner)
             if len(args) != 2:
                 return stmt  # malformed — let Spark raise on the name
             inner = args[0]
         stmt = stmt[: m.start()] + "(" + inner + ")" + stmt[close:]
-
-
-def _split_args_top(s: str) -> list[str]:
-    """Split on top-level commas, quote- and paren-aware."""
-    parts, depth, last, i, n = [], 0, 0, 0, len(s)
-    while i < n:
-        c = s[i]
-        if c in "'\"`":
-            i = _scan_string(s, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(s[last:i])
-            last = i + 1
-        i += 1
-    parts.append(s[last:])
-    return [p.strip() for p in parts]
 
 
 _MINMAX_RE = re.compile(r"\b(min|max)\s*\(", re.IGNORECASE)
@@ -3374,18 +3072,17 @@ def rewrite_scalar_minmax(stmt: str) -> str:
         m = next(
             (
                 m
-                for m in _MINMAX_RE.finditer(stmt)
-                if not _in_quotes(stmt, m.start())
-                and (m.start() == 0 or not _IDENT.match(stmt[m.start() - 1]))
+                for m in sqllex.finditer(_MINMAX_RE, stmt)
+                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
             ),
             None,
         )
         if m is None:
             return stmt
         open_p = m.end() - 1
-        close = _match_paren_fwd(stmt, open_p)
+        close = sqllex.close_paren(stmt, open_p)
         inner = stmt[open_p + 1 : close - 1]
-        args = _split_args_top(inner)
+        args = sqllex.split_top(inner)
         if len(args) < 2 or any(a == "" for a in args):
             # aggregate form (or DISTINCT etc.) — leave this site for
             # Spark, keep rewriting anything after it
@@ -3408,18 +3105,17 @@ def rewrite_two_arg_trim(stmt: str) -> str:
         m = next(
             (
                 m
-                for m in _TRIM_RE.finditer(stmt)
-                if not _in_quotes(stmt, m.start())
-                and (m.start() == 0 or not _IDENT.match(stmt[m.start() - 1]))
+                for m in sqllex.finditer(_TRIM_RE, stmt)
+                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
             ),
             None,
         )
         if m is None:
             return stmt
         open_p = m.end() - 1
-        close = _match_paren_fwd(stmt, open_p)
+        close = sqllex.close_paren(stmt, open_p)
         inner = stmt[open_p + 1 : close - 1]
-        args = _split_args_top(inner)
+        args = sqllex.split_top(inner)
         if len(args) != 2:
             tail = rewrite_two_arg_trim(stmt[close:])
             return stmt[:close] + tail
@@ -3445,18 +3141,17 @@ def rewrite_substr_calls(stmt: str) -> str:
         m = next(
             (
                 m
-                for m in _SUBSTR_RE.finditer(stmt)
-                if not _in_quotes(stmt, m.start())
-                and (m.start() == 0 or not _IDENT.match(stmt[m.start() - 1]))
+                for m in sqllex.finditer(_SUBSTR_RE, stmt)
+                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
             ),
             None,
         )
         if m is None:
             return stmt
         open_p = m.end() - 1
-        close = _match_paren_fwd(stmt, open_p)
+        close = sqllex.close_paren(stmt, open_p)
         inner = stmt[open_p + 1 : close - 1]
-        args = _split_args_top(inner)
+        args = sqllex.split_top(inner)
         if len(args) not in (2, 3) or (
             # fast path: positive literal Y (and non-negative literal
             # Z) — Spark's substring IS SQLite's substr there, so the
@@ -3491,18 +3186,17 @@ def rewrite_sign_calls(stmt: str) -> str:
         m = next(
             (
                 m
-                for m in _SIGN_RE.finditer(stmt)
-                if not _in_quotes(stmt, m.start())
-                and (m.start() == 0 or not _IDENT.match(stmt[m.start() - 1]))
+                for m in sqllex.finditer(_SIGN_RE, stmt)
+                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
             ),
             None,
         )
         if m is None:
             return stmt
         open_p = m.end() - 1
-        close = _match_paren_fwd(stmt, open_p)
+        close = sqllex.close_paren(stmt, open_p)
         inner = stmt[open_p + 1 : close - 1]
-        if not inner.strip() or len(_split_args_top(inner)) != 1:
+        if not inner.strip() or len(sqllex.split_top(inner)) != 1:
             tail = rewrite_sign_calls(stmt[close:])
             return stmt[:close] + tail
         t = f"regexp_replace(CAST(({inner}) AS STRING), {_AFF_TRIM_PAT}, '')"
@@ -3532,18 +3226,17 @@ def rewrite_round_calls(stmt: str) -> str:
         m = next(
             (
                 m
-                for m in _ROUND_RE.finditer(stmt)
-                if not _in_quotes(stmt, m.start())
-                and (m.start() == 0 or not _IDENT.match(stmt[m.start() - 1]))
+                for m in sqllex.finditer(_ROUND_RE, stmt)
+                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
             ),
             None,
         )
         if m is None:
             return stmt
         open_p = m.end() - 1
-        close = _match_paren_fwd(stmt, open_p)
+        close = sqllex.close_paren(stmt, open_p)
         inner = stmt[open_p + 1 : close - 1]
-        args = _split_args_top(inner)
+        args = sqllex.split_top(inner)
         if len(args) not in (1, 2) or not inner.strip():
             tail = rewrite_round_calls(stmt[close:])
             return stmt[:close] + tail
@@ -3569,18 +3262,17 @@ def rewrite_upper_lower(stmt: str) -> str:
         m = next(
             (
                 m
-                for m in _UPPERLOWER_RE.finditer(stmt)
-                if not _in_quotes(stmt, m.start())
-                and (m.start() == 0 or not _IDENT.match(stmt[m.start() - 1]))
+                for m in sqllex.finditer(_UPPERLOWER_RE, stmt)
+                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
             ),
             None,
         )
         if m is None:
             return stmt
         open_p = m.end() - 1
-        close = _match_paren_fwd(stmt, open_p)
+        close = sqllex.close_paren(stmt, open_p)
         inner = stmt[open_p + 1 : close - 1]
-        if not inner.strip() or len(_split_args_top(inner)) != 1:
+        if not inner.strip() or len(sqllex.split_top(inner)) != 1:
             tail = rewrite_upper_lower(stmt[close:])
             return stmt[:close] + tail
         a = f"'{_ASCII_LOWER}'"
@@ -3618,16 +3310,15 @@ def rewrite_nullif_calls(stmt: str, classes: dict[str, str]) -> str:
         m = next(
             (
                 m
-                for m in _NULLIF_RE.finditer(stmt)
-                if not _in_quotes(stmt, m.start())
-                and (m.start() == 0 or not _IDENT.match(stmt[m.start() - 1]))
+                for m in sqllex.finditer(_NULLIF_RE, stmt)
+                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
             ),
             None,
         )
         if m is None:
             return stmt
         open_p = m.end() - 1
-        close = _match_paren_fwd(stmt, open_p)
+        close = sqllex.close_paren(stmt, open_p)
         args = _split_call_args(stmt, open_p)
         bail = args is None or len(args) != 2
         if not bail:
@@ -3668,16 +3359,15 @@ def rewrite_typeof_calls(stmt: str, classes: dict[str, str]) -> str:
         m = next(
             (
                 m
-                for m in _TYPEOF_RE.finditer(stmt)
-                if not _in_quotes(stmt, m.start())
-                and (m.start() == 0 or not _IDENT.match(stmt[m.start() - 1]))
+                for m in sqllex.finditer(_TYPEOF_RE, stmt)
+                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
             ),
             None,
         )
         if m is None:
             return stmt
         open_p = m.end() - 1
-        close = _match_paren_fwd(stmt, open_p)
+        close = sqllex.close_paren(stmt, open_p)
         inner = stmt[open_p + 1 : close - 1].strip()
         cls = (
             classes.get(inner.split(".")[-1].lower())
@@ -3824,13 +3514,12 @@ def rewrite_date_calls(stmt: str) -> str:
     for name, call_re in _DT_CALL_RES.items():
         cands = [
             m
-            for m in call_re.finditer(stmt)
-            if not _in_quotes(stmt, m.start())
-            and not (m.start() > 0 and _IDENT.match(stmt[m.start() - 1]))
+            for m in sqllex.finditer(call_re, stmt)
+            if not (m.start() > 0 and _IDENT.match(stmt[m.start() - 1]))
         ]
         for m in reversed(cands):  # right-to-left: stable positions
             open_paren = m.end() - 1
-            close = _match_paren_fwd(stmt, open_paren)
+            close = sqllex.close_paren(stmt, open_paren)
             args = _split_call_args(stmt, open_paren)
             if args is None:
                 continue
@@ -4004,7 +3693,7 @@ def _aff_classify(
     # (the GROUPS/EXCLUDE decomposition emits ``coalesce((arg), 0)``)
     while (
         t.startswith("(")
-        and _match_paren_fwd(t, 0) == len(t)
+        and sqllex.close_paren(t, 0) == len(t)
     ):
         t = t[1:-1].strip()
         if not t:
@@ -4045,7 +3734,7 @@ def _aff_classify(
     if re.match(r"(select|with)\b", t, re.IGNORECASE):
         return ("col", "dynamic")
     cm = re.match(r"^cast\s*\(", t, re.IGNORECASE)
-    if cm is not None and _match_paren_fwd(t, cm.end() - 1) == len(t):
+    if cm is not None and sqllex.close_paren(t, cm.end() - 1) == len(t):
         parts = _cast_split_as(t[cm.end() : -1])
         if parts is not None:
             from sqawk_spark.affinity import normalize_affinity
@@ -4192,11 +3881,7 @@ def rewrite_affinity_comparisons(
     # SQLite IS <expr> applies the SAME affinity/class comparison as
     # '=' plus null-safety (lang_expr.html); the IS rewrite lowered it
     # to Spark's [NOT] DISTINCT FROM, so key those operands too
-    isdf = [
-        m
-        for m in _AFF_ISDF_RE.finditer(stmt)
-        if not _in_quotes(stmt, m.start())
-    ]
+    isdf = list(sqllex.finditer(_AFF_ISDF_RE, stmt))
     # spans the IS [NOT] DISTINCT FROM pre-pass emits: the main
     # comparison scan below must not revisit '>='/'>' tokens inside
     # this generated key SQL (right-to-left splices keep positions
@@ -4237,7 +3922,7 @@ def rewrite_affinity_comparisons(
         m
         for m in _AFF_CMP_SCAN_RE.finditer(stmt)
         if m.group() in _CMP_OPS
-        and not _in_quotes(stmt, m.start())
+        and not sqllex.in_string(stmt, m.start())
         and not any(a <= m.start() < b for a, b in emitted)
     ]
     for m in reversed(matches):
@@ -4357,7 +4042,7 @@ def rewrite_affinity_order_by(stmt: str, classes: dict[str, str]) -> str:
         return stmt
     tail = [c for c in clauses if c[1] > order_c[2]]
     o_end = tail[0][1] if tail else len(stmt)
-    keys = _split_args_top(stmt[order_c[2] : o_end])
+    keys = sqllex.split_top(stmt[order_c[2] : o_end])
     out, changed = [], False
     for key in keys:
         mm = _AFF_ORDER_KEY_RE.match(key)
@@ -4375,7 +4060,7 @@ def rewrite_affinity_order_by(stmt: str, classes: dict[str, str]) -> str:
         )
     if not changed:
         return stmt
-    # _split_args_top strips each key's surrounding whitespace, so the
+    # sqllex.split_top strips each key's surrounding whitespace, so the
     # rebuild supplies its own separators (" " after ORDER BY, ", "
     # between keys, " " before any trailing clause)
     rebuilt = " " + ", ".join(k.strip() for k in out) + " "
@@ -4471,7 +4156,7 @@ def _rewrite_window_class_items(
             out_items.append(item)
             continue
         fn = m.group(1).lower()
-        close = _match_paren_fwd(item, m.end() - 1)
+        close = sqllex.close_paren(item, m.end() - 1)
         win = _aff_window_suffix(item, close)
         rest = item[win[1] :] if win else ""
         alias_m = _ITEM_ALIAS_RE.match(rest) if rest.strip() else None
@@ -4683,7 +4368,7 @@ def rewrite_affinity_window_order_by(
             continue
         fm = _WIN_FRAME_KW_RE.search(win, om.end())
         keys_end = fm.start() if fm else len(win)
-        keys = _split_args_top(win[om.end() : keys_end])
+        keys = sqllex.split_top(win[om.end() : keys_end])
         out, changed = [], False
         for key in keys:
             mm = _AFF_ORDER_KEY_RE.match(key)
@@ -4735,10 +4420,8 @@ def rewrite_affinity_minmax(stmt: str, classes: dict[str, str]) -> str:
     arrival = _scope_arrival_col(stmt, classes, deep_scan=True)
     while True:
         edited = False
-        for m in _AFF_MINMAX_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
-            close = _match_paren_fwd(stmt, m.end() - 1)
+        for m in sqllex.finditer(_AFF_MINMAX_RE, stmt):
+            close = sqllex.close_paren(stmt, m.end() - 1)
             inner = stmt[m.end() : close - 1].strip()
             arg = re.sub(
                 r"^(distinct|all)\s+", "", inner, flags=re.IGNORECASE
@@ -4798,9 +4481,7 @@ def rewrite_affinity_between(stmt: str, classes: dict[str, str]) -> str:
     match: their operands aren't classed columns."""
     while True:
         edited = False
-        for m in _AFF_BETWEEN_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
+        for m in sqllex.finditer(_AFF_BETWEEN_RE, stmt):
             xs = _operand_back(stmt, m.start())
             x = stmt[xs : m.start()].strip()
             if _aff_classify(x, classes) is None or not (
@@ -4841,9 +4522,7 @@ def rewrite_affinity_in(stmt: str, classes: dict[str, str]) -> str:
     optimizer's InSet). Subquery/expression elements: verbatim."""
     while True:
         edited = False
-        for m in _AFF_IN_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
+        for m in sqllex.finditer(_AFF_IN_RE, stmt):
             xs = _operand_back(stmt, m.start())
             x = stmt[xs : m.start()].strip()
             dx = _aff_classify(x, classes)
@@ -4856,8 +4535,8 @@ def rewrite_affinity_in(stmt: str, classes: dict[str, str]) -> str:
                 )
             ):
                 continue
-            close = _match_paren_fwd(stmt, m.end() - 1)
-            elems = _split_args_top(stmt[m.end() : close - 1])
+            close = sqllex.close_paren(stmt, m.end() - 1)
+            elems = sqllex.split_top(stmt[m.end() : close - 1])
             descs = [_aff_classify(e, classes) for e in elems]
             if not elems or any(
                 d is None or d[0] == "col" and d[1] == "long"
@@ -5089,7 +4768,7 @@ def _parse_arith_chain(text: str, classes: dict[str, str]):
             # re-parse them as classed columns
             return None
         cm = re.match(r"^cast\s*\(", tok, re.IGNORECASE)
-        if cm is not None and _match_paren_fwd(tok, cm.end() - 1) == len(
+        if cm is not None and sqllex.close_paren(tok, cm.end() - 1) == len(
             tok
         ):
             # track the cast's value class directly — the generic
@@ -5131,19 +4810,12 @@ def _parse_arith_chain(text: str, classes: dict[str, str]):
 def _case_end(s: str, start: int) -> int | None:
     """Index just past the END keyword of the CASE whose body starts
     at ``start`` (right after its CASE keyword), or None."""
-    i, n, depth, cd = start, len(s), 0, 0
-    while i < n:
+    cd = 0
+    for i, depth in sqllex.scan(s, start):
         c = s[i]
-        if c in "'\"`":
-            i = _scan_string(s, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            if depth == 0:
-                return None
-            depth -= 1
-        elif (
+        if c == ")" and depth == 0:
+            return None
+        if (
             depth == 0
             and (c.isalpha() or c == "_")
             and (i == 0 or not _IDENT.match(s[i - 1]))
@@ -5153,13 +4825,9 @@ def _case_end(s: str, start: int) -> int | None:
             if w == "case":
                 cd += 1
             elif w == "end":
-                if cd:
-                    cd -= 1
-                else:
+                if not cd:
                     return m.end()
-            i = m.end()
-            continue
-        i += 1
+                cd -= 1
     return None
 
 
@@ -5861,7 +5529,7 @@ def rewrite_affinity_arithmetic(stmt: str, classes: dict[str, str]) -> str:
         edited = False
         for m in re.finditer(r"[+\-*/%]", stmt):
             i = m.start()
-            if _in_quotes(stmt, i):
+            if sqllex.in_string(stmt, i):
                 continue
             if stmt[i : i + 2] in ("->", "+=", "-="):
                 continue
@@ -5970,10 +5638,10 @@ def _collect_item_alias_classes(
         )
         if gm is None:
             continue
-        close = _match_paren_fwd(item, gm.end() - 1)
+        close = sqllex.close_paren(item, gm.end() - 1)
         rest = item[close:]
         al = _ITEM_ALIAS_RE.match(rest) if rest.strip() else None
-        if al is None or _OVER_RE.match(item[close:].lstrip()):
+        if al is None or _OVER_OPEN_RE.match(item[close:].lstrip()):
             continue
         alias = al.group(1).lower()
         if alias in classes or alias in extras or alias in _KEYWORDS:
@@ -5989,7 +5657,7 @@ def _collect_item_alias_classes(
         if fn.endswith("_by"):
             # min_by/max_by (the bare-column and collate-group-by
             # lowerings): the VALUE argument's class is the alias's
-            args2 = _split_args_top(arg)
+            args2 = sqllex.split_top(arg)
             if len(args2) != 2:
                 continue
             arg = args2[0].strip()
@@ -6131,7 +5799,7 @@ def _rewrite_sum_select_items(
             if fm is None:
                 out_items.append(item)
                 continue
-            close = _match_paren_fwd(item, fm.end() - 1)
+            close = sqllex.close_paren(item, fm.end() - 1)
             inner = item[fm.end() : close - 1].strip()
             rest = item[close:]
             am = _ITEM_ALIAS_RE.match(rest) if rest.strip() else None
@@ -6262,9 +5930,7 @@ def _aff_expr_textish(arg: str, classes: dict[str, str]) -> bool:
     contains a string literal (``avg('')`` coerces '' to 0.0)."""
     if _AFF_TEXT_CAST_RE.search(arg) or "'" in arg:
         return True
-    for im in _AFF_IDENT_SCAN_RE.finditer(arg):
-        if _in_quotes(arg, im.start()):
-            continue
+    for im in sqllex.finditer(_AFF_IDENT_SCAN_RE, arg):
         cls = classes.get(im.group().split(".")[-1].lower())
         if cls in ("dynamic", "text", "none"):
             return True
@@ -6277,7 +5943,7 @@ def _aff_window_suffix(stmt: str, close: int) -> tuple[str, int] | None:
     m = re.match(r"\s*over\s*\(", stmt[close:], re.IGNORECASE)
     if m is None:
         return None
-    wend = _match_paren_fwd(stmt, close + m.end() - 1)
+    wend = sqllex.close_paren(stmt, close + m.end() - 1)
     return stmt[close:wend], wend
 
 
@@ -6312,11 +5978,9 @@ def rewrite_affinity_aggregates(stmt: str, classes: dict[str, str]) -> str:
         return stmt
     while True:
         edited = False
-        for m in _AFF_SUMAGG_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
+        for m in sqllex.finditer(_AFF_SUMAGG_RE, stmt):
             fn = m.group(1).lower()
-            close = _match_paren_fwd(stmt, m.end() - 1)
+            close = sqllex.close_paren(stmt, m.end() - 1)
             arg = stmt[m.end() : close - 1].strip()
             if re.match(r"^(distinct|all)\s", arg, re.IGNORECASE):
                 continue
@@ -6442,35 +6106,11 @@ _SQL_INT_PREFIX_PAT = "'^[+-]?[0-9]+'"
 
 
 def _cast_split_as(inner: str) -> tuple[str, str] | None:
-    """Split 'expr AS typename' at the LAST top-level AS.  One linear
-    walk (depth and string-span membership maintained incrementally) —
-    the old per-match prefix rescan was quadratic and dominated whole
-    statements once the emitted encodings held hundreds of casts."""
-    spans = _string_spans(inner)
-    matches = list(_CAST_AS_RE.finditer(inner))
-    if not matches:
-        return None
+    """Split 'expr AS typename' at the LAST top-level AS."""
     best = None
-    depth = 0
-    si = mi = i = 0
-    n = len(inner)
-    while i < n:
-        if si < len(spans) and spans[si][0] == i:
-            i = spans[si][1]
-            si += 1
-            while mi < len(matches) and matches[mi].start() < i:
-                mi += 1
-            continue
-        while mi < len(matches) and matches[mi].start() == i:
-            if depth == 0:
-                best = matches[mi]
-            mi += 1
-        c = inner[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        i += 1
+    for m in sqllex.finditer(_CAST_AS_RE, inner):
+        if sqllex.depth(inner, m.start()) == 0:
+            best = m
     if best is None:
         return None
     return inner[: best.start()].strip(), inner[best.end() :].strip()
@@ -6528,9 +6168,9 @@ def rewrite_affinity_casts(stmt: str, classes: dict[str, str]) -> str:
     while True:
         edited = False
         for m in _CAST_CALL_RE.finditer(stmt, pos):
-            if _in_quotes(stmt, m.start()):
+            if sqllex.in_string(stmt, m.start()):
                 continue
-            close = _match_paren_fwd(stmt, m.end() - 1)
+            close = sqllex.close_paren(stmt, m.end() - 1)
             parts = _cast_split_as(stmt[m.end() : close - 1])
             if parts is None:
                 continue
@@ -6561,23 +6201,6 @@ def rewrite_affinity_casts(stmt: str, classes: dict[str, str]) -> str:
             return stmt
 
 
-def _stmt_depth(stmt: str, pos: int) -> int:
-    """Paren depth at ``pos``, counting only parens outside strings."""
-    depth = 0
-    i = 0
-    while i < pos:
-        c = stmt[i]
-        if c in "'\"`":
-            i = _scan_string(stmt, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        i += 1
-    return depth
-
-
 def _select_items_span(stmt: str):
     """(list_start, list_end, items) for the select list of THIS
     scope's SELECT — the unique depth-0 ``select`` — or None when the
@@ -6587,15 +6210,10 @@ def _select_items_span(stmt: str):
     by ``_rewrite_scoped_items`` before the whole-statement passes,
     and expression subqueries pass through item classification
     untouched (a '('-prefixed item never classifies)."""
-    spans = _string_spans(stmt)
-
-    def outside(i: int) -> bool:
-        return not any(s <= i < e for s, e in spans)
-
     selects = [
         m
-        for m in _SELECT_RE.finditer(stmt)
-        if outside(m.start()) and _stmt_depth(stmt, m.start()) == 0
+        for m in sqllex.finditer(_SELECT_RE, stmt)
+        if sqllex.depth(stmt, m.start()) == 0
     ]
     if len(selects) != 1:
         return None
@@ -6663,15 +6281,8 @@ def _from_subselect_spans(stmt: str) -> list[tuple[int, int]]:
     untouched: rewriting a DDL body would change STORED values."""
     is_with = re.match(r"\s*with\b", stmt, re.IGNORECASE) is not None
     out: list[tuple[int, int]] = []
-    depth = 0
-    i = 0
-    n = len(stmt)
-    while i < n:
-        c = stmt[i]
-        if c in "'\"`":
-            i = _scan_string(stmt, i)
-            continue
-        if c == "(":
+    for i, depth in sqllex.scan(stmt):
+        if stmt[i] == "(" and depth == 0:
             prefix_ok = re.search(
                 r"\b(from|join)\s*$", stmt[:i], re.IGNORECASE
             ) is not None or (
@@ -6683,22 +6294,10 @@ def _from_subselect_spans(stmt: str) -> list[tuple[int, int]]:
                 )
                 is not None
             )
-            if (
-                depth == 0
-                and prefix_ok
-                and re.match(
-                    r"\(\s*(select|with)\b", stmt[i:], re.IGNORECASE
-                )
+            if prefix_ok and re.match(
+                r"\(\s*(select|with)\b", stmt[i:], re.IGNORECASE
             ):
-                j = _match_paren_fwd(stmt, i)
-                if j > i:
-                    out.append((i, j))
-                    i = j
-                    continue
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        i += 1
+                out.append((i, sqllex.close_paren(stmt, i)))
     return out
 
 
@@ -6711,9 +6310,8 @@ def _setop_cuts(stmt: str) -> list[tuple[int, int]]:
     """Depth-0, outside-strings set-operation connectors."""
     return [
         (m.start(), m.end())
-        for m in _SETOP_RE.finditer(stmt)
-        if not _in_quotes(stmt, m.start())
-        and _stmt_depth(stmt, m.start()) == 0
+        for m in sqllex.finditer(_SETOP_RE, stmt)
+        if sqllex.depth(stmt, m.start()) == 0
     ]
 
 
@@ -6781,7 +6379,7 @@ def _stringify_expr(
         # string later, for which the CAST is a no-op.  min/max over
         # a TEXT column return stored text.
         k = "dyn"
-        close = _match_paren_fwd(b, mm.end() - 1)
+        close = sqllex.close_paren(b, mm.end() - 1)
         arg = b[mm.end() : close - 1].strip()
         da = _aff_classify(arg, classes)
         if mm.group(1).lower() in ("min", "max"):
@@ -6818,15 +6416,10 @@ def _fromless_items_span(stmt: str):
     (``select 7 union select '7'``) stringify through this so the
     compound wrapper can key their storage classes — SQLite keeps
     INTEGER 7 and TEXT '7' as DISTINCT rows (round-10 brief #3)."""
-    spans = _string_spans(stmt)
-
-    def outside(i: int) -> bool:
-        return not any(s <= i < e for s, e in spans)
-
     selects = [
         m
-        for m in _SELECT_RE.finditer(stmt)
-        if outside(m.start()) and _stmt_depth(stmt, m.start()) == 0
+        for m in sqllex.finditer(_SELECT_RE, stmt)
+        if sqllex.depth(stmt, m.start()) == 0
     ]
     if len(selects) != 1:
         return None
@@ -6974,7 +6567,7 @@ def _wrap_ordered_compound(
         return None
     b0 = branch_cols[0]
     parsed: list[tuple[int, str, bool]] = []
-    for term in _split_args_top(ob_body) if ob_body else []:
+    for term in sqllex.split_top(ob_body) if ob_body else []:
         m = _OB_TERM_DIR_RE.match(term.strip())
         core, direction = m.group(1).strip(), (m.group(2) or "").lower()
         nm = _OB_NOCASE_RE.match(core)
@@ -7178,14 +6771,9 @@ def _rewrite_scalar_sub_orders(stmt: str, classes: dict[str, str]) -> str:
     _rewrite_scoped_items — this scans the complementary depth-0
     ``(select``/``(with`` spans and recurses."""
     out = []
-    pos = 0
-    i, n = 0, len(stmt)
-    while i < n:
-        c = stmt[i]
-        if c in "'\"`":
-            i = _scan_string(stmt, i)
-            continue
-        if c == "(" and re.match(
+    pos = skip = 0
+    for i, _ in sqllex.scan(stmt):
+        if i >= skip and stmt[i] == "(" and re.match(
             r"\(\s*(select|with)\b", stmt[i:], re.IGNORECASE
         ):
             if (
@@ -7198,18 +6786,14 @@ def _rewrite_scalar_sub_orders(stmt: str, classes: dict[str, str]) -> str:
                 )
                 is None
             ):
-                j = _match_paren_fwd(stmt, i)
-                if j > i:
-                    inner = stmt[i + 1 : j - 1]
-                    inner = _rewrite_scalar_sub_orders(inner, classes)
-                    inner = rewrite_collate_nocase(inner)
-                    inner = rewrite_affinity_order_by(inner, classes)
-                    out.append(stmt[pos : i + 1])
-                    out.append(inner)
-                    pos = j - 1
-                    i = j
-                    continue
-        i += 1
+                j = sqllex.close_paren(stmt, i)
+                inner = stmt[i + 1 : j - 1]
+                inner = _rewrite_scalar_sub_orders(inner, classes)
+                inner = rewrite_collate_nocase(inner)
+                inner = rewrite_affinity_order_by(inner, classes)
+                out.append(stmt[pos : i + 1])
+                out.append(inner)
+                pos, skip = j - 1, j
     out.append(stmt[pos:])
     return "".join(out)
 
@@ -7362,7 +6946,7 @@ def _rewrite_real_class_items(
             out_items.append(item)
             continue
         fn = m.group(1).lower()
-        close = _match_paren_fwd(item, m.end() - 1)
+        close = sqllex.close_paren(item, m.end() - 1)
         win = _aff_window_suffix(item, close)
         end = win[1] if win else close
         rest = item[end:]
@@ -7564,7 +7148,7 @@ def _rewrite_cast_select_items(
             # ``cast(a1 > 0 as real)``)
             wm = re.match(r"^\s*cast\s*\(", item, re.IGNORECASE)
             if wm is not None:
-                close = _match_paren_fwd(item, wm.end() - 1)
+                close = sqllex.close_paren(item, wm.end() - 1)
                 parts = _cast_split_as(item[wm.end() : close - 1])
                 rest = item[close:].strip()
                 am = (
@@ -7639,7 +7223,7 @@ def rewrite_arith_div_chains(stmt: str, classes: dict[str, str]) -> str:
         if m is None:
             break
         i = m.start() + 1
-        if _in_quotes(stmt, m.start()):
+        if sqllex.in_string(stmt, m.start()):
             continue
         ls = _operand_back(stmt, m.start())
         if not stmt[ls : m.start()].strip():
@@ -7709,61 +7293,39 @@ def _bool_cond_end(
     enclosing scope, a statement separator, or end of text.  The
     ``FROM`` of an ``IS [NOT] DISTINCT FROM`` operator is part of the
     expression, not a stop."""
-    i, n = start, len(stmt)
-    depth = 0
     prev_word = ""
-    while i < n:
+    for i, depth in sqllex.scan(stmt, start):
         c = stmt[i]
-        if c in "'\"`":
-            i = _scan_string(stmt, i)
+        if depth:
             continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            if depth == 0:
-                return i
-            depth -= 1
-        elif depth == 0 and (c == ";" or (c == "," and comma_stop)):
+        if c == ")" or c == ";" or (c == "," and comma_stop):
             return i
-        elif depth == 0 and (c.isalpha() or c == "_"):
-            if i == 0 or not _IDENT.match(stmt[i - 1]):
-                m = _BOOL_WORD_RE.match(stmt, i)
-                w = m.group(0).lower()
-                if w in stops and not (
-                    w == "from" and prev_word == "distinct"
-                ):
-                    return i
-                prev_word = w
-                i = m.end()
-                continue
-        i += 1
-    return n
+        if (c.isalpha() or c == "_") and (
+            i == 0 or not _IDENT.match(stmt[i - 1])
+        ):
+            w = _BOOL_WORD_RE.match(stmt, i).group(0).lower()
+            if w in stops and not (w == "from" and prev_word == "distinct"):
+                return i
+            prev_word = w
+    return len(stmt)
 
 
 def _when_then_end(stmt: str, start: int) -> int:
     """Position of the THEN matching a WHEN at this CASE level."""
-    i, n = start, len(stmt)
     case_depth = 0
-    while i < n:
+    for i, _ in sqllex.scan(stmt, start):
         c = stmt[i]
-        if c in "'\"`":
-            i = _scan_string(stmt, i)
-            continue
         if (c.isalpha() or c == "_") and (
             i == 0 or not _IDENT.match(stmt[i - 1])
         ):
-            m = _BOOL_WORD_RE.match(stmt, i)
-            w = m.group(0).lower()
+            w = _BOOL_WORD_RE.match(stmt, i).group(0).lower()
             if w == "case":
                 case_depth += 1
             elif w == "end" and case_depth:
                 case_depth -= 1
             elif w == "then" and case_depth == 0:
                 return i
-            i = m.end()
-            continue
-        i += 1
-    return n
+    return len(stmt)
 
 
 def _searched_when_spans(stmt: str) -> list[tuple[int, int]]:
@@ -7772,12 +7334,8 @@ def _searched_when_spans(stmt: str) -> list[tuple[int, int]]:
     comparison values, not boolean contexts, and are skipped."""
     spans: list[tuple[int, int]] = []
     stack: list[bool] = []
-    i, n = 0, len(stmt)
-    while i < n:
+    for i, _ in sqllex.scan(stmt):
         c = stmt[i]
-        if c in "'\"`":
-            i = _scan_string(stmt, i)
-            continue
         if (c.isalpha() or c == "_") and (
             i == 0 or not _IDENT.match(stmt[i - 1])
         ):
@@ -7793,9 +7351,6 @@ def _searched_when_spans(stmt: str) -> list[tuple[int, int]]:
                     stack.pop()
             elif w == "when" and stack and stack[-1]:
                 spans.append((m.end(), _when_then_end(stmt, m.end())))
-            i = m.end()
-            continue
-        i += 1
     return spans
 
 
@@ -7804,38 +7359,28 @@ def _bool_split_top(expr: str, word: str) -> list[str]:
     CASE..END blocks, with the AND that belongs to a BETWEEN consumed
     by it."""
     parts: list[str] = []
-    i, n, last = 0, len(expr), 0
-    depth = case_depth = between = 0
-    while i < n:
+    last = case_depth = between = 0
+    for i, depth in sqllex.scan(expr):
         c = expr[i]
-        if c in "'\"`":
-            i = _scan_string(expr, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (c.isalpha() or c == "_") and (
+        if (c.isalpha() or c == "_") and (
             i == 0 or not _IDENT.match(expr[i - 1])
         ):
             m = _BOOL_WORD_RE.match(expr, i)
             w = m.group(0).lower()
-            if depth == 0:
-                if w == "case":
-                    case_depth += 1
-                elif w == "end" and case_depth:
-                    case_depth -= 1
-                elif case_depth == 0:
-                    if w == "between":
-                        between += 1
-                    elif w == "and" and between:
-                        between -= 1
-                    elif w == word:
-                        parts.append(expr[last:i])
-                        last = m.end()
-            i = m.end()
-            continue
-        i += 1
+            if depth:
+                continue
+            if w == "case":
+                case_depth += 1
+            elif w == "end" and case_depth:
+                case_depth -= 1
+            elif case_depth == 0:
+                if w == "between":
+                    between += 1
+                elif w == "and" and between:
+                    between -= 1
+                elif w == word:
+                    parts.append(expr[last:i])
+                    last = m.end()
     parts.append(expr[last:])
     return parts
 
@@ -7858,36 +7403,24 @@ def _bool_is_predicate(t: str) -> bool:
     function — SQLite's returns 0/1, the engine's returns a boolean,
     and both are truth-exact); everything inside strings, parens, or
     CASE blocks does not."""
-    i, n = 0, len(t)
-    depth = case_depth = 0
-    while i < n:
+    case_depth = skip = 0
+    for i, depth in sqllex.scan(t):
         c = t[i]
-        if c in "'\"`":
-            i = _scan_string(t, i)
-            continue
-        if c == "(":
-            depth += 1
-            i += 1
-            continue
-        if c == ")":
-            depth -= 1
-            i += 1
+        if i < skip:
             continue
         if depth == 0 and case_depth == 0 and c in "<>=!":
             # << and >> are numeric bitshifts, not comparisons; a bare
             # ! (not !=) is nothing SQLite accepts — skip both
-            if c in "<>" and i + 1 < n and t[i + 1] == c:
-                i += 2
+            if c in "<>" and t[i + 1 : i + 2] == c:
+                skip = i + 2
                 continue
-            if c == "!" and (i + 1 >= n or t[i + 1] != "="):
-                i += 1
+            if c == "!" and t[i + 1 : i + 2] != "=":
                 continue
             return True
         if (c.isalpha() or c == "_") and (
             i == 0 or not _IDENT.match(t[i - 1])
         ):
-            m = _BOOL_WORD_RE.match(t, i)
-            w = m.group(0).lower()
+            w = _BOOL_WORD_RE.match(t, i).group(0).lower()
             if depth == 0:
                 if w == "case":
                     case_depth += 1
@@ -7895,9 +7428,6 @@ def _bool_is_predicate(t: str) -> bool:
                     case_depth -= 1
                 elif case_depth == 0 and w in _BOOL_PRED_KWS:
                     return True
-            i = m.end()
-            continue
-        i += 1
     return False
 
 
@@ -7961,12 +7491,12 @@ def _boolify(expr: str, classes: dict[str, str]) -> str:
         inner = _boolify(t[m.end():], classes).strip()
         # don't re-wrap an already-parenthesized operand: the pass
         # re-scans to fixpoint and must not grow a paren per scan
-        if inner.startswith("(") and _match_paren_fwd(inner, 0) == len(
+        if inner.startswith("(") and sqllex.close_paren(inner, 0) == len(
             inner
         ):
             return f"NOT {inner}"
         return f"NOT ({inner})"
-    if t.startswith("(") and _match_paren_fwd(t, 0) == len(t):
+    if t.startswith("(") and sqllex.close_paren(t, 0) == len(t):
         inner = t[1:-1]
         if re.match(r"\s*(select|with)\b", inner, re.IGNORECASE):
             return _bool_truth_sql(t, classes)  # scalar subquery value
@@ -8009,10 +7539,8 @@ def rewrite_boolean_contexts(stmt: str, classes: dict[str, str]) -> str:
     for _ in range(400):
         edited = False
         m = None
-        for m in _IIF_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
-            close = _match_paren_fwd(stmt, m.end() - 1)
+        for m in sqllex.finditer(_IIF_RE, stmt):
+            close = sqllex.close_paren(stmt, m.end() - 1)
             args = _split_call_args(stmt, m.end() - 1)
             if args is None or len(args) != 3:
                 continue
@@ -8027,9 +7555,7 @@ def rewrite_boolean_contexts(stmt: str, classes: dict[str, str]) -> str:
         if edited:
             continue
         spans: list[tuple[int, int]] = []
-        for m in _BOOL_CTX_KW_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
+        for m in sqllex.finditer(_BOOL_CTX_KW_RE, stmt):
             kw = m.group(1).lower()
             stops = _BOOL_STOP_ON if kw == "on" else _BOOL_STOP_WH
             spans.append(
@@ -8070,7 +7596,7 @@ def rewrite_boolean_clause_terms(
         kw = clauses[names.index(clause)]
         after = [c for c in clauses if c[1] > kw[2]]
         end = after[0][1] if after else len(stmt)
-        terms = _split_args_top(stmt[kw[2] : end])
+        terms = sqllex.split_top(stmt[kw[2] : end])
         out, changed = [], False
         for term in terms:
             m = _OB_TERM_DIR_RE.match(term.strip())
@@ -8103,7 +7629,7 @@ def _bool_item_needs_rewrite(expr: str) -> bool:
     the one select-item shape Spark cannot type (bare comparisons
     already evaluate to booleans and render as 0/1)."""
     t = expr.strip()
-    while t.startswith("(") and _match_paren_fwd(t, 0) == len(t):
+    while t.startswith("(") and sqllex.close_paren(t, 0) == len(t):
         t = t[1:-1].strip()
     nm = re.match(r"not\b(.*)$", t, re.IGNORECASE | re.DOTALL)
     if nm:
@@ -8124,11 +7650,7 @@ def rewrite_boolean_select_items(
     0/1/NULL: boolify every AND/OR/NOT select item (any scope — the
     scan visits each SELECT keyword, including subqueries)."""
     out = stmt
-    selects = [
-        m
-        for m in _SELECT_RE.finditer(stmt)
-        if not _in_quotes(stmt, m.start())
-    ]
+    selects = list(sqllex.finditer(_SELECT_RE, stmt))
     for sel in reversed(selects):
         list_start = sel.end()
         dm = re.match(
@@ -8228,7 +7750,7 @@ _FC_BOOL01_RE = re.compile(
 
 def _strip_outer_parens(t: str) -> str:
     t = t.strip()
-    while t.startswith("(") and _match_paren_fwd(t, 0) == len(t):
+    while t.startswith("(") and sqllex.close_paren(t, 0) == len(t):
         t = t[1:-1].strip()
     return t
 
@@ -8242,19 +7764,8 @@ def _is_value_pred(e: str) -> bool:
         return False
     if core[0] in "<>=!*/%|&," or core[-1] in "<>=!+-*/%|&,~(":
         return False  # operator fragment, not a complete predicate
-    i, n, depth = 0, len(core), 0
-    while i < n:
-        c = core[i]
-        if c in "'\"`":
-            i = _scan_string(core, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            return False
-        i += 1
+    if sqllex.top_positions(core, ","):
+        return False
     return _bool_is_predicate(core) or _bool_item_needs_rewrite(core)
 
 
@@ -8275,21 +7786,14 @@ def _case_value_spans(stmt: str) -> list[tuple[int, int]]:
     bodies at the CASE's own level) — simple-CASE WHEN operands are
     comparison values and are skipped."""
     starts: list[int] = []
-    i, n = 0, len(stmt)
-    while i < n:
+    for i, _ in sqllex.scan(stmt):
         c = stmt[i]
-        if c in "'\"`":
-            i = _scan_string(stmt, i)
-            continue
         if (c.isalpha() or c == "_") and (
             i == 0 or not _IDENT.match(stmt[i - 1])
         ):
             m = _BOOL_WORD_RE.match(stmt, i)
             if m.group(0).lower() == "case":
                 starts.append(m.end())
-            i = m.end()
-            continue
-        i += 1
     spans: list[tuple[int, int]] = []
     for st in starts:
         spans.extend(_case_spans_from(stmt, st))
@@ -8300,23 +7804,12 @@ def _case_spans_from(stmt: str, st: int) -> list[tuple[int, int]]:
     """Branch VALUE spans of the single CASE whose body starts at
     ``st`` (just past its CASE keyword) — own level only."""
     spans: list[tuple[int, int]] = []
-    i, n, depth, cd = st, len(stmt), 0, 0
+    cd = 0
     cur: int | None = None
-    while i < n:
+    for i, depth in sqllex.scan(stmt, st):
         c = stmt[i]
-        if c in "'\"`":
-            i = _scan_string(stmt, i)
-            continue
-        if c == "(":
-            depth += 1
-            i += 1
-            continue
-        if c == ")":
-            if depth == 0:
-                break  # enclosing scope closed before END
-            depth -= 1
-            i += 1
-            continue
+        if c == ")" and depth == 0:
+            break  # enclosing scope closed before END
         if (
             depth == 0
             and (c.isalpha() or c == "_")
@@ -8341,9 +7834,6 @@ def _case_spans_from(stmt: str, st: int) -> list[tuple[int, int]]:
                 if cur is not None:
                     spans.append((cur, i))
                 cur = m.end()
-            i = m.end()
-            continue
-        i += 1
     return spans
 
 
@@ -8352,13 +7842,9 @@ def _paren_group_spans(stmt: str) -> list[tuple[int, int]]:
     by an identifier character or ``)`` (those are call/postfix
     parens, owned by the function-argument scan)."""
     spans: list[tuple[int, int]] = []
-    i, n = 0, len(stmt)
-    while i < n:
-        c = stmt[i]
-        if c in "'\"`":
-            i = _scan_string(stmt, i)
-            continue
-        if c == "(":
+    n = len(stmt)
+    for i, _ in sqllex.scan(stmt):
+        if stmt[i] == "(":
             k = i - 1
             while k >= 0 and stmt[k] in " \t\n":
                 k -= 1
@@ -8372,10 +7858,9 @@ def _paren_group_spans(stmt: str) -> list[tuple[int, int]]:
                 if stmt[w + 1 : k + 1].lower() in _KEYWORDS:
                     call_like = False
             if not call_like:
-                e = _match_paren_fwd(stmt, i)
+                e = sqllex.close_paren(stmt, i)
                 if 0 < e <= n and stmt[e - 1] == ")":
                     spans.append((i, e))
-        i += 1
     return spans
 
 
@@ -8391,13 +7876,11 @@ def rewrite_predicate_values(stmt: str, classes: dict[str, str]) -> str:
     predicate), so the fixpoint is reached."""
     for _ in range(200):
         edited = False
-        for m in _PRED_FN_RE.finditer(stmt):
-            if _in_quotes(stmt, m.start()):
-                continue
+        for m in sqllex.finditer(_PRED_FN_RE, stmt):
             fn = m.group(1).lower()
             if fn != "cast" and fn not in _PRED_WRAP_FNS:
                 continue
-            close = _match_paren_fwd(stmt, m.end() - 1)
+            close = sqllex.close_paren(stmt, m.end() - 1)
             if fn == "cast":
                 parts = _cast_split_as(stmt[m.end() : close - 1])
                 if parts is not None and _is_value_pred(parts[0]):
@@ -8483,9 +7966,9 @@ def rewrite_predicate_values(stmt: str, classes: dict[str, str]) -> str:
         for m in sorted(
             _EXISTS_EXPR_RE.finditer(stmt), key=lambda m: -m.start()
         ):
-            if _in_quotes(stmt, m.start()):
+            if sqllex.in_string(stmt, m.start()):
                 continue
-            close = _match_paren_fwd(stmt, m.end() - 1)
+            close = sqllex.close_paren(stmt, m.end() - 1)
             j = close
             while j < len(stmt) and stmt[j] in " \t\n":
                 j += 1
@@ -8613,7 +8096,7 @@ def append_scan_order(stmt: str, nr_by_table: dict[str, str]) -> str:
     if _SCAN_BAD_JOIN_RE.search(src):
         return stmt
     refs: list[tuple[str, str]] = []  # (table, visible name)
-    for unit in _split_args_top(src):
+    for unit in sqllex.split_top(src):
         for seg in _SCAN_JOIN_SPLIT_RE.split(unit):
             body = re.split(
                 r"\b(?:on|using)\b", seg, maxsplit=1, flags=re.IGNORECASE
@@ -8660,14 +8143,7 @@ def rewrite_statement(
     # on sqawk tables (no declared column collations), stripped so
     # the shape runs instead of hitting Spark's parse error
     while True:
-        bm = next(
-            (
-                m
-                for m in _COLLATE_BINARY_RE.finditer(stmt)
-                if not _in_quotes(stmt, m.start())
-            ),
-            None,
-        )
+        bm = next(sqllex.finditer(_COLLATE_BINARY_RE, stmt), None)
         if bm is None:
             break
         stmt = stmt[: bm.start()] + stmt[bm.end() :]

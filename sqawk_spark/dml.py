@@ -44,11 +44,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sqawk_spark.dialect import (
-    _match_paren_fwd,
-    _scan_string,
-    _skip_ws,
-)
+from sqawk_spark import sqllex
 
 _INSERT_RE = re.compile(
     r"^\s*insert\s+into\s+([A-Za-z_][A-Za-z_0-9]*)\s*", re.IGNORECASE
@@ -85,26 +81,6 @@ _AFFINITY = (
 )
 
 
-def _split_top_commas(s: str) -> list[str]:
-    """Split on commas at paren depth 0, quote-aware."""
-    parts, depth, last, i, n = [], 0, 0, 0, len(s)
-    while i < n:
-        c = s[i]
-        if c in "'\"`":
-            i = _scan_string(s, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(s[last:i])
-            last = i + 1
-        i += 1
-    parts.append(s[last:])
-    return [p.strip() for p in parts]
-
-
 def maybe_run_dml(
     spark: SparkSession, stmt: str, run_sql, classes: dict[str, str]
 ) -> str | None:
@@ -135,9 +111,9 @@ def maybe_run_dml(
     m = _CREATE_COLS_RE.match(s)
     if m:
         name = m.group(1)
-        close = _match_paren_fwd(s, m.end() - 1)
+        close = sqllex.close_paren(s, m.end() - 1)
         fields = []
-        for coldef in _split_top_commas(s[m.end() : close - 1]):
+        for coldef in sqllex.split_top(s[m.end() : close - 1]):
             toks = coldef.split()
             if not toks or toks[0].upper() in (
                 "PRIMARY", "UNIQUE", "CHECK", "FOREIGN", "CONSTRAINT",
@@ -163,8 +139,10 @@ def maybe_run_dml(
         rest = s[m.end() :]
         cols: list[str] | None = None
         if rest.startswith("("):
-            close = _match_paren_fwd(rest, 0)
-            cols = [c.strip().strip('"`') for c in _split_top_commas(rest[1 : close - 1])]
+            close = sqllex.close_paren(rest, 0)
+            cols = [
+                c.strip('"`') for c in sqllex.split_top(rest[1 : close - 1])
+            ]
             rest = rest[close:].strip()
         kw = rest[:6].upper()
         if kw.startswith("VALUES"):
@@ -212,7 +190,7 @@ def maybe_run_dml(
         set_part = rest[: wm if wm is not None else len(rest)]
         cond = rest[wm + 5 :].strip() if wm is not None else None
         updates: dict[str, str] = {}
-        for assign in _split_top_commas(set_part):
+        for assign in sqllex.split_top(set_part):
             eq = _find_top_eq(assign)
             if eq is None:
                 raise ValueError(f"cannot parse SET clause: {assign!r}")
@@ -262,37 +240,11 @@ def maybe_run_dml(
 def _find_top_keyword(s: str, kw: str) -> int | None:
     """Index of a bare keyword at depth 0 outside quotes, or None."""
     pat = re.compile(rf"\b{kw}\b", re.IGNORECASE)
-    depth, i, n = 0, 0, len(s)
-    while i < n:
-        c = s[i]
-        if c in "'\"`":
-            i = _scan_string(s, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            m = pat.match(s, i)
-            if m:
-                return i
-        i += 1
-    return None
+    return next(
+        (i for i, d in sqllex.scan(s) if d == 0 and pat.match(s, i)), None
+    )
 
 
 def _find_top_eq(s: str) -> int | None:
     """Index of the first top-level ``=`` outside quotes/parens."""
-    depth, i, n = 0, 0, len(s)
-    while i < n:
-        c = s[i]
-        if c in "'\"`":
-            i = _scan_string(s, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "=" and depth == 0:
-            return i
-        i += 1
-    return None
+    return next(iter(sqllex.top_positions(s, "=")), None)

@@ -121,12 +121,109 @@ def test_final_stdout_line_stays_inside_driver_tail_window() -> None:
     assert len(final) < 1950, len(final)
 
 
+def test_overlong_stdout_line_exits_instead_of_printing() -> None:
+    """Dropping the optional fields is the only shortening; a line
+    still too long for the tail window is an error, not a clipped
+    record."""
+    import pytest
+
+    from bench import _fit_line
+
+    fields = {"metric": "headline_queries_total", "worst_vs_hist": "x" * 99}
+    assert "worst_vs_hist" in json.loads(_fit_line(dict(fields)))
+    fields["worst_vs_hist"] = "x" * 2000
+    assert "worst_vs_hist" not in json.loads(_fit_line(dict(fields)))
+    fields["queries"] = {f"q{i:03d}": 9.999 for i in range(200)}
+    with pytest.raises(SystemExit) as e:
+        _fit_line(fields)
+    assert e.value.code != 0
+
+
+# HEADLINE[:72] frozen: qNN keys in committed BENCH records point at
+# these names, so HEADLINE may only grow at the end
+_HEADLINE_72 = (
+    "flagship_pricing_summary",
+    "join_multiway",
+    "join_left_outer",
+    "join_semi",
+    "groupby_agg",
+    "count_distinct",
+    "distinct_pairs",
+    "window_rank",
+    "window_running_agg",
+    "topk_limit",
+    "cte_top_suppliers",
+    "set_union",
+    "window_groups_exclude",
+    "tpch_q5_local_supplier_volume",
+    "tpch_q3_shipping_priority",
+    "tpch_q6_forecast_revenue",
+    "tpch_q18_large_volume_customer",
+    "tpch_q10_returned_items",
+    "tpch_q14_promo_effect",
+    "tpch_q19_disjunctive_revenue",
+    "tpch_q22_global_sales_opportunity",
+    "tpch_q21_waiting_suppliers",
+    "tpch_q17_small_quantity_revenue",
+    "tpch_q9_product_profit",
+    "dedup_paragraph_chunks",
+    "merge_upsert_orders",
+    "grouping_sets_agg",
+    "percentile_stats",
+    "json_extract_props",
+    "join_skew_salted",
+    "zorder_layout_orders",
+    "dedup_exact",
+    "dedup_ngram_jaccard",
+    "dedup_clusters",
+    "dedup_keep_best",
+    "dedup_embedding_lsh",
+    "sample_stratified_balanced",
+    "sample_importance_weighted",
+    "sample_curriculum_buckets",
+    "sample_weighted_reservoir",
+    "text_collapse_runs",
+    "ann_cosine_topk",
+    "embedding_quantize_int8",
+    "doc_chunk_overlap",
+    "text_quality_score",
+    "text_bm25_topk",
+    "text_perplexity_score",
+    "text_perplexity_bigram",
+    "text_pii_redact",
+    "quality_filter_chain",
+    "events_user_features",
+    "dedup_semantic_clusters",
+    "pipeline_end_to_end",
+    "multimodal_audio_features",
+    "sample_shuffle_deterministic",
+    "events_tumbling_window",
+    "events_sessionize",
+    "events_late_drop",
+    "pack_sequences",
+    "contamination_check",
+    "dedup_containment",
+    "graph_pagerank_dupgraph",
+    "text_quality_lr_score",
+    "text_boilerplate_strip",
+    "text_ccnet_ppl_buckets",
+    "market_basket_pairs",
+    "graph_triangle_count",
+    "ann_lsh_recall",
+    "events_markov_transitions",
+    "events_rfm_scores",
+    "text_ngram_novelty",
+    "docs_cross_source_overlap",
+)
+
+
 def test_committed_legend_matches_headline() -> None:
     """bench_legend.json is the committed qNN → full-name mapping the
     stdout line's short keys point at. It must track HEADLINE exactly
     (HEADLINE is append-only, so existing keys never change meaning)."""
     from bench import HEADLINE
 
+    assert tuple(HEADLINE[:72]) == _HEADLINE_72
     with open("/root/repo/bench_legend.json") as f:
         legend = json.load(f)
     assert legend == {f"q{i:02d}": n for i, n in enumerate(HEADLINE)}

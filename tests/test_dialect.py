@@ -9,6 +9,7 @@ import sqlite3
 
 import pytest
 
+from sqawk_spark import sqllex
 from sqawk_spark.dialect import (
     glob_to_regex,
     rewrite_glob,
@@ -192,7 +193,7 @@ def test_double_quoted_identifier_fallback():
 
 
 try:
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     _sql_texts = st.text(
@@ -204,13 +205,22 @@ try:
 
     @given(_sql_texts)
     @settings(max_examples=300, deadline=None)
-    def test_rewrite_identity_without_dialect_tokens(s):
-        """Statements that never mention GLOB or group_concat must
-        pass through byte-identical — the rewriter may not disturb
-        arbitrary SQL, quoting included."""
+    @example("-(0<0)")
+    def test_rewrite_keeps_quoted_spans(s):
+        """The rewriter may restructure expressions — ``-(0<0)``
+        becomes a CASE, since SQLite's comparison value is the integer
+        0/1 (test_negated_comparison_value_vs_sqlite) — but never
+        edits quoted text: every quoted span of the input appears
+        verbatim, in order, in the output.  GLOB and group_concat are
+        left out: the GLOB lowering swaps its operands."""
         if "glob" in s.lower() or "group_concat" in s.lower():
             return
-        assert rewrite_statement(s) == s
+        out = rewrite_statement(s)
+        pos = 0
+        for a, b in sqllex.string_spans(s):
+            pos = out.find(s[a:b], pos)
+            assert pos >= 0, (s, out, s[a:b])
+            pos += b - a
 
     @given(_sql_texts, st.sampled_from([" GLOB ", " NOT GLOB "]))
     @settings(max_examples=300, deadline=None)
@@ -230,6 +240,17 @@ def _sqlite(sql: str, rows):
     con.execute("create table a (a1 text, a2 text)")
     con.executemany("insert into a values (?, ?)", rows)
     return [tuple(r) for r in con.execute(sql)]
+
+
+def test_negated_comparison_value_vs_sqlite(spark):
+    """A comparison used as a VALUE is SQLite's integer 0/1, so its
+    negation is the integer 0 or -1 — the boolean-in-value rewrite
+    (a CASE) is what gives Spark the same value."""
+    con = sqlite3.connect(":memory:")
+    for q in ["select -(0<0)", "select -(0<1)", "select -(1<0) + 2"]:
+        want = con.execute(q).fetchall()
+        got = spark.sql(rewrite_statement(q)).collect()
+        assert [tuple(r) for r in got] == want, q
 
 
 def test_glob_semantics_match_sqlite():
@@ -920,6 +941,12 @@ def test_bare_group_columns_vs_sqlite(spark):
         "select v, g, sum(tnr) as s from t where tnr > 1 group by g"
         " order by g",
         "select v, g, total(tnr) as s from t group by g order by g",
+        # a named window (``OVER w``) is a window function too: no
+        # bare-column rewrite, one row per input row
+        "select max(tnr) over w as m, v from t window w as"
+        " (order by tnr) order by tnr",
+        "select count(*) over w as n, v from t window w as"
+        " (order by tnr) order by tnr",
     ]:
         want = [
             tuple("" if x is None else str(x) for x in r)
@@ -930,3 +957,32 @@ def test_bare_group_columns_vs_sqlite(spark):
             for r in spark.sql(rewrite_statement(q, classes=cl)).collect()
         ]
         assert got == want, f"{q}\ngot {got}\nwant {want}"
+
+
+def test_no_module_level_name_bound_twice():
+    """A module-level rebinding silently changes every earlier user:
+    ``_OVER_RE`` was bound to ``\\bover\\b`` and later rebound to
+    ``\\bover\\s*\\(``, so the bare-column window guards missed
+    ``OVER w`` (the named-window queries above)."""
+    import ast
+    import collections
+
+    import sqawk_spark.dialect as dialect
+
+    with open(dialect.__file__) as f:
+        tree = ast.parse(f.read())
+    bound: collections.Counter[str] = collections.Counter()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            bound[node.name] += 1
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            bound.update(a.asname or a.name for a in node.names)
+        elif isinstance(node, ast.Assign):
+            bound.update(
+                t.id for t in node.targets if isinstance(t, ast.Name)
+            )
+        elif isinstance(node, ast.AnnAssign) and isinstance(
+            node.target, ast.Name
+        ):
+            bound[node.target.id] += 1
+    assert [n for n, c in bound.items() if c > 1] == []
