@@ -291,17 +291,7 @@ def run(argv: list[str], out=None) -> int:
 
         mutated: list[str] = []
         try:
-            from sqawk_spark.dialect import rewrite_statement
-
-            # known column names let the rewriter reproduce SQLite's
-            # double-quoted-identifier fallback (quirks.html#dblquote);
-            # from the catalog so -dbfile-registered views count too
-            known_cols = {
-                c
-                for t in spark.catalog.listTables()
-                if t.isTemporary
-                for c in spark.table(t.name).columns
-            }
+            known_cols = _known_columns(spark)
 
             from sqawk_spark.dml import maybe_run_dml
 
@@ -388,12 +378,7 @@ def _run_parquet_output(
         c for c in parts.get("partitionBy", "").split("+") if c
     ]
 
-    known_cols = {
-        c
-        for t in spark.catalog.listTables()
-        if t.isTemporary
-        for c in spark.table(t.name).columns
-    }
+    known_cols = _known_columns(spark)
     stmts = split_statements(script)
     selects = []
     mutated: list[str] = []
@@ -418,6 +403,19 @@ def _run_parquet_output(
 
         persist_mutations(spark, dbfile, mutated)
     return 0
+
+
+def _known_columns(spark) -> set[str]:
+    """Every column of every temporary view: known column names let
+    the rewriter reproduce SQLite's double-quoted-identifier fallback
+    (quirks.html#dblquote); read from the catalog so -dbfile-registered
+    views count too."""
+    return {
+        c
+        for t in spark.catalog.listTables()
+        if t.isTemporary
+        for c in spark.table(t.name).columns
+    }
 
 
 def _run_statement_with(

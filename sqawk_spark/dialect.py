@@ -14,9 +14,10 @@ Every rewrite is a pure ``str -> str`` pass, and ``rewrite_statement``
 runs them in one fixed order; its comments record which pass must see
 which other pass's output.  No pass lexes SQL on its own: quoted
 tokens (single, double and backtick quoting with SQL's doubled-quote
-escape) and paren depth come from sqawk_spark/sqllex.py, which lexes
-each distinct string once.  Passes match keywords and operators on
-token boundaries outside quoted tokens.
+escape), paren depth, words, each CASE's WHEN/THEN/ELSE/END and the
+top-level clause bodies come from sqawk_spark/sqllex.py, which
+computes them once per distinct string.  Passes match keywords and
+operators on token boundaries outside quoted tokens.
 """
 
 from __future__ import annotations
@@ -372,8 +373,8 @@ def rewrite_bare_minmax_columns(
         # (compact) error over a silently different winner row
         return stmt
 
-    clauses = _top_level_clauses(stmt)
-    from_c = next((c for c in clauses if c[0] == "from"), None)
+    clauses = sqllex.clauses(stmt)
+    from_c = clauses.first("from")
     if from_c is None:
         return stmt
     sel_end = selects[0].end()
@@ -384,19 +385,14 @@ def rewrite_bare_minmax_columns(
     if re.match(r"\s*distinct\b", sel_list, re.IGNORECASE):
         return stmt
 
-    group_c = next((c for c in clauses if c[0] == "group_by"), None)
+    group_b = clauses.body("group_by")
     grouped: set[str] = set()
-    if group_c is not None:
-        tail = [c for c in clauses if c[1] > group_c[2]]
-        g_end = tail[0][1] if tail else len(stmt)
-        for expr in sqllex.split_top(stmt[group_c[2] : g_end]):
+    if group_b is not None:
+        for expr in sqllex.split_top(stmt, *group_b):
             # a trailing COLLATE still GROUPS the expression —
             # the term must register as grouped or the bare-
             # column rewrite fires on the grouping key itself
-            core_g = re.sub(
-                r"\s+collate\s+\w+\s*$", "", expr,
-                flags=re.IGNORECASE,
-            )
+            core_g = _TRAILING_COLLATE_ANY_RE.sub("", expr)
             grouped.add(re.sub(r"\s+", "", core_g).lower())
 
     # split the select list on top-level commas (reuse the call-arg
@@ -421,11 +417,7 @@ def rewrite_bare_minmax_columns(
             # Literal-only items stay native (Spark allows constants
             # beside aggregates).
             body, alias2 = item.strip(), None
-            am2 = re.match(
-                r"^(.*?)\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*)\s*$",
-                body,
-                re.IGNORECASE | re.DOTALL,
-            )
+            am2 = _PROP_ALIAS_RE.match(body)
             if am2 and am2.group(2).lower() not in _KEYWORDS | {
                 "null", "true", "false",
             }:
@@ -516,15 +508,15 @@ def rewrite_bare_group_columns(stmt: str, classes: dict[str, str]) -> str:
     arrival = _scope_arrival_col(stmt, classes, deep_scan=True)
     if arrival is None:
         return stmt
-    clauses = _top_level_clauses(stmt)
-    from_c = next((c for c in clauses if c[0] == "from"), None)
+    clauses = sqllex.clauses(stmt)
+    from_c = clauses.first("from")
     if from_c is None:
         return stmt
     list_start, list_end = selects[0].end(), from_c[1]
     sel_list = stmt[list_start:list_end]
     if re.match(r"\s*distinct\b", sel_list, re.IGNORECASE):
         return stmt
-    group_c = next((c for c in clauses if c[0] == "group_by"), None)
+    group_b = clauses.body("group_by")
     has_agg = any(
         list_start <= m.start() < list_end
         for m in sqllex.finditer(_OTHER_AGG_RE, stmt)
@@ -532,20 +524,15 @@ def rewrite_bare_group_columns(stmt: str, classes: dict[str, str]) -> str:
     # GROUP BY with no aggregate and a global aggregate both take the
     # first row (probed); a plain SELECT with neither is no aggregate
     # query at all
-    if group_c is None and not has_agg:
+    if group_b is None and not has_agg:
         return stmt
     grouped: set[str] = set()
-    if group_c is not None:
-        tail = [c for c in clauses if c[1] > group_c[2]]
-        g_end = tail[0][1] if tail else len(stmt)
-        for expr in sqllex.split_top(stmt[group_c[2] : g_end]):
+    if group_b is not None:
+        for expr in sqllex.split_top(stmt, *group_b):
             # a trailing COLLATE still GROUPS the expression —
             # the term must register as grouped or the bare-
             # column rewrite fires on the grouping key itself
-            core_g = re.sub(
-                r"\s+collate\s+\w+\s*$", "", expr,
-                flags=re.IGNORECASE,
-            )
+            core_g = _TRAILING_COLLATE_ANY_RE.sub("", expr)
             grouped.add(re.sub(r"\s+", "", core_g).lower())
     items = _split_call_args("(" + sel_list + ")", 0)
     if not items:
@@ -562,11 +549,7 @@ def rewrite_bare_group_columns(stmt: str, classes: dict[str, str]) -> str:
             # FIRST row too (same wrap as the min/max winning-row
             # pass; round 11)
             body, alias2 = item.strip(), None
-            am2 = re.match(
-                r"^(.*?)\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*)\s*$",
-                body,
-                re.IGNORECASE | re.DOTALL,
-            )
+            am2 = _PROP_ALIAS_RE.match(body)
             if am2 and am2.group(2).lower() not in _KEYWORDS | {
                 "null", "true", "false",
             }:
@@ -632,7 +615,7 @@ def rewrite_limit_comma(stmt: str) -> str:
     ``lib/classes/sqawk.tcl:216``). Spark only parses the
     LIMIT/OFFSET spelling, so rewrite the comma form, preserving
     arbitrary operand expressions."""
-    clauses = _top_level_clauses(stmt)
+    clauses = sqllex.clauses(stmt)
     for idx in range(len(clauses) - 1, -1, -1):
         name, _, kw_end = clauses[idx]
         if name != "limit":
@@ -926,18 +909,15 @@ def rewrite_positional_order_by(stmt: str) -> str:
         return stmt
     if _setop_cuts(stmt):
         return stmt  # the ordered-compound wrapper owns positionals
-    span = _select_items_span(stmt) or _fromless_items_span(stmt)
+    span = _items_span(stmt)
     if span is None:
         return stmt
     items = [it.strip() for it in span[2]]
-    clauses = _top_level_clauses(stmt)
-    names = [c[0] for c in clauses]
-    if "order_by" not in names:
+    ob = sqllex.clauses(stmt).body("order_by")
+    if ob is None:
         return stmt
-    ob = clauses[names.index("order_by")]
-    after = [c for c in clauses if c[1] > ob[2]]
-    ob_end = after[0][1] if after else len(stmt)
-    terms = sqllex.split_top(stmt[ob[2] : ob_end])
+    ob_start, ob_end = ob
+    terms = sqllex.split_top(stmt, ob_start, ob_end)
     out_terms = []
     changed = False
     for term in terms:
@@ -980,7 +960,7 @@ def rewrite_positional_order_by(stmt: str) -> str:
     if not changed:
         return stmt
     return (
-        stmt[: ob[2]] + " " + ", ".join(out_terms) + " " + stmt[ob_end:]
+        stmt[:ob_start] + " " + ", ".join(out_terms) + " " + stmt[ob_end:]
     )
 
 
@@ -1062,46 +1042,20 @@ def _propagate_case_comparison_collates(
                 continue
             ls = _operand_back(stmt, i)
             lhs = stmt[ls:i].strip()
+            cases = sqllex.cases(stmt)
             if lhs.lower() == "end":
                 # an unparenthesized CASE operand: extend back to the
-                # matching CASE keyword (END/CASE nesting tracked)
-                depth_c = 1
-                k = ls
-                while k > 0 and depth_c:
-                    k -= 1
-                    if (
-                        (stmt[k].isalpha() or stmt[k] == "_")
-                        and (k == 0 or not _IDENT.match(stmt[k - 1]))
-                        and not sqllex.in_string(stmt, k)
-                    ):
-                        m2 = _BOOL_WORD_RE.match(stmt, k)
-                        w = m2.group(0).lower()
-                        if w == "end":
-                            depth_c += 1
-                        elif w == "case":
-                            depth_c -= 1
-                            if depth_c == 0:
-                                ls = k
-                if depth_c == 0:
-                    lhs = stmt[ls:i].strip()
+                # CASE keyword this END closes
+                ls = next((a for a, c in cases.items() if c.end == ls), ls)
+                lhs = stmt[ls:i].strip()
             r_end = _operand_fwd(stmt, i + len(op))
             rhs = stmt[i + len(op) : r_end].strip()
             if rhs.lower() == "case":
                 # unparenthesized CASE on the right: extend forward to
-                # the matching END (the operand scan stops at the
-                # keyword)
-                depth_c = 1
-                for k, _ in sqllex.scan(stmt, r_end):
-                    ch = stmt[k]
-                    if (ch.isalpha() or ch == "_") and not _IDENT.match(
-                        stmt[k - 1]
-                    ):
-                        w = _BOOL_WORD_RE.match(stmt, k).group(0).lower()
-                        depth_c += {"case": 1, "end": -1}.get(w, 0)
-                        if depth_c == 0:
-                            r_end = k + len(w)
-                            break
-                if depth_c == 0:
+                # its END (the operand scan stops at the keyword)
+                c = cases.get(r_end - 4)
+                if c is not None and c.end is not None:
+                    r_end = c.end + 3
                     rhs = stmt[i + len(op) : r_end].strip()
             j = _skip_ws(stmt, r_end)
             if re.match(r"collate\b", stmt[j:], re.IGNORECASE) or not (
@@ -1230,10 +1184,10 @@ def rewrite_collate_propagation(
     cuts = _setop_cuts(stmt)
     if cuts:
         return stmt  # compound branches keep their native handling
-    span = _select_items_span(stmt) or _fromless_items_span(stmt)
+    span = _items_span(stmt)
     if span is None:
         return stmt
-    list_start, list_end, items = span
+    list_start, list_end, items, _ = span
     head = stmt[:list_start]
     distinct = bool(
         re.search(r"\bdistinct\s*$", head[-12:], re.IGNORECASE)
@@ -1276,13 +1230,9 @@ def rewrite_collate_propagation(
     # mark the referenced select item — same semantics as the item
     # carrying the collation (the GROUP-BY path below folds the key
     # with the first-arrival representative)
-    clauses = _top_level_clauses(stmt)
-    names = [c[0] for c in clauses]
-    if "group_by" in names:
-        gb = clauses[names.index("group_by")]
-        after = [c for c in clauses if c[1] > gb[2]]
-        gb_end = after[0][1] if after else len(stmt)
-        terms = sqllex.split_top(stmt[gb[2] : gb_end])
+    gb = sqllex.clauses(stmt).body("group_by")
+    if gb is not None:
+        terms = sqllex.split_top(stmt, *gb)
         new_terms, edited_gb = [], False
         for term in terms:
             tm = _TRAILING_COLLATE_RE.match(term.strip())
@@ -1315,11 +1265,11 @@ def rewrite_collate_propagation(
             new_terms.append(term.strip())
         if edited_gb:
             stmt = (
-                stmt[: gb[2]]
+                stmt[: gb[0]]
                 + " "
                 + ", ".join(new_terms)
                 + " "
-                + stmt[gb_end:]
+                + stmt[gb[1] :]
             )
     if not any(marked):
         return stmt
@@ -1330,13 +1280,9 @@ def rewrite_collate_propagation(
         )
         stmt = stmt[:list_start] + " " + rebuilt + " " + stmt[list_end:]
     # ORDER BY terms referencing a marked item inherit the collation
-    clauses = _top_level_clauses(stmt)
-    names = [c[0] for c in clauses]
-    if "order_by" in names:
-        ob = clauses[names.index("order_by")]
-        after = [c for c in clauses if c[1] > ob[2]]
-        ob_end = after[0][1] if after else len(stmt)
-        terms = sqllex.split_top(stmt[ob[2] : ob_end])
+    ob = sqllex.clauses(stmt).body("order_by")
+    if ob is not None:
+        terms = sqllex.split_top(stmt, *ob)
         new_terms = []
         edited = False
         for term in terms:
@@ -1371,11 +1317,11 @@ def rewrite_collate_propagation(
                 new_terms.append(term.strip())
         if edited:
             stmt = (
-                stmt[: ob[2]]
+                stmt[: ob[0]]
                 + " "
                 + ", ".join(new_terms)
                 + " "
-                + stmt[ob_end:]
+                + stmt[ob[1] :]
             )
     if not distinct:
         return _rewrite_nocase_group_by(
@@ -1408,14 +1354,10 @@ def _rewrite_nocase_group_by(
     arrival = _scope_arrival_col(stmt, classes)
     if arrival is None:
         return stmt
-    clauses = _top_level_clauses(stmt)
-    names = [c[0] for c in clauses]
-    if "group_by" not in names:
+    gb = sqllex.clauses(stmt).body("group_by")
+    if gb is None:
         return stmt
-    gb = clauses[names.index("group_by")]
-    after = [c for c in clauses if c[1] > gb[2]]
-    gb_end = after[0][1] if after else len(stmt)
-    terms = sqllex.split_top(stmt[gb[2] : gb_end])
+    terms = sqllex.split_top(stmt, *gb)
     hit: dict[int, str] = {}  # item position → folded key SQL
     new_terms = []
     for term in terms:
@@ -1457,10 +1399,10 @@ def _rewrite_nocase_group_by(
             new_terms.append(t)
     if not hit:
         return stmt
-    span = _select_items_span(stmt)
-    if span is None:
+    span = _items_span(stmt)
+    if span is None or not span[3]:
         return stmt
-    list_start, list_end, items = span
+    list_start, list_end, items, _ = span
     if len(items) != len(exprs):
         return stmt
     out_items = []
@@ -1487,14 +1429,8 @@ def _rewrite_nocase_group_by(
         + stmt[list_end:]
     )
     # the group terms moved by the item rebuild: recompute and splice
-    clauses = _top_level_clauses(stmt)
-    names = [c[0] for c in clauses]
-    gb = clauses[names.index("group_by")]
-    after = [c for c in clauses if c[1] > gb[2]]
-    gb_end = after[0][1] if after else len(stmt)
-    return (
-        stmt[: gb[2]] + " " + ", ".join(new_terms) + " " + stmt[gb_end:]
-    )
+    gb = sqllex.clauses(stmt).body("group_by")
+    return stmt[: gb[0]] + " " + ", ".join(new_terms) + " " + stmt[gb[1] :]
 
 
 def _rewrite_nocase_distinct(
@@ -1509,46 +1445,41 @@ def _rewrite_nocase_distinct(
     statement keeps its native lowering) on shapes whose scan order
     SQLite itself leaves plan-dependent: joins/subquery FROMs (no
     arrival column), GROUP BY / HAVING, or ORDER BY terms that are
-    not item aliases/positions."""
+    not item aliases, positions or unaliased bare-column items."""
     arrival = _scope_arrival_col(stmt, classes)
     if arrival is None:
         return stmt
-    clauses = _top_level_clauses(stmt)
-    names = [c[0] for c in clauses]
-    if "group_by" in names or "having" in names or "setop" in names:
+    clauses = sqllex.clauses(stmt)
+    if {"group_by", "having", "setop"} & set(clauses.names):
         return stmt
     # statement layout: select distinct ITEMS from ... [order/limit]
-    span = _select_items_span(stmt)
-    if span is None:
+    span = _items_span(stmt)
+    if span is None or not span[3]:
         return stmt
-    list_start, list_end, _items = span
+    list_start, list_end = span[:2]
     sel = _SELECT_RE.search(stmt)
     if sel is None or sqllex.depth(stmt, sel.start()) != 0:
         return stmt
-    tail_start = len(stmt)
-    for kw in ("order_by", "limit"):
-        if kw in names:
-            tail_start = min(tail_start, clauses[names.index(kw)][1])
+    tail_start = _tail_start(clauses)
     from_where = stmt[list_end:tail_start].strip()
     tail = stmt[tail_start:].strip()
     # every ORDER BY term must resolve against the outer projection
-    if "order_by" in names:
-        ob = clauses[names.index("order_by")]
-        after = [c for c in clauses if c[1] > ob[2]]
-        ob_end = after[0][1] if after else len(stmt)
-        for term in sqllex.split_top(stmt[ob[2] : ob_end]):
-            m = _OB_TERM_DIR_RE.match(term.strip())
-            core = m.group(1).strip()
-            core = re.sub(
-                r"\s+collate\s+nocase$", "", core, flags=re.IGNORECASE
-            )
-            if re.fullmatch(r"[0-9]+", core):
-                continue
-            if re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", core) and any(
-                a and a.lower() == core.lower() for a in aliases
-            ):
-                continue
-            return stmt
+    ob = clauses.body("order_by")
+    for term in sqllex.split_top(stmt, *ob) if ob else ():
+        m = _OB_TERM_DIR_RE.match(term.strip())
+        core = m.group(1).strip()
+        core = re.sub(
+            r"\s+collate\s+nocase$", "", core, flags=re.IGNORECASE
+        ).lower()
+        if re.fullmatch(r"[0-9]+", core):
+            continue
+        # an alias, or an unaliased bare column (the outer select
+        # keeps its name)
+        if re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", core) and any(
+            (a or e).lower() == core for a, e in zip(aliases, exprs)
+        ):
+            continue
+        return stmt
     outnames: list[str] = []
     inner_items: list[str] = []
     keys: list[str] = []
@@ -1594,6 +1525,9 @@ _BETWEEN_COLLATE_RES = [
     ),
 ]
 _SIMPLE_CASE_RE = re.compile(r"\bcase\s+(?!when\b)", re.IGNORECASE)
+_TRAILING_COLLATE_ANY_RE = re.compile(
+    r"\s+collate\s+\w+\s*$", re.IGNORECASE
+)
 _COLLATE_IN_RE = re.compile(
     r"\s+collate\s+nocase\s+(not\s+)?in\s*\(", re.IGNORECASE
 )
@@ -1618,9 +1552,9 @@ def rewrite_collate_positions(
     - ``X between A and B collate nocase`` (either operand carrying
       the token) lowers to the two comparisons with the collation
       attached, which the comparison-collate pass then owns;
-    - a simple CASE whose WHEN operand carries the token lowers to the
-      searched form (``case X when V collate nocase ...`` →
-      ``case when X = V collate nocase ...``)."""
+    - a simple CASE whose base or WHEN operand carries the token
+      lowers to the searched form (``case X when V collate nocase
+      ...`` → ``case when X = V collate nocase ...``)."""
     if not _COLLATE_ANY_RE.search(stmt):
         return stmt
     # --- aggregate arguments ---------------------------------------
@@ -1750,54 +1684,44 @@ def rewrite_collate_positions(
         if neg:
             body = f"not {body}"
         stmt = stmt[:x_start] + " " + body + stmt[close:]
-    # --- simple CASE base with a collated WHEN operand ---------------
+    # --- simple CASE with a collated base or WHEN operand ------------
+    # ``case X when V ...`` compares X = V at each WHEN: lower to the
+    # searched form (``case when X = V collate nocase ...``), which
+    # the comparison-collate pass owns.  A collated base (bare or in
+    # parens) governs every WHEN — the left operand's collation wins,
+    # as in SQLite — so the operands' own COLLATE tokens drop.
     while True:
         edited = False
         for m in sqllex.finditer(_SIMPLE_CASE_RE, stmt):
-            base_end = _bool_cond_end(
-                stmt, m.end(), frozenset({"when", "end"})
-            )
-            base = stmt[m.end() : base_end].strip()
-            if not base or not re.match(
-                r"when\b", stmt[_skip_ws(stmt, base_end) :], re.IGNORECASE
-            ):
+            case = sqllex.cases(stmt).get(m.start())
+            if not (case and case.keys and case.keys[0].text == "when"):
                 continue
-            # collect this CASE's own-level WHEN operands
-            whens, cd = [], 0
-            for i, depth in sqllex.scan(stmt, base_end):
-                c = stmt[i]
-                if c == ")" and depth == 0:
-                    break
-                if (
-                    depth == 0
-                    and (c.isalpha() or c == "_")
-                    and not _IDENT.match(stmt[i - 1])
-                ):
-                    wm = _BOOL_WORD_RE.match(stmt, i)
-                    w = wm.group(0).lower()
-                    if w == "case":
-                        cd += 1
-                    elif w == "end":
-                        if not cd:
-                            break
-                        cd -= 1
-                    elif w == "when" and cd == 0:
-                        whens.append(
-                            (wm.end(), _when_then_end(stmt, wm.end()))
-                        )
-            if not any(
+            base_end = case.keys[0].start
+            base = stmt[m.end() : base_end].strip()
+            whens = case.conditions()
+            bm = _TRAILING_COLLATE_RE.match(_strip_outer_parens(base))
+            core = bm and bm.group(1).strip()
+            if core and _operand_fwd(core, 0) == len(core):
+                base = f"{core} collate nocase"
+                ops = [
+                    _TRAILING_COLLATE_ANY_RE.sub("", stmt[s:e])
+                    for s, e in whens
+                ]
+            elif base and any(
                 _TRAILING_COLLATE_RE.match(stmt[s:e].strip())
                 for s, e in whens
             ):
+                ops = [stmt[s:e] for s, e in whens]
+            else:
                 continue
-            # searched form: every WHEN operand becomes base = operand
-            # (s = just past the WHEN keyword, e = its THEN keyword;
-            # text between spans — branches, ELSE, END — is verbatim)
+            # every WHEN operand becomes base = operand (s = just past
+            # the WHEN keyword, e = its THEN keyword; text between
+            # spans — branches, ELSE, END — is verbatim)
             out = ["case "]
             prev = base_end
-            for s, e in whens:
+            for (s, e), op in zip(whens, ops):
                 out.append(stmt[prev:s])  # through the WHEN keyword
-                out.append(f" {base} = {stmt[s:e].strip()} ")
+                out.append(f" {base} = {op.strip()} ")
                 prev = e
             out.append(stmt[prev:])
             stmt = stmt[: m.start()] + "".join(out)
@@ -1839,14 +1763,13 @@ def rewrite_distinct_class_identity(
         return stmt
     if _COLLATE_NOCASE_RE.search(stmt) or _setop_cuts(stmt):
         return stmt
-    clauses = _top_level_clauses(stmt)
-    names = [c[0] for c in clauses]
-    if "group_by" in names or "having" in names:
+    clauses = sqllex.clauses(stmt)
+    if {"group_by", "having"} & set(clauses.names):
         return stmt
-    span = _select_items_span(stmt)
-    if span is None:
+    span = _items_span(stmt)
+    if span is None or not span[3]:
         return stmt
-    list_start, list_end, _items = span
+    list_start, list_end, _items, _ = span
     exprs: list[str] = []
     aliases: list[str | None] = []
     for item in _items:
@@ -1873,19 +1796,15 @@ def rewrite_distinct_class_identity(
     arrival = _scope_arrival_col(stmt, classes)
     if arrival is None:
         return stmt
-    tail_start = len(stmt)
-    for kw in ("order_by", "limit"):
-        if kw in names:
-            tail_start = min(tail_start, clauses[names.index(kw)][1])
+    tail_start = _tail_start(clauses)
     from_where = stmt[list_end:tail_start].strip()
     tail = stmt[tail_start:].strip()
     # every ORDER BY term must resolve against the outer projection
     ob_terms: list[str] = []
-    if "order_by" in names:
-        ob = clauses[names.index("order_by")]
-        after = [c for c in clauses if c[1] > ob[2]]
-        ob_end = after[0][1] if after else len(stmt)
-        for term in sqllex.split_top(stmt[ob[2] : ob_end]):
+    ob = clauses.body("order_by")
+    if ob is not None:
+        ob_end = ob[1]
+        for term in sqllex.split_top(stmt, *ob):
             tm = _OB_TERM_DIR_RE.match(term.strip())
             core = tm.group(1).strip()
             if not (
@@ -1935,8 +1854,6 @@ def rewrite_collate_nocase(stmt: str) -> str:
     comparison operands — that is rewrite_collate_nocase_comparison's
     job (it runs first); any placement neither pass understands keeps
     Spark's loud parse error."""
-    clauses = _top_level_clauses(stmt)
-    order_c = next((c for c in clauses if c[0] == "order_by"), None)
     matches = list(sqllex.finditer(_COLLATE_ANY_RE, stmt))
     if not matches:
         return stmt
@@ -1956,15 +1873,12 @@ def rewrite_collate_nocase(stmt: str) -> str:
             + f" {_collate_wrap(expr, m.group(1).lower())}"
             + stmt[m.end() :]
         )
-    clauses = _top_level_clauses(stmt)
-    order_c = next((c for c in clauses if c[0] == "order_by"), None)
+    ob = sqllex.clauses(stmt).body("order_by")
     matches = list(sqllex.finditer(_COLLATE_ANY_RE, stmt))
-    if order_c is None or not matches:
+    if ob is None or not matches:
         return stmt
-    tail = [c for c in clauses if c[1] > order_c[2]]
-    o_end = tail[0][1] if tail else len(stmt)
     for m in reversed(matches):
-        if not (order_c[2] <= m.start() < o_end):
+        if not (ob[0] <= m.start() < ob[1]):
             continue
         lhs = _operand_back(stmt, m.start())
         expr = stmt[lhs : m.start()].strip()
@@ -2032,14 +1946,9 @@ def rewrite_collate_nocase_comparison(stmt: str) -> str:
 
     while True:
         matches = list(sqllex.finditer(_COLLATE_ANY_RE, stmt))
-        clauses = _top_level_clauses(stmt)
-        order_c = next((c for c in clauses if c[0] == "order_by"), None)
-        if order_c is not None:
-            tail = [c for c in clauses if c[1] > order_c[2]]
-            o_end = tail[0][1] if tail else len(stmt)
-            matches = [
-                m for m in matches if not (order_c[2] <= m.start() < o_end)
-            ]
+        ob = sqllex.clauses(stmt).body("order_by")
+        if ob is not None:
+            matches = [m for m in matches if not (ob[0] <= m.start() < ob[1])]
         edited = False
         for m in matches:
             kind = m.group(1).lower()
@@ -2338,46 +2247,6 @@ def rewrite_regex_calls(stmt: str) -> str:
 
 _GROUPS_KW_RE = re.compile(r"\bgroups\b", re.IGNORECASE)
 _ORDER_BY_RE = re.compile(r"\border\s+by\b", re.IGNORECASE)
-
-# Top-level clause keywords, tried in order at each identifier start.
-# ``order by`` inside window specs sits at paren depth > 0, so the
-# depth-0 scan never confuses it with the statement-level clause.
-_CLAUSE_RES: tuple[tuple[str, re.Pattern[str]], ...] = (
-    ("from", re.compile(r"from\b", re.IGNORECASE)),
-    ("where", re.compile(r"where\b", re.IGNORECASE)),
-    ("group_by", re.compile(r"group\s+by\b", re.IGNORECASE)),
-    ("having", re.compile(r"having\b", re.IGNORECASE)),
-    ("window", re.compile(r"window\b", re.IGNORECASE)),
-    ("order_by", re.compile(r"order\s+by\b", re.IGNORECASE)),
-    ("limit", re.compile(r"limit\b", re.IGNORECASE)),
-    ("setop", re.compile(r"(?:union|intersect|except)\b", re.IGNORECASE)),
-)
-
-
-def _top_level_clauses(stmt: str) -> list[tuple[str, int, int]]:
-    """Depth-0, outside-strings occurrences of statement clause
-    keywords, as ``(name, kw_start, kw_end)`` in source order."""
-    found: list[tuple[str, int, int]] = []
-    for i, depth in sqllex.scan(stmt):
-        c = stmt[i]
-        if depth or not (c.isalpha() or c == "_"):
-            continue
-        if i and _IDENT.match(stmt[i - 1]):
-            continue
-        for name, rex in _CLAUSE_RES:
-            m = rex.match(stmt, i)
-            if m:
-                # 'FROM' inside IS [NOT] DISTINCT FROM is an
-                # operator token, not the statement clause
-                if name != "from" or not re.search(
-                    r"\bdistinct\s*$",
-                    stmt[max(0, i - 12) : i],
-                    re.IGNORECASE,
-                ):
-                    found.append((name, m.start(), m.end()))
-                break
-    return found
-
 
 # A second trailing identifier that is actually join syntax, not an
 # alias — ``from t join u`` must not parse as table t aliased "join".
@@ -2800,8 +2669,8 @@ def rewrite_groups_frames(stmt: str) -> str:
     if not windows:
         return stmt
 
-    clauses = _top_level_clauses(stmt)
-    names = [c[0] for c in clauses]
+    clauses = sqllex.clauses(stmt)
+    names = clauses.names
     if names.count("from") != 1:
         return stmt  # zero or several FROMs — not a shape we handle
     if any(n in ("group_by", "having", "window", "setop") for n in names):
@@ -2812,10 +2681,8 @@ def rewrite_groups_frames(stmt: str) -> str:
     if names.count("where") > 1:
         return stmt
 
-    idx_from = names.index("from")
-    _, fkw_start, fkw_end = clauses[idx_from]
     # FROM source runs to the next top-level clause (or end of stmt)
-    from_end = clauses[idx_from + 1][1] if idx_from + 1 < len(clauses) else len(stmt)
+    fkw_end, from_end = clauses.body("from")
     fstart = _skip_ws(stmt, fkw_end)
     from_src = stmt[fstart:from_end].strip()
     if not from_src:
@@ -2823,12 +2690,12 @@ def rewrite_groups_frames(stmt: str) -> str:
 
     where_edit: tuple[int, int, str] | None = None
     pred = None
-    if "where" in names:
-        idx_w = names.index("where")
-        if idx_w < idx_from:
+    where_c = clauses.first("where")
+    if where_c is not None:
+        if where_c[1] < clauses.first("from")[1]:
             return stmt  # WHERE before FROM — malformed; don't touch
-        _, wkw_start, wkw_end = clauses[idx_w]
-        w_end = clauses[idx_w + 1][1] if idx_w + 1 < len(clauses) else len(stmt)
+        wkw_start = where_c[1]
+        wkw_end, w_end = clauses.body("where")
         pred = stmt[wkw_end:w_end].strip()
         if not pred:
             return stmt
@@ -3056,7 +2923,6 @@ def rewrite_hint_funcs(stmt: str) -> str:
         stmt = stmt[: m.start()] + "(" + inner + ")" + stmt[close:]
 
 
-_MINMAX_RE = re.compile(r"\b(min|max)\s*\(", re.IGNORECASE)
 _TRIM_RE = re.compile(r"\b(trim|ltrim|rtrim)\s*\(", re.IGNORECASE)
 _TRIM_MODE = {"trim": "BOTH", "ltrim": "LEADING", "rtrim": "TRAILING"}
 
@@ -3072,7 +2938,7 @@ def rewrite_scalar_minmax(stmt: str) -> str:
         m = next(
             (
                 m
-                for m in sqllex.finditer(_MINMAX_RE, stmt)
+                for m in sqllex.finditer(_MINMAX_AGG_RE, stmt)
                 if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
             ),
             None,
@@ -4036,13 +3902,11 @@ def rewrite_affinity_order_by(stmt: str, classes: dict[str, str]) -> str:
     """Top-level ``ORDER BY col`` over a dynamic column sorts by the
     SQLite class key (numbers before text); long/text/none columns
     already sort correctly (numerically / bytewise)."""
-    clauses = _top_level_clauses(stmt)
-    order_c = next((c for c in clauses if c[0] == "order_by"), None)
-    if order_c is None:
+    ob = sqllex.clauses(stmt).body("order_by")
+    if ob is None:
         return stmt
-    tail = [c for c in clauses if c[1] > order_c[2]]
-    o_end = tail[0][1] if tail else len(stmt)
-    keys = sqllex.split_top(stmt[order_c[2] : o_end])
+    o_start, o_end = ob
+    keys = sqllex.split_top(stmt, o_start, o_end)
     out, changed = [], False
     for key in keys:
         mm = _AFF_ORDER_KEY_RE.match(key)
@@ -4064,7 +3928,7 @@ def rewrite_affinity_order_by(stmt: str, classes: dict[str, str]) -> str:
     # rebuild supplies its own separators (" " after ORDER BY, ", "
     # between keys, " " before any trailing clause)
     rebuilt = " " + ", ".join(k.strip() for k in out) + " "
-    return stmt[: order_c[2]] + rebuilt + stmt[o_end:]
+    return stmt[:o_start] + rebuilt + stmt[o_end:]
 
 
 _WIN_FRAME_KW_RE = re.compile(r"\b(rows|range|groups)\b", re.IGNORECASE)
@@ -4145,10 +4009,10 @@ def _rewrite_window_class_items(
     the same way it does in the grouped item rewrites."""
     if not classes:
         return stmt, {}
-    span = _select_items_span(stmt)
-    if span is None:
+    span = _items_span(stmt)
+    if span is None or not span[3]:
         return stmt, {}
-    list_start, list_end, items = span
+    list_start, list_end, items, _ = span
     out_items, extras, changed = [], {}, False
     for item in items:
         m = _WINAGG_ITEM_RE.match(item)
@@ -4396,7 +4260,6 @@ def rewrite_affinity_window_order_by(
     return stmt
 
 
-_AFF_MINMAX_RE = re.compile(r"\b(min|max)\s*\(", re.IGNORECASE)
 
 
 def rewrite_affinity_minmax(stmt: str, classes: dict[str, str]) -> str:
@@ -4420,7 +4283,7 @@ def rewrite_affinity_minmax(stmt: str, classes: dict[str, str]) -> str:
     arrival = _scope_arrival_col(stmt, classes, deep_scan=True)
     while True:
         edited = False
-        for m in sqllex.finditer(_AFF_MINMAX_RE, stmt):
+        for m in sqllex.finditer(_MINMAX_AGG_RE, stmt):
             close = sqllex.close_paren(stmt, m.end() - 1)
             inner = stmt[m.end() : close - 1].strip()
             arg = re.sub(
@@ -4655,9 +4518,10 @@ def _parse_arith_chain(text: str, classes: dict[str, str]):
             # numeric branches: SQLite evaluates the selected branch's
             # value with ITS class ('then 3' contributes INTEGER,
             # 'then 1.5' REAL) — round-11 residue `case..end + 1`
-            tok_end = _case_end(s, j + cmatch.end())
-            if tok_end is None:
+            case = sqllex.cases(s).get(j)
+            if case is None or case.end is None:
                 return None
+            tok_end = case.end + 3
             tok = s[j:tok_end].strip()
             d = _case_operand_classify(tok, classes)
             if d is None:
@@ -4706,9 +4570,7 @@ def _parse_arith_chain(text: str, classes: dict[str, str]):
                 # SELECT's single item's class — ``(select a1 from a
                 # where a1=2) * 2.5`` is REAL 5.0, ``(select
                 # count(*) ...) + 0.0`` REAL 5.0 (round-12 probes)
-                ispan = _select_items_span(inner) or (
-                    _fromless_items_span(inner)
-                )
+                ispan = _items_span(inner)
                 if ispan is not None and len(ispan[2]) == 1:
                     it = ispan[2][0].strip()
                     am2 = _PROP_ALIAS_RE.match(it)
@@ -4807,30 +4669,6 @@ def _parse_arith_chain(text: str, classes: dict[str, str]):
     return tokens, ops
 
 
-def _case_end(s: str, start: int) -> int | None:
-    """Index just past the END keyword of the CASE whose body starts
-    at ``start`` (right after its CASE keyword), or None."""
-    cd = 0
-    for i, depth in sqllex.scan(s, start):
-        c = s[i]
-        if c == ")" and depth == 0:
-            return None
-        if (
-            depth == 0
-            and (c.isalpha() or c == "_")
-            and (i == 0 or not _IDENT.match(s[i - 1]))
-        ):
-            m = _BOOL_WORD_RE.match(s, i)
-            w = m.group(0).lower()
-            if w == "case":
-                cd += 1
-            elif w == "end":
-                if not cd:
-                    return m.end()
-                cd -= 1
-    return None
-
-
 def _case_operand_classify(tok: str, classes: dict[str, str]):
     """Classify a CASE arithmetic operand by its branch VALUE classes:
     ('castint', tok) when every branch is statically INTEGER class,
@@ -4839,8 +4677,7 @@ def _case_operand_classify(tok: str, classes: dict[str, str]):
     its is-INTEGER flag, evaluated per row.  None when a branch isn't
     a numeric literal / integer column / NULL (those operands keep the
     native lowering)."""
-    cm = re.match(r"case\b", tok, re.IGNORECASE)
-    spans = _case_spans_from(tok, cm.end())
+    spans = _case_values(tok)
     if not spans:
         return None
     flags: list[str] = []
@@ -5171,15 +5008,11 @@ def _scope_arrival_col(
     the outer scan order, so they skip this check."""
     if deep_scan and re.search(r"\(\s*select\b", stmt, re.IGNORECASE):
         return None
-    clauses = _top_level_clauses(stmt)
-    names = [c[0] for c in clauses]
-    if names.count("from") != 1 or "setop" in names:
+    clauses = sqllex.clauses(stmt)
+    if clauses.names.count("from") != 1 or "setop" in clauses.names:
         return None
-    idx = names.index("from")
-    from_end = (
-        clauses[idx + 1][1] if idx + 1 < len(clauses) else len(stmt)
-    )
-    src = stmt[_skip_ws(stmt, clauses[idx][2]) : from_end].strip()
+    from_start, from_end = clauses.body("from")
+    src = stmt[_skip_ws(stmt, from_start) : from_end].strip()
     m = _SIMPLE_FROM_RE.match(src)
     if m is None or (m.group(2) or "").lower() in _NOT_ALIAS:
         return None
@@ -5247,11 +5080,7 @@ def _rewrite_case_class_item(
     string-stored columns pass through.  Returns (body, alias), or
     None when the item is not such a CASE (or no branch needs it)."""
     body, alias = item.strip(), None
-    am = re.match(
-        r"^(.*?)\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*)\s*$",
-        body,
-        re.IGNORECASE | re.DOTALL,
-    )
+    am = _PROP_ALIAS_RE.match(body)
     if am and am.group(2).lower() not in _KEYWORDS:
         cand = am.group(1).strip()
         if cand.count("(") == cand.count(")") and re.match(
@@ -5265,8 +5094,7 @@ def _rewrite_case_class_item(
     # branch VALUE spans of the OUTER case only (any WHEN count, with
     # or without ELSE — the r10 gate handled the 2-branch THEN/ELSE
     # shape only and ≥3-branch / no-ELSE mixes still printed '3.0')
-    cm0 = re.match(r"^case\b", body, re.IGNORECASE)
-    spans = _case_spans_from(body, cm0.end())
+    spans = _case_values(body)
     if not spans:
         return None
     r = _case_body_enc(body, spans, classes)
@@ -5342,7 +5170,7 @@ def _case_branch_enc(b: str, classes: dict[str, str]):
         # nested CASE: render ITS branches recursively — the nested
         # result then contributes string-rendered values like any
         # other branch (its own flags propagate to the outer gate)
-        nspans = _case_spans_from(b, nm.end())
+        nspans = _case_values(b)
         if not nspans:
             return None
         return _case_body_enc(b, nspans, classes)
@@ -5385,8 +5213,7 @@ def _rewrite_minmax_case_item(
     fn, case_sql, alias = mm.group(1).lower(), mm.group(2), mm.group(3)
     if case_sql.count("(") != case_sql.count(")"):
         return None
-    cm0 = re.match(r"^case\b", case_sql, re.IGNORECASE)
-    spans = _case_spans_from(case_sql, cm0.end())
+    spans = _case_values(case_sql)
     if not spans:
         return None
     r = _case_body_enc(case_sql, spans, classes)
@@ -5415,10 +5242,10 @@ def _rewrite_arith_class_items(
     renders '1' (text coerces to INTEGER 0), anf/2 renders the
     truncated integer.  All-integer chains without division keep
     their native (exact BIGINT) lowering untouched."""
-    span = _select_items_span(stmt) or _fromless_items_span(stmt)
+    span = _items_span(stmt)
     if span is None:
         return stmt, {}
-    list_start, list_end, items = span
+    list_start, list_end, items, _ = span
     out_items, extras, changed = [], {}, False
     for item in items:
         # unary ``+`` over one whole operand is SQLite's IDENTITY (no
@@ -5466,11 +5293,7 @@ def _rewrite_arith_class_items(
         alias = None
         chain = _parse_arith_chain(item, classes)
         if chain is None:
-            am = re.match(
-                r"^(.*?)\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*)\s*$",
-                item,
-                re.IGNORECASE | re.DOTALL,
-            )
+            am = _PROP_ALIAS_RE.match(item)
             if am:
                 chain = _parse_arith_chain(am.group(1), classes)
                 alias = am.group(2)
@@ -5601,8 +5424,8 @@ def _collect_item_alias_classes(
     column's storage class (``select a1 as g ... order by g`` must
     key g exactly like a1 — SQLite result columns carry their source
     column's class)."""
-    span = _select_items_span(stmt)
-    if span is None:
+    span = _items_span(stmt)
+    if span is None or not span[3]:
         return {}
     extras = {}
     for item in span[2]:
@@ -5780,10 +5603,10 @@ def _rewrite_sum_select_items(
     items rewrite this way — sum() in HAVING/WHERE/expressions keeps
     the double lowering, where SQLite compares the VALUE numerically
     regardless of its class."""
-    span = _select_items_span(stmt)
-    if span is None:
+    span = _items_span(stmt)
+    if span is None or not span[3]:
         return stmt, {}
-    list_start, list_end, items = span
+    list_start, list_end, items, _ = span
     out_items, extras, changed = [], {}, False
     for item in items:
         m = _AFF_SUM_ITEM_RE.match(item)
@@ -6201,11 +6024,16 @@ def rewrite_affinity_casts(stmt: str, classes: dict[str, str]) -> str:
             return stmt
 
 
-def _select_items_span(stmt: str):
-    """(list_start, list_end, items) for the select list of THIS
-    scope's SELECT — the unique depth-0 ``select`` — or None when the
-    scope is not a single SELECT with a FROM (set-op compound, DML,
-    no-table select).  Subqueries (parenthesized selects) don't
+def _items_span(stmt: str):
+    """(list_start, list_end, items, has_from) for the select list of
+    THIS scope's SELECT — the unique depth-0 ``select`` — or None when
+    the scope is not a single SELECT (set-op compound, DML).  With a
+    FROM the list runs to it; a FROM-less scope (``select 7``,
+    ``select 'x', 2``) runs to its first top-level clause or the end
+    of text, so literal set-op branches (``select 7 union select
+    '7'``) stringify through this too and the compound wrapper can key
+    their storage classes (SQLite keeps INTEGER 7 and TEXT '7' as
+    DISTINCT rows).  Subqueries (parenthesized selects) don't
     disqualify the scope: derived tables are item-rewritten per scope
     by ``_rewrite_scoped_items`` before the whole-statement passes,
     and expression subqueries pass through item classification
@@ -6217,11 +6045,15 @@ def _select_items_span(stmt: str):
     ]
     if len(selects) != 1:
         return None
-    clauses = _top_level_clauses(stmt)
-    from_c = next((c for c in clauses if c[0] == "from"), None)
-    if from_c is None:
-        return None
-    list_start, list_end = selects[0].end(), from_c[1]
+    clauses = sqllex.clauses(stmt)
+    from_c = clauses.first("from")
+    list_start = selects[0].end()
+    if from_c is not None:
+        list_end = from_c[1]
+    else:
+        list_end = min(
+            (c[1] for c in clauses if c[1] >= list_start), default=len(stmt)
+        )
     dm = re.match(r"\s*distinct\b", stmt[list_start:list_end], re.IGNORECASE)
     if dm:
         # DISTINCT lists participate: every class rendering is
@@ -6234,7 +6066,16 @@ def _select_items_span(stmt: str):
     items = _split_call_args("(" + stmt[list_start:list_end] + ")", 0)
     if not items:
         return None
-    return list_start, list_end, items
+    return list_start, list_end, items, from_c is not None
+
+
+def _tail_start(clauses: sqllex.Clauses) -> int:
+    """Where a scope's ORDER BY / LIMIT tail starts (its end when it
+    has neither)."""
+    return min(
+        (c[1] for c in map(clauses.first, ("order_by", "limit")) if c),
+        default=clauses.size,
+    )
 
 
 def _apply_item_passes(
@@ -6409,36 +6250,6 @@ def _stringify_expr(
     return None
 
 
-def _fromless_items_span(stmt: str):
-    """(list_start, list_end, items) for a FROM-less single-SELECT
-    scope (``select 7``, ``select 'x', 2``): items run to the first
-    top-level clause keyword or end of text.  Literal set-op branches
-    (``select 7 union select '7'``) stringify through this so the
-    compound wrapper can key their storage classes — SQLite keeps
-    INTEGER 7 and TEXT '7' as DISTINCT rows (round-10 brief #3)."""
-    selects = [
-        m
-        for m in sqllex.finditer(_SELECT_RE, stmt)
-        if sqllex.depth(stmt, m.start()) == 0
-    ]
-    if len(selects) != 1:
-        return None
-    clauses = _top_level_clauses(stmt)
-    if any(c[0] == "from" for c in clauses):
-        return None
-    list_start = selects[0].end()
-    list_end = min(
-        (c[1] for c in clauses if c[1] >= list_start), default=len(stmt)
-    )
-    dm = re.match(r"\s*distinct\b", stmt[list_start:list_end], re.IGNORECASE)
-    if dm:
-        list_start += dm.end()
-    items = _split_call_args("(" + stmt[list_start:list_end] + ")", 0)
-    if not items:
-        return None
-    return list_start, list_end, items
-
-
 def _stringify_branch_items(
     stmt: str, classes: dict[str, str]
 ) -> tuple[str, list[tuple[str | None, str, str]]] | None:
@@ -6446,10 +6257,10 @@ def _stringify_branch_items(
     class-exact string, or None when any item can't be (the whole
     compound then keeps its native lowering).  Returns (stmt, cols)
     with cols = per-position (alias-or-None, kind, rendered-sql)."""
-    span = _select_items_span(stmt) or _fromless_items_span(stmt)
+    span = _items_span(stmt)
     if span is None:
         return None
-    list_start, list_end, items = span
+    list_start, list_end, items, _ = span
     out: list[str] = []
     cols: list[tuple[str | None, str, str]] = []
     for item in items:
@@ -6459,11 +6270,7 @@ def _stringify_branch_items(
         # the candidate expression stringifying on its own (with
         # balanced parens, so a fragment can't slip through)
         s = None
-        am = re.match(
-            r"^(.*?)\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*)\s*$",
-            body,
-            re.IGNORECASE | re.DOTALL,
-        )
+        am = _PROP_ALIAS_RE.match(body)
         if am and am.group(2).lower() not in _KEYWORDS:
             cand = am.group(1).strip()
             if cand.count("(") == cand.count(")"):
@@ -6537,18 +6344,14 @@ def _wrap_ordered_compound(
         not re.search(r"\ball\b", g, re.IGNORECASE) for g in glue
     )
     last = new_texts[-1]
-    cl = _top_level_clauses(last)
-    names = [c[0] for c in cl]
-    cut_kw = None  # strip everything from here out of the last branch
+    cl = sqllex.clauses(last)
+    # strip everything from here out of the last branch
+    cut_kw = cl.first("order_by")
     ob_body, tail = "", ""
-    if "order_by" in names:
-        ob_i = names.index("order_by")
-        if any(n != "limit" for n in names[ob_i + 1 :]):
+    if cut_kw is not None:
+        if any(c[0] != "limit" for c in cl if c[1] > cut_kw[1]):
             return None
-        cut_kw = cl[ob_i]
-        lim_start = (
-            cl[ob_i + 1][1] if ob_i + 1 < len(cl) else len(last)
-        )
+        lim_start = cl.body("order_by")[1]
         ob_body = last[cut_kw[2] : lim_start].strip()
         tail = last[lim_start:].strip()
         if not ob_body:
@@ -6557,8 +6360,8 @@ def _wrap_ordered_compound(
         # no ORDER BY: wrap anyway so the key columns give the
         # distinct op SQLite's class-aware row identity; a trailing
         # LIMIT moves to the outer select
-        if "limit" in names:
-            cut_kw = cl[names.index("limit")]
+        cut_kw = cl.first("limit")
+        if cut_kw is not None:
             tail = last[cut_kw[1] :].strip()
     else:
         return None
@@ -6656,9 +6459,8 @@ def _wrap_ordered_compound(
             (i for i, o in enumerate(ops) if o == "union"),
             default=None,
         )
-        if last_u is not None and all(
-            _select_items_span(t) is None
-            for t in new_texts[last_u + 2 :]
+        if last_u is not None and not any(
+            sp and sp[3] for sp in map(_items_span, new_texts[last_u + 2 :])
         ):
             mode = "union"
             prefix_n = last_u + 2
@@ -6674,10 +6476,10 @@ def _wrap_ordered_compound(
             if bi == len(new_texts) - 1 and cut_kw is not None
             else text
         )
-        span = _select_items_span(t) or _fromless_items_span(t)
+        span = _items_span(t)
         if span is None:
             return None
-        ls, le, items = span
+        ls, le, items, _ = span
         its = [it.strip() for it in items]
         if len(its) != ncols:
             return None
@@ -6934,11 +6736,11 @@ def _rewrite_real_class_items(
     already lowered, windowed or not) wrap in py_real_repr; the alias
     registers as class 'dynamic' so ORDER BY on it keys numerically.
     Probed against real SQLite in tests/test_cli_fuzz.py."""
-    span = _select_items_span(stmt)
-    if span is None:
+    span = _items_span(stmt)
+    if span is None or not span[3]:
         return stmt, {}
     arrival = _scope_arrival_col(stmt, classes)
-    list_start, list_end, items = span
+    list_start, list_end, items, _ = span
     out_items, extras, changed = [], {}, False
     for item in items:
         m = _REALAGG_ITEM_RE.match(item)
@@ -7134,10 +6936,10 @@ def _rewrite_cast_select_items(
     string encoding, alias registered for class-aware ORDER BY."""
     from sqawk_spark.affinity import normalize_affinity
 
-    span = _select_items_span(stmt)
-    if span is None:
+    span = _items_span(stmt)
+    if span is None or not span[3]:
         return stmt, {}
-    list_start, list_end, items = span
+    list_start, list_end, items, _ = span
     out_items, extras, changed = [], {}, False
     for item in items:
         m = _AFF_CAST_ITEM_RE.match(item)
@@ -7274,7 +7076,6 @@ def rewrite_arith_div_chains(stmt: str, classes: dict[str, str]) -> str:
 # here and is never rewritten, which also makes the passes idempotent.
 
 _BOOL_CTX_KW_RE = re.compile(r"\b(where|having|on)\b", re.IGNORECASE)
-_BOOL_WORD_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
 _BOOL_STOP_WH = frozenset({
     "group", "order", "limit", "having", "window", "union",
     "intersect", "except",
@@ -7293,65 +7094,41 @@ def _bool_cond_end(
     enclosing scope, a statement separator, or end of text.  The
     ``FROM`` of an ``IS [NOT] DISTINCT FROM`` operator is part of the
     expression, not a stop."""
+    seps = "),;" if comma_stop else ");"
+    end = next(
+        (i for i, d in sqllex.scan(stmt, start) if d == 0 and stmt[i] in seps),
+        len(stmt),
+    )
     prev_word = ""
-    for i, depth in sqllex.scan(stmt, start):
-        c = stmt[i]
-        if depth:
+    for w in sqllex.words(stmt, start, end):
+        if w.depth:
             continue
-        if c == ")" or c == ";" or (c == "," and comma_stop):
-            return i
-        if (c.isalpha() or c == "_") and (
-            i == 0 or not _IDENT.match(stmt[i - 1])
+        if w.text in stops and not (
+            w.text == "from" and prev_word == "distinct"
         ):
-            w = _BOOL_WORD_RE.match(stmt, i).group(0).lower()
-            if w in stops and not (w == "from" and prev_word == "distinct"):
-                return i
-            prev_word = w
-    return len(stmt)
+            return w.start
+        prev_word = w.text
+    return end
 
 
-def _when_then_end(stmt: str, start: int) -> int:
-    """Position of the THEN matching a WHEN at this CASE level."""
-    case_depth = 0
-    for i, _ in sqllex.scan(stmt, start):
-        c = stmt[i]
-        if (c.isalpha() or c == "_") and (
-            i == 0 or not _IDENT.match(stmt[i - 1])
-        ):
-            w = _BOOL_WORD_RE.match(stmt, i).group(0).lower()
-            if w == "case":
-                case_depth += 1
-            elif w == "end" and case_depth:
-                case_depth -= 1
-            elif w == "then" and case_depth == 0:
-                return i
-    return len(stmt)
+def _case_blocks(t: str) -> list[tuple[int, int]]:
+    """(CASE start, past its END — or end of text) of every depth-0
+    CASE of ``t`` that no other depth-0 CASE holds."""
+    blocks: list[tuple[int, int]] = []
+    for a, case in sorted(sqllex.cases(t).items()):
+        if sqllex.depth(t, a) == 0 and not (blocks and a < blocks[-1][1]):
+            blocks.append((a, len(t) if case.end is None else case.end + 3))
+    return blocks
 
 
-def _searched_when_spans(stmt: str) -> list[tuple[int, int]]:
-    """(start, end) of every searched-CASE WHEN condition — the CASE
-    whose first token is WHEN.  A simple CASE's WHEN operands are
-    comparison values, not boolean contexts, and are skipped."""
-    spans: list[tuple[int, int]] = []
-    stack: list[bool] = []
-    for i, _ in sqllex.scan(stmt):
-        c = stmt[i]
-        if (c.isalpha() or c == "_") and (
-            i == 0 or not _IDENT.match(stmt[i - 1])
-        ):
-            m = _BOOL_WORD_RE.match(stmt, i)
-            w = m.group(0).lower()
-            if w == "case":
-                j = _skip_ws(stmt, m.end())
-                stack.append(
-                    bool(re.match(r"when\b", stmt[j:], re.IGNORECASE))
-                )
-            elif w == "end":
-                if stack:
-                    stack.pop()
-            elif w == "when" and stack and stack[-1]:
-                spans.append((m.end(), _when_then_end(stmt, m.end())))
-    return spans
+def _top_words(t: str) -> list[sqllex.Word]:
+    """The depth-0 words of ``t`` outside its CASE blocks."""
+    blocks = _case_blocks(t)
+    return [
+        w
+        for w in sqllex.words(t)
+        if w.depth == 0 and not any(a <= w.start < b for a, b in blocks)
+    ]
 
 
 def _bool_split_top(expr: str, word: str) -> list[str]:
@@ -7359,28 +7136,15 @@ def _bool_split_top(expr: str, word: str) -> list[str]:
     CASE..END blocks, with the AND that belongs to a BETWEEN consumed
     by it."""
     parts: list[str] = []
-    last = case_depth = between = 0
-    for i, depth in sqllex.scan(expr):
-        c = expr[i]
-        if (c.isalpha() or c == "_") and (
-            i == 0 or not _IDENT.match(expr[i - 1])
-        ):
-            m = _BOOL_WORD_RE.match(expr, i)
-            w = m.group(0).lower()
-            if depth:
-                continue
-            if w == "case":
-                case_depth += 1
-            elif w == "end" and case_depth:
-                case_depth -= 1
-            elif case_depth == 0:
-                if w == "between":
-                    between += 1
-                elif w == "and" and between:
-                    between -= 1
-                elif w == word:
-                    parts.append(expr[last:i])
-                    last = m.end()
+    last = between = 0
+    for w in _top_words(expr):
+        if w.text == "between":
+            between += 1
+        elif w.text == "and" and between:
+            between -= 1
+        elif w.text == word:
+            parts.append(expr[last : w.start])
+            last = w.end
     parts.append(expr[last:])
     return parts
 
@@ -7403,31 +7167,22 @@ def _bool_is_predicate(t: str) -> bool:
     function — SQLite's returns 0/1, the engine's returns a boolean,
     and both are truth-exact); everything inside strings, parens, or
     CASE blocks does not."""
-    case_depth = skip = 0
-    for i, depth in sqllex.scan(t):
+    if any(w.text in _BOOL_PRED_KWS for w in _top_words(t)):
+        return True
+    blocks = _case_blocks(t)
+    skip = 0
+    for i in sqllex.top_positions(t, "<>=!"):
         c = t[i]
-        if i < skip:
+        if i < skip or any(a <= i < b for a, b in blocks):
             continue
-        if depth == 0 and case_depth == 0 and c in "<>=!":
-            # << and >> are numeric bitshifts, not comparisons; a bare
-            # ! (not !=) is nothing SQLite accepts — skip both
-            if c in "<>" and t[i + 1 : i + 2] == c:
-                skip = i + 2
-                continue
-            if c == "!" and t[i + 1 : i + 2] != "=":
-                continue
-            return True
-        if (c.isalpha() or c == "_") and (
-            i == 0 or not _IDENT.match(t[i - 1])
-        ):
-            w = _BOOL_WORD_RE.match(t, i).group(0).lower()
-            if depth == 0:
-                if w == "case":
-                    case_depth += 1
-                elif w == "end" and case_depth:
-                    case_depth -= 1
-                elif case_depth == 0 and w in _BOOL_PRED_KWS:
-                    return True
+        # << and >> are numeric bitshifts, not comparisons; a bare
+        # ! (not !=) is nothing SQLite accepts — skip both
+        if c in "<>" and t[i + 1 : i + 2] == c:
+            skip = i + 2
+            continue
+        if c == "!" and t[i + 1 : i + 2] != "=":
+            continue
+        return True
     return False
 
 
@@ -7566,7 +7321,9 @@ def rewrite_boolean_contexts(stmt: str, classes: dict[str, str]) -> str:
                     ),
                 )
             )
-        spans.extend(_searched_when_spans(stmt))
+        for case in sqllex.cases(stmt).values():
+            if case.searched:
+                spans.extend(case.conditions())
         for s, e in sorted(spans, key=lambda p: -p[0]):
             body = stmt[s:e]
             if not body.strip():
@@ -7589,14 +7346,11 @@ def rewrite_boolean_clause_terms(
     as booleans (false < true = 0 < 1; NULL groups as NULL), exactly
     the integer order SQLite produces."""
     for clause in ("order_by", "group_by"):
-        clauses = _top_level_clauses(stmt)
-        names = [c[0] for c in clauses]
-        if clause not in names:
+        body = sqllex.clauses(stmt).body(clause)
+        if body is None:
             continue
-        kw = clauses[names.index(clause)]
-        after = [c for c in clauses if c[1] > kw[2]]
-        end = after[0][1] if after else len(stmt)
-        terms = sqllex.split_top(stmt[kw[2] : end])
+        start, end = body
+        terms = sqllex.split_top(stmt, start, end)
         out, changed = [], False
         for term in terms:
             m = _OB_TERM_DIR_RE.match(term.strip())
@@ -7610,7 +7364,7 @@ def rewrite_boolean_clause_terms(
             else:
                 out.append(term.strip())
         if changed:
-            stmt = stmt[: kw[2]] + " " + ", ".join(out) + " " + stmt[end:]
+            stmt = stmt[:start] + " " + ", ".join(out) + " " + stmt[end:]
     return stmt
 
 
@@ -7618,10 +7372,6 @@ _BOOL_ITEM_STOPS = frozenset({
     "from", "where", "group", "order", "limit", "having", "window",
     "union", "intersect", "except",
 })
-_BOOL_ITEM_ALIAS_RE = re.compile(
-    r"^(.*?)\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
 
 
 def _bool_item_needs_rewrite(expr: str) -> bool:
@@ -7666,7 +7416,7 @@ def rewrite_boolean_select_items(
         changed = False
         for item in items:
             body, alias = item, None
-            am = _BOOL_ITEM_ALIAS_RE.match(item.strip())
+            am = _PROP_ALIAS_RE.match(item.strip())
             if am and am.group(2).lower() not in _KEYWORDS | {
                 "null", "true", "false",
             }:
@@ -7781,60 +7531,10 @@ def _pred_wrap(e: str) -> str:
 _EXISTS_EXPR_RE = re.compile(r"\bexists\s*\(", re.IGNORECASE)
 
 
-def _case_value_spans(stmt: str) -> list[tuple[int, int]]:
-    """(start, end) of every CASE branch VALUE payload (THEN/ELSE
-    bodies at the CASE's own level) — simple-CASE WHEN operands are
-    comparison values and are skipped."""
-    starts: list[int] = []
-    for i, _ in sqllex.scan(stmt):
-        c = stmt[i]
-        if (c.isalpha() or c == "_") and (
-            i == 0 or not _IDENT.match(stmt[i - 1])
-        ):
-            m = _BOOL_WORD_RE.match(stmt, i)
-            if m.group(0).lower() == "case":
-                starts.append(m.end())
-    spans: list[tuple[int, int]] = []
-    for st in starts:
-        spans.extend(_case_spans_from(stmt, st))
-    return spans
-
-
-def _case_spans_from(stmt: str, st: int) -> list[tuple[int, int]]:
-    """Branch VALUE spans of the single CASE whose body starts at
-    ``st`` (just past its CASE keyword) — own level only."""
-    spans: list[tuple[int, int]] = []
-    cd = 0
-    cur: int | None = None
-    for i, depth in sqllex.scan(stmt, st):
-        c = stmt[i]
-        if c == ")" and depth == 0:
-            break  # enclosing scope closed before END
-        if (
-            depth == 0
-            and (c.isalpha() or c == "_")
-            and (i == 0 or not _IDENT.match(stmt[i - 1]))
-        ):
-            m = _BOOL_WORD_RE.match(stmt, i)
-            w = m.group(0).lower()
-            if w == "case":
-                cd += 1
-            elif w == "end":
-                if cd:
-                    cd -= 1
-                else:
-                    if cur is not None:
-                        spans.append((cur, i))
-                    break
-            elif cd == 0 and w == "when":
-                if cur is not None:
-                    spans.append((cur, i))
-                    cur = None
-            elif cd == 0 and w in ("then", "else"):
-                if cur is not None:
-                    spans.append((cur, i))
-                cur = m.end()
-    return spans
+def _case_values(t: str) -> list[tuple[int, int]]:
+    """Branch VALUE spans of the CASE that opens ``t``."""
+    case = sqllex.cases(t).get(0)
+    return case.values() if case else []
 
 
 def _paren_group_spans(stmt: str) -> list[tuple[int, int]]:
@@ -7920,7 +7620,8 @@ def rewrite_predicate_values(stmt: str, classes: dict[str, str]) -> str:
                 break
         if edited:
             continue
-        for s, e in sorted(_case_value_spans(stmt), key=lambda p: -p[0]):
+        values = [v for c in sqllex.cases(stmt).values() for v in c.values()]
+        for s, e in sorted(values, key=lambda p: -p[0]):
             body = stmt[s:e]
             if body.strip() and _is_value_pred(body):
                 stmt = (
@@ -7939,14 +7640,12 @@ def rewrite_predicate_values(stmt: str, classes: dict[str, str]) -> str:
             while j < len(stmt) and stmt[j] in " \t\n":
                 j += 1
             nxt = stmt[j] if j < len(stmt) else None
-            kw_adj = False
-            if nxt is not None and (nxt.isalpha() or nxt == "_"):
-                wm = _BOOL_WORD_RE.match(stmt, j)
-                # (p) IN (...), (p) BETWEEN a AND b, (p) IS x,
-                # (p) NOT IN ... consume the predicate's VALUE
-                kw_adj = wm.group(0).lower() in (
-                    "in", "between", "is", "not",
-                )
+            # (p) IN (...), (p) BETWEEN a AND b, (p) IS x,
+            # (p) NOT IN ... consume the predicate's VALUE
+            wd = sqllex.words(stmt, j, j + 1)
+            kw_adj = bool(wd) and wd[0].text in (
+                "in", "between", "is", "not"
+            )
             if (prev in _PRED_ADJ_PREV) or (nxt in _PRED_ADJ_NEXT) or (
                 kw_adj
             ):
@@ -8040,11 +7739,6 @@ _SCAN_JOIN_SPLIT_RE = re.compile(
 _SCAN_BAD_JOIN_RE = re.compile(
     r"\b(?:right|full)\s+(?:outer\s+)?join\b", re.IGNORECASE
 )
-_SCAN_TABLE_RE = re.compile(
-    r"^\s*([A-Za-z_][A-Za-z_0-9$]*)"
-    r"(?:\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9$]*))?\s*$",
-    re.IGNORECASE,
-)
 
 
 def append_scan_order(stmt: str, nr_by_table: dict[str, str]) -> str:
@@ -8069,14 +7763,13 @@ def append_scan_order(stmt: str, nr_by_table: dict[str, str]) -> str:
     its ``<prefix>nr`` counter."""
     if _setop_cuts(stmt):
         return stmt
-    clauses = _top_level_clauses(stmt)
-    names = [c[0] for c in clauses]
-    if "from" not in names or "group_by" in names or "having" in names:
+    clauses = sqllex.clauses(stmt)
+    if {"group_by", "having"} & set(clauses.names):
         return stmt
-    span = _select_items_span(stmt)
-    if span is None:
+    span = _items_span(stmt)
+    if span is None or not span[3]:
         return stmt
-    list_start, list_end, items = span
+    list_start, list_end, items, _ = span
     if re.search(
         r"\bselect\s+distinct\b", stmt[: list_start + 1], re.IGNORECASE
     ):
@@ -8088,11 +7781,7 @@ def append_scan_order(stmt: str, nr_by_table: dict[str, str]) -> str:
         args = _split_call_args(item_text, m.end() - 1)
         if args is not None and len(args) == 1:
             return stmt  # 1-arg min/max is an aggregate
-    fi = names.index("from")
-    from_end = (
-        clauses[fi + 1][1] if fi + 1 < len(clauses) else len(stmt)
-    )
-    src = stmt[clauses[fi][2] : from_end]
+    src = stmt[slice(*clauses.body("from"))]
     if _SCAN_BAD_JOIN_RE.search(src):
         return stmt
     refs: list[tuple[str, str]] = []  # (table, visible name)
@@ -8103,7 +7792,7 @@ def append_scan_order(stmt: str, nr_by_table: dict[str, str]) -> str:
             )[0]
             if not body.strip():
                 continue
-            tm = _SCAN_TABLE_RE.match(body)
+            tm = _SIMPLE_FROM_RE.match(body)
             if tm is None or (tm.group(2) or "").lower() in _NOT_ALIAS:
                 return stmt  # derived table / unparsed shape
             refs.append((tm.group(1), tm.group(2) or tm.group(1)))
@@ -8116,16 +7805,12 @@ def append_scan_order(stmt: str, nr_by_table: dict[str, str]) -> str:
             return stmt
         keys.append(f"{ref}.{nr}")
     key_sql = ", ".join(keys)
-    if "order_by" in names:
-        ob = clauses[names.index("order_by")]
-        after = [c for c in clauses if c[1] > ob[2]]
-        ob_end = after[0][1] if after else len(stmt)
-        out = stmt[:ob_end].rstrip() + ", " + key_sql
-        tail = stmt[ob_end:].strip()
+    ob = clauses.body("order_by")
+    if ob is not None:
+        out = stmt[: ob[1]].rstrip() + ", " + key_sql
+        tail = stmt[ob[1] :].strip()
         return out + (" " + tail if tail else "")
-    ins = (
-        clauses[names.index("limit")][1] if "limit" in names else len(stmt)
-    )
+    ins = _tail_start(clauses)
     out = stmt[:ins].rstrip() + " order by " + key_sql
     tail = stmt[ins:].strip()
     return out + (" " + tail if tail else "")

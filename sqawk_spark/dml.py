@@ -239,9 +239,9 @@ def maybe_run_dml(
 
 def _find_top_keyword(s: str, kw: str) -> int | None:
     """Index of a bare keyword at depth 0 outside quotes, or None."""
-    pat = re.compile(rf"\b{kw}\b", re.IGNORECASE)
     return next(
-        (i for i, d in sqllex.scan(s) if d == 0 and pat.match(s, i)), None
+        (w.start for w in sqllex.words(s) if w.depth == 0 and w.text == kw),
+        None,
     )
 
 

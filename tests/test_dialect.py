@@ -816,6 +816,20 @@ def test_collate_propagation_vs_sqlite(spark):
         " then a1 else '' end = 'ab' order by tnr",
         "select a1 from t where 'ab' = (case when a1 <> 'z'"
         " collate nocase then a1 else '' end) order by tnr",
+        # an unaliased DISTINCT item keeps its name: ORDER BY terms
+        # naming it (the ordinal becomes its text) still resolve
+        "select distinct a1 collate nocase from t order by 1",
+        "select distinct a1 collate nocase from t"
+        " order by a1 collate nocase",
+        "select distinct a1 collate nocase, length(a2) from t order by 1",
+        # a collated simple-CASE base compares every WHEN nocase
+        "select case a1 collate nocase when 'ab' then 1 else 3 end, tnr"
+        " from t order by tnr",
+        "select case (a1 collate nocase) when 'ab' then 1"
+        " when 'q' collate binary then 2 else 3 end, tnr"
+        " from t order by tnr",
+        "select tnr from t where case a1 collate nocase when 'ab'"
+        " then 1 else 0 end order by tnr",
     ]:
         want = [
             tuple("" if v is None else str(v) for v in r)
@@ -826,6 +840,24 @@ def test_collate_propagation_vs_sqlite(spark):
             for r in spark.sql(rewrite_statement(q, classes=cl)).collect()
         ]
         assert got == want, f"{q}\ngot {got}\nwant {want}"
+
+
+def test_non_ascii_identifiers_rewrite():
+    """A character at or above U+0080 is an identifier character, as
+    in SQLite's tokenizer: a word may start with ``ß`` or ``é``, and
+    ``prénom`` is one word, not ``pr`` plus ``nom``.  Every statement
+    below used to raise AttributeError inside the rewriter."""
+    cl = {"größe": "long", "prénom": "text", "anr": "long"}
+    for q in [
+        "select größe from a where größe > 1",
+        "select prénom, größe from a where größe > 1 order by prénom",
+        "select case when größe > 1 then prénom else 'x' end from a",
+        "select sum(größe > 1), ßx from a group by ßx",
+        "select é from a where é and größe",
+    ]:
+        out = rewrite_statement(q, set(cl), cl)
+        for name in ("größe", "prénom", "ßx"):
+            assert (name in out) == (name in q), (q, out)
 
 
 # --- round 10: literal branches in distinct set ops ----------------------
@@ -986,3 +1018,34 @@ def test_no_module_level_name_bound_twice():
         ):
             bound[node.target.id] += 1
     assert [n for n, c in bound.items() if c > 1] == []
+
+
+def test_no_module_level_regex_compiled_twice():
+    """One pattern, one name: three module-level names held the same
+    ``\\b(min|max)\\s*\\(`` regex, two the same alias splitter and two
+    the same single-table FROM matcher, so a fix to one copy would
+    miss the others.  Compares every module-level ``re.compile`` whose
+    pattern is a literal, by pattern and flags."""
+    import ast
+    import collections
+
+    import sqawk_spark.dialect as dialect
+
+    with open(dialect.__file__) as f:
+        tree = ast.parse(f.read())
+    seen: collections.defaultdict[tuple, list[int]] = (
+        collections.defaultdict(list)
+    )
+    for node in tree.body:
+        if not isinstance(node, (ast.Assign, ast.AnnAssign)):
+            continue
+        for call in ast.walk(node):
+            if (
+                isinstance(call, ast.Call)
+                and ast.unparse(call.func) == "re.compile"
+                and call.args
+                and isinstance(call.args[0], ast.Constant)
+            ):
+                flags = [ast.unparse(a) for a in call.args[1:]]
+                seen[(call.args[0].value, *flags)].append(call.lineno)
+    assert {k: v for k, v in seen.items() if len(v) > 1} == {}

@@ -1,8 +1,10 @@
 """The lexer (sqawk_spark/sqllex.py) against the hand-rolled scanners
 it replaced.  The reference implementations below are the dialect
-rewriter's, DML runner's and CLI's former quote-and-paren loops,
-copied verbatim (names kept); each lexer-based replacement must agree
-with its reference at every position of every drawn text."""
+rewriter's, DML runner's and CLI's former quote-and-paren loops and
+the rewriter's former word, CASE and clause walkers, copied verbatim
+(names kept); each lexer-based replacement must agree with its
+reference at every position of every drawn text (the CASE walkers:
+on every well-formed one, see ``_check_against_walkers``)."""
 
 from __future__ import annotations
 
@@ -256,7 +258,6 @@ def test_regex_starts_never_sit_on_a_quote(extra):
     may_open_on_quote = {
         "_BETWEEN_COLLATE_RES",
         "_AFF_ORDER_KEY_RE",
-        "_BOOL_ITEM_ALIAS_RE",
         "_OB_TERM_DIR_RE",
         "_PROP_ALIAS_RE",
         "_TRAILING_COLLATE_RE",
@@ -325,3 +326,455 @@ def test_split_statements(s):
     s = s.replace("%", "\\")  # backslashes inside and outside quotes
     assert split_statements(s) == _ref_split_statements(s)
     assert _escape_backslash_literals(s) == _ref_escape_backslash_literals(s)
+
+
+# --- words, CASE blocks and clauses -------------------------------------
+#
+# The rewriter's former word-by-word walkers, copied verbatim (names
+# kept).  They read a word as ``[A-Za-z_][A-Za-z_0-9]*`` and crashed on a
+# non-ASCII letter that started one; ``sqllex.words`` counts every
+# character at or above U+0080 as an identifier character, as SQLite's
+# tokenizer does.  Replacing each such character by ``x`` keeps every
+# position and gives the references the same word boundaries, so they
+# read ``_ascii(s)`` wherever the new code reads ``s``.
+
+_IDENT = re.compile(r"[A-Za-z_0-9$.]")
+_BOOL_WORD_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
+
+
+def _skip_ws(s: str, i: int) -> int:
+    while i < len(s) and s[i].isspace():
+        i += 1
+    return i
+
+
+_CLAUSE_RES: tuple[tuple[str, re.Pattern[str]], ...] = (
+    ("from", re.compile(r"from\b", re.IGNORECASE)),
+    ("where", re.compile(r"where\b", re.IGNORECASE)),
+    ("group_by", re.compile(r"group\s+by\b", re.IGNORECASE)),
+    ("having", re.compile(r"having\b", re.IGNORECASE)),
+    ("window", re.compile(r"window\b", re.IGNORECASE)),
+    ("order_by", re.compile(r"order\s+by\b", re.IGNORECASE)),
+    ("limit", re.compile(r"limit\b", re.IGNORECASE)),
+    ("setop", re.compile(r"(?:union|intersect|except)\b", re.IGNORECASE)),
+)
+
+
+def _top_level_clauses(stmt: str) -> list[tuple[str, int, int]]:
+    """Depth-0, outside-strings occurrences of statement clause
+    keywords, as ``(name, kw_start, kw_end)`` in source order."""
+    found: list[tuple[str, int, int]] = []
+    for i, depth in sqllex.scan(stmt):
+        c = stmt[i]
+        if depth or not (c.isalpha() or c == "_"):
+            continue
+        if i and _IDENT.match(stmt[i - 1]):
+            continue
+        for name, rex in _CLAUSE_RES:
+            m = rex.match(stmt, i)
+            if m:
+                # 'FROM' inside IS [NOT] DISTINCT FROM is an
+                # operator token, not the statement clause
+                if name != "from" or not re.search(
+                    r"\bdistinct\s*$",
+                    stmt[max(0, i - 12) : i],
+                    re.IGNORECASE,
+                ):
+                    found.append((name, m.start(), m.end()))
+                break
+    return found
+
+
+def _case_end(s: str, start: int) -> int | None:
+    """Index just past the END keyword of the CASE whose body starts
+    at ``start`` (right after its CASE keyword), or None."""
+    cd = 0
+    for i, depth in sqllex.scan(s, start):
+        c = s[i]
+        if c == ")" and depth == 0:
+            return None
+        if (
+            depth == 0
+            and (c.isalpha() or c == "_")
+            and (i == 0 or not _IDENT.match(s[i - 1]))
+        ):
+            m = _BOOL_WORD_RE.match(s, i)
+            w = m.group(0).lower()
+            if w == "case":
+                cd += 1
+            elif w == "end":
+                if not cd:
+                    return m.end()
+                cd -= 1
+    return None
+
+
+def _when_then_end(stmt: str, start: int) -> int:
+    """Position of the THEN matching a WHEN at this CASE level."""
+    case_depth = 0
+    for i, _ in sqllex.scan(stmt, start):
+        c = stmt[i]
+        if (c.isalpha() or c == "_") and (
+            i == 0 or not _IDENT.match(stmt[i - 1])
+        ):
+            w = _BOOL_WORD_RE.match(stmt, i).group(0).lower()
+            if w == "case":
+                case_depth += 1
+            elif w == "end" and case_depth:
+                case_depth -= 1
+            elif w == "then" and case_depth == 0:
+                return i
+    return len(stmt)
+
+
+def _searched_when_spans(stmt: str) -> list[tuple[int, int]]:
+    """(start, end) of every searched-CASE WHEN condition — the CASE
+    whose first token is WHEN.  A simple CASE's WHEN operands are
+    comparison values, not boolean contexts, and are skipped."""
+    spans: list[tuple[int, int]] = []
+    stack: list[bool] = []
+    for i, _ in sqllex.scan(stmt):
+        c = stmt[i]
+        if (c.isalpha() or c == "_") and (
+            i == 0 or not _IDENT.match(stmt[i - 1])
+        ):
+            m = _BOOL_WORD_RE.match(stmt, i)
+            w = m.group(0).lower()
+            if w == "case":
+                j = _skip_ws(stmt, m.end())
+                stack.append(
+                    bool(re.match(r"when\b", stmt[j:], re.IGNORECASE))
+                )
+            elif w == "end":
+                if stack:
+                    stack.pop()
+            elif w == "when" and stack and stack[-1]:
+                spans.append((m.end(), _when_then_end(stmt, m.end())))
+    return spans
+
+
+def _bool_split_top(expr: str, word: str) -> list[str]:
+    """Split on a top-level AND/OR — outside strings, parens and
+    CASE..END blocks, with the AND that belongs to a BETWEEN consumed
+    by it."""
+    parts: list[str] = []
+    last = case_depth = between = 0
+    for i, depth in sqllex.scan(expr):
+        c = expr[i]
+        if (c.isalpha() or c == "_") and (
+            i == 0 or not _IDENT.match(expr[i - 1])
+        ):
+            m = _BOOL_WORD_RE.match(expr, i)
+            w = m.group(0).lower()
+            if depth:
+                continue
+            if w == "case":
+                case_depth += 1
+            elif w == "end" and case_depth:
+                case_depth -= 1
+            elif case_depth == 0:
+                if w == "between":
+                    between += 1
+                elif w == "and" and between:
+                    between -= 1
+                elif w == word:
+                    parts.append(expr[last:i])
+                    last = m.end()
+    parts.append(expr[last:])
+    return parts
+
+
+def _case_value_spans(stmt: str) -> list[tuple[int, int]]:
+    """(start, end) of every CASE branch VALUE payload (THEN/ELSE
+    bodies at the CASE's own level) — simple-CASE WHEN operands are
+    comparison values and are skipped."""
+    starts: list[int] = []
+    for i, _ in sqllex.scan(stmt):
+        c = stmt[i]
+        if (c.isalpha() or c == "_") and (
+            i == 0 or not _IDENT.match(stmt[i - 1])
+        ):
+            m = _BOOL_WORD_RE.match(stmt, i)
+            if m.group(0).lower() == "case":
+                starts.append(m.end())
+    spans: list[tuple[int, int]] = []
+    for st in starts:
+        spans.extend(_case_spans_from(stmt, st))
+    return spans
+
+
+def _case_spans_from(stmt: str, st: int) -> list[tuple[int, int]]:
+    """Branch VALUE spans of the single CASE whose body starts at
+    ``st`` (just past its CASE keyword) — own level only."""
+    spans: list[tuple[int, int]] = []
+    cd = 0
+    cur: int | None = None
+    for i, depth in sqllex.scan(stmt, st):
+        c = stmt[i]
+        if c == ")" and depth == 0:
+            break  # enclosing scope closed before END
+        if (
+            depth == 0
+            and (c.isalpha() or c == "_")
+            and (i == 0 or not _IDENT.match(stmt[i - 1]))
+        ):
+            m = _BOOL_WORD_RE.match(stmt, i)
+            w = m.group(0).lower()
+            if w == "case":
+                cd += 1
+            elif w == "end":
+                if cd:
+                    cd -= 1
+                else:
+                    if cur is not None:
+                        spans.append((cur, i))
+                    break
+            elif cd == 0 and w == "when":
+                if cur is not None:
+                    spans.append((cur, i))
+                    cur = None
+            elif cd == 0 and w in ("then", "else"):
+                if cur is not None:
+                    spans.append((cur, i))
+                cur = m.end()
+    return spans
+
+
+def _bool_cond_end(
+    stmt: str, start: int, stops: frozenset, comma_stop: bool = False
+) -> int:
+    """Exclusive end of a condition starting at ``start``: the next
+    stop keyword at the same paren depth, a ``)`` closing the
+    enclosing scope, a statement separator, or end of text.  The
+    ``FROM`` of an ``IS [NOT] DISTINCT FROM`` operator is part of the
+    expression, not a stop."""
+    prev_word = ""
+    for i, depth in sqllex.scan(stmt, start):
+        c = stmt[i]
+        if depth:
+            continue
+        if c == ")" or c == ";" or (c == "," and comma_stop):
+            return i
+        if (c.isalpha() or c == "_") and (
+            i == 0 or not _IDENT.match(stmt[i - 1])
+        ):
+            w = _BOOL_WORD_RE.match(stmt, i).group(0).lower()
+            if w in stops and not (w == "from" and prev_word == "distinct"):
+                return i
+            prev_word = w
+    return len(stmt)
+
+
+def _ascii(s: str) -> str:
+    return re.sub(r"[^\x00-\x7f]", "x", s)
+
+
+def _ref_words(s: str, start: int) -> list[tuple[int, int, int]]:
+    return [
+        (i, _BOOL_WORD_RE.match(s, i).end(), d)
+        for i, d in sqllex.scan(s, start)
+        if (s[i].isalpha() or s[i] == "_")
+        and (i == 0 or not _IDENT.match(s[i - 1]))
+    ]
+
+
+_NAMES = st.sampled_from(
+    ["a1", "x", "t.end", "x$case", "1end", "größe", "prénom", "é", "ß_1",
+     "_k", "then1", "'case end'", "'it''s'", '"when"', "`then`", "3.5"]
+)
+_BINOPS = st.sampled_from(
+    ["and", "or", "+", "=", "<", ",", "is not distinct from"]
+)
+
+
+def _case_of(children):
+    return st.tuples(
+        st.one_of(st.just([]), children),
+        st.lists(st.tuples(children, children), min_size=1, max_size=3),
+        st.one_of(st.just([]), children.map(lambda e: ["else", *e])),
+    ).map(
+        lambda t: [
+            "case",
+            *t[0],
+            *(k for c, v in t[1] for k in ("when", *c, "then", *v)),
+            *t[2],
+            "end",
+        ]
+    )
+
+
+def _compound(children):
+    return st.one_of(
+        _case_of(children),
+        children.map(lambda e: ["(", *e, ")"]),
+        st.tuples(children, _BINOPS, children).map(
+            lambda t: [*t[0], t[1], *t[2]]
+        ),
+        st.tuples(children, children, children).map(
+            lambda t: [*t[0], "between", *t[1], "and", *t[2]]
+        ),
+    )
+
+
+_EXPRS = st.recursive(_NAMES.map(lambda n: [n]), _compound, max_leaves=10)
+# well-formed statements: CASE..END, parens and CASE grammar balanced
+_STATEMENTS = st.tuples(
+    _case_of(_EXPRS),
+    st.sampled_from([[], ["from", "t"], ["from", "(", "select", "x", ")"]]),
+    st.one_of(st.just([]), _EXPRS.map(lambda e: ["where", *e])),
+    st.one_of(st.just([]), _EXPRS.map(lambda e: ["order by", *e])),
+    st.sampled_from([[], ["limit", "3"], ["union", "select", "1"]]),
+).map(lambda t: ["select", *(k for part in t for k in part)])
+# free word soup: anything may be unbalanced
+_SOUP = st.lists(
+    st.one_of(
+        _NAMES,
+        st.sampled_from(
+            ["case", "when", "then", "else", "end", "between", "and", "or",
+             "from", "order by", "group by", "limit", "where", "union",
+             "distinct", "(", ")", ",", ";"]
+        ),
+    ),
+    max_size=24,
+)
+
+
+@st.composite
+def _render(draw, tokens):
+    """Join tokens: keywords in any letter case, words always apart."""
+    out = []
+    for k, tok in enumerate(draw(tokens)):
+        if tok.isalpha() and draw(st.booleans()):
+            tok = tok.upper()
+        if k:
+            seps = [" ", "\n  "]
+            if tok in "(),;" or out[-1] in "(),;":
+                seps.append("")
+            out.append(draw(st.sampled_from(seps)))
+        out.append(tok)
+    return "".join(out)
+
+
+def _tokens(s: str) -> list[str]:
+    """The case/paren skeleton of a rendered text, read off its words."""
+    marks = {w.start: w.text for w in sqllex.words(s)}
+    marks.update(
+        {i: s[i] for i, _ in sqllex.scan(s) if s[i] in "()"}
+    )
+    return [marks[i] for i in sorted(marks)]
+
+
+def _well_formed(s: str) -> bool:
+    """Parens balance; every CASE has its END inside the same paren
+    group; every WHEN/THEN/ELSE/END sits directly in a CASE; and each
+    CASE's own keywords read WHEN THEN [WHEN THEN ...] [ELSE]."""
+    frames: list[list[list[str]]] = [[]]
+    for t in _tokens(s):
+        if t == "(":
+            frames.append([])
+        elif t == ")":
+            if len(frames) == 1 or frames[-1]:
+                return False
+            frames.pop()
+        elif t == "case":
+            frames[-1].append([])
+        elif t in ("when", "then", "else", "end"):
+            if not frames[-1]:
+                return False
+            if t != "end":
+                frames[-1][-1].append(t)
+            elif not re.fullmatch(
+                r"(when then )+(else )?", " ".join(frames[-1].pop()) + " "
+            ):
+                return False
+    return frames == [[]]
+
+
+def _check_against_walkers(s: str) -> None:
+    """The checks that hold on every text, then — on well-formed texts
+    only — the ones the old depth-blind walkers agree with.  Outside
+    that class the walkers differ by design: ``_when_then_end`` and
+    ``_searched_when_spans`` counted CASE and END at every paren depth
+    (an END inside parens closed the CASE outside them, a stray WHEN
+    in parens was a condition), ``_when_then_end`` ran past the END to
+    any later THEN, and ``_bool_split_top`` resumed splitting after a
+    ``)`` that closed the text's own scope; the CASE table ends a CASE
+    at that ``)`` and owns only the keywords at its paren depth."""
+    r = _ascii(s)
+    for start in range(len(s) + 1):
+        got = [(w.start, w.end, w.depth) for w in sqllex.words(s, start)]
+        assert got == _ref_words(r, start)
+        for stops, comma in (
+            (frozenset({"when", "end"}), False),
+            (dialect._BOOL_STOP_ON, True),
+            (dialect._BOOL_ITEM_STOPS, False),
+        ):
+            assert dialect._bool_cond_end(
+                s, start, stops, comma
+            ) == _bool_cond_end(r, start, stops, comma)
+    assert list(sqllex.clauses(s)) == _top_level_clauses(r)
+    cases = sqllex.cases(s)
+    assert sorted(cases) == [
+        w.start for w in sqllex.words(s) if w.text == "case"
+    ]
+    for p, case in cases.items():
+        assert _case_end(r, p + 4) == (
+            None if case.end is None else case.end + 3
+        )
+        assert _case_spans_from(r, p + 4) == case.values()
+    assert sorted(_case_value_spans(r)) == sorted(
+        v for c in cases.values() for v in c.values()
+    )
+    if not _well_formed(s):
+        return
+    for case in cases.values():
+        for (a, b), w in zip(
+            case.conditions(), (k for k in case.keys if k.text == "when")
+        ):
+            assert a == w.end and _when_then_end(r, a) == b
+    assert _searched_when_spans(r) == sorted(
+        v for c in cases.values() if c.searched for v in c.conditions()
+    )
+    for word in ("and", "or"):
+        got = [_ascii(p) for p in dialect._bool_split_top(s, word)]
+        assert got == _bool_split_top(r, word)
+
+
+@given(_render(_STATEMENTS))
+@settings(max_examples=200, deadline=None)
+@example("select case when a then case b when 1 then 2 end else 3 end")
+@example("select größe from t where größe between 1 and 2 or x")
+def test_words_cases_clauses_vs_walkers(s):
+    assert _well_formed(s)
+    _check_against_walkers(s)
+
+
+@given(_render(_SOUP))
+@settings(max_examples=400, deadline=None)
+@example("case when (then) then end")
+@example("case ) ( when a then b end and x")
+@example("case when a end then")
+def test_words_cases_clauses_on_word_soup(s):
+    _check_against_walkers(s)
+
+
+def test_walker_differences_are_malformed():
+    """One text per documented difference: none is well-formed, and on
+    each an old walker reads the text differently from the CASE
+    table."""
+    r = "case when a then (end) when b then 1 end"  # END in parens
+    assert not _well_formed(r)
+    assert len(_searched_when_spans(r)) == 1
+    assert len(sqllex.cases(r)[0].conditions()) == 2
+    r = "case when (when x then) then 1 end"  # stray WHEN in parens
+    assert not _well_formed(r)
+    assert len(_searched_when_spans(r)) == 2
+    assert len(sqllex.cases(r)[0].conditions()) == 1
+    r = "case when a else b end then 1"  # a WHEN without its THEN
+    assert not _well_formed(r)
+    assert _when_then_end(r, 9) == r.index("then")
+    assert sqllex.cases(r)[0].conditions() == []
+    r = "case ) ( end and y"  # a ')' closes the text's own scope
+    assert not _well_formed(r)
+    assert _bool_split_top(r, "and") == ["case ) ( end ", " y"]
+    assert dialect._bool_split_top(r, "and") == [r]
