@@ -7,8 +7,8 @@ column stays text — reference tests.tcl:1066-1072).
 
 Spark columns are homogeneously typed, so fields are stored as
 **canonicalized strings**: the affinity rules are applied at load time
-as pure column expressions, producing the display form SQLite would
-print. Numeric behavior in queries then comes from Spark's implicit
+as Spark SQL expressions (``affinity_sql``), producing the display form
+SQLite would print. Numeric behavior in queries then comes from Spark's implicit
 string→numeric coercion in comparisons/arithmetic.
 
 SQLite's cross-type ordering (NULL < numbers < text < blob,
@@ -103,27 +103,53 @@ def column_class_for(decl: str, promoted: bool) -> str:
     return "dynamic"
 
 
-def _let(bindings: dict[str, Column], body) -> Column:
-    """Evaluate-once let-binding for column expressions.
-
-    Plain ``Column`` reuse in PySpark CLONES the whole subtree at
-    every reference site — a formatter that mentions an intermediate
-    eight times inflates the expression tree exponentially (the
-    pre-refactor :func:`_python_real_repr` generated >64 KB of Java
-    per column and janino refused to compile it). A higher-order
-    function's lambda variable, by contrast, is a genuine evaluated-
-    once reference, so ``transform(array(struct(<bindings>)), λ)[0]``
-    is the JVM-side equivalent of a ``let``: each binding computes
-    once per row, the body references it for free, and the tree stays
-    linear in the source size. Nested calls may capture outer lambda
-    variables (Spark resolves named lambda variables lexically)."""
-    s = F.struct(*[v.alias(k) for k, v in bindings.items()])
-    return F.transform(F.array(s), body)[0]
+# ---------------------------------------------------------------------
+# Canonicalization as Spark SQL text. The table build projects every
+# column through one ``selectExpr`` batch, so the expressions below are
+# strings built in pure Python: a Column tree costs one py4j round trip
+# per node, thousands per table. ``apply_affinity`` and
+# ``_python_real_repr`` bind a Column into the same text for callers
+# that hold Columns.
 
 
-def _python_real_repr(d: Column) -> Column:
-    """CPython/SQLite ``repr()`` of a double, as a pure JVM column
-    expression — Spark's ``cast(string)`` emits Java formatting
+def sql_str(s: str) -> str:
+    """A Spark SQL string literal for ``s`` (Spark's literal parser
+    processes backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _let(var: str, bindings: dict[str, str], body: str) -> str:
+    """Evaluate-once let-binding in SQL text.
+
+    Repeating an operand in the text repeats its evaluation and its
+    subtree — a formatter that mentions an intermediate eight times
+    inflates the expression tree exponentially (the first double
+    formatter here generated >64 KB of Java per column and janino
+    refused to compile it). A higher-order function's lambda
+    variable is a genuine evaluated-once reference, so
+    ``transform(array(named_struct(<bindings>)), var -> body)[0]`` is a
+    ``let``: each binding computes once per row, ``body`` reads it as
+    ``var.<name>``, and the tree stays linear in the source size. Nested
+    lets capture outer lambda variables (Spark resolves them lexically),
+    so nested lets take distinct variable names."""
+    fields = ", ".join(f"{sql_str(k)}, {v}" for k, v in bindings.items())
+    return f"transform(array(named_struct({fields})), {var} -> {body})[0]"
+
+
+_DOT = sql_str(r"\.")
+_EDGE_SPACE = sql_str(r"^\s+|\s+$")
+
+
+def _strip_digits(mantissa: str) -> str:
+    """The digit run of a rendered mantissa: no point, no trailing 0s."""
+    return (
+        f"regexp_replace(regexp_replace({mantissa}, {_DOT}, ''), '0+$', '')"
+    )
+
+
+def python_real_repr_sql(d: str) -> str:
+    """CPython/SQLite ``repr()`` of the double expression ``d``, as
+    Spark SQL text — Spark's ``cast(string)`` emits Java formatting
     (``1.23456785E7``) where SQLite's shell and Python's sqlite3
     render CPython repr (``12345678.5``). Java 17's ``toString`` is
     also not always shortest-digits (pre-Ryū ``FloatingDecimal`` can
@@ -137,9 +163,7 @@ def _python_real_repr(d: Column) -> Column:
     mantissa, explicit sign, exponent ≥ 2 digits) outside.
 
     Built on :func:`_let` so every intermediate (Java string, digit
-    run, decimal exponent) is computed once per row — the naive
-    all-``Column`` version duplicated subtrees exponentially and blew
-    the 64 KB JVM method limit.
+    run, decimal exponent) is computed once per row.
 
     Residual (documented; fuzz-measured ~0.01% of bit-random doubles,
     zero in realistic data): values whose shortest repr needs ≥ 16
@@ -150,133 +174,110 @@ def _python_real_repr(d: Column) -> Column:
     comparison/join/order semantic is unaffected; only the printed
     string can differ.
     """
+    # formatting, over the let variable __q (digits, exp, sa, has_e,
+    # fa, neg)
+    digits, exp, sa = "__q.digits", "__q.exp", "__q.sa"
+    n = f"length({digits})"
+    expabs = f"CAST(abs({exp}) AS STRING)"
+    sci = (
+        f"concat(substring({digits}, 1, 1), "
+        f"CASE WHEN {n} > 1 THEN concat('.', substring({digits}, 2, {n})) "
+        f"ELSE '' END, 'e', CASE WHEN {exp} >= 0 THEN '+' ELSE '-' END, "
+        # zero-pad to ≥2 digits; lpad would TRUNCATE 3-digit exponents
+        f"CASE WHEN length({expabs}) < 2 THEN concat('0', {expabs}) "
+        f"ELSE {expabs} END)"
+    )
+    intlen = f"({exp} + 1)"
+    fixed_pos = (
+        f"CASE WHEN {n} > {intlen} THEN concat(substring({digits}, 1, "
+        f"{intlen}), '.', substring({digits}, {intlen} + 1, {n})) "
+        f"ELSE concat({digits}, repeat('0', {intlen} - {n}), '.0') END"
+    )
+    fixed_neg = f"concat('0.', repeat('0', -{exp} - 1), {digits})"
+    body = (
+        f"CASE WHEN __q.fa = 0.0D THEN '0.0' "
+        f"WHEN {sa} = 'Infinity' THEN 'inf' "
+        # Java fixed-point (1e-3 ≤ |d| < 1e7) == Python fixed-point
+        f"WHEN NOT __q.has_e THEN {sa} "
+        f"WHEN ({exp} >= 16) OR ({exp} <= -5) THEN {sci} "
+        f"WHEN {exp} >= 0 THEN {fixed_pos} ELSE {fixed_neg} END"
+    )
+    fmt = f"CASE WHEN __q.neg THEN concat('-', {body}) ELSE {body} END"
 
-    def fmt(q: Column) -> Column:
-        digits, exp, sa = q["digits"], q["exp"], q["sa"]
-        n = F.length(digits)
-        expabs = F.abs(exp).cast("string")
-        sci = F.concat(
-            digits.substr(F.lit(1), F.lit(1)),
-            F.when(
-                n > 1, F.concat(F.lit("."), digits.substr(F.lit(2), n))
-            ).otherwise(F.lit("")),
-            F.lit("e"),
-            F.when(exp >= 0, F.lit("+")).otherwise(F.lit("-")),
-            # zero-pad to ≥2 digits; lpad would TRUNCATE 3-digit
-            # exponents
-            F.when(F.length(expabs) < 2, F.concat(F.lit("0"), expabs))
-            .otherwise(expabs),
-        )
-        intlen = exp + F.lit(1)
-        fixed_pos = F.when(
-            n > intlen,
-            F.concat(
-                digits.substr(F.lit(1), intlen),
-                F.lit("."),
-                digits.substr(intlen + 1, n),
-            ),
-        ).otherwise(
-            F.concat(
-                digits,
-                F.repeat(F.lit("0"), intlen - n),
-                F.lit(".0"),
-            )
-        )
-        fixed_neg = F.concat(
-            F.lit("0."), F.repeat(F.lit("0"), -exp - 1), digits
-        )
-        body = (
-            F.when(q["fa"] == 0.0, F.lit("0.0"))
-            .when(sa == "Infinity", F.lit("inf"))
-            # Java fixed-point (1e-3 ≤ |d| < 1e7) == Python fixed-point
-            .when(~q["has_e"], sa)
-            .when((exp >= 16) | (exp <= -5), sci)
-            .when(exp >= 0, fixed_pos)
-            .otherwise(fixed_neg)
-        )
-        return F.when(
-            q["neg"], F.concat(F.lit("-"), body)
-        ).otherwise(body)
-
-    def derive(r: Column) -> Column:
-        fa, sa = r["fa"], r["sa"]
-        # Tier 1: Java toString digits — shortest whenever ≤ 15 digits
-        # (FloatingDecimal's non-shortest bug class needs 16+), the
-        # overwhelmingly common case, and free to extract.
-        p0 = F.split(sa, "E")
-        d0s = F.regexp_replace(
-            F.regexp_replace(p0[0], r"\.", ""), r"0+$", ""
-        )
-        d0 = F.when(d0s == "", F.lit("0")).otherwise(d0s)
-        # Tier 2 (toString gave ≥ 16 digits): shortest of the
-        # 14..17-digit renderings that parses back — non-shortest
-        # toString can overshoot by a digit, so the search starts
-        # below it.
-        sel = None
-        for k in (13, 14, 15):
-            c = F.format_string(f"%.{k}e", fa)
-            cond = c.cast("double") == fa
-            sel = F.when(cond, c) if sel is None else sel.when(cond, c)
-        sel = sel.otherwise(F.format_string("%.16e", fa))
-        p1 = F.split(sel, "e")
-        d1s = F.regexp_replace(
-            F.regexp_replace(p1[0], r"\.", ""), r"0+$", ""
-        )
-        use0 = F.length(d0) <= 15
-        return _let(
-            {
-                "digits": F.when(use0, d0).otherwise(
-                    F.when(d1s == "", F.lit("0")).otherwise(d1s)
-                ),
-                # F.get, not [1]: bindings evaluate eagerly (struct
-                # fields), and fixed-point Java strings have no "E"
-                # part — [1] would throw under ANSI instead of NULLing
-                "exp": F.when(use0, F.get(p0, 1))
-                .otherwise(p1[1])
-                .cast("int"),
-                "sa": sa,
-                "has_e": F.size(p0) == 2,
-                "fa": fa,
-                "neg": r["neg"],
-            },
-            fmt,
-        )
-
-    return _let(
+    # digit derivation, over the let variable __r (fa, sa, neg)
+    fa, sa = "__r.fa", "__r.sa"
+    # Tier 1: Java toString digits — shortest whenever ≤ 15 digits
+    # (FloatingDecimal's non-shortest bug class needs 16+), the
+    # overwhelmingly common case, and free to extract.
+    p0 = f"split({sa}, 'E')"
+    d0s = _strip_digits(f"{p0}[0]")
+    d0 = f"CASE WHEN {d0s} = '' THEN '0' ELSE {d0s} END"
+    # Tier 2 (toString gave ≥ 16 digits): shortest of the 14..17-digit
+    # renderings that parses back — non-shortest toString can
+    # overshoot by a digit, so the search starts below it.
+    sel = " ".join(
+        f"WHEN CAST(format_string('%.{k}e', {fa}) AS DOUBLE) = {fa} "
+        f"THEN format_string('%.{k}e', {fa})"
+        for k in (13, 14, 15)
+    )
+    p1 = f"split(CASE {sel} ELSE format_string('%.16e', {fa}) END, 'e')"
+    d1s = _strip_digits(f"{p1}[0]")
+    use0 = f"length({d0}) <= 15"
+    derive = _let(
+        "__q",
         {
-            "fa": F.abs(d),
-            "sa": F.abs(d).cast("string"),
+            "digits": f"CASE WHEN {use0} THEN {d0} "
+            f"ELSE CASE WHEN {d1s} = '' THEN '0' ELSE {d1s} END END",
+            # get(), not [1]: bindings evaluate eagerly (struct
+            # fields), and fixed-point Java strings have no "E" part —
+            # [1] would throw under ANSI instead of NULLing
+            "exp": f"CAST(CASE WHEN {use0} THEN get({p0}, 1) "
+            f"ELSE {p1}[1] END AS INT)",
+            "sa": sa,
+            "has_e": f"size({p0}) = 2",
+            "fa": fa,
+            "neg": "__r.neg",
+        },
+        fmt,
+    )
+    return _let(
+        "__r",
+        {
+            "fa": f"abs({d})",
+            "sa": f"CAST(abs({d}) AS STRING)",
             # sign probed from the Java string so -0.0 keeps its minus
-            "neg": d.cast("string").startswith("-"),
+            "neg": f"startswith(CAST({d} AS STRING), '-')",
         },
         derive,
     )
 
 
-def apply_affinity(col: Column, affinity: str) -> Column:
-    """Canonicalize a raw text field per its column affinity."""
+def affinity_sql(x: str, affinity: str) -> str:
+    """Canonicalize the raw text field expression ``x`` per its column
+    affinity, as Spark SQL text."""
     affinity = normalize_affinity(affinity)
     if affinity in ("text", "blob"):
-        return col
+        return x
 
     # SQLite's "looks like a number" check ignores surrounding ASCII
     # whitespace (' 2 ' under INTEGER affinity stores integer 2);
     # non-numeric text keeps its whitespace verbatim
-    t = F.regexp_replace(col, r"^\s+|\s+$", "")
-    is_int = t.rlike(INT_RE)
-    is_real = t.rlike(REAL_RE)
-    d = t.cast("double")
+    t = f"regexp_replace({x}, {_EDGE_SPACE}, '')"
+    is_int = f"({t} RLIKE {sql_str(INT_RE)})"
+    is_real = f"({t} RLIKE {sql_str(REAL_RE)})"
+    d = f"CAST({t} AS DOUBLE)"
 
     if affinity == "real":
         # fixed-point "N.0" for every integral double below 1e16 —
         # the exact window where CPython/SQLite float repr stays
         # fixed-point (repr(9007199254740992.0) = '9007199254740992.0'
         # but repr(1e16) = '1e+16'); long-cast is exact there
-        integral = (d == F.floor(d)) & (F.abs(d) < 1e16)
-        real_str = F.when(
-            integral, F.concat(d.cast("long").cast("string"), F.lit(".0"))
-        ).otherwise(_python_real_repr(d))
-        return F.when(is_int | is_real, real_str).otherwise(col)
+        return (
+            f"CASE WHEN {is_int} OR {is_real} THEN "
+            f"CASE WHEN {d} = floor({d}) AND abs({d}) < 1e16 "
+            f"THEN concat(CAST(CAST({d} AS BIGINT) AS STRING), '.0') "
+            f"ELSE {python_real_repr_sql(d)} END ELSE {x} END"
+        )
 
     # integer / numeric: lossless-integral → integer form, else real.
     # SQLite's rule is a lossless ROUND-TRIP within int64 (not a 2^53
@@ -289,22 +290,37 @@ def apply_affinity(col: Column, affinity: str) -> Column:
     # double AS BIGINT) returns a CLAMPED int64max instead of NULL
     # (the overflow check compares against max-as-double, which IS
     # 2^63), and the clamped value would pass the round-trip test.
-    li = d.try_cast("long")  # NULL on overflow (except the ==2^63 quirk)
+    li = f"TRY_CAST({d} AS BIGINT)"  # NULL on overflow (but see above)
     integral = (
-        li.isNotNull()
-        & (li.cast("double") == d)
-        & (li > -9223372036854775808)
-        & (li < 9223372036854775807)
+        f"{li} IS NOT NULL AND CAST({li} AS DOUBLE) = {d} "
+        f"AND {li} > -9223372036854775808L AND {li} < 9223372036854775807L"
     )
-    long_form = t.try_cast("long").cast("string")
-    as_int = li.cast("string")
-    as_real = _python_real_repr(d)
+    long_form = f"CAST(TRY_CAST({t} AS BIGINT) AS STRING)"
     return (
         # int-looking text that overflows int64 falls through to real,
         # matching SQLite's lossless-only integer conversion
-        F.when(is_int & long_form.isNotNull(), long_form)
-        .when(is_real & integral, as_int)
-        .when(is_real, as_real)
-        .when(is_int, as_real)
-        .otherwise(col)
+        f"CASE WHEN {is_int} AND {long_form} IS NOT NULL THEN {long_form} "
+        f"WHEN {is_real} AND {integral} THEN CAST({li} AS STRING) "
+        f"WHEN {is_real} OR {is_int} THEN {python_real_repr_sql(d)} "
+        f"ELSE {x} END"
     )
+
+
+def _over(col: Column, text_of) -> Column:
+    """The SQL text ``text_of(name)`` evaluated over ``col``'s value:
+    ``col`` is bound to a lambda variable, and the text names it."""
+    lam = F.expr(f"__v -> {text_of('__v')}")
+    return F.call_function("transform", F.array(col), lam)[0]
+
+
+def _python_real_repr(d: Column) -> Column:
+    """:func:`python_real_repr_sql` over a double Column."""
+    return _over(d, python_real_repr_sql)
+
+
+def apply_affinity(col: Column, affinity: str) -> Column:
+    """Canonicalize a raw text field Column per its column affinity
+    (:func:`affinity_sql`)."""
+    if normalize_affinity(affinity) in ("text", "blob"):
+        return col
+    return _over(col, lambda v: affinity_sql(v, affinity))

@@ -19,12 +19,17 @@ import sys
 import tempfile
 
 from sqawk_spark.functions import register_udfs
+from sqawk_spark.operators.session_cache import SessionCache
 from sqawk_spark.serializers import make_serializer, render_value
 from sqawk_spark.session import get_session
 from sqawk_spark.sources import COMMON_OPTIONS, PARSER_OPTIONS, PARSERS
 from sqawk_spark.sources.base import FileSpec, TableLoader
 
 DEFAULT_TABLE_NAMES = "abcdefghijklmnopqrstuvwxyz"
+
+# the SQLite UDFs live in the session's function registry, so each
+# session registers them once
+_UDFS = SessionCache()
 
 GLOBAL_DEFAULTS = {
     "FS": r"[ \t]+",
@@ -232,7 +237,7 @@ def run(argv: list[str], out=None) -> int:
     for t in spark.catalog.listTables():
         if t.isTemporary and t.namespace == []:
             spark.catalog.dropTempView(t.name)
-    register_udfs(spark)
+    _UDFS.get_or_build(spark, ("udfs",), lambda: register_udfs(spark))
     loader = TableLoader(spark)
 
     tmp_files = []
@@ -254,6 +259,7 @@ def run(argv: list[str], out=None) -> int:
             records = PARSERS[spec.format](spark, spec, path)
             loader.add(records, spec, table)
         tables = loader.finalize()
+        views = {t: df.columns for t, df in tables.items()}
 
         # -dbfile: parquet-backed persistence (the reference's on-disk
         # SQLite database, README.md:146-150). Loaded tables append to
@@ -262,12 +268,19 @@ def run(argv: list[str], out=None) -> int:
         if opts["dbfile"]:
             from sqawk_spark.dbfile import persist_and_register
 
-            persist_and_register(
-                spark,
-                opts["dbfile"],
-                tables,
-                {t: s.nf for t, s in loader.specs.items()},
+            views.update(
+                persist_and_register(
+                    spark,
+                    opts["dbfile"],
+                    tables,
+                    {t: s.nf for t, s in loader.specs.items()},
+                )
             )
+        # every loaded or registered column: known names let the
+        # rewriter reproduce SQLite's double-quoted-identifier fallback
+        # (quirks.html#dblquote) and quote non-ASCII names. Views that
+        # DML creates mid-script are not in it.
+        known_cols = {c for cols in views.values() for c in cols}
 
         serializer_spec = opts["output"]
         if serializer_spec.split(",", 1)[0] == "parquet":
@@ -276,7 +289,12 @@ def run(argv: list[str], out=None) -> int:
             # the driver (toLocalIterator); a big result belongs in
             # columnar files written by the executors instead
             return _run_parquet_output(
-                spark, serializer_spec, script, loader.classes, opts["dbfile"]
+                spark,
+                serializer_spec,
+                script,
+                known_cols,
+                loader.classes,
+                opts["dbfile"],
             )
         if serializer_spec.startswith("awk"):
             # OFS/ORS come from the global flags for the awk serializer
@@ -291,8 +309,6 @@ def run(argv: list[str], out=None) -> int:
 
         mutated: list[str] = []
         try:
-            known_cols = _known_columns(spark)
-
             from sqawk_spark.dml import maybe_run_dml
 
             # SQLite's nested-loop scan order for the byte-exact text
@@ -355,6 +371,7 @@ def _run_parquet_output(
     spark,
     serializer_spec: str,
     script: str,
+    known_cols: set[str],
     classes: dict[str, str],
     dbfile: str | None = None,
 ) -> int:
@@ -378,7 +395,6 @@ def _run_parquet_output(
         c for c in parts.get("partitionBy", "").split("+") if c
     ]
 
-    known_cols = _known_columns(spark)
     stmts = split_statements(script)
     selects = []
     mutated: list[str] = []
@@ -403,19 +419,6 @@ def _run_parquet_output(
 
         persist_mutations(spark, dbfile, mutated)
     return 0
-
-
-def _known_columns(spark) -> set[str]:
-    """Every column of every temporary view: known column names let
-    the rewriter reproduce SQLite's double-quoted-identifier fallback
-    (quirks.html#dblquote); read from the catalog so -dbfile-registered
-    views count too."""
-    return {
-        c
-        for t in spark.catalog.listTables()
-        if t.isTemporary
-        for c in spark.table(t.name).columns
-    }
 
 
 def _run_statement_with(

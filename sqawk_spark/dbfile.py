@@ -53,11 +53,18 @@ def persist_and_register(
     dbdir: str,
     loaded: dict[str, DataFrame],
     nf_by_table: dict[str, int] | None = None,
-) -> None:
+) -> dict[str, list[str]]:
+    """Persist the loaded tables and register every stored table as a
+    temp view; returns ``{view: columns}`` of the views registered."""
     if _is_sqlite_path(dbdir):
-        _persist_sqlite(spark, dbdir, loaded, nf_by_table or {})
-        return
+        return _persist_sqlite(spark, dbdir, loaded, nf_by_table or {})
     os.makedirs(dbdir, exist_ok=True)
+    views: dict[str, list[str]] = {}
+
+    def register(name: str, path: str) -> None:
+        df = spark.read.parquet(path)
+        df.createOrReplaceTempView(name)
+        views[name] = df.columns
 
     for name, df in loaded.items():
         path = os.path.join(dbdir, name)
@@ -72,13 +79,14 @@ def persist_and_register(
         else:
             df.write.mode("overwrite").parquet(path)
         # re-read so queries in this run see the durable table
-        spark.read.parquet(path).createOrReplaceTempView(name)
+        register(name, path)
 
     # tables from previous runs become queryable too
     for entry in os.listdir(dbdir):
         path = os.path.join(dbdir, entry)
         if entry not in loaded and os.path.isdir(path):
-            spark.read.parquet(path).createOrReplaceTempView(entry)
+            register(entry, path)
+    return views
 
 
 def persist_mutations(
@@ -172,7 +180,7 @@ def _persist_sqlite(
     path: str,
     loaded: dict[str, DataFrame],
     nf_by_table: dict[str, int],
-) -> None:
+) -> dict[str, list[str]]:
     """Reference-fidelity SQLite persistence (tests.tcl dbfile-*)."""
     import sqlite3
 
@@ -250,6 +258,7 @@ def _persist_sqlite(
                 "SELECT name FROM sqlite_master WHERE type='table'"
             )
         ]
+        views: dict[str, list[str]] = {}
         for name in names:
             info = con.execute(f"PRAGMA table_info({name})").fetchall()
             schema = ", ".join(
@@ -257,6 +266,8 @@ def _persist_sqlite(
                 for r in info
             )
             _register_sqlite_table(spark, con, name, schema)
+            views[name] = [r[1] for r in info]
+        return views
     finally:
         con.close()
 

@@ -1929,6 +1929,32 @@ def _operand_fwd(s: str, i: int) -> int:
 _CMP_OPS = ("==", "!=", "<>", "<=", ">=", "=", "<", ">")
 
 
+def _grouping_parens(stmt: str, start: int, end: int) -> tuple[int, int]:
+    """Widen ``stmt[start:end]`` over the grouping parens that enclose
+    exactly it — not a call's or an IN list's parens."""
+    while True:
+        i = start - 1
+        while i >= 0 and stmt[i].isspace():
+            i -= 1
+        k = end
+        while k < len(stmt) and stmt[k].isspace():
+            k += 1
+        if i < 0 or stmt[i] != "(" or sqllex.close_paren(stmt, i) != k + 1:
+            return start, end
+        w = i - 1
+        while w >= 0 and stmt[w].isspace():
+            w -= 1
+        e = w
+        while w >= 0 and _IDENT.match(stmt[w]):
+            w -= 1
+        word = stmt[w + 1 : e + 1].lower()
+        if word and (
+            word not in _KEYWORDS or word in ("in", "exists", "values")
+        ):
+            return start, end
+        start, end = i, k + 1
+
+
 def rewrite_collate_nocase_comparison(stmt: str) -> str:
     """``A <op> B COLLATE NOCASE`` / ``A COLLATE NOCASE <op> B`` →
     mark BOTH operands with the NOCASE marker (SQLite applies the
@@ -1960,9 +1986,11 @@ def rewrite_collate_nocase_comparison(stmt: str) -> str:
             own = stmt[own_start : m.start()].strip()
             if not own:
                 continue
+            # a parenthesized ``(x COLLATE NOCASE)`` is the operand
+            lo, hi = _grouping_parens(stmt, own_start, m.end())
             # RHS-attached: a comparison operator directly before the
             # operand this COLLATE annotates
-            j = own_start - 1
+            j = lo - 1
             while j >= 0 and stmt[j].isspace():
                 j -= 1
             op = next(
@@ -1980,12 +2008,12 @@ def rewrite_collate_nocase_comparison(stmt: str) -> str:
                     stmt = (
                         stmt[:other_start]
                         + f" {fold(other)} {op} {fold(own)}"
-                        + stmt[m.end() :]
+                        + stmt[hi:]
                     )
                     edited = True
                     break
             # LHS-attached: operator directly after the COLLATE clause
-            k = m.end()
+            k = hi
             while k < len(stmt) and stmt[k].isspace():
                 k += 1
             op = next((o for o in _CMP_OPS if stmt.startswith(o, k)), None)
@@ -1994,7 +2022,7 @@ def rewrite_collate_nocase_comparison(stmt: str) -> str:
                 other = stmt[k + len(op) : other_end].strip()
                 if other:
                     stmt = (
-                        stmt[:own_start]
+                        stmt[:lo]
                         + f" {fold(own)} {op} {fold(other)}"
                         + stmt[other_end:]
                     )
@@ -2889,6 +2917,28 @@ def rewrite_double_quoted_idents(stmt: str, columns: set[str]) -> str:
         if stmt[a] == '"' and inner in columns:
             out += [stmt[last:a], "`" + inner + "`"]
             last = b
+    out.append(stmt[last:])
+    return "".join(out)
+
+
+# one identifier part: SQLite's tokenizer takes every character at or
+# above U+0080 as an identifier character
+_IDENT_PART_RE = re.compile(r"[A-Za-z_0-9$\u0080-\U0010ffff]+")
+
+
+def quote_non_ascii_columns(stmt: str, columns: set[str]) -> str:
+    """Backtick-quote each bare occurrence of a known non-ASCII column
+    name (``größe``, ``t.prénom``): SQLite reads them as identifiers,
+    while Spark's unquoted identifiers are ASCII and the statement
+    would fail to parse (INVALID_IDENTIFIER)."""
+    wanted = {c.lower() for c in columns if not c.isascii()}
+    if not wanted:
+        return stmt
+    out, last = [], 0
+    for m in sqllex.finditer(_IDENT_PART_RE, stmt):
+        if m.group(0).lower() in wanted:
+            out += [stmt[last : m.start()], "`" + m.group(0) + "`"]
+            last = m.end()
     out.append(stmt[last:])
     return "".join(out)
 
@@ -7908,6 +7958,11 @@ def rewrite_statement(
     stmt = rewrite_boolean_select_items(stmt, classes or {})
     stmt = rewrite_boolean_clause_terms(stmt, classes or {})
     stmt = rewrite_boolean_contexts(stmt, classes or {})
-    # last: any NOCASE marker no class-aware pass claimed lowers to
-    # the literal ASCII fold
-    return _strip_nocase(stmt)
+    # any NOCASE marker no class-aware pass claimed lowers to the
+    # literal ASCII fold
+    stmt = _strip_nocase(stmt)
+    # last, so every pass above reads these names as it reads any
+    # other bare word
+    if columns:
+        stmt = quote_non_ascii_columns(stmt, columns)
+    return stmt

@@ -44,6 +44,11 @@ CLI_SMOKE_ALWAYS = {
     "test_filter_clause_aggregates",
     "test_format_json_kv_union",
     "test_dbfile_roundtrip",
+    # the load path's SQL-text canonicalizer (affinity.affinity_sql)
+    # against SQLite, CPython repr and the reference goldens
+    "test_affinity_matches_sqlite",
+    "test_python_real_repr_vs_cpython",
+    "test_affinity_goldens_from_reference",
 }
 
 

@@ -830,6 +830,9 @@ def test_collate_propagation_vs_sqlite(spark):
         " from t order by tnr",
         "select tnr from t where case a1 collate nocase when 'ab'"
         " then 1 else 0 end order by tnr",
+        # a parenthesized collated operand of a comparison
+        "select tnr from t where (a1 collate nocase) = 'ab' order by tnr",
+        "select tnr from t where 'ab' = ((a1 collate nocase)) order by tnr",
     ]:
         want = [
             tuple("" if v is None else str(v) for v in r)
@@ -858,6 +861,24 @@ def test_non_ascii_identifiers_rewrite():
         out = rewrite_statement(q, set(cl), cl)
         for name in ("größe", "prénom", "ßx"):
             assert (name in out) == (name in q), (q, out)
+
+
+def test_non_ascii_columns_vs_sqlite(tmp_path):
+    """Known non-ASCII column names run: SQLite reads ``größe`` as an
+    identifier, and the rewriter backtick-quotes it for Spark."""
+    from tests.test_load_path import run, sqlite_awk
+
+    f = tmp_path / "h.csv"
+    f.write_text("id,größe,prénom\n1,1,Zoé\n2,2,anna\n3,3,Émile\n")
+    lines = f.read_text().splitlines()[1:]
+    recs = [ln.split(",") for ln in lines]
+    for q in [
+        "select größe from a where größe > 1",
+        "select prénom, größe from a where größe > 1 order by prénom",
+        'select a.größe + 1, "prénom", \'größe\' from a order by anr',
+    ]:
+        want = sqlite_awk(q, lines, recs, names=["id", "größe", "prénom"])
+        assert run([q, "format=csv", "header=1", str(f)]) == want, q
 
 
 # --- round 10: literal branches in distinct set ops ----------------------
