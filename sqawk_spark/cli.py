@@ -338,7 +338,8 @@ def run(argv: list[str], out=None) -> int:
                 stmt = append_scan_order(stmt, nr_by_table)
                 df = _run_statement_with(spark, stmt, known_cols, loader.classes)
                 names = df.columns
-                for row in df.toLocalIterator():
+                # the next partition computes while this one serializes
+                for row in df.toLocalIterator(prefetchPartitions=True):
                     ser.row(names, [render_value(v) for v in row])
             ser.close()
         except BrokenPipeError:

@@ -11,8 +11,12 @@ RAM. Two formats here, chosen by the path:
   ALTER, so even ``.dump`` output matches tests.tcl:1398-1474's
   expectations), the same append-with-continuing-record-numbers
   semantics. Rows stream driver-side through ``toLocalIterator`` in
-  batches — bounded memory, but inherently single-writer: this is
-  the CLI-fidelity format.
+  batches, with the next partition computing while the driver writes
+  the current one — bounded memory, but inherently single-writer:
+  this is the CLI-fidelity format. Stored tables are read back as
+  Arrow local relations (no Python worker runs for a query over
+  them); one larger than a fetch batch spills to a single parquet
+  file, one row group per batch, so it keeps SQLite's rowid order.
 - anything else is a DIRECTORY OF PARQUET tables — durability and
   larger-than-memory via the storage layer Spark scales on; the
   format to use at 100 TB.
@@ -28,11 +32,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 _SQLITE_EXTS = (".db", ".sqlite", ".sqlite3")
 
 _TO_SQLITE = {"bigint": "INTEGER", "int": "INTEGER", "double": "REAL"}
-_FROM_SQLITE = {"INTEGER": "long", "REAL": "double"}
+_FROM_SQLITE = {"INTEGER": LongType(), "REAL": DoubleType()}
 
 
 def _is_sqlite_path(path: str) -> bool:
@@ -163,7 +168,7 @@ def _persist_mutations_sqlite(
                 f"VALUES ({','.join('?' * len(df.columns))})"
             )
             batch: list[list] = []
-            for row in df.toLocalIterator():
+            for row in df.toLocalIterator(prefetchPartitions=True):
                 batch.append(list(row))
                 if len(batch) >= 10_000:
                     con.executemany(ins, batch)
@@ -239,7 +244,7 @@ def _persist_sqlite(
             )
             # stream in batches: O(batch) driver memory at any table size
             batch: list[list] = []
-            for row in df.toLocalIterator():
+            for row in df.toLocalIterator(prefetchPartitions=True):
                 vals = list(row)
                 vals[0] += offset
                 batch.append(vals)
@@ -261,9 +266,13 @@ def _persist_sqlite(
         views: dict[str, list[str]] = {}
         for name in names:
             info = con.execute(f"PRAGMA table_info({name})").fetchall()
-            schema = ", ".join(
-                f"{r[1]} {_FROM_SQLITE.get((r[2] or '').upper(), 'string')}"
-                for r in info
+            schema = StructType(
+                [
+                    StructField(
+                        r[1], _FROM_SQLITE.get((r[2] or "").upper(), StringType())
+                    )
+                    for r in info
+                ]
             )
             _register_sqlite_table(spark, con, name, schema)
             views[name] = [r[1] for r in info]
@@ -290,33 +299,61 @@ def clear_spill_dirs() -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
-def _register_sqlite_table(spark, con, name: str, schema: str) -> None:
+def _arrow_batch(rows: list[tuple], schema: StructType):
+    """One fetchmany batch as a ``pyarrow.Table`` of ``schema``, with
+    the values ``createDataFrame(rows, schema)`` would give: every row
+    passes the same type verifier first (a REAL value in an INTEGER
+    column raises; Arrow's int64 conversion alone would truncate 1.5
+    to 1), and a string column holds ``str(v)`` of a non-text value
+    (``5`` → ``'5'``, ``b'ab'`` → ``"b'ab'"``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    verify = _make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, type_, col in zip(schema.fields, arrow_schema.types, columns):
+        if isinstance(field.dataType, StringType):
+            col = [v if v is None or isinstance(v, str) else str(v) for v in col]
+        arrays.append(pa.array(col, type=type_))
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def _register_sqlite_table(spark, con, name: str, schema: StructType) -> None:
     """Register an existing SQLite table as a temp view with bounded
-    driver memory: small tables (the CLI norm) become one local
-    relation; anything larger spills through per-batch parquet appends
-    so the driver never holds more than one fetchmany batch (a single
-    big createDataFrame — or a union of them — pins the whole table in
-    the driver plan)."""
+    driver memory. A table that fits one fetchmany batch (the CLI
+    norm) becomes one Arrow local relation: no Python RDD, so no
+    query over the view starts a Python worker, and Catalyst folds
+    projections and filters into the relation. A larger table spills
+    to one parquet file written driver-side, one row group per batch,
+    so the driver never holds more than one batch and the view scans
+    the rows in SQLite's rowid order (Spark orders the splits of
+    several part files by size, not by name)."""
     cur = con.execute(f"SELECT * FROM {name}")
     first = cur.fetchmany(_READBACK_BATCH)
     rest = cur.fetchmany(_READBACK_BATCH)
     if not rest:
         spark.createDataFrame(
-            [tuple(r) for r in first], schema
+            _arrow_batch(first, schema), schema
         ).createOrReplaceTempView(name)
         return
+    import itertools
     import tempfile
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     spill = tempfile.mkdtemp(prefix=f"sqawk_dbfile_{name}_")
     _SPILL_DIRS.append(spill)
-
-    def write(batch):
-        spark.createDataFrame([tuple(r) for r in batch], schema).write.mode(
-            "append"
-        ).parquet(spill)
-
-    write(first)
-    while rest:
-        write(rest)
-        rest = cur.fetchmany(_READBACK_BATCH)
+    batches = itertools.chain(
+        (first, rest), iter(lambda: cur.fetchmany(_READBACK_BATCH), [])
+    )
+    path = os.path.join(spill, "rows.parquet")
+    with pq.ParquetWriter(path, to_arrow_schema(schema)) as writer:
+        for batch in batches:
+            writer.write_table(_arrow_batch(batch, schema))
     spark.read.parquet(spill).createOrReplaceTempView(name)

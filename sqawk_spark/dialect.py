@@ -26,7 +26,24 @@ import re
 
 from sqawk_spark import sqllex
 
-_IDENT = re.compile(r"[A-Za-z_0-9$.]")
+
+def _with_non_ascii(ascii_class: str) -> str:
+    """A regex class of the ``ascii_class`` characters plus every
+    character at or above U+0080 (identifier characters, as in
+    SQLite's tokenizer and sqllex.words), written as the negation of
+    the other ASCII characters: a positive U+0080-U+10FFFF range takes
+    ~5 ms per pattern to compile, this form well under one."""
+    keep = re.compile(f"[{ascii_class}]")
+    drop = (f"\\x{c:02x}" for c in range(128) if not keep.match(chr(c)))
+    return "[^" + "".join(drop) + "]"
+
+
+_ID_START = _with_non_ascii("A-Za-z_")
+_IDENT = re.compile(_with_non_ascii("A-Za-z_0-9$."))
+# a column or alias name, and a dotted chain of them
+_NAME = _ID_START + _with_non_ascii("A-Za-z_0-9") + "*"
+_NAME_RE = re.compile(_NAME)
+_CHAIN = _ID_START + _with_non_ascii("A-Za-z_0-9$.") + "*"
 
 
 def _skip_ws(s: str, i: int) -> int:
@@ -318,8 +335,8 @@ _OTHER_AGG_RE = re.compile(
 _OVER_KW_RE = re.compile(r"\bover\b", re.IGNORECASE)
 _SELECT_RE = re.compile(r"\bselect\b", re.IGNORECASE)
 _PLAIN_IDENT_ITEM_RE = re.compile(
-    r"^\s*(?:([A-Za-z_][A-Za-z_0-9]*)\s*\.\s*)?([A-Za-z_][A-Za-z_0-9]*)"
-    r"(?:\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*))?\s*$",
+    rf"^\s*(?:({_NAME})\s*\.\s*)?({_NAME})"
+    rf"(?:\s+(?:as\s+)?({_NAME}))?\s*$",
     re.IGNORECASE,
 )
 
@@ -1120,7 +1137,7 @@ _TRAILING_RTRIM_RE = re.compile(
     r"^(.*?)\s+collate\s+rtrim\s*$", re.IGNORECASE | re.DOTALL
 )
 _PROP_ALIAS_RE = re.compile(
-    r"^(.*?)\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*)\s*$",
+    rf"^(.*?)\s+(?:as\s+)?({_NAME})\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -1293,7 +1310,7 @@ def rewrite_collate_propagation(
                 p = int(core) - 1
                 if 0 <= p < len(exprs):
                     pos = p
-            elif re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", core):
+            elif _NAME_RE.fullmatch(core):
                 lc = core.lower()
                 pos = next(
                     (
@@ -1331,8 +1348,8 @@ def rewrite_collate_propagation(
 
 
 _MINBY_ITEM_RE = re.compile(
-    r"^min_by\(\s*([A-Za-z_][A-Za-z_0-9$.]*)\s*,\s*"
-    r"[A-Za-z_][A-Za-z_0-9$.]*\s*\)$",
+    rf"^min_by\(\s*({_CHAIN})\s*,\s*"
+    rf"{_CHAIN}\s*\)$",
     re.IGNORECASE,
 )
 
@@ -1367,7 +1384,7 @@ def _rewrite_nocase_group_by(
             p = int(t) - 1
             if 0 <= p < len(exprs):
                 pos = p
-        elif re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", t):
+        elif _NAME_RE.fullmatch(t):
             pos = next(
                 (
                     j
@@ -1410,7 +1427,7 @@ def _rewrite_nocase_group_by(
         if j in hit:
             name = aliases[j] or (
                 exprs[j]
-                if re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", exprs[j])
+                if _NAME_RE.fullmatch(exprs[j])
                 else f"__c{j}"
             )
             body = (
@@ -1475,7 +1492,7 @@ def _rewrite_nocase_distinct(
             continue
         # an alias, or an unaliased bare column (the outer select
         # keeps its name)
-        if re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", core) and any(
+        if _NAME_RE.fullmatch(core) and any(
             (a or e).lower() == core for a, e in zip(aliases, exprs)
         ):
             continue
@@ -1485,7 +1502,7 @@ def _rewrite_nocase_distinct(
     keys: list[str] = []
     for j, (e, a, mk) in enumerate(zip(exprs, aliases, marked)):
         name = a or (
-            e if re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", e) else f"__c{j}"
+            e if _NAME_RE.fullmatch(e) else f"__c{j}"
         )
         outnames.append(name)
         inner_items.append(e if e == name else f"{e} AS {name}")
@@ -1507,7 +1524,7 @@ _COLLAGG_RE = re.compile(
     r"\b(min|max|count|sum|avg|total|group_concat|string_agg)\s*\(",
     re.IGNORECASE,
 )
-_BETWEEN_OPERAND = r"(?:[A-Za-z_][A-Za-z_0-9$.]*|'(?:[^']|'')*'|[+-]?[0-9.]+)"
+_BETWEEN_OPERAND = rf"(?:{_CHAIN}|'(?:[^']|'')*'|[+-]?[0-9.]+)"
 _BETWEEN_COLLATE_RES = [
     # X [not] between A and B collate nocase  (collate binds to B;
     # SQLite then uses it for BOTH comparisons — probed)
@@ -1810,7 +1827,7 @@ def rewrite_distinct_class_identity(
             if not (
                 re.fullmatch(r"[0-9]+", core)
                 or (
-                    re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", core)
+                    _NAME_RE.fullmatch(core)
                     and any(
                         (a or e).lower() == core.lower()
                         for a, e in zip(aliases, exprs)
@@ -1825,7 +1842,7 @@ def rewrite_distinct_class_identity(
     keys: list[str] = []
     for j, (e, a, d) in enumerate(zip(exprs, aliases, dyn)):
         name = a or (
-            e if re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", e) else f"__c{j}"
+            e if _NAME_RE.fullmatch(e) else f"__c{j}"
         )
         outnames.append(name)
         inner_items.append(e if e == name else f"{e} AS {name}")
@@ -3493,16 +3510,15 @@ _AFF_TRIM_PAT = r"'^\\s+|\\s+$'"
 _AFF_NUM_LIT_RE = re.compile(
     r"^[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?$"
 )
-_AFF_IDENT_RE = re.compile(
-    r"^[A-Za-z_][A-Za-z_0-9$]*(\.[A-Za-z_][A-Za-z_0-9$]*)*$"
-)
+_AFF_NAME = _ID_START + _with_non_ascii("A-Za-z_0-9$") + "*"
+_AFF_IDENT_RE = re.compile(rf"^{_AFF_NAME}(\.{_AFF_NAME})*$")
 _AFF_NONVALUE = frozenset(
     ("null", "true", "false", "current_timestamp", "current_date",
      "current_time", "unbounded", "preceding", "following", "row")
 )
 _AFF_MINMAX_ARG_RE = re.compile(
     r"^(?:min|max)(?:_by)?\s*\(\s*"
-    r"([A-Za-z_][A-Za-z_0-9$]*(?:\.[A-Za-z_][A-Za-z_0-9$]*)*)\s*[,)]",
+    rf"({_AFF_NAME}(?:\.{_AFF_NAME})*)\s*[,)]",
     re.IGNORECASE,
 )
 
@@ -4517,8 +4533,8 @@ def _aff_sum_coerce_sql(x: str, cls: str) -> str:
 
 
 _AFF_SUM_ITEM_RE = re.compile(
-    r"^\s*sum\s*\(\s*([A-Za-z_][A-Za-z_0-9$.]*)\s*\)"
-    r"(?:\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*))?\s*$",
+    rf"^\s*sum\s*\(\s*({_CHAIN})\s*\)"
+    rf"(?:\s+(?:as\s+)?({_NAME}))?\s*$",
     re.IGNORECASE,
 )
 _AFF_SUM_FILTER_ITEM_RE = re.compile(r"^\s*sum\s*\(", re.IGNORECASE)
@@ -5112,7 +5128,7 @@ def _arith_minmax_struct(
 
 _CASE_ITEM_RE = re.compile(
     r"^\s*case\s+when\s+(.+?)\s+then\s+(.+?)\s+else\s+(.+?)\s+end"
-    r"(?:\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*))?\s*$",
+    rf"(?:\s+(?:as\s+)?({_NAME}))?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -5244,7 +5260,7 @@ def _case_branch_enc(b: str, classes: dict[str, str]):
 
 _MINMAX_CASE_ITEM_RE = re.compile(
     r"^\s*(min|max)\s*\(\s*(?:(?:distinct|all)\s+)?(case\b.*\bend)\s*\)"
-    r"(?:\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*))?\s*$",
+    rf"(?:\s+(?:as\s+)?({_NAME}))?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -5480,8 +5496,8 @@ def _collect_item_alias_classes(
     extras = {}
     for item in span[2]:
         am = re.match(
-            r"^\s*([A-Za-z_][A-Za-z_0-9$.]*)"
-            r"\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*)\s*$",
+            rf"^\s*({_CHAIN})"
+            rf"\s+(?:as\s+)?({_NAME})\s*$",
             item,
             re.IGNORECASE,
         )
@@ -5756,12 +5772,12 @@ def _rewrite_sum_select_items(
 
 _AFF_FILTER_CASE_RE = re.compile(
     r"^case\s+when\s+(.*)\s+then\s+"
-    r"(cast\s*\([^()]*\)|'(?:[^']|'')*'|[A-Za-z_][A-Za-z_0-9$.]*)"
+    rf"(cast\s*\([^()]*\)|'(?:[^']|'')*'|{_CHAIN})"
     r"\s+end$",
     re.IGNORECASE | re.DOTALL,
 )
 _TEXT_CAST_ARG_RE = re.compile(
-    r"^cast\s*\(\s*([A-Za-z_][A-Za-z_0-9$.]*)\s+as\s+"
+    rf"^cast\s*\(\s*({_CHAIN})\s+as\s+"
     r"(text|char\w*|clob|varchar\w*)\s*\)$",
     re.IGNORECASE,
 )
@@ -5794,7 +5810,7 @@ _AFF_TEXT_CAST_RE = re.compile(
     r"\bas\s+(text|char\w*|clob|varchar\w*)\b", re.IGNORECASE
 )
 _AFF_GENERIC_DONE_RE = re.compile(r"^\(+\s*CASE WHEN ")
-_AFF_IDENT_SCAN_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9$.]*")
+_AFF_IDENT_SCAN_RE = re.compile(_CHAIN)
 
 
 def _aff_expr_textish(arg: str, classes: dict[str, str]) -> bool:
@@ -6431,7 +6447,7 @@ def _wrap_ordered_compound(
             pos = int(core) - 1
             if not 0 <= pos < ncols:
                 return None
-        elif re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", core):
+        elif _NAME_RE.fullmatch(core):
             lc = core.lower()
             pos = next(
                 (
@@ -6462,7 +6478,7 @@ def _wrap_ordered_compound(
         if al:
             outnames.append(al)
             need_alias.append(False)
-        elif re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", sql_j.strip()):
+        elif _NAME_RE.fullmatch(sql_j.strip()):
             outnames.append(sql_j.strip())
             need_alias.append(False)
         else:
@@ -6767,7 +6783,7 @@ def _rewrite_scoped_items(
 
 
 _ITEM_ALIAS_RE = re.compile(
-    r"^\s*(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*)\s*$", re.IGNORECASE
+    rf"^\s*(?:as\s+)?({_NAME})\s*$", re.IGNORECASE
 )
 _REALAGG_ITEM_RE = re.compile(
     r"^\s*(avg|total|min|max|sum|sqlite_round1|sqlite_round2)\s*\(",
@@ -6925,9 +6941,9 @@ def _rewrite_real_class_items(
 
 
 _AFF_CAST_ITEM_RE = re.compile(
-    r"^\s*cast\s*\(\s*([A-Za-z_][A-Za-z_0-9$.]*)\s+as\s+"
+    rf"^\s*cast\s*\(\s*({_CHAIN})\s+as\s+"
     r"([A-Za-z_][A-Za-z_0-9 ]*?)\s*\)"
-    r"(?:\s+(?:as\s+)?([A-Za-z_][A-Za-z_0-9]*))?\s*$",
+    rf"(?:\s+(?:as\s+)?({_NAME}))?\s*$",
     re.IGNORECASE,
 )
 

@@ -1,9 +1,11 @@
 """Output serializers (SURVEY.md §2.C).
 
 Each serializer consumes an ordered stream of result rows (driver-side
-``toLocalIterator`` — executors stay busy computing partitions ahead
-while the driver drains them) and writes to a file object. NULL values
-render as empty strings, matching SQLite's Tcl binding.
+``toLocalIterator(prefetchPartitions=True)``: the job for the next
+partition runs while the driver serializes the current one, so the
+driver holds at most two partitions of a result) and writes to a file
+object. NULL values render as empty strings, matching SQLite's Tcl
+binding.
 
 Selected by ``-output name,opt=val,...`` (reference
 lib/classes/sqawk.tcl:86-132).

@@ -44,6 +44,10 @@ CLI_SMOKE_ALWAYS = {
     "test_filter_clause_aggregates",
     "test_format_json_kv_union",
     "test_dbfile_roundtrip",
+    # the SQLite-format -dbfile read-back (Arrow local relations) after
+    # a load and after DML write-back
+    "test_sqlite_dbfile_noinput_roundtrip",
+    "test_dml_mutations_persist_to_sqlite_dbfile",
     # the load path's SQL-text canonicalizer (affinity.affinity_sql)
     # against SQLite, CPython repr and the reference goldens
     "test_affinity_matches_sqlite",

@@ -879,6 +879,49 @@ def test_non_ascii_columns_vs_sqlite(tmp_path):
     ]:
         want = sqlite_awk(q, lines, recs, names=["id", "größe", "prénom"])
         assert run([q, "format=csv", "header=1", str(f)]) == want, q
+    # a mixed-class non-ASCII column compares and sorts by SQLite's
+    # storage classes, like the same values under an ASCII name
+    g = tmp_path / "g.csv"
+    g.write_text("id,größe,gx\n1,2,2\n2,abc,abc\n3,10,10\n")
+    lines = g.read_text().splitlines()[1:]
+    recs = [ln.split(",") for ln in lines]
+    for q in [
+        "select id from a where größe > 5",
+        "select größe from a order by größe",
+        "select distinct größe from a order by 1",
+        "select sum(größe) filter (where größe > 2) from a",
+    ]:
+        want = sqlite_awk(q, lines, recs, names=["id", "größe", "gx"])
+        assert run([q, "format=csv", "header=1", str(g)]) == want, q
+
+
+def test_non_ascii_names_rewrite_like_ascii():
+    """Every pass treats a non-ASCII column name as an identifier: the
+    rewrite of a statement over ``größe`` is the rewrite of the same
+    statement over the ASCII ``gx`` with the name swapped back."""
+    cols = {"anr", "anf", "a0", "id", "größe", "gx"}
+    classes = {"id": "long", "größe": "dynamic", "gx": "dynamic", "anr": "long", "a0": "text"}
+    for shape in [
+        "select id from a where X > 5",
+        "select id from a where a.X >= (select min(X) from a)",
+        "select X from a order by X desc",
+        "select min(X), max(X), sum(X), avg(X), total(X) from a",
+        "select id from a where X between 2 and 20",
+        "select id from a where X in (2, 'abc')",
+        "select X, count(*) from a group by X having count(*) > 0 order by X",
+        "select X + 1, cast(X as integer), typeof(X) from a",
+        "select id from a where X is 10",
+        "select distinct X from a",
+        "select X from a union select 5",
+        "select X collate nocase from a order by X collate nocase",
+        "select sum(X) filter (where X > 2) as s from a",
+        "select cast(X as text) as t from a order by t",
+        "select min(case when X > 1 then X else 0 end) from a",
+        "select X, sum(X) over (order by id rows between 1 preceding and current row) from a",
+    ]:
+        ascii_ = rewrite_statement(shape.replace("X", "gx"), cols, classes)
+        got = rewrite_statement(shape.replace("X", "größe"), cols, classes)
+        assert got.replace("`größe`", "gx") == ascii_, shape
 
 
 # --- round 10: literal branches in distinct set ops ----------------------

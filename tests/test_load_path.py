@@ -3,7 +3,10 @@ per loaded table, checked for its job count and, on the inputs where
 partition layout matters, byte for byte against stdlib SQLite over the
 same rows in sqawk's table layout.
 
-Also pins that the CLI registers its SQLite UDFs once per session.
+Also pins that the CLI registers its SQLite UDFs once per session, and
+the -dbfile read-back (dbfile._register_sqlite_table): an Arrow local
+relation with the list path's conversions, a spill that keeps SQLite's
+rowid order, and prefetched result partitions streamed in order.
 """
 
 from __future__ import annotations
@@ -16,10 +19,11 @@ import uuid
 import pytest
 from pyspark import SparkContext
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame
 from pyspark.sql.udf import UDFRegistration
 
 import sqawk_spark.sources.awk as awk
-from sqawk_spark import cli
+from sqawk_spark import cli, dbfile
 from sqawk_spark.sources.base import FileSpec, TableLoader, build_table
 
 
@@ -66,9 +70,14 @@ def sqlite_awk(
             for nr, (line, r) in enumerate(zip(lines, recs), 1)
         ),
     )
-    out = "".join(" ".join(map(_cell, r)) + "\n" for r in con.execute(query))
+    out = _awk_out(con.execute(query))
     con.close()
     return out
+
+
+def _awk_out(rows) -> str:
+    """Rows as the awk serializer prints them."""
+    return "".join(" ".join(map(_cell, r)) + "\n" for r in rows)
 
 
 @pytest.fixture
@@ -225,3 +234,137 @@ def test_udfs_register_once_per_session(tmp_path, monkeypatch):
     monkeypatch.setattr(SparkContext, "applicationId", property(lambda sc: "app-new"))
     assert run(["select total(a2) from a", str(f)]) == "2.0\n"
     assert "total" in names
+
+
+def _sqlite_db(path, decl: str, rows: list[tuple], table: str = "x") -> str:
+    con = sqlite3.connect(path)
+    con.execute(f"create table {table} ({decl})")
+    con.executemany(
+        f"insert into {table} values ({','.join('?' * (decl.count(',') + 1))})", rows
+    )
+    con.commit()
+    con.close()
+    return str(path)
+
+
+def _sqlite_out(db: str, query: str) -> str:
+    con = sqlite3.connect(db)
+    out = _awk_out(con.execute(query))
+    con.close()
+    return out
+
+
+def test_dbfile_readback_is_local_relation(spark, tmp_path):
+    """A stored table reads back as a LocalRelation: no Python RDD
+    under the view, so no query over it starts a Python worker."""
+    f = tmp_path / "a.txt"
+    f.write_text("".join(f"{i} w{i % 7}\n" for i in range(1, 201)))
+    db = str(tmp_path / "t.db")
+    assert run(["-dbfile", db, "select count(*) from a", str(f)]) == "200\n"
+    assert run(["-dbfile", db, "-noinput", "select sum(a1) from a"]) == "20100\n"
+    plan = spark.table("a")._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+_DECL = "i INTEGER, r REAL, t TEXT, n NUMERIC, u"
+
+
+def test_dbfile_readback_conversions(tmp_path):
+    """Every value class SQLite can hand back, in each declared column
+    type, prints what the list-based createDataFrame printed; values
+    the column's Spark type cannot hold raise as they did (1.5 in an
+    INTEGER column must not print 1)."""
+    db = _sqlite_db(
+        tmp_path / "ok.db",
+        _DECL,
+        [
+            (1, 2.5, "a", 5, 7),
+            (None, None, None, None, None),
+            ("5", 3, 5, "5", "t"),
+            (2.0, 1e20, 1.5, 1.5, 2.5),
+            (3, -0.0, 12345678.0, "abc", b"ab"),
+            (4, 1.0, b"ab", b"cd", 9223372036854775807),
+            (5, float("inf"), "é", "1e3", 1e-5),
+        ],
+    )
+    assert run(["-dbfile", db, "-noinput", "select * from x"]) == (
+        "1 2.5 a 5 7\n    \n5 3 5 5 t\n2 1e+20 1.5 1.5 2.5\n"
+        "3 0 12345678.0 abc b'ab'\n4 1 b'ab' b'cd' 9223372036854775807\n"
+        "5 inf é 1000 1e-05\n"
+    )
+    q = "select typeof(t), typeof(n), typeof(u), t || '', n || '' from x"
+    assert run(["-dbfile", db, "-noinput", q]) == (
+        "text integer integer a 5\nnull null null  \ninteger integer text 5 5\n"
+        "real real real 1.5 1.5\nreal text text 12345678.0 abc\n"
+        "text text integer b'ab' b'cd'\ntext integer real é 1000\n"
+    )
+    for name, row, msg in [
+        ("int_real", (1.5, 1.0, "a", 1, 1), r"LongType\(\) can not accept object 1.5"),
+        ("int_text", ("abc", 1.0, "a", 1, 1), r"LongType\(\) can not accept object 'abc'"),
+        ("int_blob", (b"ab", 1.0, "a", 1, 1), r"LongType\(\) can not accept object b'ab'"),
+        ("real_text", (1, "abc", "a", 1, 1), r"DoubleType\(\) can not accept object 'abc'"),
+        ("real_blob", (1, b"x", "a", 1, 1), r"DoubleType\(\) can not accept object b'x'"),
+    ]:
+        bad = _sqlite_db(tmp_path / f"{name}.db", _DECL, [row])
+        with pytest.raises(Exception, match=msg):
+            run(["-dbfile", bad, "-noinput", "select * from x"])
+
+
+def test_dbfile_spilled_readback_keeps_rowid_order(tmp_path, monkeypatch):
+    """A table past one fetch batch spills to parquet; the view still
+    scans in rowid order. Rows grow with the rowid, so per-batch part
+    files would differ in size and be read largest first."""
+    monkeypatch.setattr(dbfile, "_READBACK_BATCH", 100)
+    rows = [(i, 2, f"{i} {'x' * (i // 50)}", i, "x" * (i // 50)) for i in range(1, 1001)]
+    db = _sqlite_db(
+        tmp_path / "t.db",
+        "anr INTEGER PRIMARY KEY, anf INTEGER, a0 TEXT, a1 INTEGER, a2 TEXT",
+        rows,
+        table="a",
+    )
+    for q in ["select anr, a1 from a", "select anr from a limit 3", "select a0 from a where anr % 97 = 0"]:
+        assert run(["-dbfile", db, "-noinput", q]) == _sqlite_out(db, q), q
+
+
+def test_prefetched_order_by_streams_in_order(spark, tmp_path, monkeypatch):
+    """An ORDER BY over several result partitions, drained with
+    prefetch, prints SQLite's order byte for byte."""
+    seen: list[tuple[int, dict]] = []
+    orig = DataFrame.toLocalIterator
+
+    def to_local_iterator(df, *args, **kwargs):
+        seen.append((df.rdd.getNumPartitions(), kwargs))
+        return orig(df, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "toLocalIterator", to_local_iterator)
+    lines = [f"{i} w{(i * 7919) % 613} {i % 3}" for i in range(1, 2001)]
+    f = tmp_path / "a.txt"
+    f.write_text("\n".join(lines) + "\n")
+    db = str(tmp_path / "t.db")
+    assert run(["-dbfile", db, "select count(*) from a", str(f)]) == "2000\n"
+    q = "select anr, a2, a3 from a order by a2 desc, a3, anr"
+    # cli.run's get_session re-applies the builder's settings, so the
+    # sort's partition settings go in after it
+    conf = {
+        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    orig_get = cli.get_session
+
+    def get_session(*args, **kwargs):
+        s = orig_get(*args, **kwargs)
+        for k, v in conf.items():
+            s.conf.set(k, v)
+        return s
+
+    monkeypatch.setattr(cli, "get_session", get_session)
+    try:
+        seen.clear()
+        got = run(["-dbfile", db, "-noinput", q])
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert got == sqlite_awk(q, lines, [ln.split(" ") for ln in lines])
+    parts, kwargs = seen[-1]
+    assert parts >= 3 and kwargs.get("prefetchPartitions") is True, seen
