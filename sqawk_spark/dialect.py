@@ -18,11 +18,18 @@ escape), paren depth, words, each CASE's WHEN/THEN/ELSE/END and the
 top-level clause bodies come from sqawk_spark/sqllex.py, which
 computes them once per distinct string.  Passes match keywords and
 operators on token boundaries outside quoted tokens.
+
+Function-call lowerings (aliases, group_concat, regexp/regsub/glob,
+the scalar functions, the date family, typeof, nullif) go through one
+call-site walker, ``_rewrite_calls``: each pass supplies only the
+lowering of one call, and the walker finds the calls, keeps or
+replaces them and visits the calls nested inside either.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 from sqawk_spark import sqllex
 
@@ -44,6 +51,46 @@ _IDENT = re.compile(_with_non_ascii("A-Za-z_0-9$."))
 _NAME = _ID_START + _with_non_ascii("A-Za-z_0-9") + "*"
 _NAME_RE = re.compile(_NAME)
 _CHAIN = _ID_START + _with_non_ascii("A-Za-z_0-9$.") + "*"
+
+
+def _rewrite_calls(
+    stmt: str,
+    call_re: re.Pattern[str],
+    lower: Callable[[re.Match[str], str], str | None],
+) -> str:
+    """Lower the calls ``call_re`` (ending at the call's ``(``)
+    matches outside quoted tokens, left to right; a name that is the
+    tail of a longer identifier (``my_substr(``, ``t.max(``) is not a
+    call.  ``lower(m, inner)`` gets the match on the current text and
+    the text between the call's parens, and returns the replacement
+    of the whole call, or None to keep it, in which case the scan goes
+    on inside its arguments.  A replacement is scanned again from its
+    start, so the calls it embeds are lowered too.  A call whose paren
+    never closes runs to the end of the text, and its ``inner`` stops
+    one character short of that end."""
+    pos = 0
+    while True:
+        for m in call_re.finditer(stmt, pos):
+            at = m.start()
+            if sqllex.in_string(stmt, at) or (
+                at > 0 and _IDENT.match(stmt[at - 1])
+            ):
+                continue
+            close = sqllex.close_paren(stmt, m.end() - 1)
+            repl = lower(m, stmt[m.end() : close - 1])
+            if repl is not None:
+                stmt = stmt[:at] + repl + stmt[close:]
+                pos = at
+                break
+        else:
+            return stmt
+
+
+def _renamed(m: re.Match[str], name: str) -> str:
+    """The call ``m`` matched, under ``name``, its argument text kept
+    byte for byte (an unclosed call's too)."""
+    s = m.string
+    return f"{name}({s[m.end() : sqllex.close_paren(s, m.end() - 1)]}"
 
 
 def _skip_ws(s: str, i: int) -> int:
@@ -162,39 +209,27 @@ def rewrite_glob(stmt: str) -> str:
     return stmt
 
 
-_ALIAS_RES = (
-    # SQLite 3.44 string_agg(X, SEP) is group_concat's two-arg form
-    # under the PostgreSQL name; 3.38 format() is printf() verbatim
-    # (lang_corefunc.html). Both lower to the names the engine
-    # registers; string_agg keeps its mandatory separator so it maps
-    # onto the two-arg path directly.
-    (re.compile(r"\bstring_agg\s*\(", re.IGNORECASE), "group_concat2("),
-    (re.compile(r"\bformat\s*\(", re.IGNORECASE), "printf("),
-)
+# SQLite 3.44 string_agg(X, SEP) is group_concat's two-arg form under
+# the PostgreSQL name; 3.38 format() is printf() verbatim
+# (lang_corefunc.html). Both lower to the names the engine registers;
+# string_agg keeps its mandatory separator so it maps onto the two-arg
+# path directly.
+_ALIASES = {"string_agg": "group_concat2", "format": "printf"}
+_ALIAS_RE = re.compile(rf"\b({'|'.join(_ALIASES)})\s*\(", re.IGNORECASE)
 
 
 def rewrite_function_aliases(stmt: str) -> str:
     """SQLite alias names → the registered canonical functions."""
-    for pat, repl in _ALIAS_RES:
-        out = []
-        last = 0
-        for m in sqllex.finditer(pat, stmt):
-            if m.start() > 0 and _IDENT.match(stmt[m.start() - 1]):
-                continue  # suffix of a longer identifier
-            out.append(stmt[last : m.start()])
-            out.append(repl)
-            last = m.end()
-        out.append(stmt[last:])
-        stmt = "".join(out)
-    return stmt
+    return _rewrite_calls(
+        stmt,
+        _ALIAS_RE,
+        lambda m, inner: _renamed(m, _ALIASES[m.group(1).lower()]),
+    )
 
 
-_GC_RE = re.compile(r"\bgroup_concat\s*\(", re.IGNORECASE)
-
-
-_GC_CALL_RE = re.compile(
-    r"\b(group_concat|string_agg)\s*\(", re.IGNORECASE
-)
+# the group_concat names the alias pass leaves (string_agg is
+# group_concat2 by then)
+_GC_CALL_RE = re.compile(r"\b(group_concat2?)\s*\(", re.IGNORECASE)
 
 
 _GC_DISTINCT_RE = re.compile(r"^\s*distinct\s+", re.IGNORECASE)
@@ -246,84 +281,45 @@ def rewrite_values_clause(stmt: str) -> str:
         stmt = stmt[: m.start()] + " " + repl + " " + stmt[close:]
 
 
-def rewrite_group_concat_distinct(stmt: str) -> str:
-    """``group_concat(DISTINCT X [COLLATE NOCASE])`` → the dedicated
-    first-arrival distinct UDAFs (functions/__init__.py) — Spark's
-    DISTINCT clause rejects Python UDAFs, and the COLLATE form dedups
-    by the ASCII fold while rendering the original case.  Runs before
-    strip_group_concat_collate so the collated form isn't stripped to
-    the binary-distinct one.  Multi-argument DISTINCT keeps Spark's
-    loud error (SQLite errors too)."""
-    while True:
-        edited = False
-        for m in sqllex.finditer(_GC_CALL_RE, stmt):
-            close = sqllex.close_paren(stmt, m.end() - 1)
-            args = _split_call_args(stmt, m.end() - 1)
-            if not args or len(args) != 1:
-                continue
-            dm = _GC_DISTINCT_RE.match(args[0])
-            if dm is None:
-                continue
+def _lower_group_concat(m: re.Match[str], inner: str) -> str | None:
+    name = m.group(1)
+    args = _split_call_args(m.string, m.end() - 1)
+    if args is not None:
+        dm = _GC_DISTINCT_RE.match(args[0])
+        if dm and len(args) == 1 and name.lower() == "group_concat":
             core = args[0][dm.end() :].strip()
             tm = _TRAILING_COLLATE_RE.match(core)
             if tm and tm.group(1).count("(") == tm.group(1).count(")"):
-                fn = "group_concat_distinct_nocase"
-                core = tm.group(1).strip()
-            else:
-                fn = "group_concat_distinct"
-            stmt = stmt[: m.start()] + f"{fn}({core})" + stmt[close:]
-            edited = True
-            break
-        if not edited:
-            return stmt
-
-
-def strip_group_concat_collate(stmt: str) -> str:
-    """Trailing ``COLLATE NOCASE`` on a group_concat/string_agg
-    payload is a no-op (the collation names a comparison sequence,
-    not a value transform) — strip it BEFORE the group_concat
-    lowering embeds the token in engine SQL Spark can't parse."""
-    if not _COLLATE_NOCASE_RE.search(stmt):
-        return stmt
-    while True:
-        edited = False
-        for m in sqllex.finditer(_GC_CALL_RE, stmt):
-            close = sqllex.close_paren(stmt, m.end() - 1)
-            args = _split_call_args(stmt, m.end() - 1)
-            if not args:
-                continue
-            tm = _TRAILING_COLLATE_RE.match(args[0].strip())
-            if tm is None or tm.group(1).count("(") != tm.group(1).count(")"):
-                continue
-            new0 = tm.group(1).strip()
-            rest = ", ".join(a.strip() for a in args[1:])
-            repl = (
-                f"{m.group(1)}({new0}{', ' + rest if rest else ''})"
-            )
-            stmt = stmt[: m.start()] + repl + stmt[close:]
-            edited = True
-            break
-        if not edited:
-            return stmt
+                return f"group_concat_distinct_nocase({tm.group(1).strip()})"
+            return f"group_concat_distinct({core})"
+        tm = _TRAILING_COLLATE_RE.match(args[0])
+        if tm and tm.group(1).count("(") == tm.group(1).count(")"):
+            rest = ", ".join(args[1:])
+            return f"{name}({tm.group(1).strip()}{', ' + rest if rest else ''})"
+    if name.lower() == "group_concat":
+        close = sqllex.close_paren(m.string, m.end() - 1)
+        if len(sqllex.top_positions(m.string, ",", m.end(), close)) == 1:
+            return _renamed(m, "group_concat2")
+    return None
 
 
 def rewrite_group_concat(stmt: str) -> str:
-    """Two-argument ``group_concat(X, SEP)`` → ``group_concat2(X,
-    SEP)`` (fixed-arity UDF registration; SQLite overloads the name)."""
-    out = []
-    last = 0
-    for m in sqllex.finditer(_GC_RE, stmt):
-        if m.start() > 0 and _IDENT.match(stmt[m.start() - 1]):
-            continue  # suffix of a longer identifier
-        open_paren = m.end() - 1
-        close = sqllex.close_paren(stmt, open_paren)
-        commas = sqllex.top_positions(stmt, ",", open_paren + 1, close)
-        if len(commas) == 1:
-            out.append(stmt[last : m.start()])
-            out.append("group_concat2(")
-            last = m.end()
-    out.append(stmt[last:])
-    return "".join(out)
+    """group_concat calls → what the engine registers:
+
+    - ``group_concat(DISTINCT X [COLLATE NOCASE])`` → the dedicated
+      first-arrival distinct UDAFs (functions/__init__.py): Spark's
+      DISTINCT clause rejects Python UDAFs, and the COLLATE form
+      dedups by the ASCII fold while rendering the original case, so
+      this comes before the strip below.  Multi-argument DISTINCT
+      keeps Spark's loud error (SQLite errors too).
+    - A trailing ``COLLATE NOCASE`` on the payload is a no-op (the
+      collation names a comparison sequence, not a value transform),
+      so it is dropped before the token reaches engine SQL Spark
+      can't parse.
+    - Two-argument ``group_concat(X, SEP)`` → ``group_concat2(X,
+      SEP)`` (fixed-arity UDF registration; SQLite overloads the
+      name)."""
+    return _rewrite_calls(stmt, _GC_CALL_RE, _lower_group_concat)
 
 
 _MINMAX_AGG_RE = re.compile(r"\b(min|max)\s*\(", re.IGNORECASE)
@@ -2225,14 +2221,36 @@ def glob_to_regex(pattern: str) -> str:
     return "(?s)^(?:" + "".join(out) + ")$"
 
 
-_CALL_RES = {
-    name: re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-    for name in ("regexp", "regsub", "glob")
-}
+_REGEX_CALL_RE = re.compile(r"\b(regexp|regsub|glob)\s*\(", re.IGNORECASE)
 
 # regsub replacement metacharacters: Java uses $1/\, Tcl uses \1/&,
 # Python uses \1 — only plain literals mean the same thing everywhere
 _REPL_META = ("\\", "$", "&")
+
+
+def _lower_regex_call(m: re.Match[str], inner: str) -> str | None:
+    name = m.group(1).lower()
+    args = _split_call_args(m.string, m.end() - 1)
+    pat = _sql_literal_text(args[0]) if args else None
+    if pat is None:
+        return None
+    if name == "glob":
+        if len(args) != 2:
+            return None
+        return f"({args[1]} RLIKE {_quote_regex_sql(glob_to_regex(pat))})"
+    if name == "regexp":
+        if len(args) != 2 or not _java_safe_regex(pat):
+            return None
+        return f"(coalesce({args[1]}, '') RLIKE {args[0].strip()})"
+    if len(args) != 3 or not _java_safe_regex(pat):
+        return None
+    rep = _sql_literal_text(args[2])
+    if rep is None or any(t in rep for t in _REPL_META):
+        return None
+    return (
+        f"regexp_replace(coalesce({args[1]}, ''), "
+        f"{args[0].strip()}, {args[2].strip()})"
+    )
 
 
 def rewrite_regex_calls(stmt: str) -> str:
@@ -2251,43 +2269,7 @@ def rewrite_regex_calls(stmt: str) -> str:
     regexp/regsub — Tcl procs receive SQLite NULL as the empty string
     (sqawk-dev.tcl:199-215). SQLite's glob() returns NULL on NULL
     input, which RLIKE already does, so glob keeps X bare."""
-    for name, call_re in _CALL_RES.items():
-        cands = [
-            m
-            for m in sqllex.finditer(call_re, stmt)
-            if not (m.start() > 0 and _IDENT.match(stmt[m.start() - 1]))
-        ]
-        for m in reversed(cands):  # right-to-left: stable positions
-            open_paren = m.end() - 1
-            close = sqllex.close_paren(stmt, open_paren)
-            args = _split_call_args(stmt, open_paren)
-            if args is None:
-                continue
-            pat = _sql_literal_text(args[0]) if args else None
-            if pat is None:
-                continue
-            if name == "glob":
-                if len(args) != 2:
-                    continue
-                repl = (
-                    f"({args[1]} RLIKE {_quote_regex_sql(glob_to_regex(pat))})"
-                )
-            elif name == "regexp":
-                if len(args) != 2 or not _java_safe_regex(pat):
-                    continue
-                repl = f"(coalesce({args[1]}, '') RLIKE {args[0].strip()})"
-            else:  # regsub
-                if len(args) != 3 or not _java_safe_regex(pat):
-                    continue
-                rep = _sql_literal_text(args[2])
-                if rep is None or any(t in rep for t in _REPL_META):
-                    continue
-                repl = (
-                    f"regexp_replace(coalesce({args[1]}, ''), "
-                    f"{args[0].strip()}, {args[2].strip()})"
-                )
-            stmt = stmt[: m.start()] + repl + stmt[close:]
-    return stmt
+    return _rewrite_calls(stmt, _REGEX_CALL_RE, _lower_regex_call)
 
 
 _GROUPS_KW_RE = re.compile(r"\bgroups\b", re.IGNORECASE)
@@ -2960,107 +2942,51 @@ def quote_non_ascii_columns(stmt: str, columns: set[str]) -> str:
     return "".join(out)
 
 
-_HINT_RE = re.compile(r"\b(likely|unlikely|likelihood)\s*\(", re.IGNORECASE)
-
-
-def rewrite_hint_funcs(stmt: str) -> str:
+def _lower_hint(m: re.Match[str], inner: str) -> str | None:
     """SQLite's planner-hint functions are no-ops on the value:
     ``likely(X)`` / ``unlikely(X)`` → ``(X)``, ``likelihood(X, P)`` →
     ``(X)`` (lang_corefunc.html) — stripped here since Spark has no
     such names and the hint itself is meaningless to Catalyst."""
-    while True:
-        m = next(
-            (
-                m
-                for m in sqllex.finditer(_HINT_RE, stmt)
-                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
-            ),
-            None,
-        )
-        if m is None:
-            return stmt
-        open_p = m.end() - 1
-        close = sqllex.close_paren(stmt, open_p)  # one past ')'
-        inner = stmt[open_p + 1 : close - 1]
-        if m.group(1).lower() == "likelihood":
-            args = sqllex.split_top(inner)
-            if len(args) != 2:
-                return stmt  # malformed — let Spark raise on the name
-            inner = args[0]
-        stmt = stmt[: m.start()] + "(" + inner + ")" + stmt[close:]
+    if m.group(1).lower() == "likelihood":
+        args = sqllex.split_top(inner)
+        if len(args) != 2:
+            return None  # malformed — let Spark raise on the name
+        inner = args[0]
+    return f"({inner})"
 
 
-_TRIM_RE = re.compile(r"\b(trim|ltrim|rtrim)\s*\(", re.IGNORECASE)
+def _lower_scalar_minmax(m: re.Match[str], inner: str) -> str | None:
+    """SQLite's scalar ``min(a, b, ...)`` / ``max(a, b, ...)`` (two or
+    more arguments — the one-argument form is the aggregate) → Spark's
+    ``least`` / ``greatest``. SQLite returns NULL if ANY argument is
+    NULL, Spark's least/greatest skip NULLs — so each argument set is
+    guarded with a CASE that forces NULL when any argument is NULL."""
+    args = sqllex.split_top(inner)
+    if len(args) < 2 or any(a == "" for a in args):
+        return None  # the aggregate form (or DISTINCT etc.), left to Spark
+    fn = "least" if m.group(1).lower() == "min" else "greatest"
+    null_guard = " OR ".join(f"({a}) IS NULL" for a in args)
+    return (
+        f"(CASE WHEN {null_guard} THEN NULL "
+        f"ELSE {fn}({', '.join(args)}) END)"
+    )
+
+
 _TRIM_MODE = {"trim": "BOTH", "ltrim": "LEADING", "rtrim": "TRAILING"}
 
 
-def rewrite_scalar_minmax(stmt: str) -> str:
-    """SQLite's scalar ``min(a, b, ...)`` / ``max(a, b, ...)`` (two or
-    more arguments — the one-argument form is the aggregate) → Spark's
-    ``least`` / ``greatest``, which have the same NULL-if-any-NULL…
-    no: SQLite returns NULL if ANY argument is NULL, Spark's
-    least/greatest skip NULLs — so each argument set is guarded with a
-    CASE that forces NULL when any argument is NULL."""
-    while True:
-        m = next(
-            (
-                m
-                for m in sqllex.finditer(_MINMAX_AGG_RE, stmt)
-                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
-            ),
-            None,
-        )
-        if m is None:
-            return stmt
-        open_p = m.end() - 1
-        close = sqllex.close_paren(stmt, open_p)
-        inner = stmt[open_p + 1 : close - 1]
-        args = sqllex.split_top(inner)
-        if len(args) < 2 or any(a == "" for a in args):
-            # aggregate form (or DISTINCT etc.) — leave this site for
-            # Spark, keep rewriting anything after it
-            return stmt[:close] + rewrite_scalar_minmax(stmt[close:])
-        fn = "least" if m.group(1).lower() == "min" else "greatest"
-        null_guard = " OR ".join(f"({a}) IS NULL" for a in args)
-        repl = (
-            f"(CASE WHEN {null_guard} THEN NULL "
-            f"ELSE {fn}({', '.join(args)}) END)"
-        )
-        stmt = stmt[: m.start()] + repl + stmt[close:]
-
-
-def rewrite_two_arg_trim(stmt: str) -> str:
+def _lower_two_arg_trim(m: re.Match[str], inner: str) -> str | None:
     """SQLite ``trim(X, Y)`` / ``ltrim`` / ``rtrim`` (strip any char
     in set Y) → Spark's ``TRIM(BOTH/LEADING/TRAILING Y FROM X)``,
     which treats the trim string as a character set identically.
     One-argument forms pass through untouched (Spark has them)."""
-    while True:
-        m = next(
-            (
-                m
-                for m in sqllex.finditer(_TRIM_RE, stmt)
-                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
-            ),
-            None,
-        )
-        if m is None:
-            return stmt
-        open_p = m.end() - 1
-        close = sqllex.close_paren(stmt, open_p)
-        inner = stmt[open_p + 1 : close - 1]
-        args = sqllex.split_top(inner)
-        if len(args) != 2:
-            tail = rewrite_two_arg_trim(stmt[close:])
-            return stmt[:close] + tail
-        mode = _TRIM_MODE[m.group(1).lower()]
-        repl = f"TRIM({mode} {args[1]} FROM {args[0]})"
-        stmt = stmt[: m.start()] + repl + stmt[close:]
+    args = sqllex.split_top(inner)
+    if len(args) != 2:
+        return None
+    return f"TRIM({_TRIM_MODE[m.group(1).lower()]} {args[1]} FROM {args[0]})"
 
 
-_SUBSTR_RE = re.compile(r"\b(substring|substr)\s*\(", re.IGNORECASE)
-
-
-def rewrite_substr_calls(stmt: str) -> str:
+def _lower_substr(m: re.Match[str], inner: str) -> str | None:
     """SQLite ``substr(X, Y[, Z])`` differs from Spark's substring()
     on the Y=0 form (position 0 starts LEFT of the first character:
     substr('abc', 0, 2) is 'a', Spark says 'ab') and on negative Z
@@ -3070,43 +2996,50 @@ def rewrite_substr_calls(stmt: str) -> str:
     against real sqlite3), arity-split like group_concat. The SQL-
     standard ``SUBSTRING(x FROM y FOR z)`` form has no top-level
     comma and stays native."""
-    while True:
-        m = next(
-            (
-                m
-                for m in sqllex.finditer(_SUBSTR_RE, stmt)
-                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
-            ),
-            None,
-        )
-        if m is None:
-            return stmt
-        open_p = m.end() - 1
-        close = sqllex.close_paren(stmt, open_p)
-        inner = stmt[open_p + 1 : close - 1]
-        args = sqllex.split_top(inner)
-        if len(args) not in (2, 3) or (
-            # fast path: positive literal Y (and non-negative literal
-            # Z) — Spark's substring IS SQLite's substr there, so the
-            # common shape stays JVM-side / codegen'd; only the
-            # divergent corners (Y ≤ 0, negative Z, dynamic offsets)
-            # pay the exact UDF
-            re.fullmatch(r"[1-9][0-9]*", args[1])
-            and (len(args) == 2 or re.fullmatch(r"[0-9]+", args[2]))
-        ):
-            tail = rewrite_substr_calls(stmt[close:])
-            return stmt[:close] + tail
-        stmt = (
-            stmt[: m.start()]
-            + f"sqlite_substr{len(args)}({inner})"
-            + stmt[close:]
-        )
+    args = sqllex.split_top(inner)
+    if len(args) not in (2, 3) or (
+        # fast path: positive literal Y (and non-negative literal
+        # Z) — Spark's substring IS SQLite's substr there, so the
+        # common shape stays JVM-side / codegen'd; only the
+        # divergent corners (Y ≤ 0, negative Z, dynamic offsets)
+        # pay the exact UDF
+        re.fullmatch(r"[1-9][0-9]*", args[1])
+        and (len(args) == 2 or re.fullmatch(r"[0-9]+", args[2]))
+    ):
+        return None
+    return f"sqlite_substr{len(args)}({inner})"
 
 
-_SIGN_RE = re.compile(r"\bsign\s*\(", re.IGNORECASE)
+def _lower_upper_lower(m: re.Match[str], inner: str) -> str | None:
+    """SQLite's upper()/lower() fold ASCII only (lang_corefunc: "only
+    ASCII characters are case folded" without ICU); Spark's are full
+    Unicode ('ß' → 'SS', even changing length). Lower to translate()
+    over the ASCII alphabet — JVM-side, NULL-preserving, and numeric
+    arguments render through the string cast exactly like SQLite's
+    text conversion."""
+    if not inner.strip() or len(sqllex.split_top(inner)) != 1:
+        return None
+    a = f"'{_ASCII_LOWER}'"
+    b = f"'{_ASCII_UPPER}'"
+    if m.group(1).lower() == "lower":
+        a, b = b, a
+    return f"translate(CAST(({inner}) AS STRING), {a}, {b})"
 
 
-def rewrite_sign_calls(stmt: str) -> str:
+def _lower_round(m: re.Match[str], inner: str) -> str | None:
+    """SQLite ``round(X[, Y])`` → the sqlite_round UDF: SQLite (3.26+)
+    rounds the SHORTEST-DECIMAL rendering half-away-from-zero —
+    round(2.675, 2) is 2.68 though the double is 2.67499…, where
+    Spark's binary HALF_UP gives 2.67 — and coerces text through the
+    numeric-prefix parse (round('3abc') is 3.0, Spark returns NULL).
+    Arity-split like substr."""
+    args = sqllex.split_top(inner)
+    if len(args) not in (1, 2) or not inner.strip():
+        return None
+    return f"sqlite_round{len(args)}({inner})"
+
+
+def _lower_sign(m: re.Match[str], inner: str) -> str | None:
     """SQLite ``sign(X)`` (3.35+) returns INTEGER -1/0/+1 for numeric
     X and NULL otherwise — the coercion is a WHOLE-string numeric
     parse of the trimmed text ('7x' and '' are NULL, unlike the
@@ -3115,108 +3048,53 @@ def rewrite_sign_calls(stmt: str) -> str:
     Lower to a JVM CASE with the engine's canonical-number pattern;
     numeric-typed arguments render numerically through the string
     cast, so one form serves every operand."""
-    while True:
-        m = next(
-            (
-                m
-                for m in sqllex.finditer(_SIGN_RE, stmt)
-                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
-            ),
-            None,
-        )
-        if m is None:
-            return stmt
-        open_p = m.end() - 1
-        close = sqllex.close_paren(stmt, open_p)
-        inner = stmt[open_p + 1 : close - 1]
-        if not inner.strip() or len(sqllex.split_top(inner)) != 1:
-            tail = rewrite_sign_calls(stmt[close:])
-            return stmt[:close] + tail
-        t = f"regexp_replace(CAST(({inner}) AS STRING), {_AFF_TRIM_PAT}, '')"
-        repl = (
-            f"(CASE WHEN ({inner}) IS NULL THEN NULL "
-            f"WHEN {t} RLIKE {_SQL_NUM_PAT} "
-            # signum, not sign: the emitted text must not re-match
-            # this pass's own scan
-            f"THEN CAST(signum(TRY_CAST({t} AS DOUBLE)) AS BIGINT) "
-            f"END)"
-        )
-        stmt = stmt[: m.start()] + repl + stmt[close:]
+    if not inner.strip() or len(sqllex.split_top(inner)) != 1:
+        return None
+    t = f"regexp_replace(CAST(({inner}) AS STRING), {_AFF_TRIM_PAT}, '')"
+    return (
+        f"(CASE WHEN ({inner}) IS NULL THEN NULL "
+        f"WHEN {t} RLIKE {_SQL_NUM_PAT} "
+        # signum, not sign: the emitted text must not re-match
+        # this pass's own scan
+        f"THEN CAST(signum(TRY_CAST({t} AS DOUBLE)) AS BIGINT) "
+        f"END)"
+    )
 
 
-_ROUND_RE = re.compile(r"\bround\s*\(", re.IGNORECASE)
+_SCALAR_LOWERINGS = {
+    "likely": _lower_hint,
+    "unlikely": _lower_hint,
+    "likelihood": _lower_hint,
+    "min": _lower_scalar_minmax,
+    "max": _lower_scalar_minmax,
+    "trim": _lower_two_arg_trim,
+    "ltrim": _lower_two_arg_trim,
+    "rtrim": _lower_two_arg_trim,
+    "substr": _lower_substr,
+    "substring": _lower_substr,
+    "upper": _lower_upper_lower,
+    "lower": _lower_upper_lower,
+    "round": _lower_round,
+    "sign": _lower_sign,
+}
+_SCALAR_CALL_RE = re.compile(
+    rf"\b({'|'.join(_SCALAR_LOWERINGS)})\s*\(", re.IGNORECASE
+)
 
 
-def rewrite_round_calls(stmt: str) -> str:
-    """SQLite ``round(X[, Y])`` → the sqlite_round UDF: SQLite (3.26+)
-    rounds the SHORTEST-DECIMAL rendering half-away-from-zero —
-    round(2.675, 2) is 2.68 though the double is 2.67499…, where
-    Spark's binary HALF_UP gives 2.67 — and coerces text through the
-    numeric-prefix parse (round('3abc') is 3.0, Spark returns NULL).
-    Arity-split like substr. Runs on user SQL only, before the
-    date-family pass emits its own native round()."""
-    while True:
-        m = next(
-            (
-                m
-                for m in sqllex.finditer(_ROUND_RE, stmt)
-                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
-            ),
-            None,
-        )
-        if m is None:
-            return stmt
-        open_p = m.end() - 1
-        close = sqllex.close_paren(stmt, open_p)
-        inner = stmt[open_p + 1 : close - 1]
-        args = sqllex.split_top(inner)
-        if len(args) not in (1, 2) or not inner.strip():
-            tail = rewrite_round_calls(stmt[close:])
-            return stmt[:close] + tail
-        stmt = (
-            stmt[: m.start()]
-            + f"sqlite_round{len(args)}({inner})"
-            + stmt[close:]
-        )
-
-
-_UPPERLOWER_RE = re.compile(r"\b(upper|lower)\s*\(", re.IGNORECASE)
-
-
-def rewrite_upper_lower(stmt: str) -> str:
-    """SQLite's upper()/lower() fold ASCII only (lang_corefunc: "only
-    ASCII characters are case folded" without ICU); Spark's are full
-    Unicode ('ß' → 'SS', even changing length). Lower to translate()
-    over the ASCII alphabet — JVM-side, NULL-preserving, and numeric
-    arguments render through the string cast exactly like SQLite's
-    text conversion. Runs on user SQL only (before the affinity
-    passes emit their own lower() probes)."""
-    while True:
-        m = next(
-            (
-                m
-                for m in sqllex.finditer(_UPPERLOWER_RE, stmt)
-                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
-            ),
-            None,
-        )
-        if m is None:
-            return stmt
-        open_p = m.end() - 1
-        close = sqllex.close_paren(stmt, open_p)
-        inner = stmt[open_p + 1 : close - 1]
-        if not inner.strip() or len(sqllex.split_top(inner)) != 1:
-            tail = rewrite_upper_lower(stmt[close:])
-            return stmt[:close] + tail
-        a = f"'{_ASCII_LOWER}'"
-        b = f"'{_ASCII_UPPER}'"
-        if m.group(1).lower() == "lower":
-            a, b = b, a
-        stmt = (
-            stmt[: m.start()]
-            + f"translate(CAST(({inner}) AS STRING), {a}, {b})"
-            + stmt[close:]
-        )
+def rewrite_scalar_calls(stmt: str) -> str:
+    """The scalar functions whose SQLite value Spark's namesake does
+    not give: planner hints, scalar min/max, two-argument trim,
+    substr, ASCII-only upper/lower, decimal-exact round and sign —
+    one walk, each call lowered by its name's entry in
+    ``_SCALAR_LOWERINGS``.  Runs on user SQL only: the affinity and
+    date passes after it emit native lower()/round()/trim() probes
+    that must stay native."""
+    return _rewrite_calls(
+        stmt,
+        _SCALAR_CALL_RE,
+        lambda m, inner: _SCALAR_LOWERINGS[m.group(1).lower()](m, inner),
+    )
 
 
 _NULLIF_RE = re.compile(r"\bnullif\s*\(", re.IGNORECASE)
@@ -3239,40 +3117,25 @@ def rewrite_nullif_calls(stmt: str, classes: dict[str, str]) -> str:
     compare). Runs AFTER the comparison passes so the emitted key SQL
     (which contains ``>=`` probes) is never rescanned — the ADVICE-r08
     trap. Unclassifiable operands keep native nullif."""
-    while True:
-        m = next(
-            (
-                m
-                for m in sqllex.finditer(_NULLIF_RE, stmt)
-                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
-            ),
-            None,
-        )
-        if m is None:
-            return stmt
-        open_p = m.end() - 1
-        close = sqllex.close_paren(stmt, open_p)
-        args = _split_call_args(stmt, open_p)
-        bail = args is None or len(args) != 2
-        if not bail:
-            x, y = args[0].strip(), args[1].strip()
-            xd = _aff_classify(x, classes)
-            yd = _aff_classify(y, classes)
-            bail = (
-                xd is None
-                or yd is None
-                or (_aff_always(xd) == "text" and _aff_always(yd) == "text")
-            )
-        if bail:
-            tail = rewrite_nullif_calls(stmt[close:], classes)
-            return stmt[:close] + tail
+
+    def lower(m: re.Match[str], inner: str) -> str | None:
+        args = _split_call_args(m.string, m.end() - 1)
+        if args is None or len(args) != 2:
+            return None
+        x, y = args[0].strip(), args[1].strip()
+        xd = _aff_classify(x, classes)
+        yd = _aff_classify(y, classes)
+        if (
+            xd is None
+            or yd is None
+            or (_aff_always(xd) == "text" and _aff_always(yd) == "text")
+        ):
+            return None
         lkey = _aff_key_sql(xd, x)
         rkey = _aff_key_sql(yd, y)
-        stmt = (
-            stmt[: m.start()]
-            + f"(CASE WHEN {lkey} <=> {rkey} THEN NULL ELSE {x} END)"
-            + stmt[close:]
-        )
+        return f"(CASE WHEN {lkey} <=> {rkey} THEN NULL ELSE {x} END)"
+
+    return _rewrite_calls(stmt, _NULLIF_RE, lower)
 
 
 _TYPEOF_RE = re.compile(r"\btypeof\s*\(", re.IGNORECASE)
@@ -3288,28 +3151,16 @@ def rewrite_typeof_calls(stmt: str, classes: dict[str, str]) -> str:
     string JVM-side (integer-canon → 'integer', numeric-canon →
     'real', else 'text' — the same patterns as the Python UDF, which
     remains the fallback for unclassifiable arguments)."""
-    while True:
-        m = next(
-            (
-                m
-                for m in sqllex.finditer(_TYPEOF_RE, stmt)
-                if m.start() == 0 or not _IDENT.match(stmt[m.start() - 1])
-            ),
-            None,
-        )
-        if m is None:
-            return stmt
-        open_p = m.end() - 1
-        close = sqllex.close_paren(stmt, open_p)
-        inner = stmt[open_p + 1 : close - 1].strip()
+
+    def lower(m: re.Match[str], inner: str) -> str | None:
+        inner = inner.strip()
         cls = (
             classes.get(inner.split(".")[-1].lower())
             if _AFF_IDENT_RE.match(inner)
             else None
         )
         if cls not in ("text", "none", "long", "dynamic"):
-            tail = rewrite_typeof_calls(stmt[close:], classes)
-            return stmt[:close] + tail
+            return None
         if cls in ("text", "none"):
             branch = "'text'"
         elif cls == "long":
@@ -3322,11 +3173,9 @@ def rewrite_typeof_calls(stmt: str, classes: dict[str, str]) -> str:
                 f"WHEN {t} RLIKE {_SQL_NUM_PAT} THEN 'real' "
                 f"ELSE 'text' END"
             )
-        stmt = (
-            stmt[: m.start()]
-            + f"(CASE WHEN {inner} IS NULL THEN 'null' ELSE {branch} END)"
-            + stmt[close:]
-        )
+        return f"(CASE WHEN {inner} IS NULL THEN 'null' ELSE {branch} END)"
+
+    return _rewrite_calls(stmt, _TYPEOF_RE, lower)
 
 
 # ---------------------------------------------------------------------------
@@ -3349,10 +3198,9 @@ _STRFTIME_JAVA = {
     "Y": "yyyy",    # year
 }
 
-_DT_CALL_RES = {
-    name: re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-    for name in ("strftime", "date", "datetime", "time")
-}
+_DT_CALL_RE = re.compile(
+    r"\b(strftime|date|datetime|time)\s*\(", re.IGNORECASE
+)
 
 # numeric time value (julian day) — mirrors the UDF's float() probe
 _SQL_NUM_PAT = r"'^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$'"
@@ -3437,6 +3285,24 @@ _DT_SHORTHAND_FMT = {
 }
 
 
+def _lower_date_call(m: re.Match[str], inner: str) -> str | None:
+    name = m.group(1).lower()
+    args = _split_call_args(m.string, m.end() - 1)
+    if args is None:
+        return None
+    if name == "strftime":
+        if len(args) != 2:  # modifiers → UDF
+            return None
+        fmt = _sql_literal_text(args[0])
+        javafmt = None if fmt is None else _strftime_to_java(fmt)
+        if javafmt is None:
+            return None
+        return _jvm_date_format(args[1], javafmt)
+    if len(args) != 1:  # modifiers → UDF
+        return None
+    return _jvm_date_format(args[0], _DT_SHORTHAND_FMT[name])
+
+
 def rewrite_date_calls(stmt: str) -> str:
     """Lower modifier-free SQLite date-family calls onto JVM
     ``date_format`` expressions — the one remaining row-at-a-time
@@ -3444,34 +3310,7 @@ def rewrite_date_calls(stmt: str) -> str:
     over a big table paid a Python round-trip per row). Calls with
     modifier arguments, non-literal formats, or tokens without an
     exact JVM twin (%J, %s, %w, %W) keep the registered UDFs."""
-    for name, call_re in _DT_CALL_RES.items():
-        cands = [
-            m
-            for m in sqllex.finditer(call_re, stmt)
-            if not (m.start() > 0 and _IDENT.match(stmt[m.start() - 1]))
-        ]
-        for m in reversed(cands):  # right-to-left: stable positions
-            open_paren = m.end() - 1
-            close = sqllex.close_paren(stmt, open_paren)
-            args = _split_call_args(stmt, open_paren)
-            if args is None:
-                continue
-            if name == "strftime":
-                if len(args) != 2:  # modifiers → UDF
-                    continue
-                fmt = _sql_literal_text(args[0])
-                if fmt is None:
-                    continue
-                javafmt = _strftime_to_java(fmt)
-                if javafmt is None:
-                    continue
-                repl = _jvm_date_format(args[1], javafmt)
-            else:
-                if len(args) != 1:  # modifiers → UDF
-                    continue
-                repl = _jvm_date_format(args[0], _DT_SHORTHAND_FMT[name])
-            stmt = stmt[: m.start()] + repl + stmt[close:]
-    return stmt
+    return _rewrite_calls(stmt, _DT_CALL_RE, _lower_date_call)
 
 
 # ---------------------------------------------------------------------
@@ -7907,20 +7746,13 @@ def rewrite_statement(
     # conditions inside the emitted CASE are rewritten by the
     # affinity/boolean passes below like any other condition
     stmt = rewrite_predicate_values(stmt, classes or {})
+    stmt = rewrite_group_concat(stmt)
     # glob next: infix GLOB lowers to glob() calls, which the regex-
     # call pass can then lift onto RLIKE when the pattern is literal
-    stmt = rewrite_group_concat_distinct(stmt)
-    stmt = strip_group_concat_collate(stmt)
-    stmt = rewrite_group_concat(rewrite_regex_calls(rewrite_glob(stmt)))
-    stmt = rewrite_hint_funcs(stmt)
-    stmt = rewrite_scalar_minmax(rewrite_two_arg_trim(stmt))
-    # user-SQL-only scalar exactness: SQLite's ASCII-only case fold,
-    # the func.c substr() walk, and decimal-exact round() (all before
-    # the affinity/date passes, whose emitted lower()/round() probes
-    # must stay native)
-    stmt = rewrite_substr_calls(rewrite_upper_lower(stmt))
-    stmt = rewrite_round_calls(stmt)
-    stmt = rewrite_sign_calls(stmt)
+    stmt = rewrite_regex_calls(rewrite_glob(stmt))
+    # user-SQL-only scalar exactness (before the affinity/date passes,
+    # whose emitted lower()/round() probes must stay native)
+    stmt = rewrite_scalar_calls(stmt)
     # after scalar min/max lowering: any remaining 1-arg min/max is an
     # aggregate, which is what the bare-column rule keys on
     stmt = rewrite_bare_minmax_columns(stmt, classes or {})

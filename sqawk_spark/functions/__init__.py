@@ -158,7 +158,7 @@ def register_udfs(spark: SparkSession) -> None:
         Grid-verified against real sqlite3 over every (Y, Z) in
         [-9, 9] ∪ {None} for four string lengths — zero mismatches.
         Spark's substring() differs on the Y=0 and negative-Z forms,
-        hence the rewrite (dialect.rewrite_substr_calls)."""
+        hence the rewrite (dialect.rewrite_scalar_calls)."""
         s = _substr_text(x)
         n = len(s)
         p1 = _substr_i64(y)

@@ -479,26 +479,26 @@ def test_filter_clause_distinct_any_whitespace():
 
 
 def test_substr_rewrite_arity_and_scope():
-    from sqawk_spark.dialect import rewrite_substr_calls
+    from sqawk_spark.dialect import rewrite_scalar_calls
 
     assert (
-        rewrite_substr_calls("select substr(a1, 0, 2) from a")
+        rewrite_scalar_calls("select substr(a1, 0, 2) from a")
         == "select sqlite_substr3(a1, 0, 2) from a"
     )
     assert (
-        rewrite_substr_calls("select substring(a1, -2) from a")
+        rewrite_scalar_calls("select substring(a1, -2) from a")
         == "select sqlite_substr2(a1, -2) from a"
     )
     # SQL-standard FROM/FOR form has no top-level comma: stays native
     q = "select substring(a1 from 2 for 3) from a"
-    assert rewrite_substr_calls(q) == q
+    assert rewrite_scalar_calls(q) == q
     # fast path: positive literal Y / non-negative literal Z — Spark's
     # substring is already exact there, so the call stays JVM-side
     q = "select substr(a1, 2, 3), substr(a1, 1) from a"
-    assert rewrite_substr_calls(q) == q
+    assert rewrite_scalar_calls(q) == q
     # string literals containing 'substr(' are untouched
     q = "select 'substr(x, 0)' from a"
-    assert rewrite_substr_calls(q) == q
+    assert rewrite_scalar_calls(q) == q
 
 
 def test_substr_udf_grid_vs_sqlite(spark):
@@ -528,9 +528,9 @@ def test_substr_udf_grid_vs_sqlite(spark):
 
 
 def test_upper_lower_ascii_only(spark):
-    from sqawk_spark.dialect import rewrite_upper_lower
+    from sqawk_spark.dialect import rewrite_scalar_calls
 
-    q = rewrite_upper_lower("select upper('straße'), lower('ÄBC')")
+    q = rewrite_scalar_calls("select upper('straße'), lower('ÄBC')")
     row = spark.sql(q).collect()[0]
     con = sqlite3.connect(":memory:")
     assert tuple(row) == con.execute(
@@ -1113,3 +1113,161 @@ def test_no_module_level_regex_compiled_twice():
                 flags = [ast.unparse(a) for a in call.args[1:]]
                 seen[(call.args[0].value, *flags)].append(call.lineno)
     assert {k: v for k, v in seen.items() if len(v) > 1} == {}
+
+
+# ---------------------------------------------------------------------------
+# function-call lowerings on the one call-site walker (_rewrite_calls)
+# ---------------------------------------------------------------------------
+
+# the passes whose calls the walker visits; they and their ``_lower_*``
+# functions hold no loop of their own
+_CALL_SITE_PASSES = [
+    "rewrite_function_aliases",
+    "rewrite_group_concat",
+    "rewrite_regex_calls",
+    "rewrite_scalar_calls",
+    "rewrite_date_calls",
+    "rewrite_typeof_calls",
+    "rewrite_nullif_calls",
+]
+
+# every other function that pairs a finditer scan with
+# sqllex.close_paren, i.e. still walks call sites by hand; a port onto
+# _rewrite_calls removes its name here
+_HAND_ROLLED_CALL_LOOPS = [
+    "rewrite_values_clause",
+    "_over_spans",
+    "rewrite_like_nocase",
+    "rewrite_collate_positions",
+    "rewrite_filter_clause",
+    "rewrite_groups_frames",
+    "rewrite_plain_frame_excludes",
+    "rewrite_affinity_minmax",
+    "rewrite_affinity_in",
+    "rewrite_affinity_aggregates",
+    "rewrite_affinity_casts",
+    "rewrite_boolean_contexts",
+    "rewrite_predicate_values",
+]
+
+
+def test_call_site_loops_ratchet():
+    import ast
+
+    import sqawk_spark.dialect as dialect
+
+    with open(dialect.__file__) as f:
+        tree = ast.parse(f.read())
+    funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+
+    def called(fn) -> set[str]:
+        return {
+            ast.unparse(c.func).split(".")[-1]
+            for c in ast.walk(fn)
+            if isinstance(c, ast.Call)
+        }
+
+    for name in _CALL_SITE_PASSES:
+        assert "_rewrite_calls" in called(funcs[name]), name
+    looped = [
+        name
+        for name, fn in funcs.items()
+        if (name in _CALL_SITE_PASSES or name.startswith("_lower_"))
+        and any(isinstance(n, (ast.For, ast.While)) for n in ast.walk(fn))
+    ]
+    assert looped == []
+    paired = sorted(
+        name
+        for name, fn in funcs.items()
+        if name != "_rewrite_calls"
+        and {"finditer", "close_paren"} <= called(fn)
+    )
+    assert paired == sorted(_HAND_ROLLED_CALL_LOOPS)
+
+
+_NESTED_LINES = ["1 7 ab", "2 3 xAx", "3 9 straße"]
+
+
+def test_nested_calls_vs_sqlite(tmp_path):
+    """A call nested inside one its lowering keeps (the aggregate max,
+    substr's fast path, a nullif over an unclassifiable operand,
+    one-argument trim) is lowered too."""
+    from tests.test_load_path import run, sqlite_awk
+
+    f = tmp_path / "n.txt"
+    f.write_text("\n".join(_NESTED_LINES) + "\n")
+    recs = [ln.split() for ln in _NESTED_LINES]
+    for q in [
+        "select max(min(a1, a2)) from a",
+        "select substr(substr(a3, 0, 2), 1) from a",
+        "select nullif(nullif(a2, '7'), 3) from a",
+        "select trim(trim(a3, 'x')) from a",
+    ]:
+        assert run([q, str(f)]) == sqlite_awk(q, _NESTED_LINES, recs), q
+
+
+def test_string_agg_collate_vs_sqlite(tmp_path):
+    """``string_agg(X COLLATE NOCASE, SEP)`` drops the no-op collation
+    like group_concat does.  string_agg is SQLite 3.44's name for the
+    two-argument group_concat; the oracle spells it group_concat, the
+    name every SQLite has."""
+    from tests.test_load_path import run, sqlite_awk
+
+    f = tmp_path / "n.txt"
+    f.write_text("\n".join(_NESTED_LINES) + "\n")
+    recs = [ln.split() for ln in _NESTED_LINES]
+    q = "select string_agg(a3 COLLATE NOCASE, ';') from a"
+    want = sqlite_awk(
+        q.replace("string_agg", "group_concat"), _NESTED_LINES, recs
+    )
+    assert run([q, str(f)]) == want
+
+
+def test_nested_scalar_grid_vs_sqlite(spark):
+    """Two-level compositions of the lowered scalar functions over
+    literals, one query, vs sqlite3: each outer call both kept (substr
+    fast path, one-argument trim, nullif) and lowered."""
+    from sqawk_spark.functions import register_udfs
+
+    register_udfs(spark)
+    text_inner = [
+        "substr('straße', 0, 3)", "trim('xAx', 'x')", "upper('straße')",
+        "lower('ÄBC')", "min('b', 'a')", "max('b', NULL)",
+        "likely('xab')", "rtrim('abxx', 'x')", "substr('abc', 2)",
+    ]
+    text_outer = [
+        "substr({}, 1)", "substr({}, 0, 2)", "trim({})", "trim({}, 'a')",
+        "ltrim({}, 's')", "upper({})", "lower({})", "min({}, 'zz')",
+        "max({}, 'b')", "likely({})", "nullif({}, 'A')",
+    ]
+    num_inner = [
+        "round(2.675, 2)", "sign('-3')", "min(2, 1)", "max(3, 2)",
+        "unlikely(-4)", "round(sign(-2.5))",
+    ]
+    num_outer = [
+        "round({0})", "round({0}, 1)", "sign({0})", "likelihood({0}, 0.5)",
+        "nullif({0}, 1)", "min({0}, {0})", "max({0}, {0})",
+    ]
+    exprs = [o.format(i) for o in text_outer for i in text_inner]
+    exprs += [o.format(i) for o in num_outer for i in num_inner]
+    q = "select " + ", ".join(exprs)
+    want = list(sqlite3.connect(":memory:").execute(q).fetchone())
+    got = list(spark.sql(rewrite_statement(q)).collect()[0])
+    assert [(e, type(v), v) for e, v in zip(exprs, got)] == [
+        (e, type(v), v) for e, v in zip(exprs, want)
+    ]
+
+
+def test_kept_calls_do_not_grow_the_stack():
+    """1,100 calls the substr fast path keeps: the walker goes on
+    after each without recursing, under Python's default recursion
+    limit (libraries loaded by other tests may have raised it)."""
+    import sys
+
+    q = "select " + ", ".join(["substr(a3, 1, 2)"] * 1100) + " from a"
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)
+    try:
+        assert rewrite_statement(q) == q
+    finally:
+        sys.setrecursionlimit(limit)

@@ -4,13 +4,16 @@ rewriter's, DML runner's and CLI's former quote-and-paren loops and
 the rewriter's former word, CASE and clause walkers, copied verbatim
 (names kept); each lexer-based replacement must agree with its
 reference at every position of every drawn text (the CASE walkers:
-on every well-formed one, see ``_check_against_walkers``)."""
+on every well-formed one, see ``_check_against_walkers``).  Last, the
+rewriter's call-site walker against the function-call loop it
+replaced."""
 
 from __future__ import annotations
 
 import re
 
-from hypothesis import example, given, settings
+import pytest
+from hypothesis import assume, example, given, settings
 from hypothesis import strategies as st
 
 from sqawk_spark import dialect, sqllex
@@ -778,3 +781,120 @@ def test_walker_differences_are_malformed():
     assert not _well_formed(r)
     assert _bool_split_top(r, "and") == ["case ) ( end ", " y"]
     assert dialect._bool_split_top(r, "and") == [r]
+
+
+# --- the call-site walker ---------------------------------------------
+#
+# Before ``dialect._rewrite_calls``, nine passes (rewrite_substr_calls
+# among them) each held the loop below around their own lowering: on
+# a kept call it recursed on the text after the call's close paren,
+# so a call nested inside a kept one was never lowered.  Everywhere
+# else the walker must lower exactly as the loop did.
+
+
+def _ref_rewrite_calls(stmt, call_re, lower):
+    while True:
+        m = next(
+            (
+                m
+                for m in sqllex.finditer(call_re, stmt)
+                if m.start() == 0
+                or not dialect._IDENT.match(stmt[m.start() - 1])
+            ),
+            None,
+        )
+        if m is None:
+            return stmt
+        open_p = m.end() - 1
+        close = sqllex.close_paren(stmt, open_p)  # one past ')'
+        inner = stmt[open_p + 1 : close - 1]
+        repl = lower(m, inner)
+        if repl is None:
+            tail = _ref_rewrite_calls(stmt[close:], call_re, lower)
+            return stmt[:close] + tail
+        stmt = stmt[: m.start()] + repl + stmt[close:]
+
+
+def _nests_in_kept(s, call_re, lower) -> bool:
+    """Does the walker visit a call inside a call it kept?  A kept
+    call is held as its start and the distance from its close to the
+    end of the text, which edits inside it leave unchanged."""
+    kept: list[tuple[int, int]] = []
+    nested = False
+
+    def watch(m, inner):
+        nonlocal nested
+        t = m.string
+        while kept and m.start() >= len(t) - kept[-1][1]:
+            kept.pop()
+        nested = nested or bool(kept)
+        repl = lower(m, inner)
+        if repl is None:
+            close = sqllex.close_paren(t, m.end() - 1)
+            kept.append((m.start(), len(t) - close))
+        return repl
+
+    dialect._rewrite_calls(s, call_re, watch)
+    return nested
+
+
+_TOY_CALL_RE = re.compile(r"\b(f|g)\s*\(")
+
+
+def _toy_lower(m, inner):
+    """f with two arguments → h(...); g with any text → [...]; the
+    rest is kept."""
+    if m.group(1) == "g":
+        return f"[{inner}]" if inner.strip() else None
+    return f"h({inner})" if len(sqllex.split_top(inner)) == 2 else None
+
+
+def _scalar_lower(m, inner):
+    return dialect._SCALAR_LOWERINGS[m.group(1).lower()](m, inner)
+
+
+def _call_texts(names):
+    return st.lists(
+        st.sampled_from(
+            [f"{n}(" for n in names] * 2
+            + ["x" + names[0] + "(", "." + names[-1] + "(", names[0] + " ("]
+            + [")"] * 4 + [","] * 3 + ["(", "'", "''", '"', " ", "a", "0", "1", "'s'"]
+        ),
+        max_size=24,
+    ).map("".join)
+
+
+@pytest.mark.parametrize(
+    "call_re,lower,names",
+    [
+        (_TOY_CALL_RE, _toy_lower, ["f", "g"]),
+        (
+            dialect._SCALAR_CALL_RE,
+            _scalar_lower,
+            ["substr", "max", "upper", "likelihood", "trim"],
+        ),
+    ],
+    ids=["toy", "scalar"],
+)
+def test_rewrite_calls_vs_old_loop(call_re, lower, names):
+    @given(_call_texts(names))
+    @settings(max_examples=300, deadline=None)
+    @example("f(1, f(2, 3))")
+    @example("g(f(1,2), g(a)) f(")
+    @example("f(1,'2)' f(3,4)")
+    def check(s):
+        assume(not _nests_in_kept(s, call_re, lower))
+        assert dialect._rewrite_calls(s, call_re, lower) == (
+            _ref_rewrite_calls(s, call_re, lower)
+        )
+
+    check()
+
+
+def test_rewrite_calls_lowers_inside_kept_calls():
+    """Where a matched call does nest inside a kept one, the walker
+    lowers it and the old loop did not."""
+    s = "g() f(f(1, 2))"
+    assert _nests_in_kept(s, _TOY_CALL_RE, _toy_lower)
+    assert dialect._rewrite_calls(s, _TOY_CALL_RE, _toy_lower) == "g() f(h(1, 2))"
+    assert _ref_rewrite_calls(s, _TOY_CALL_RE, _toy_lower) == s
