@@ -233,16 +233,19 @@ def run(argv: list[str], out=None) -> int:
     # the sqawk surface needs SQLite's permissive coercion
     spark.conf.set("spark.sql.ansi.enabled", "false")
     # each run sees a fresh database, like a fresh sqawk process —
-    # drop temp views leaked by earlier runs in this session
-    for t in spark.catalog.listTables():
-        if t.isTemporary and t.namespace == []:
-            spark.catalog.dropTempView(t.name)
+    # drop temp views leaked by earlier runs in this session (SHOW
+    # VIEWS runs no Spark job; catalog.listTables runs two)
+    for v in spark.sql("SHOW VIEWS").collect():
+        if v.isTemporary:
+            spark.catalog.dropTempView(v.viewName)
     _UDFS.get_or_build(spark, ("udfs",), lambda: register_udfs(spark))
     loader = TableLoader(spark)
 
     tmp_files = []
+    sized_confs: dict[str, str | None] = {}
     try:
         seen_tables: set[str] = set()
+        paths = [opts["dbfile"]] if opts["dbfile"] else []
         for fopts, fname in files:
             # default table names a..z indexed by the number of distinct
             # tables so far (lib/classes/sqawk.tcl:139: dict size)
@@ -256,8 +259,10 @@ def run(argv: list[str], out=None) -> int:
                 with os.fdopen(fd, "w") as f:
                     f.write(sys.stdin.read())
                 tmp_files.append(path)
+            paths.append(path)
             records = PARSERS[spec.format](spark, spec, path)
             loader.add(records, spec, table)
+        sized_confs = _size_partitions(spark, paths)
         tables = loader.finalize()
         views = {t: df.columns for t, df in tables.items()}
 
@@ -274,6 +279,7 @@ def run(argv: list[str], out=None) -> int:
                     opts["dbfile"],
                     tables,
                     {t: s.nf for t, s in loader.specs.items()},
+                    loader.classes,
                 )
             )
         # every loaded or registered column: known names let the
@@ -353,6 +359,11 @@ def run(argv: list[str], out=None) -> int:
             persist_mutations(spark, opts["dbfile"], mutated)
         return 0
     finally:
+        for k, v in sized_confs.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
         for p in tmp_files:
             try:
                 os.unlink(p)
@@ -366,6 +377,71 @@ def run(argv: list[str], out=None) -> int:
             clear_spill_dirs()
         except Exception:
             pass
+
+
+def _local_bytes(paths: list[str]) -> int | None:
+    """Bytes of the local files behind ``paths`` (globs and
+    directories expanded, a path that does not exist yet counts 0),
+    or None when one of them is not local or cannot be read."""
+    import glob
+
+    total = 0
+    try:
+        for p in paths:
+            if "://" in p:
+                return None
+            for match in [p] if os.path.exists(p) else glob.glob(p):
+                if os.path.isdir(match):
+                    total += sum(
+                        os.path.getsize(os.path.join(d, f))
+                        for d, _, names in os.walk(match)
+                        for f in names
+                    )
+                else:
+                    total += os.path.getsize(match)
+    except OSError:
+        return None
+    return total
+
+
+# a byte size as Spark's JavaUtils.byteStringAsBytes reads it (parsed
+# here, not over py4j: the JVM path costs eight round trips)
+_BYTE_SIZE = r"([0-9]+)([kmgtp]?)b?"
+_BYTE_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+# the starting partition counts of a run: AQE's initial shuffle
+# partitions, and the partitions of a local relation (a -dbfile
+# read-back) or of a file scan's size split
+_SIZED_CONFS = (
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+    "spark.sql.leafNodeDefaultParallelism",
+)
+
+
+def _size_partitions(spark, paths: list[str]) -> dict[str, str | None]:
+    """Start the run's shuffles and local relations at ⌈input bytes ÷
+    the advisory partition size⌉ partitions, clamped to [1,
+    ``spark.sql.shuffle.partitions``], so a small input plans one
+    partition: an ORDER BY's range exchange then samples nothing, and
+    a Python stage runs once. Inputs of ``shuffle.partitions`` ×
+    advisory size or more start where they did. Returns the settings'
+    previous values (None: unset) for the caller to restore; sets
+    nothing when a size cannot be read."""
+    conf = spark.conf
+    total = _local_bytes(paths)
+    size = re.fullmatch(
+        _BYTE_SIZE,
+        conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes").strip().lower(),
+    )
+    advisory = int(size[1]) << _BYTE_SHIFT[size[2]] if size else 0
+    if total is None or advisory <= 0:
+        return {}
+    n = -(-total // advisory)
+    n = min(max(n, 1), int(conf.get("spark.sql.shuffle.partitions")))
+    previous = {k: conf.get(k, None) for k in _SIZED_CONFS}
+    for k in _SIZED_CONFS:
+        conf.set(k, str(n))
+    return previous
 
 
 def _run_parquet_output(

@@ -58,11 +58,16 @@ def persist_and_register(
     dbdir: str,
     loaded: dict[str, DataFrame],
     nf_by_table: dict[str, int] | None = None,
+    classes: dict[str, str] | None = None,
 ) -> dict[str, list[str]]:
     """Persist the loaded tables and register every stored table as a
-    temp view; returns ``{view: columns}`` of the views registered."""
+    temp view; returns ``{view: columns}`` of the views registered.
+    A SQLite column read back as text because its values mix storage
+    classes is recorded in ``classes`` as 'dynamic' (affinity.py)."""
     if _is_sqlite_path(dbdir):
-        return _persist_sqlite(spark, dbdir, loaded, nf_by_table or {})
+        if classes is None:
+            classes = {}
+        return _persist_sqlite(spark, dbdir, loaded, nf_by_table or {}, classes)
     os.makedirs(dbdir, exist_ok=True)
     views: dict[str, list[str]] = {}
 
@@ -106,7 +111,8 @@ def persist_mutations(
     state). A view that no longer exists in the catalog was dropped —
     the stored table is removed.
     """
-    live = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    # catalog.tableExists runs no Spark job; catalog.listTables runs two
+    live = {n for n in names if spark.catalog.tableExists(n)}
     if _is_sqlite_path(dbdir):
         _persist_mutations_sqlite(spark, dbdir, names, live)
         return
@@ -185,6 +191,7 @@ def _persist_sqlite(
     path: str,
     loaded: dict[str, DataFrame],
     nf_by_table: dict[str, int],
+    classes: dict[str, str],
 ) -> dict[str, list[str]]:
     """Reference-fidelity SQLite persistence (tests.tcl dbfile-*)."""
     import sqlite3
@@ -266,10 +273,16 @@ def _persist_sqlite(
         views: dict[str, list[str]] = {}
         for name in names:
             info = con.execute(f"PRAGMA table_info({name})").fetchall()
+            mixed = _mixed_class_columns(con, name, info)
+            for c in mixed:
+                classes[c.lower()] = "dynamic"
             schema = StructType(
                 [
                     StructField(
-                        r[1], _FROM_SQLITE.get((r[2] or "").upper(), StringType())
+                        r[1],
+                        _FROM_SQLITE.get((r[2] or "").upper(), StringType())
+                        if r[1] not in mixed
+                        else StringType(),
                     )
                     for r in info
                 ]
@@ -279,6 +292,26 @@ def _persist_sqlite(
         return views
     finally:
         con.close()
+
+
+def _mixed_class_columns(con, name: str, info: list[tuple]) -> set[str]:
+    """The INTEGER and REAL columns of table ``name`` that hold a value
+    of another storage class. A declared type is only an affinity, so
+    SQLite keeps 'abc' or 1.5 under INTEGER and text under REAL; such a
+    column reads back as text, each value as sqlite3 prints it."""
+    # typeof() names the class of such a column's own values as its
+    # declared type does: 'integer', 'real'
+    typed = [
+        (r[1], r[2].lower()) for r in info if (r[2] or "").upper() in _FROM_SQLITE
+    ]
+    if not typed:
+        return set()
+    probes = ", ".join(
+        "max(typeof(\"{}\") NOT IN ('{}', 'null'))".format(c.replace('"', '""'), cls)
+        for c, cls in typed
+    )
+    row = con.execute(f"SELECT {probes} FROM {name}").fetchone()
+    return {c for (c, _), hit in zip(typed, row) if hit}
 
 
 _READBACK_BATCH = 50_000
@@ -305,7 +338,7 @@ def _arrow_batch(rows: list[tuple], schema: StructType):
     passes the same type verifier first (a REAL value in an INTEGER
     column raises; Arrow's int64 conversion alone would truncate 1.5
     to 1), and a string column holds ``str(v)`` of a non-text value
-    (``5`` → ``'5'``, ``b'ab'`` → ``"b'ab'"``)."""
+    (``5`` → ``'5'``, ``1.5`` → ``'1.5'``, ``b'ab'`` → ``"b'ab'"``)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _make_type_verifier

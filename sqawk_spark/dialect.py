@@ -66,14 +66,16 @@ def _rewrite_calls(
     of the whole call, or None to keep it, in which case the scan goes
     on inside its arguments.  A replacement is scanned again from its
     start, so the calls it embeds are lowered too.  A call whose paren
-    never closes runs to the end of the text, and its ``inner`` stops
-    one character short of that end."""
+    never closes is not a call: ``lower`` never sees it, and the scan
+    goes on inside it."""
     pos = 0
     while True:
         for m in call_re.finditer(stmt, pos):
             at = m.start()
-            if sqllex.in_string(stmt, at) or (
-                at > 0 and _IDENT.match(stmt[at - 1])
+            if (
+                sqllex.in_string(stmt, at)
+                or (at > 0 and _IDENT.match(stmt[at - 1]))
+                or not sqllex.closes(stmt, m.end() - 1)
             ):
                 continue
             close = sqllex.close_paren(stmt, m.end() - 1)
@@ -88,7 +90,7 @@ def _rewrite_calls(
 
 def _renamed(m: re.Match[str], name: str) -> str:
     """The call ``m`` matched, under ``name``, its argument text kept
-    byte for byte (an unclosed call's too)."""
+    byte for byte."""
     s = m.string
     return f"{name}({s[m.end() : sqllex.close_paren(s, m.end() - 1)]}"
 
@@ -2957,19 +2959,16 @@ def _lower_hint(m: re.Match[str], inner: str) -> str | None:
 
 def _lower_scalar_minmax(m: re.Match[str], inner: str) -> str | None:
     """SQLite's scalar ``min(a, b, ...)`` / ``max(a, b, ...)`` (two or
-    more arguments — the one-argument form is the aggregate) → Spark's
-    ``least`` / ``greatest``. SQLite returns NULL if ANY argument is
-    NULL, Spark's least/greatest skip NULLs — so each argument set is
-    guarded with a CASE that forces NULL when any argument is NULL."""
+    more arguments — the one-argument form is the aggregate) →
+    ``sqawk_scalar_min`` / ``sqawk_scalar_max``, which
+    ``rewrite_scalar_minmax`` lowers after the storage-class passes.
+    The new name keeps the passes between, which read every remaining
+    min/max as the aggregate (bare columns, operand classes), off
+    it."""
     args = sqllex.split_top(inner)
     if len(args) < 2 or any(a == "" for a in args):
         return None  # the aggregate form (or DISTINCT etc.), left to Spark
-    fn = "least" if m.group(1).lower() == "min" else "greatest"
-    null_guard = " OR ".join(f"({a}) IS NULL" for a in args)
-    return (
-        f"(CASE WHEN {null_guard} THEN NULL "
-        f"ELSE {fn}({', '.join(args)}) END)"
-    )
+    return _renamed(m, f"sqawk_scalar_{m.group(1).lower()}")
 
 
 _TRIM_MODE = {"trim": "BOTH", "ltrim": "LEADING", "rtrim": "TRAILING"}
@@ -3136,6 +3135,80 @@ def rewrite_nullif_calls(stmt: str, classes: dict[str, str]) -> str:
         return f"(CASE WHEN {lkey} <=> {rkey} THEN NULL ELSE {x} END)"
 
     return _rewrite_calls(stmt, _NULLIF_RE, lower)
+
+
+_SCALAR_MINMAX_RE = re.compile(r"\bsqawk_scalar_(min|max)\s*\(", re.IGNORECASE)
+
+
+def _aff_family(d: tuple[str, str] | None) -> str | None:
+    """The storage class every value of operand ``d`` has ('integer',
+    'real' or 'text'), 'dynamic' when it varies per value, None when
+    the operand is unclassifiable."""
+    if d is None:
+        return None
+    kind, val = d
+    if kind == "numlit":
+        whole = re.fullmatch(r"[+-]?[0-9]+", val)
+        return "integer" if whole and -(2**63) <= int(val) < 2**63 else "real"
+    if kind == "strlit" or _aff_always(d) == "text":
+        return "text"
+    return "integer" if val == "long" else "dynamic"
+
+
+def rewrite_scalar_minmax(stmt: str, classes: dict[str, str]) -> str:
+    """``sqawk_scalar_min`` / ``sqawk_scalar_max`` (SQLite's scalar
+    min/max, renamed by ``rewrite_scalar_calls``) → the winning
+    argument by SQLite's value order, NULL when any argument is NULL.
+    Arguments of one storage class (or none classifiable; a NULL
+    literal aside) keep Spark's ``least`` / ``greatest`` and its
+    type. Mixed classes cannot: those need one type, so text and
+    numbers clash (``min(a3, 5)``) and an INTEGER winner over a REAL
+    argument becomes a real (``max(1.5, 2)`` → 2.0). There each
+    argument gets its order-preserving storage-class key and its
+    SQLite text, and ``least`` / ``greatest`` over ``(key, position,
+    text)`` structs picks it: numbers before text, and on a tie the
+    last argument for min and the first for max, as SQLite's
+    minmaxFunc scans. The result is the winner's text. Runs after the
+    comparison passes, like the nullif lowering, so the key SQL is
+    never rescanned."""
+
+    def lower(m: re.Match[str], inner: str) -> str | None:
+        args = [a.strip() for a in sqllex.split_top(inner)]
+        fn = "least" if m.group(1).lower() == "min" else "greatest"
+        null_guard = " OR ".join(f"({a}) IS NULL" for a in args)
+        ds = [_aff_classify(a, classes) for a in args]
+        # a NULL argument makes the result NULL whatever the others are
+        families = {
+            _aff_family(d) for a, d in zip(args, ds) if a.lower() != "null"
+        }
+        if len(families) <= 1 and "dynamic" not in families:
+            picked = f"{fn}({', '.join(args)})"
+        else:
+            picked = fn + "(" + ", ".join(
+                f"named_struct('k', {_minmax_key(a, d)}, "
+                f"'p', {len(args) - i}, 'v', {_minmax_text(a, d)})"
+                for i, (a, d) in enumerate(zip(args, ds))
+            ) + ").v"
+        return f"(CASE WHEN {null_guard} THEN NULL ELSE {picked} END)"
+
+    return _rewrite_calls(stmt, _SCALAR_MINMAX_RE, lower)
+
+
+def _minmax_key(a: str, d: tuple[str, str] | None) -> str:
+    """Storage-class key of min/max argument ``a``; an unclassifiable
+    one keys by the look of its text, like a dynamic column."""
+    if d is None:
+        return _aff_key_col_sql(f"CAST(({a}) AS STRING)", "dynamic")
+    return _aff_key_sql(d, a)
+
+
+def _minmax_text(a: str, d: tuple[str, str] | None) -> str:
+    """Argument ``a`` as SQLite prints it."""
+    if d is not None and d[0] == "numlit":
+        return _quote_sql(_sqlite_num_as_text(d[1]))
+    if d is not None and d[0] == "strlit":
+        return a
+    return f"CAST(({a}) AS STRING)"
 
 
 _TYPEOF_RE = re.compile(r"\btypeof\s*\(", re.IGNORECASE)
@@ -7800,6 +7873,7 @@ def rewrite_statement(
     # after the comparison passes: the nullif lowering emits key SQL
     # containing >= probes that the comparison scan must never revisit
     stmt = rewrite_nullif_calls(stmt, classes or {})
+    stmt = rewrite_scalar_minmax(stmt, classes or {})
     # numeric-as-boolean coercion LAST among the expression passes:
     # predicates emitted by every pass above re-parse as predicates
     # here and are never rewritten

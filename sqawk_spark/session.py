@@ -7,6 +7,12 @@ chosen so the same logical plans scale to a multi-executor cluster:
   counts adapt to real data sizes instead of being hand-tuned per SF.
 - ``spark.sql.shuffle.partitions`` defaults to the local core count;
   on a real cluster this is the *initial* number and AQE coalesces.
+  The CLI sizes each run's initial count from its input bytes
+  (``cli._size_partitions``): ⌈bytes ÷ the advisory partition size⌉,
+  clamped to [1, ``shuffle.partitions``], set for the run as AQE's
+  ``coalescePartitions.initialPartitionNum`` and as
+  ``leafNodeDefaultParallelism``, then restored. A small input plans
+  one partition, so an ORDER BY's range exchange samples nothing.
 - Arrow enabled: every Pandas-UDF hop is Arrow-batched, never per-row.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 """

@@ -113,6 +113,12 @@ def close_paren(s: str, i: int) -> int:
     return _lex(s).close.get(i, len(s))
 
 
+def closes(s: str, i: int) -> bool:
+    """Does the ``(`` at ``s[i]``, outside quoted tokens, have a
+    matching ``)``?"""
+    return i in _lex(s).close
+
+
 def scan(s: str, start: int = 0, end: int | None = None) -> Iterator[
     tuple[int, int]
 ]:

@@ -1129,6 +1129,7 @@ _CALL_SITE_PASSES = [
     "rewrite_date_calls",
     "rewrite_typeof_calls",
     "rewrite_nullif_calls",
+    "rewrite_scalar_minmax",
 ]
 
 # every other function that pairs a finditer scan with
@@ -1206,6 +1207,30 @@ def test_nested_calls_vs_sqlite(tmp_path):
         assert run([q, str(f)]) == sqlite_awk(q, _NESTED_LINES, recs), q
 
 
+def test_scalar_minmax_mixed_classes_vs_sqlite(tmp_path):
+    """Scalar min/max picks its winner by SQLite's value order (NULL
+    if any argument is NULL, numbers before text) and returns it in
+    its own class: text beside numbers raised DATATYPE_MISMATCH, and
+    an INTEGER winner over a REAL argument printed as a real."""
+    from tests.test_load_path import run, sqlite_awk
+
+    f = tmp_path / "n.txt"
+    f.write_text("\n".join(_NESTED_LINES) + "\n")
+    recs = [ln.split() for ln in _NESTED_LINES]
+    for q in [
+        "select min(a3, 5) from a",
+        "select min(substr(a3, 1, 1), a1) from a",
+        "select max(1.5, 2) from a",
+        "select max(a1, 1.5) from a",
+        "select max(a3, a2, 8), min(a2, 'x', 4.5) from a",
+        "select min(2, 2.0), max(2, 2.0), min(2.0, 2), max(2.0, 2) from a",
+        "select max(a1, null), min(a3, a4, 1) from a",
+        "select min(a1, a2), max(a1, a2), max('b', a3), min(a1, 3) from a",
+        "select max(a1, 1.5) + 1, typeof(max(a1, 1.5)) from a",
+    ]:
+        assert run([q, str(f)]) == sqlite_awk(q, _NESTED_LINES, recs), q
+
+
 def test_string_agg_collate_vs_sqlite(tmp_path):
     """``string_agg(X COLLATE NOCASE, SEP)`` drops the no-op collation
     like group_concat does.  string_agg is SQLite 3.44's name for the
@@ -1256,6 +1281,23 @@ def test_nested_scalar_grid_vs_sqlite(spark):
     assert [(e, type(v), v) for e, v in zip(exprs, got)] == [
         (e, type(v), v) for e, v in zip(exprs, want)
     ]
+
+
+def test_unclosed_call_is_kept():
+    """A call whose paren never closes is left byte for byte (it used
+    to be read to the end of the text, its last character dropped),
+    and a closed call inside it is still lowered."""
+    from sqawk_spark.dialect import rewrite_scalar_calls
+
+    for q, want in [
+        ("select substr(a3, 0, 2", "select substr(a3, 0, 2"),
+        ("select upper(substr(a3, 0, 2)", "select upper(sqlite_substr3(a3, 0, 2)"),
+        (
+            "select substr(a3, 0, 2) from a where likely(a1",
+            "select sqlite_substr3(a3, 0, 2) from a where likely(a1",
+        ),
+    ]:
+        assert rewrite_scalar_calls(q) == want, q
 
 
 def test_kept_calls_do_not_grow_the_stack():

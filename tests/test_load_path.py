@@ -5,8 +5,11 @@ same rows in sqawk's table layout.
 
 Also pins that the CLI registers its SQLite UDFs once per session, and
 the -dbfile read-back (dbfile._register_sqlite_table): an Arrow local
-relation with the list path's conversions, a spill that keeps SQLite's
-rowid order, and prefetched result partitions streamed in order.
+relation with the list path's conversions, a column of mixed storage
+classes read as sqlite3 prints it, a spill that keeps SQLite's rowid
+order, and prefetched result partitions streamed in order. Last, a
+warm run's Spark job budget and its starting partition counts, sized
+from the input bytes (cli._size_partitions) and restored after.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ import uuid
 import pytest
 from pyspark import SparkContext
 from pyspark.sql import functions as F
+from pyspark.sql.catalog import Catalog
 from pyspark.sql.classic.dataframe import DataFrame
 from pyspark.sql.udf import UDFRegistration
 
@@ -49,11 +53,12 @@ def sqlite_awk(
     names: list[str] | None = None,
     decls: list[str] | None = None,
     nf: int = 10,
+    script: str = "",
 ) -> str:
     """``query`` in SQLite over ``recs`` (the fields of ``lines``) in
     sqawk's layout — ``<t>nr INTEGER PRIMARY KEY, <t>nf, <t>0 TEXT``,
     then the fields, INTEGER unless declared — printed as the awk
-    serializer prints rows."""
+    serializer prints rows; ``script`` runs before ``query``."""
     width = max([nf, *map(len, recs)])
     names = list(names or [])[:width]
     names += [f"{table}{i + 1}" for i in range(len(names), width)]
@@ -70,6 +75,7 @@ def sqlite_awk(
             for nr, (line, r) in enumerate(zip(lines, recs), 1)
         ),
     )
+    con.executescript(script)
     out = _awk_out(con.execute(query))
     con.close()
     return out
@@ -271,9 +277,9 @@ _DECL = "i INTEGER, r REAL, t TEXT, n NUMERIC, u"
 
 def test_dbfile_readback_conversions(tmp_path):
     """Every value class SQLite can hand back, in each declared column
-    type, prints what the list-based createDataFrame printed; values
-    the column's Spark type cannot hold raise as they did (1.5 in an
-    INTEGER column must not print 1)."""
+    type, prints what the list-based createDataFrame printed; a column
+    whose Spark type cannot hold one of its values prints sqlite3's
+    values (1.5 in an INTEGER column must not print 1)."""
     db = _sqlite_db(
         tmp_path / "ok.db",
         _DECL,
@@ -298,16 +304,40 @@ def test_dbfile_readback_conversions(tmp_path):
         "real real real 1.5 1.5\nreal text text 12345678.0 abc\n"
         "text text integer b'ab' b'cd'\ntext integer real é 1000\n"
     )
-    for name, row, msg in [
-        ("int_real", (1.5, 1.0, "a", 1, 1), r"LongType\(\) can not accept object 1.5"),
-        ("int_text", ("abc", 1.0, "a", 1, 1), r"LongType\(\) can not accept object 'abc'"),
-        ("int_blob", (b"ab", 1.0, "a", 1, 1), r"LongType\(\) can not accept object b'ab'"),
-        ("real_text", (1, "abc", "a", 1, 1), r"DoubleType\(\) can not accept object 'abc'"),
-        ("real_blob", (1, b"x", "a", 1, 1), r"DoubleType\(\) can not accept object b'x'"),
+    # a declared type is only an affinity: SQLite keeps a value of
+    # another class, and the column reads back as sqlite3 prints it
+    for name, row, col in [
+        ("int_real", (1.5, 1.0, "a", 1, 1), "i"),
+        ("int_text", ("abc", 1.0, "a", 1, 1), "i"),
+        ("int_blob", (b"ab", 1.0, "a", 1, 1), "i"),
+        ("real_text", (1, "abc", "a", 1, 1), "r"),
+        ("real_blob", (1, b"x", "a", 1, 1), "r"),
     ]:
         bad = _sqlite_db(tmp_path / f"{name}.db", _DECL, [row])
-        with pytest.raises(Exception, match=msg):
-            run(["-dbfile", bad, "-noinput", "select * from x"])
+        q = f"select {col}, t from x"
+        assert run(["-dbfile", bad, "-noinput", q]) == _sqlite_out(bad, q), name
+
+
+def test_dbfile_mixed_class_column_vs_sqlite(tmp_path):
+    """An INTEGER or REAL column holding values of other storage
+    classes compares, sorts, sums and types by each value's own class,
+    as in SQLite (numbers before text)."""
+    db = _sqlite_db(
+        tmp_path / "m.db",
+        "i INTEGER, r REAL",
+        [(3, 2.5), ("abc", "x"), (1.5, 7), (None, None), (-2, -1.25), (10, "10z"), ("9e", 0.5)],
+    )
+    for q in [
+        "select i, r from x",
+        "select i from x order by i",
+        "select r from x order by r desc",
+        "select typeof(i), typeof(r) from x",
+        "select i from x where i > 2",
+        "select r from x where r < 'a'",
+        "select sum(i), total(r), max(i), min(r), count(i) from x",
+        "select i + 1, r * 2 from x",
+    ]:
+        assert run(["-dbfile", db, "-noinput", q]) == _sqlite_out(db, q), q
 
 
 def test_dbfile_spilled_readback_keeps_rowid_order(tmp_path, monkeypatch):
@@ -368,3 +398,152 @@ def test_prefetched_order_by_streams_in_order(spark, tmp_path, monkeypatch):
     assert got == sqlite_awk(q, lines, [ln.split(" ") for ln in lines])
     parts, kwargs = seen[-1]
     assert parts >= 3 and kwargs.get("prefetchPartitions") is True, seen
+
+
+def _run_counting_jobs(spark, argv: list[str]) -> tuple[str, int]:
+    """(output, Spark jobs) of one ``cli.run`` under its own job group."""
+    sc = spark.sparkContext
+    group = f"run-{uuid.uuid4()}"
+    props = ("spark.jobGroup.id", "spark.job.description")
+    prev = [sc.getLocalProperty(p) for p in props]
+    sc.setJobGroup(group, "cli.run")
+    try:
+        out = run(argv)
+    finally:
+        for p, v in zip(props, prev):
+            sc.setLocalProperty(p, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_run_job_budget(spark, tmp_path, monkeypatch):
+    """A warm run over small inputs lists no catalog (two jobs per
+    listing) and samples no range partitioner: its shuffles and local
+    relations start at one partition, so an ORDER BY's exchange
+    samples nothing and the Python stage under it runs once."""
+    listed: list[tuple] = []
+    orig = Catalog.listTables
+
+    def list_tables(self, *args, **kwargs):
+        listed.append(args)
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "listTables", list_tables)
+    texts, reals = ["x", "ab", "Q"], ["0.5", "1.25", "-2.25", "3"]
+    mixed_lines = [
+        f"{texts[i % 3] if i % 11 == 0 else i * 7 % 500},{reals[i % 4]},g{i % 12}"
+        for i in range(1, 401)
+    ]
+    mixed = tmp_path / "mixed.txt"
+    mixed.write_text("\n".join(mixed_lines) + "\n")
+    cities = ["Oslo", "Lima", "Pune", "Kyiv"]
+    csv_lines = [f"{i},w{i % 37},{cities[i % 4]},{i * 13 % 101}" for i in range(1, 401)]
+    people = tmp_path / "people.csv"
+    people.write_text("id,name,city,score\n" + "".join(ln + "\n" for ln in csv_lines))
+    mutate = (
+        "update a set score = score + 5 where city = 'Oslo'; delete from a where score < 20"
+    )
+    q_mixed = (
+        "select a3, count(*) n, sum(a1) s1, sum(a2) s2, max(a2) hi from a "
+        "group by a3 order by a3"
+    )
+    q_dml = (
+        "select id, name, city, score from a where score >= 90 and city <> 'Lima' "
+        "order by score desc, id"
+    )
+    q_read = (
+        "select city, count(*) n, sum(score) s, min(id) lo, max(name) hi "
+        "from a group by city order by city"
+    )
+
+    def dml_argv(db):
+        return ["-dbfile", str(db), f"{mutate}; {q_dml}", "format=csv", "header=1", str(people)]
+
+    groupby = ["-FS", ",", q_mixed, "datatypes=integer,real,text", str(mixed)]
+    read = ["-dbfile", str(tmp_path / "2.db"), "-noinput", q_read]
+    # the first run of each shape warms it; the second one counts
+    run(groupby)
+    out_groupby, jobs_groupby = _run_counting_jobs(spark, groupby)
+    run(dml_argv(tmp_path / "1.db"))
+    out_dml, jobs_dml = _run_counting_jobs(spark, dml_argv(tmp_path / "2.db"))
+    run(read)
+    out_read, jobs_read = _run_counting_jobs(spark, read)
+
+    assert out_groupby == sqlite_awk(
+        q_mixed, mixed_lines, [ln.split(",") for ln in mixed_lines],
+        decls=["integer", "real", "text"],
+    )
+    assert out_dml == sqlite_awk(
+        q_dml, csv_lines, [ln.split(",") for ln in csv_lines],
+        names=["id", "name", "city", "score"], script=mutate,
+    )
+    assert out_read == _sqlite_out(str(tmp_path / "2.db"), q_read)
+    assert listed == []
+    # with catalog listings and 2-partition starts: 8, 13 and 6 jobs
+    jobs = (jobs_groupby, jobs_dml, jobs_read)
+    assert all(n <= limit for n, limit in zip(jobs, (5, 7, 3))), jobs
+
+
+_SIZED = cli._SIZED_CONFS
+
+
+def test_sized_settings_restored(spark, tmp_path):
+    """Both starting-partition settings read as before the run after a
+    run that succeeds and after one that raises."""
+    f = tmp_path / "a.txt"
+    f.write_text("1 x\n2 y\n")
+    for before in ({k: None for k in _SIZED}, {k: "3" for k in _SIZED}):
+        for k, v in before.items():
+            if v is not None:
+                spark.conf.set(k, v)
+        try:
+            assert run(["select a2 from a order by a1 desc", str(f)]) == "y\nx\n"
+            assert {k: spark.conf.get(k, None) for k in _SIZED} == before
+            with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+                run(["select * from nosuch", str(f)])
+            assert {k: spark.conf.get(k, None) for k in _SIZED} == before
+        finally:
+            for k in _SIZED:
+                spark.conf.unset(k)
+
+
+@pytest.mark.parametrize("advisory, want", [(None, "1"), ("1k", "8")])
+def test_starting_partitions_follow_input_bytes(spark, tmp_path, monkeypatch, advisory, want):
+    """A run starts at ⌈input bytes ÷ advisory partition size⌉
+    partitions, clamped to [1, shuffle.partitions]: one for a small
+    input, more once the input spans several advisory sizes; the
+    output is sqlite3's either way."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    seen: list[dict] = []
+    orig = TableLoader.finalize
+
+    def finalize(self):
+        seen.append({k: spark.conf.get(k, None) for k in _SIZED})
+        return orig(self)
+
+    monkeypatch.setattr(TableLoader, "finalize", finalize)
+    lines = [f"{i} w{(i * 7919) % 613} {i % 3}" for i in range(1, 2001)]
+    f = tmp_path / "a.txt"
+    f.write_text("\n".join(lines) + "\n")
+    q = "select a3, count(*), min(a2), max(anr) from a group by a3 order by 3 desc, a3"
+    conf = {"spark.sql.shuffle.partitions": "8", **({key: advisory} if advisory else {})}
+    old = {k: spark.conf.get(k, None) for k in conf}
+    orig_get = cli.get_session
+
+    def get_session(*args, **kwargs):
+        s = orig_get(*args, **kwargs)
+        for k, v in conf.items():
+            s.conf.set(k, v)
+        return s
+
+    monkeypatch.setattr(cli, "get_session", get_session)
+    try:
+        got = run([q, str(f)])
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert seen == [{k: want for k in _SIZED}]
+    assert got == sqlite_awk(q, lines, [ln.split(" ") for ln in lines])

@@ -789,7 +789,10 @@ def test_walker_differences_are_malformed():
 # among them) each held the loop below around their own lowering: on
 # a kept call it recursed on the text after the call's close paren,
 # so a call nested inside a kept one was never lowered.  Everywhere
-# else the walker must lower exactly as the loop did.
+# else the walker must lower exactly as the loop did, but for one
+# change made since: a call whose paren never closes is not a call
+# (the loop lowered it as if it ran to the end of the text), and the
+# scan goes on inside it.
 
 
 def _ref_rewrite_calls(stmt, call_re, lower):
@@ -806,6 +809,9 @@ def _ref_rewrite_calls(stmt, call_re, lower):
         if m is None:
             return stmt
         open_p = m.end() - 1
+        if not sqllex.closes(stmt, open_p):
+            tail = _ref_rewrite_calls(stmt[m.end() :], call_re, lower)
+            return stmt[: m.end()] + tail
         close = sqllex.close_paren(stmt, open_p)  # one past ')'
         inner = stmt[open_p + 1 : close - 1]
         repl = lower(m, inner)
