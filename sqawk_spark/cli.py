@@ -409,24 +409,21 @@ def _local_bytes(paths: list[str]) -> int | None:
 _BYTE_SIZE = r"([0-9]+)([kmgtp]?)b?"
 _BYTE_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
 
-# the starting partition counts of a run: AQE's initial shuffle
-# partitions, and the partitions of a local relation (a -dbfile
-# read-back) or of a file scan's size split
-_SIZED_CONFS = (
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-    "spark.sql.leafNodeDefaultParallelism",
-)
+# AQE's starting shuffle partition count (read only while partition
+# coalescing is on). leafNodeDefaultParallelism stays as it is: it
+# also sets a file scan's split size.
+_INITIAL_PARTITIONS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
 
 def _size_partitions(spark, paths: list[str]) -> dict[str, str | None]:
-    """Start the run's shuffles and local relations at ⌈input bytes ÷
-    the advisory partition size⌉ partitions, clamped to [1,
+    """Start the run's shuffles at ⌈input bytes ÷ the advisory
+    partition size⌉ partitions, clamped to [1,
     ``spark.sql.shuffle.partitions``], so a small input plans one
-    partition: an ORDER BY's range exchange then samples nothing, and
-    a Python stage runs once. Inputs of ``shuffle.partitions`` ×
-    advisory size or more start where they did. Returns the settings'
-    previous values (None: unset) for the caller to restore; sets
-    nothing when a size cannot be read."""
+    shuffle partition: an ORDER BY's range exchange then samples
+    nothing, and a Python stage runs once. Inputs of
+    ``shuffle.partitions`` × advisory size or more start where they
+    did. Returns ``{setting: previous value}`` (None: unset) for the
+    caller to restore; sets nothing when a size cannot be read."""
     conf = spark.conf
     total = _local_bytes(paths)
     size = re.fullmatch(
@@ -438,9 +435,8 @@ def _size_partitions(spark, paths: list[str]) -> dict[str, str | None]:
         return {}
     n = -(-total // advisory)
     n = min(max(n, 1), int(conf.get("spark.sql.shuffle.partitions")))
-    previous = {k: conf.get(k, None) for k in _SIZED_CONFS}
-    for k in _SIZED_CONFS:
-        conf.set(k, str(n))
+    previous = {_INITIAL_PARTITIONS: conf.get(_INITIAL_PARTITIONS, None)}
+    conf.set(_INITIAL_PARTITIONS, str(n))
     return previous
 
 

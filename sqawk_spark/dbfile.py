@@ -173,8 +173,18 @@ def _persist_mutations_sqlite(
                 f"INSERT INTO {name} ({', '.join(df.columns)}) "
                 f"VALUES ({','.join('?' * len(df.columns))})"
             )
+            # a view Spark folds into a local relation (DML over a
+            # read-back that fit one batch) holds its rows driver-side
+            # already: collect() hands them over without a Spark job,
+            # where toLocalIterator runs one per partition
+            local = (
+                df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+                == "LocalRelation"
+            )
             batch: list[list] = []
-            for row in df.toLocalIterator(prefetchPartitions=True):
+            for row in df.collect() if local else df.toLocalIterator(
+                prefetchPartitions=True
+            ):
                 batch.append(list(row))
                 if len(batch) >= 10_000:
                     con.executemany(ins, batch)
@@ -273,45 +283,20 @@ def _persist_sqlite(
         views: dict[str, list[str]] = {}
         for name in names:
             info = con.execute(f"PRAGMA table_info({name})").fetchall()
-            mixed = _mixed_class_columns(con, name, info)
-            for c in mixed:
-                classes[c.lower()] = "dynamic"
             schema = StructType(
                 [
                     StructField(
-                        r[1],
-                        _FROM_SQLITE.get((r[2] or "").upper(), StringType())
-                        if r[1] not in mixed
-                        else StringType(),
+                        r[1], _FROM_SQLITE.get((r[2] or "").upper(), StringType())
                     )
                     for r in info
                 ]
             )
-            _register_sqlite_table(spark, con, name, schema)
+            for c in _register_sqlite_table(spark, con, name, schema):
+                classes[c.lower()] = "dynamic"
             views[name] = [r[1] for r in info]
         return views
     finally:
         con.close()
-
-
-def _mixed_class_columns(con, name: str, info: list[tuple]) -> set[str]:
-    """The INTEGER and REAL columns of table ``name`` that hold a value
-    of another storage class. A declared type is only an affinity, so
-    SQLite keeps 'abc' or 1.5 under INTEGER and text under REAL; such a
-    column reads back as text, each value as sqlite3 prints it."""
-    # typeof() names the class of such a column's own values as its
-    # declared type does: 'integer', 'real'
-    typed = [
-        (r[1], r[2].lower()) for r in info if (r[2] or "").upper() in _FROM_SQLITE
-    ]
-    if not typed:
-        return set()
-    probes = ", ".join(
-        "max(typeof(\"{}\") NOT IN ('{}', 'null'))".format(c.replace('"', '""'), cls)
-        for c, cls in typed
-    )
-    row = con.execute(f"SELECT {probes} FROM {name}").fetchone()
-    return {c for (c, _), hit in zip(typed, row) if hit}
 
 
 _READBACK_BATCH = 50_000
@@ -332,40 +317,78 @@ def clear_spill_dirs() -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
+class _MixedClass(Exception):
+    """A read-back batch holds, in a column declared INTEGER or REAL,
+    values of another storage class."""
+
+    def __init__(self, columns: set[str]):
+        super().__init__(", ".join(sorted(columns)))
+        self.columns = columns
+
+
+# the one Python type sqlite3 gives each value of a numeric field
+_PY_TYPE = {LongType: int, DoubleType: float}
+
+
 def _arrow_batch(rows: list[tuple], schema: StructType):
-    """One fetchmany batch as a ``pyarrow.Table`` of ``schema``, with
-    the values ``createDataFrame(rows, schema)`` would give: every row
-    passes the same type verifier first (a REAL value in an INTEGER
-    column raises; Arrow's int64 conversion alone would truncate 1.5
-    to 1), and a string column holds ``str(v)`` of a non-text value
-    (``5`` → ``'5'``, ``1.5`` → ``'1.5'``, ``b'ab'`` → ``"b'ab'"``)."""
+    """One fetchmany batch as a ``pyarrow.Table`` of ``schema``. A
+    string column holds ``str(v)`` of a non-text value (``5`` →
+    ``'5'``, ``1.5`` → ``'1.5'``, ``b'ab'`` → ``"b'ab'"``), as sqlite3
+    prints it. A LongType (DoubleType) column holding anything but
+    Python ints (floats) raises ``_MixedClass``: Arrow's int64
+    conversion alone would truncate 1.5 to 1."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _make_type_verifier
 
-    verify = _make_type_verifier(schema)
-    for r in rows:
-        verify(r)
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
-    arrays = []
+    arrays, mixed = [], set()
     for field, type_, col in zip(schema.fields, arrow_schema.types, columns):
-        if isinstance(field.dataType, StringType):
+        want = _PY_TYPE.get(type(field.dataType))
+        if want is None:
             col = [v if v is None or isinstance(v, str) else str(v) for v in col]
+        elif any(v is not None and type(v) is not want for v in col):
+            mixed.add(field.name)
+            continue
         arrays.append(pa.array(col, type=type_))
+    if mixed:
+        raise _MixedClass(mixed)
     return pa.Table.from_arrays(arrays, schema=arrow_schema)
 
 
-def _register_sqlite_table(spark, con, name: str, schema: StructType) -> None:
+def _register_sqlite_table(spark, con, name: str, schema: StructType) -> set[str]:
     """Register an existing SQLite table as a temp view with bounded
-    driver memory. A table that fits one fetchmany batch (the CLI
-    norm) becomes one Arrow local relation: no Python RDD, so no
-    query over the view starts a Python worker, and Catalyst folds
-    projections and filters into the relation. A larger table spills
-    to one parquet file written driver-side, one row group per batch,
-    so the driver never holds more than one batch and the view scans
-    the rows in SQLite's rowid order (Spark orders the splits of
-    several part files by size, not by name)."""
+    driver memory; returns the columns read back as text. A declared
+    INTEGER or REAL type is only an affinity, so SQLite keeps 'abc'
+    or 1.5 under INTEGER and text under REAL: a batch holding such a
+    value starts the read over with that column as text, each value
+    as sqlite3 prints it (the caller classes it dynamic)."""
+    mixed: set[str] = set()
+    while True:
+        typed = StructType(
+            [
+                StructField(f.name, StringType()) if f.name in mixed else f
+                for f in schema.fields
+            ]
+        )
+        try:
+            _read_back(spark, con, name, typed)
+            return mixed
+        except _MixedClass as e:
+            mixed |= e.columns
+
+
+def _read_back(spark, con, name: str, schema: StructType) -> None:
+    """Table ``name`` as a temp view of ``schema``. A table that fits
+    one fetchmany batch (the CLI norm) becomes one Arrow local
+    relation: no Python RDD, so no query over the view starts a
+    Python worker, and Catalyst folds projections and filters into
+    the relation (so ``_persist_mutations_sqlite`` writes DML over it
+    back without a Spark job). A larger table spills to one parquet
+    file written driver-side, one row group per batch, so the driver
+    never holds more than one batch and the view scans the rows in
+    SQLite's rowid order (Spark orders the splits of several part
+    files by size, not by name)."""
     cur = con.execute(f"SELECT * FROM {name}")
     first = cur.fetchmany(_READBACK_BATCH)
     rest = cur.fetchmany(_READBACK_BATCH)
@@ -375,6 +398,7 @@ def _register_sqlite_table(spark, con, name: str, schema: StructType) -> None:
         ).createOrReplaceTempView(name)
         return
     import itertools
+    import shutil
     import tempfile
 
     import pyarrow.parquet as pq
@@ -386,7 +410,12 @@ def _register_sqlite_table(spark, con, name: str, schema: StructType) -> None:
         (first, rest), iter(lambda: cur.fetchmany(_READBACK_BATCH), [])
     )
     path = os.path.join(spill, "rows.parquet")
-    with pq.ParquetWriter(path, to_arrow_schema(schema)) as writer:
-        for batch in batches:
-            writer.write_table(_arrow_batch(batch, schema))
+    try:
+        with pq.ParquetWriter(path, to_arrow_schema(schema)) as writer:
+            for batch in batches:
+                writer.write_table(_arrow_batch(batch, schema))
+    except _MixedClass:
+        _SPILL_DIRS.remove(spill)
+        shutil.rmtree(spill, ignore_errors=True)
+        raise
     spark.read.parquet(spill).createOrReplaceTempView(name)

@@ -3138,6 +3138,9 @@ def rewrite_nullif_calls(stmt: str, classes: dict[str, str]) -> str:
 
 
 _SCALAR_MINMAX_RE = re.compile(r"\bsqawk_scalar_(min|max)\s*\(", re.IGNORECASE)
+_LOWER_MINMAX_RE = re.compile(
+    r"\bsqawk_(scalar|mixed)_(min|max)\s*\(", re.IGNORECASE
+)
 
 
 def _aff_family(d: tuple[str, str] | None) -> str | None:
@@ -3155,35 +3158,86 @@ def _aff_family(d: tuple[str, str] | None) -> str | None:
     return "integer" if val == "long" else "dynamic"
 
 
-def rewrite_scalar_minmax(stmt: str, classes: dict[str, str]) -> str:
+# calls whose SQLite result is TEXT (or NULL) whatever their
+# arguments, as rewrite_scalar_calls leaves them (upper/lower lower to
+# translate, two-argument trim to TRIM(... FROM ...))
+_TEXT_RESULT_RE = re.compile(
+    r"(?:substr|substring|sqlite_substr[23]|translate|trim|ltrim|rtrim"
+    r"|replace|printf|format|char|hex|quote|typeof|concat)\s*\(",
+    re.IGNORECASE,
+)
+
+
+def _minmax_classify(a: str, classes: dict[str, str]) -> tuple[str, str] | None:
+    """``_aff_classify`` of a scalar min/max argument, where one whole
+    text-returning call (``substr(a3, 1, 1)``) is always-text: keyed
+    by its look, its '1' would sort as a number."""
+    d = _aff_classify(a, classes)
+    if d is None:
+        m = _TEXT_RESULT_RE.match(a)
+        if m is not None and sqllex.close_paren(a, m.end() - 1) == len(a):
+            return ("agg", "text")
+    return d
+
+
+def mark_mixed_minmax(stmt: str, classes: dict[str, str]) -> str:
     """``sqawk_scalar_min`` / ``sqawk_scalar_max`` (SQLite's scalar
-    min/max, renamed by ``rewrite_scalar_calls``) → the winning
-    argument by SQLite's value order, NULL when any argument is NULL.
-    Arguments of one storage class (or none classifiable; a NULL
-    literal aside) keep Spark's ``least`` / ``greatest`` and its
-    type. Mixed classes cannot: those need one type, so text and
-    numbers clash (``min(a3, 5)``) and an INTEGER winner over a REAL
-    argument becomes a real (``max(1.5, 2)`` → 2.0). There each
-    argument gets its order-preserving storage-class key and its
-    SQLite text, and ``least`` / ``greatest`` over ``(key, position,
-    text)`` structs picks it: numbers before text, and on a tie the
-    last argument for min and the first for max, as SQLite's
-    minmaxFunc scans. The result is the winner's text. Runs after the
-    comparison passes, like the nullif lowering, so the key SQL is
-    never rescanned."""
+    min/max, renamed by ``rewrite_scalar_calls``) whose arguments mix
+    storage classes (or include an unclassifiable one; a NULL literal
+    aside: it makes the result NULL anyway) → ``sqawk_mixed_min`` /
+    ``sqawk_mixed_max``. Spark's ``least`` / ``greatest`` need one
+    type, so text and numbers clash (``min(a3, 5)``) and an INTEGER
+    winner over a REAL argument becomes a real (``max(1.5, 2)`` →
+    2.0); ``rewrite_scalar_minmax`` lowers a mixed call to the
+    winner's SQLite text instead, whose class varies per row. The
+    choice is made once, here, before any storage-class pass: those
+    classify a mixed call as a dynamic value without affinity
+    (``_aff_classify``), so ORDER BY, aggregate min/max and
+    comparisons key it by class."""
 
     def lower(m: re.Match[str], inner: str) -> str | None:
         args = [a.strip() for a in sqllex.split_top(inner)]
-        fn = "least" if m.group(1).lower() == "min" else "greatest"
-        null_guard = " OR ".join(f"({a}) IS NULL" for a in args)
-        ds = [_aff_classify(a, classes) for a in args]
-        # a NULL argument makes the result NULL whatever the others are
         families = {
-            _aff_family(d) for a, d in zip(args, ds) if a.lower() != "null"
+            _aff_family(_minmax_classify(a, classes))
+            for a in args
+            if a.lower() != "null"
         }
         if len(families) <= 1 and "dynamic" not in families:
+            return None
+        return _renamed(m, f"sqawk_mixed_{m.group(1).lower()}")
+
+    return _rewrite_calls(stmt, _SCALAR_MINMAX_RE, lower)
+
+
+def _is_mixed_minmax(t: str) -> bool:
+    """Is ``t`` one whole ``sqawk_mixed_min`` / ``sqawk_mixed_max``
+    call?"""
+    m = re.match(r"sqawk_mixed_(?:min|max)\s*\(", t, re.IGNORECASE)
+    return m is not None and sqllex.close_paren(t, m.end() - 1) == len(t)
+
+
+def rewrite_scalar_minmax(stmt: str, classes: dict[str, str]) -> str:
+    """``sqawk_scalar_*`` / ``sqawk_mixed_*`` min and max (SQLite's
+    scalar min/max, renamed by ``rewrite_scalar_calls`` and
+    ``mark_mixed_minmax``) → the winning argument by SQLite's value
+    order, NULL when any argument is NULL. A call over one storage
+    class keeps Spark's ``least`` / ``greatest`` and its type. In a
+    mixed call each argument gets its order-preserving storage-class
+    key and its SQLite text, and ``least`` / ``greatest`` over
+    ``(key, position, text)`` structs picks it: numbers before text,
+    and on a tie the last argument for min and the first for max, as
+    SQLite's minmaxFunc scans. The result is the winner's text. Runs
+    after the comparison passes, like the nullif lowering, so the key
+    SQL is never rescanned."""
+
+    def lower(m: re.Match[str], inner: str) -> str | None:
+        args = [a.strip() for a in sqllex.split_top(inner)]
+        fn = "least" if m.group(2).lower() == "min" else "greatest"
+        null_guard = " OR ".join(f"({a}) IS NULL" for a in args)
+        if m.group(1).lower() == "scalar":
             picked = f"{fn}({', '.join(args)})"
         else:
+            ds = [_minmax_classify(a, classes) for a in args]
             picked = fn + "(" + ", ".join(
                 f"named_struct('k', {_minmax_key(a, d)}, "
                 f"'p', {len(args) - i}, 'v', {_minmax_text(a, d)})"
@@ -3191,7 +3245,7 @@ def rewrite_scalar_minmax(stmt: str, classes: dict[str, str]) -> str:
             ) + ").v"
         return f"(CASE WHEN {null_guard} THEN NULL ELSE {picked} END)"
 
-    return _rewrite_calls(stmt, _SCALAR_MINMAX_RE, lower)
+    return _rewrite_calls(stmt, _LOWER_MINMAX_RE, lower)
 
 
 def _minmax_key(a: str, d: tuple[str, str] | None) -> str:
@@ -3599,6 +3653,11 @@ def _aff_classify(
         cls = classes.get(m.group(1).split(".")[-1].lower())
         if cls in ("long", "dynamic", "text", "none"):
             return ("agg", cls)
+    # a scalar min/max over mixed storage classes yields the winner's
+    # SQLite text, its class varying per row; a function result, it
+    # has no affinity
+    if _is_mixed_minmax(t):
+        return ("agg", "dynamic")
     return None
 
 
@@ -3864,7 +3923,9 @@ def _aff_order_key_core(core: str, classes: dict[str, str]) -> str | None:
     final strip (bytewise order over the folded strings)."""
     inner, folded = _unwrap_nocase(core)
     d = _aff_classify(inner, classes)
-    if d == ("col", "dynamic"):
+    if d == ("col", "dynamic") or (
+        d == ("agg", "dynamic") and _is_mixed_minmax(inner.strip())
+    ):
         return _aff_key_col_sql(inner.strip(), "dynamic", fold=folded)
     if folded and d == ("col", "long"):
         return inner.strip()
@@ -4272,7 +4333,7 @@ def rewrite_affinity_minmax(stmt: str, classes: dict[str, str]) -> str:
             if not (
                 _AFF_IDENT_RE.match(arg)
                 and _aff_classify(arg, classes) == ("col", "dynamic")
-            ):
+            ) and not _is_mixed_minmax(arg):
                 # FILTER-lowered argument: the filtered subset still
                 # picks its winner by storage-class order
                 fc = _aff_filter_case_parts(arg)
@@ -4628,7 +4689,11 @@ def _parse_arith_chain(text: str, classes: dict[str, str]):
                 return None  # NUMERIC/TEXT casts: per-value class
         else:
             d = _aff_classify(tok, classes)
-            if d is None or d[0] not in ("col", "numlit"):
+            if d == ("agg", "dynamic") and _is_mixed_minmax(tok):
+                # scalar min/max over mixed classes: a per-row-class
+                # value without affinity, like a scalar subquery's
+                d = ("subq", "dynamic")
+            elif d is None or d[0] not in ("col", "numlit"):
                 return None
         tokens.append((sign, tok, d))
         k = _skip_ws(s, end)
@@ -5433,7 +5498,7 @@ def _collect_item_alias_classes(
     for item in span[2]:
         gm = re.match(
             r"^\s*(min|max|count|group_concat(?:2|_distinct(?:_nocase)?)?"
-            r"|min_by|max_by)\s*\(",
+            r"|min_by|max_by|sqawk_mixed_(?:min|max))\s*\(",
             item,
             re.IGNORECASE,
         )
@@ -5453,6 +5518,10 @@ def _collect_item_alias_classes(
             continue
         if fn.startswith("group_concat"):
             extras[alias] = "text"
+            continue
+        if fn.startswith("sqawk_mixed"):
+            # scalar min/max over mixed classes: the winner's text
+            extras[alias] = "dynamic"
             continue
         arg = item[gm.end() : close - 1].strip()
         if fn.endswith("_by"):
@@ -6172,6 +6241,8 @@ def _stringify_expr(
             return f"'{float(t)!r}'", "dyn"
         if kind != "agg":
             return None
+        if _is_mixed_minmax(b):
+            return b, "dyn"  # the winner's SQLite text
         # 'agg' (bare min/max over a classed column) falls through to
         # the aggregate-residue branch below — returning None here
         # made the caller stringify the whole ALIASED item, swallowing
@@ -7826,6 +7897,7 @@ def rewrite_statement(
     # user-SQL-only scalar exactness (before the affinity/date passes,
     # whose emitted lower()/round() probes must stay native)
     stmt = rewrite_scalar_calls(stmt)
+    stmt = mark_mixed_minmax(stmt, classes or {})
     # after scalar min/max lowering: any remaining 1-arg min/max is an
     # aggregate, which is what the bare-column rule keys on
     stmt = rewrite_bare_minmax_columns(stmt, classes or {})

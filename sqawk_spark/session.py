@@ -10,9 +10,9 @@ chosen so the same logical plans scale to a multi-executor cluster:
   The CLI sizes each run's initial count from its input bytes
   (``cli._size_partitions``): ⌈bytes ÷ the advisory partition size⌉,
   clamped to [1, ``shuffle.partitions``], set for the run as AQE's
-  ``coalescePartitions.initialPartitionNum`` and as
-  ``leafNodeDefaultParallelism``, then restored. A small input plans
-  one partition, so an ORDER BY's range exchange samples nothing.
+  ``coalescePartitions.initialPartitionNum``, then restored. A small
+  input plans one shuffle partition, so an ORDER BY's range exchange
+  samples nothing. File scans keep Spark's own split sizing.
 - Arrow enabled: every Pandas-UDF hop is Arrow-batched, never per-row.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 """

@@ -1129,6 +1129,7 @@ _CALL_SITE_PASSES = [
     "rewrite_date_calls",
     "rewrite_typeof_calls",
     "rewrite_nullif_calls",
+    "mark_mixed_minmax",
     "rewrite_scalar_minmax",
 ]
 
@@ -1211,12 +1212,16 @@ def test_scalar_minmax_mixed_classes_vs_sqlite(tmp_path):
     """Scalar min/max picks its winner by SQLite's value order (NULL
     if any argument is NULL, numbers before text) and returns it in
     its own class: text beside numbers raised DATATYPE_MISMATCH, and
-    an INTEGER winner over a REAL argument printed as a real."""
+    an INTEGER winner over a REAL argument printed as a real. The
+    winner's class varies per row, so ORDER BY, aggregate min/max,
+    comparisons, arithmetic and compounds over it go by class (10
+    sorts after 2)."""
     from tests.test_load_path import run, sqlite_awk
 
+    lines = [*_NESTED_LINES, "10 12 10"]
     f = tmp_path / "n.txt"
-    f.write_text("\n".join(_NESTED_LINES) + "\n")
-    recs = [ln.split() for ln in _NESTED_LINES]
+    f.write_text("\n".join(lines) + "\n")
+    recs = [ln.split() for ln in lines]
     for q in [
         "select min(a3, 5) from a",
         "select min(substr(a3, 1, 1), a1) from a",
@@ -1227,8 +1232,15 @@ def test_scalar_minmax_mixed_classes_vs_sqlite(tmp_path):
         "select max(a1, null), min(a3, a4, 1) from a",
         "select min(a1, a2), max(a1, a2), max('b', a3), min(a1, 3) from a",
         "select max(a1, 1.5) + 1, typeof(max(a1, 1.5)) from a",
+        "select a1 from a order by max(a1, 1.5)",
+        "select max(a1, 1.5) as m from a order by m desc",
+        "select a1, min(a3, 5) from a order by 2, 1",
+        "select max(max(a1, 1.5)), min(max(a1, 1.5)), max(min(a3, 5)) from a",
+        "select a1 from a where max(a3, 5) > 7 and max(a1, 1.5) <> '2'",
+        "select max(a1, 1.5) * 2, -min(a3, 5), max(a1, 1.5) / 2 from a",
+        "select max(a1, 1.5) from a union select 3 order by 1",
     ]:
-        assert run([q, str(f)]) == sqlite_awk(q, _NESTED_LINES, recs), q
+        assert run([q, str(f)]) == sqlite_awk(q, lines, recs), q
 
 
 def test_string_agg_collate_vs_sqlite(tmp_path):

@@ -356,6 +356,17 @@ def test_dbfile_spilled_readback_keeps_rowid_order(tmp_path, monkeypatch):
         assert run(["-dbfile", db, "-noinput", q]) == _sqlite_out(db, q), q
 
 
+def test_spilled_readback_mixed_class_column(tmp_path, monkeypatch):
+    """A value of another storage class found in a later spilled batch
+    starts the read-back over with its column as text, so the rows
+    already spilled print as sqlite3 prints them too."""
+    monkeypatch.setattr(dbfile, "_READBACK_BATCH", 100)
+    rows = [(i, "abc" if i == 250 else i * 7 % 40, f"w{i}") for i in range(1, 301)]
+    db = _sqlite_db(tmp_path / "t.db", "k INTEGER, i INTEGER, t TEXT", rows)
+    for q in ["select k, i from x where i > 35 or k > 248", "select k from x order by i desc, k limit 5"]:
+        assert run(["-dbfile", db, "-noinput", q]) == _sqlite_out(db, q), q
+
+
 def test_prefetched_order_by_streams_in_order(spark, tmp_path, monkeypatch):
     """An ORDER BY over several result partitions, drained with
     prefetch, prints SQLite's order byte for byte."""
@@ -418,9 +429,10 @@ def _run_counting_jobs(spark, argv: list[str]) -> tuple[str, int]:
 
 def test_warm_run_job_budget(spark, tmp_path, monkeypatch):
     """A warm run over small inputs lists no catalog (two jobs per
-    listing) and samples no range partitioner: its shuffles and local
-    relations start at one partition, so an ORDER BY's exchange
-    samples nothing and the Python stage under it runs once."""
+    listing) and samples no range partitioner: its shuffles start at
+    one partition, so an ORDER BY's exchange samples nothing and the
+    Python stage under it runs once, and a -dbfile read-back mutated
+    by DML is written back without a job."""
     listed: list[tuple] = []
     orig = Catalog.listTables
 
@@ -484,11 +496,14 @@ def test_warm_run_job_budget(spark, tmp_path, monkeypatch):
     assert all(n <= limit for n, limit in zip(jobs, (5, 7, 3))), jobs
 
 
-_SIZED = cli._SIZED_CONFS
+_SIZED = (cli._INITIAL_PARTITIONS,)
+# a file scan's split size and a local relation's partitions follow
+# this one; the run leaves it alone
+_LEAF = "spark.sql.leafNodeDefaultParallelism"
 
 
 def test_sized_settings_restored(spark, tmp_path):
-    """Both starting-partition settings read as before the run after a
+    """The starting-partition setting reads as before the run after a
     run that succeeds and after one that raises."""
     f = tmp_path / "a.txt"
     f.write_text("1 x\n2 y\n")
@@ -518,7 +533,7 @@ def test_starting_partitions_follow_input_bytes(spark, tmp_path, monkeypatch, ad
     orig = TableLoader.finalize
 
     def finalize(self):
-        seen.append({k: spark.conf.get(k, None) for k in _SIZED})
+        seen.append({k: spark.conf.get(k, None) for k in (*_SIZED, _LEAF)})
         return orig(self)
 
     monkeypatch.setattr(TableLoader, "finalize", finalize)
@@ -545,5 +560,5 @@ def test_starting_partitions_follow_input_bytes(spark, tmp_path, monkeypatch, ad
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-    assert seen == [{k: want for k in _SIZED}]
+    assert seen == [{**{k: want for k in _SIZED}, _LEAF: None}]
     assert got == sqlite_awk(q, lines, [ln.split(" ") for ln in lines])
