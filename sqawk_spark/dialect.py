@@ -19,11 +19,19 @@ top-level clause bodies come from sqawk_spark/sqllex.py, which
 computes them once per distinct string.  Passes match keywords and
 operators on token boundaries outside quoted tokens.
 
-Function-call lowerings (aliases, group_concat, regexp/regsub/glob,
-the scalar functions, the date family, typeof, nullif) go through one
-call-site walker, ``_rewrite_calls``: each pass supplies only the
-lowering of one call, and the walker finds the calls, keeps or
-replaces them and visits the calls nested inside either.
+Every call site and keyword-paren site (``over (``, ``filter (``,
+``in (``, ``values (``, ``like(``, ``iif(``, ``cast(``, ...) goes
+through one call-site walker, ``_rewrite_calls``: each pass supplies
+only the lowering of one call, and the walker decides what a call is
+(outside quoted tokens, not the tail of a longer identifier, its
+paren closed), keeps or replaces it and visits the calls nested
+inside either.  A lowering whose edit owns text around the paren
+group (the aggregate before ``FILTER (``, the operand before
+``IN (``, the ``OVER (...)`` after an aggregate, the rows after
+``VALUES (``) returns a ``(start, end, text)`` edit instead of the
+call's replacement, and the walker scans again from ``start``.
+``_over_spans`` is the one other reader of paren groups: it lists
+the window specifications without editing them.
 """
 
 from __future__ import annotations
@@ -53,21 +61,30 @@ _NAME_RE = re.compile(_NAME)
 _CHAIN = _ID_START + _with_non_ascii("A-Za-z_0-9$.") + "*"
 
 
+# a lowering's result: the call's replacement, a (start, end, text)
+# edit of the text around it, or None to keep it
+_Lowered = str | tuple[int, int, str] | None
+
+
 def _rewrite_calls(
     stmt: str,
     call_re: re.Pattern[str],
-    lower: Callable[[re.Match[str], str], str | None],
+    lower: Callable[[re.Match[str], str], _Lowered],
 ) -> str:
-    """Lower the calls ``call_re`` (ending at the call's ``(``)
-    matches outside quoted tokens, left to right; a name that is the
-    tail of a longer identifier (``my_substr(``, ``t.max(``) is not a
-    call.  ``lower(m, inner)`` gets the match on the current text and
-    the text between the call's parens, and returns the replacement
-    of the whole call, or None to keep it, in which case the scan goes
-    on inside its arguments.  A replacement is scanned again from its
-    start, so the calls it embeds are lowered too.  A call whose paren
-    never closes is not a call: ``lower`` never sees it, and the scan
-    goes on inside it."""
+    """Lower the calls ``call_re`` (ending at the call's ``(``: a
+    function name, or a keyword that opens a paren group such as
+    ``over (``) matches outside quoted tokens, left to right; a name
+    that is the tail of a longer identifier (``my_substr(``,
+    ``t.max(``) is not a call.  ``lower(m, inner)`` gets the match on
+    the current text and the text between the call's parens, and
+    returns the replacement of the whole call, or None to keep it, in
+    which case the scan goes on inside its arguments.  An edit that
+    owns text around the call returns ``(start, end, text)`` instead:
+    ``text`` replaces ``stmt[start:end]``, with ``start <= m.start()``
+    and ``end`` at or past the call's close.  An edit is scanned again
+    from its start, so the calls it embeds are lowered too.  A call
+    whose paren never closes is not a call: ``lower`` never sees it,
+    and the scan goes on inside it."""
     pos = 0
     while True:
         for m in call_re.finditer(stmt, pos):
@@ -81,8 +98,10 @@ def _rewrite_calls(
             close = sqllex.close_paren(stmt, m.end() - 1)
             repl = lower(m, stmt[m.end() : close - 1])
             if repl is not None:
-                stmt = stmt[:at] + repl + stmt[close:]
-                pos = at
+                if isinstance(repl, str):
+                    repl = (at, close, repl)
+                pos, end, text = repl
+                stmt = stmt[:pos] + text + stmt[end:]
                 break
         else:
             return stmt
@@ -248,39 +267,37 @@ def rewrite_values_clause(stmt: str) -> str:
     round-12 probe).  INSERT statements keep their native VALUES."""
     if re.match(r"\s*(insert|replace)\b", stmt, re.IGNORECASE):
         return stmt
-    while True:
-        m = next(sqllex.finditer(_VALUES_RE, stmt), None)
-        if m is None:
-            return stmt
+
+    def lower(m: re.Match[str], inner: str) -> _Lowered:
+        s = m.string
         selects = []
         i = m.end() - 1
         while True:
-            close = sqllex.close_paren(stmt, i)
-            args = _split_call_args(stmt, i)
-            if not args or close <= i:
-                return stmt  # malformed: keep the loud native error
+            close = sqllex.close_paren(s, i)
+            args = _split_call_args(s, i)
+            if not args:
+                return None  # malformed: keep the loud native error
             selects.append(
                 "select " + ", ".join(a.strip() for a in args)
             )
-            j = _skip_ws(stmt, close)
-            if j < len(stmt) and stmt[j] == ",":
-                k = _skip_ws(stmt, j + 1)
-                if k < len(stmt) and stmt[k] == "(":
+            j = _skip_ws(s, close)
+            if j < len(s) and s[j] == ",":
+                k = _skip_ws(s, j + 1)
+                if k < len(s) and s[k] == "(":
                     i = k
                     continue
-                return stmt
+                return None
             break
         repl = " union all ".join(selects)
         if re.search(
-            r"\b(from|join)\s*$", stmt[: m.start()], re.IGNORECASE
-        ) or (
-            m.start() > 0
-            and stmt[: m.start()].rstrip().endswith(",")
-        ):
+            r"\b(from|join)\s*$", s[: m.start()], re.IGNORECASE
+        ) or (m.start() > 0 and s[: m.start()].rstrip().endswith(",")):
             # bare VALUES as a FROM-clause table (no parens of its
             # own): the union-all chain needs them
             repl = f"({repl})"
-        stmt = stmt[: m.start()] + " " + repl + " " + stmt[close:]
+        return m.start(), close, f" {repl} "
+
+    return _rewrite_calls(stmt, _VALUES_RE, lower)
 
 
 def _lower_group_concat(m: re.Match[str], inner: str) -> str | None:
@@ -727,24 +744,12 @@ def _strip_nocase(stmt: str) -> str:
     """Replace surviving markers with the literal fold — the right
     lowering wherever no class-aware pass claimed the operand
     (text-stored values compare bytewise after folding)."""
-    while True:
-        m = _RTRIM_CALL_RE.search(stmt)
-        if m is None:
-            break
-        close = sqllex.close_paren(stmt, m.end() - 1)
-        inner = stmt[m.end() : close - 1]
-        stmt = stmt[: m.start()] + f"rtrim({inner})" + stmt[close:]
-    while True:
-        m = _NOCASE_CALL_RE.search(stmt)
-        if m is None:
-            return stmt
-        close = sqllex.close_paren(stmt, m.end() - 1)
-        inner = stmt[m.end() : close - 1]
-        stmt = (
-            stmt[: m.start()]
-            + f"translate({inner}, '{_ASCII_UPPER}', '{_ASCII_LOWER}')"
-            + stmt[close:]
-        )
+    stmt = _rewrite_calls(
+        stmt, _RTRIM_CALL_RE, lambda m, inner: f"rtrim({inner})"
+    )
+    return _rewrite_calls(
+        stmt, _NOCASE_CALL_RE, lambda m, inner: _fold_sql(inner)
+    )
 
 
 _OVER_OPEN_RE = re.compile(r"\bover\s*\(", re.IGNORECASE)
@@ -760,6 +765,7 @@ def _over_spans(stmt: str) -> list[tuple[int, int]]:
 
 
 _LIKE_KW_RE = re.compile(r"\blike\b", re.IGNORECASE)
+_LIKE_CALL_RE = re.compile(r"\blike\s*\(", re.IGNORECASE)
 
 
 def _like_pattern_regex(pat: str, esc: str | None) -> str:
@@ -813,41 +819,29 @@ def rewrite_like_nocase(stmt: str) -> str:
     - non-literal pattern or escape (column patterns, ``||`` composed
       patterns): ``sqlite_like(P, X, E)`` — the registered UDF
       implementing patternCompare semantics (functions/__init__.py).
-    - function form ``like(P, X[, E])`` (callable in SQLite):
-      lowered to the same UDF.
+    - function form ``like(P, X[, E])`` (callable in SQLite; LIKE
+      after a keyword, a comma or nothing): lowered to the same UDF
+      first, by the call-site walker; the infix forms follow.
 
     Numeric operands pass through Spark's implicit string cast first,
     exactly as SQLite renders them to text."""
+
+    def lower_call(m: re.Match[str], inner: str) -> str | None:
+        if _like_lhs(m.string, m.start())[1]:
+            return None  # infix ``X LIKE (P)``
+        args = sqllex.split_top(inner)
+        if len(args) not in (2, 3):
+            return None
+        e = args[2] if len(args) == 3 else "CAST(NULL AS STRING)"
+        return f"sqlite_like({args[0]}, {args[1]}, {e})"
+
+    stmt = _rewrite_calls(stmt, _LIKE_CALL_RE, lower_call)
     matches = list(sqllex.finditer(_LIKE_KW_RE, stmt))
     n = len(stmt)
     for m in reversed(matches):
-        ls = _operand_back(stmt, m.start())
-        lhs = stmt[ls : m.start()].strip()
-        neg = ""
-        if lhs.lower() == "not":
-            ls2 = _operand_back(stmt, ls)
-            inner = stmt[ls2:ls].strip()
-            if inner and inner.lower() not in _KEYWORDS:
-                neg, ls, lhs = "NOT ", ls2, inner
-            else:
-                lhs = ""
-        if not lhs or lhs.lower() in _KEYWORDS:
-            # function-call position: SQLite's like(P, X[, E])
-            k0 = _skip_ws(stmt, m.end())
-            if k0 >= n or stmt[k0] != "(":
-                continue
-            close = sqllex.close_paren(stmt, k0)
-            args = _split_call_args(stmt, k0)
-            if args is None or len(args) not in (2, 3):
-                continue
-            e = (
-                args[2].strip()
-                if len(args) == 3
-                else "CAST(NULL AS STRING)"
-            )
-            repl = f"sqlite_like({args[0].strip()}, {args[1].strip()}, {e})"
-            stmt = stmt[: m.start()] + repl + stmt[close:]
-            continue
+        ls, lhs, neg = _like_lhs(stmt, m.start())
+        if not lhs:
+            continue  # function-call position
         rend = _extend_concat_fwd(stmt, _operand_fwd(stmt, m.end()))
         rhs = stmt[m.end() : rend].strip()
         if not rhs:
@@ -891,6 +885,21 @@ def rewrite_like_nocase(stmt: str) -> str:
     return stmt
 
 
+def _like_lhs(s: str, at: int) -> tuple[int, str, str]:
+    """(start, text, 'NOT ' or '') of the left operand of the LIKE
+    keyword at ``s[at]``; the text is empty where LIKE is in
+    function-call position (after a keyword, a comma or nothing)."""
+    ls = _operand_back(s, at)
+    lhs = s[ls:at].strip()
+    if lhs.lower() == "not":
+        ls2 = _operand_back(s, ls)
+        inner = s[ls2:ls].strip()
+        if inner and inner.lower() not in _KEYWORDS:
+            return ls2, inner, "NOT "
+        return ls, "", ""
+    return ls, "" if lhs.lower() in _KEYWORDS else lhs, ""
+
+
 def _extend_concat_back_like(s: str, ls: int) -> int:
     """Extend an operand start back over ``operand ||`` prefixes."""
     while True:
@@ -911,7 +920,9 @@ _POS_TERM_RE = re.compile(
 )
 
 
-def rewrite_positional_order_by(stmt: str) -> str:
+def rewrite_positional_order_by(
+    stmt: str, classes: dict[str, str]
+) -> str:
     """Top-level ``ORDER BY N`` in a plain (non-compound) scope →
     the Nth select item's alias (or its expression text): SQLite
     orders by the OUTPUT column — its storage class and collation —
@@ -919,7 +930,17 @@ def rewrite_positional_order_by(stmt: str) -> str:
     rendered strings bytewise ('' before -3; the compound wrapper
     fixed this for set ops in round 9, plain scopes in round 10).
     Unsubstitutable terms (``*`` items, out-of-range ordinals) stay
-    ordinals — Spark's sortByOrdinal handles them natively."""
+    ordinals — Spark's sortByOrdinal handles them natively.
+
+    Under SELECT DISTINCT, Spark's ORDER BY sees only the output
+    columns, so an unaliased expression's text does not resolve
+    there (``select distinct a1 + 0 … order by 1``).  Such a scope
+    becomes GROUP BY over its items, the same rows, where the
+    expression resolves against its grouping expression and the
+    output names stay Spark's own; where that is not the same query
+    (aggregates, windows, ``*``, or a dynamic column, whose value
+    identity rewrite_distinct_class_identity owns) the ordinal
+    stays."""
     if not re.search(r"\border\s+by\b", stmt, re.IGNORECASE):
         return stmt
     if _setop_cuts(stmt):
@@ -928,43 +949,47 @@ def rewrite_positional_order_by(stmt: str) -> str:
     if span is None:
         return stmt
     items = [it.strip() for it in span[2]]
-    ob = sqllex.clauses(stmt).body("order_by")
+    clauses = sqllex.clauses(stmt)
+    ob = clauses.body("order_by")
     if ob is None:
         return stmt
-    ob_start, ob_end = ob
-    terms = sqllex.split_top(stmt, ob_start, ob_end)
+    split = [_split_item_alias(it) for it in items]
+    distinct = re.search(r"\bdistinct\s*$", stmt[: span[0]], re.IGNORECASE)
+    group_ok = (
+        distinct is not None
+        and span[3]
+        and not {"group_by", "having", "window"} & set(clauses.names)
+        and not any(
+            "*" in e
+            or _MINMAX_AGG_RE.search(e)
+            or _OTHER_AGG_RE.search(e)
+            or _OVER_KW_RE.search(e)
+            or _aff_classify(e, classes) == ("col", "dynamic")
+            for e, _ in split
+        )
+    )
+    grouped = False
     out_terms = []
     changed = False
-    for term in terms:
+    for term in sqllex.split_top(stmt, *ob):
         m = _POS_TERM_RE.match(term.strip())
         ref = None
-        if m:
-            p = int(m.group(1)) - 1
-            if 0 <= p < len(items):
-                item = items[p]
-                am = _PROP_ALIAS_RE.match(item)
-                if am and am.group(2).lower() not in _KEYWORDS | {
-                    "null", "true", "false",
-                }:
-                    cand = am.group(1).strip()
-                    # 'not a1' must not split 'a1' off as an alias, and
-                    # 'a3 collate nocase' must not split off 'nocase'
-                    if (
-                        cand.count("(") == cand.count(")")
-                        and cand.lower() not in _KEYWORDS
-                        and not cand.lower().endswith("collate")
-                    ):
-                        ref = am.group(2)
-                if ref is None and item != "*" and not item.endswith("*"):
-                    if item.count("(") == item.count(")"):
-                        ref = item
-                # a bare integer-literal item would re-parse as a NEW
-                # ordinal ('select 2, a1 … order by 1' → 'order by 2'
-                # sorts by a1; 'select 42 … order by 1' → out-of-range
-                # error).  The original ordinal is already correct —
-                # position N names the constant — so keep it.
-                if ref is not None and re.fullmatch(r"\d+", ref.strip()):
-                    ref = None
+        if m and 0 < int(m.group(1)) <= len(items):
+            item = items[int(m.group(1)) - 1]
+            ref = _split_item_alias(item)[1]
+            if ref is None and not item.endswith("*"):
+                if item.count("(") == item.count(")"):
+                    ref = item
+            # a bare integer-literal item would re-parse as a NEW
+            # ordinal ('select 2, a1 … order by 1' → 'order by 2'
+            # sorts by a1; 'select 42 … order by 1' → out-of-range
+            # error).  The original ordinal is already correct —
+            # position N names the constant — so keep it.
+            if ref is not None and re.fullmatch(r"\d+", ref.strip()):
+                ref = None
+            if distinct and ref == item and not _AFF_IDENT_RE.match(item):
+                grouped = group_ok
+                ref = item if group_ok else None
         if ref is not None:
             out_terms.append(
                 f"{ref}{m.group(2) or ''}{m.group(3) or ''}"
@@ -974,9 +999,35 @@ def rewrite_positional_order_by(stmt: str) -> str:
             out_terms.append(term.strip())
     if not changed:
         return stmt
-    return (
-        stmt[:ob_start] + " " + ", ".join(out_terms) + " " + stmt[ob_end:]
-    )
+    if grouped:
+        keys = [e for e, _ in split if not re.fullmatch(r"\d+", e)]
+        ob_kw = clauses.first("order_by")[1]
+        stmt = (
+            stmt[: distinct.start()]
+            + stmt[distinct.end() : ob_kw]
+            + f"group by {', '.join(keys)} "
+            + stmt[ob_kw:]
+        )
+        ob = sqllex.clauses(stmt).body("order_by")
+    return f"{stmt[: ob[0]]} {', '.join(out_terms)} {stmt[ob[1] :]}"
+
+
+def _split_item_alias(item: str) -> tuple[str, str | None]:
+    """(expression, alias or None) of select item ``item``."""
+    am = _PROP_ALIAS_RE.match(item)
+    if am and am.group(2).lower() not in _KEYWORDS | {
+        "null", "true", "false",
+    }:
+        cand = am.group(1).strip()
+        # 'not a1' must not split 'a1' off as an alias, and
+        # 'a3 collate nocase' must not split off 'nocase'
+        if (
+            cand.count("(") == cand.count(")")
+            and cand.lower() not in _KEYWORDS
+            and not cand.lower().endswith("collate")
+        ):
+            return cand, am.group(2)
+    return item, None
 
 
 def _in_subselect(s: str, pos: int) -> bool:
@@ -1544,7 +1595,7 @@ _TRAILING_COLLATE_ANY_RE = re.compile(
     r"\s+collate\s+\w+\s*$", re.IGNORECASE
 )
 _COLLATE_IN_RE = re.compile(
-    r"\s+collate\s+nocase\s+(not\s+)?in\s*\(", re.IGNORECASE
+    r"(?<=\s)collate\s+nocase\s+(not\s+)?in\s*\(", re.IGNORECASE
 )
 
 
@@ -1573,77 +1624,62 @@ def rewrite_collate_positions(
     if not _COLLATE_ANY_RE.search(stmt):
         return stmt
     # --- aggregate arguments ---------------------------------------
-    while True:
-        edited = False
-        for m in sqllex.finditer(_COLLAGG_RE, stmt):
-            fn = m.group(1).lower()
-            close = sqllex.close_paren(stmt, m.end() - 1)
-            args = _split_call_args(stmt, m.end() - 1)
-            if not args:
-                continue
-            a0 = args[0]
-            pm = re.match(r"\s*(distinct|all)\s+", a0, re.IGNORECASE)
-            prefix = pm.group(1).lower() if pm else ""
-            core_t = a0[pm.end() :] if pm else a0
-            kind = True
-            tm = _TRAILING_COLLATE_RE.match(core_t.strip())
-            if tm is None:
-                tm = _TRAILING_RTRIM_RE.match(core_t.strip())
-                kind = "rtrim"
-            if tm is None or tm.group(1).count("(") != tm.group(
-                1
-            ).count(")"):
-                continue
-            core = tm.group(1).strip()
+    def lower_agg(m: re.Match[str], inner: str) -> str | None:
+        fn = m.group(1).lower()
+        args = sqllex.split_top(inner)
+        a0 = args[0]
+        pm = re.match(r"\s*(distinct|all)\s+", a0, re.IGNORECASE)
+        prefix = pm.group(1).lower() if pm else ""
+        core_t = a0[pm.end() :] if pm else a0
+        kind = True
+        tm = _TRAILING_COLLATE_RE.match(core_t.strip())
+        if tm is None:
+            tm = _TRAILING_RTRIM_RE.match(core_t.strip())
+            kind = "rtrim"
+        if tm is None or tm.group(1).count("(") != tm.group(1).count(")"):
+            return None
+        core = tm.group(1).strip()
 
-            def _fold_any(x, _k=kind):
-                return f"rtrim({x})" if _k == "rtrim" else _fold_sql(x)
-            rest = ", ".join(a.strip() for a in args[1:])
-            rest = f", {rest}" if rest else ""
-            if fn in ("min", "max") and not args[1:] and prefix != (
-                "distinct"
-            ):
-                # class-aware folded key: numbers order BEFORE text
-                # regardless of collation (NOCASE only folds the text
-                # component) — a bare fold-string key would compare
-                # '-0.5' < '-7' bytewise (fuzz seed 424243 script 95)
-                d = _aff_classify(core, classes)
-                if d is not None and d[0] in ("col", "agg"):
-                    treat = {
-                        "long": "num", "dynamic": "dynamic",
-                        "text": "text", "none": "text",
-                    }[d[1]]
-                    key = _aff_key_col_sql(core, treat, fold=kind)
-                else:
-                    key = _fold_any(f"CAST(({core}) AS STRING)")
-                arr = _scope_arrival_col(stmt, classes, deep_scan=True)
-                tie = (
-                    (f"(0 - {arr})" if fn == "max" else arr)
-                    if arr is not None
-                    else f"CAST(({core}) AS STRING)"
-                )
-                # NULL argument rows must not win: SQLite's min/max
-                # skip NULLs, min_by/max_by skip NULL keys
-                repl = (
-                    f"{fn}_by({core}, CASE WHEN ({core}) IS NULL "
-                    f"THEN NULL ELSE named_struct('k', {key}, "
-                    f"'a', {tie}) END)"
-                )
-            elif fn == "count" and prefix == "distinct":
-                repl = (
-                    f"count(distinct "
-                    f"{_fold_any(f'CAST(({core}) AS STRING)')})"
-                )
+        def _fold_any(x):
+            return f"rtrim({x})" if kind == "rtrim" else _fold_sql(x)
+
+        rest = ", ".join(a.strip() for a in args[1:])
+        rest = f", {rest}" if rest else ""
+        if fn in ("min", "max") and not args[1:] and prefix != "distinct":
+            # class-aware folded key: numbers order BEFORE text
+            # regardless of collation (NOCASE only folds the text
+            # component) — a bare fold-string key would compare
+            # '-0.5' < '-7' bytewise (fuzz seed 424243 script 95)
+            d = _aff_classify(core, classes)
+            if d is not None and d[0] in ("col", "agg"):
+                treat = {
+                    "long": "num", "dynamic": "dynamic",
+                    "text": "text", "none": "text",
+                }[d[1]]
+                key = _aff_key_col_sql(core, treat, fold=kind)
             else:
-                # numeric aggregates / concat payloads: the collation
-                # names a comparison sequence, a no-op for the value
-                pfx = f"{prefix} " if prefix else ""
-                repl = f"{fn}({pfx}{core}{rest})"
-            stmt = stmt[: m.start()] + repl + stmt[close:]
-            edited = True
-            break
-        if not edited:
-            break
+                key = _fold_any(f"CAST(({core}) AS STRING)")
+            arr = _scope_arrival_col(m.string, classes, deep_scan=True)
+            tie = (
+                (f"(0 - {arr})" if fn == "max" else arr)
+                if arr is not None
+                else f"CAST(({core}) AS STRING)"
+            )
+            # NULL argument rows must not win: SQLite's min/max
+            # skip NULLs, min_by/max_by skip NULL keys
+            return (
+                f"{fn}_by({core}, CASE WHEN ({core}) IS NULL "
+                f"THEN NULL ELSE named_struct('k', {key}, "
+                f"'a', {tie}) END)"
+            )
+        if fn == "count" and prefix == "distinct":
+            return f"count(distinct {_fold_any(f'CAST(({core}) AS STRING)')})"
+        # numeric aggregates / concat payloads: the collation names a
+        # comparison sequence, a no-op for the value
+        pfx = f"{prefix} " if prefix else ""
+        return f"{fn}({pfx}{core}{rest})"
+
+    stmt = _rewrite_calls(stmt, _COLLAGG_RE, lower_agg)
     # --- BETWEEN with a collated operand ----------------------------
     # A trailing COLLATE binds to the HI bound and governs only the
     # ``x <= hi`` comparison — ``x >= lo`` keeps x-vs-lo's BINARY
@@ -1679,26 +1715,19 @@ def rewrite_collate_positions(
     # equivalent OR-chain of collated equalities, which the
     # comparison-collate pass (next) owns.  Subquery lists are left
     # for Spark's loud error (no silent half-fold).
-    while True:
-        m = _COLLATE_IN_RE.search(stmt)
-        if m is None or sqllex.in_string(stmt, m.start()):
-            break
-        x_start = _operand_back(stmt, m.start())
-        x = stmt[x_start : m.start()].strip()
-        close = sqllex.close_paren(stmt, m.end() - 1)
-        items = _split_call_args(stmt, m.end() - 1)
-        if not x or not items or any(
+    def lower_in(m: re.Match[str], inner: str) -> _Lowered:
+        x_start = _operand_back(m.string, m.start())
+        x = m.string[x_start : m.start()].strip()
+        items = sqllex.split_top(inner)
+        if not x or any(
             re.match(r"\s*select\b", it, re.IGNORECASE) for it in items
         ):
-            break
-        neg = bool((m.group(1) or "").strip())
-        chain = " or ".join(
-            f"{x} = {it.strip()} collate nocase" for it in items
-        )
-        body = f"({chain})"
-        if neg:
-            body = f"not {body}"
-        stmt = stmt[:x_start] + " " + body + stmt[close:]
+            return None
+        chain = " or ".join(f"{x} = {it} collate nocase" for it in items)
+        body = f"not ({chain})" if m.group(1) else f"({chain})"
+        return x_start, m.end() + len(inner) + 1, " " + body
+
+    stmt = _rewrite_calls(stmt, _COLLATE_IN_RE, lower_in)
     # --- simple CASE with a collated base or WHEN operand ------------
     # ``case X when V ...`` compares X = V at each WHEN: lower to the
     # searched form (``case when X = V collate nocase ...``), which
@@ -2067,32 +2096,28 @@ def rewrite_filter_clause(stmt: str) -> str:
     one code path and makes ``... FILTER (WHERE ..) OVER w`` work —
     the window suffix sits after the replaced span and survives
     verbatim."""
-    matches = list(sqllex.finditer(_FILTER_RE, stmt))
-    # right-to-left: replacements never disturb earlier match offsets
-    for m in reversed(matches):
-        open_f = stmt.index("(", m.start())
-        close_f = sqllex.close_paren(stmt, open_f)
-        if close_f > len(stmt) or stmt[close_f - 1] != ")":
-            continue
-        inner = stmt[open_f + 1 : close_f - 1].strip()
-        if inner[:5].upper() != "WHERE" or (
-            len(inner) > 5 and _IDENT.match(inner[5])
+
+    def lower(m: re.Match[str], inner: str) -> _Lowered:
+        stmt = m.string
+        body = inner.strip()
+        if body[:5].upper() != "WHERE" or (
+            len(body) > 5 and _IDENT.match(body[5])
         ):
-            continue
-        cond = inner[5:].strip()
+            return None
+        cond = body[5:].strip()
         if not cond:
-            continue
+            return None
         call_start = _operand_back(stmt, m.start())
         call_text = stmt[call_start : m.start()].rstrip()
         if not call_text.endswith(")") or "(" not in call_text:
-            continue
+            return None
         p = call_text.index("(")
         fn = call_text[:p].strip()
         if not fn or not all(_IDENT.match(ch) for ch in fn):
-            continue
+            return None
         args = _split_call_args(call_text, p)
         if not args:
-            continue
+            return None
         head, rest = args[0], args[1:]
         distinct = ""
         # any whitespace (incl. newline) may follow the keyword —
@@ -2112,12 +2137,9 @@ def rewrite_filter_clause(stmt: str) -> str:
         new_args = ", ".join(
             [f"{distinct}CASE WHEN {cond} THEN {head} END"] + rest
         )
-        stmt = (
-            stmt[:call_start]
-            + f"{fn}({new_args})"
-            + stmt[close_f:]
-        )
-    return stmt
+        return call_start, m.end() + len(inner) + 1, f"{fn}({new_args})"
+
+    return _rewrite_calls(stmt, _FILTER_RE, lower)
 
 
 def _split_call_args(stmt: str, open_paren: int) -> list[str] | None:
@@ -2647,88 +2669,91 @@ def rewrite_groups_frames(stmt: str) -> str:
     windows, group_concat EXCLUDE with a non-literal separator — are
     left unrewritten so Spark raises a hard parse error instead of a
     silent wrong answer."""
-    windows: list[tuple[int, int, str]] = []  # (start, end, replacement)
     drs: list[str] = []
-    for m in sqllex.finditer(_OVER_OPEN_RE, stmt):
-        open_p = m.end() - 1
-        close = sqllex.close_paren(stmt, open_p)  # one past ')'
-        win = stmt[open_p + 1 : close - 1]
+    bailed = False
+
+    def lower(m: re.Match[str], win: str) -> _Lowered:
+        nonlocal bailed
         gm = next(sqllex.finditer(_GROUPS_KW_RE, win), None)
-        if gm is None:
-            continue
+        if bailed or gm is None:
+            return None
         ex_m = _EXCLUDE_RE.search(win)
-        if re.search(r"\bexclude\b", win, re.IGNORECASE) and ex_m is None:
-            return stmt  # malformed EXCLUDE — bail to Spark's error
         om = _ORDER_BY_RE.search(win)
-        if om is None or om.start() > gm.start():
-            return stmt  # GROUPS without ORDER BY is an SQLite error
+        if (
+            # malformed EXCLUDE, or GROUPS without ORDER BY (an SQLite
+            # error): bail to Spark's error
+            (re.search(r"\bexclude\b", win, re.IGNORECASE) and ex_m is None)
+            or om is None
+            or om.start() > gm.start()
+        ):
+            bailed = True
+            return None
         partition = win[: om.start()].strip()
         order = win[om.start() : gm.start()].strip()
         frame_body = win[gm.end() : ex_m.start() if ex_m else len(win)]
         kind = " ".join(ex_m.group(1).lower().split()) if ex_m else "no others"
-        if kind != "no others":
-            contains = _frame_contains_current_group(frame_body)
-            if contains is None:
-                return stmt  # non-literal frame bound — bail
-            if contains:
-                edit = _rewrite_excluded_agg(
-                    stmt, m.start(), close, partition,
-                    f"__grp{len(drs)}", frame_body, kind,
-                )
-                if edit is None:
-                    return stmt  # unsupported aggregate — bail hard
-                drs.append(
-                    f"dense_rank() over ({partition}"
-                    f"{' ' if partition else ''}{order}) as __grp{len(drs)}"
-                )
-                windows.append(edit)
-                continue
-            # current group outside the frame: EXCLUDE is a no-op —
-            # fall through with the clause stripped
         alias = f"__grp{len(drs)}"
-        drs.append(
+        dr = (
             f"dense_rank() over ({partition}{' ' if partition else ''}"
             f"{order}) as {alias}"
         )
-        frame = "range" + frame_body
-        new_win = (
-            f"{partition}{' ' if partition else ''}order by {alias} {frame}"
+        if kind != "no others":
+            contains = _frame_contains_current_group(frame_body)
+            edit = contains and _rewrite_excluded_agg(
+                m.string, m.start(), m.end() + len(win) + 1, partition,
+                alias, frame_body, kind,
+            )
+            if contains is None or edit is None:
+                # non-literal frame bound, unsupported aggregate
+                bailed = True
+                return None
+            if edit:
+                drs.append(dr)
+                return edit
+            # current group outside the frame: EXCLUDE is a no-op —
+            # fall through with the clause stripped
+        drs.append(dr)
+        return (
+            f"{m.group(0)}{partition}{' ' if partition else ''}"
+            f"order by {alias} range{frame_body})"
         )
-        windows.append((open_p + 1, close - 1, new_win))
-    if not windows:
-        return stmt
+
+    orig = stmt
+    stmt = _rewrite_calls(stmt, _OVER_OPEN_RE, lower)
+    if bailed or not drs:
+        return orig
 
     clauses = sqllex.clauses(stmt)
     names = clauses.names
     if names.count("from") != 1:
-        return stmt  # zero or several FROMs — not a shape we handle
+        return orig  # zero or several FROMs — not a shape we handle
     if any(n in ("group_by", "having", "window", "setop") for n in names):
         # Windows over grouped output rank a different rowset than the
         # base table; named WINDOW and set ops need real clause parsing.
         # Bail → Spark raises a hard error on the GROUPS keyword.
-        return stmt
+        return orig
     if names.count("where") > 1:
-        return stmt
+        return orig
 
     # FROM source runs to the next top-level clause (or end of stmt)
     fkw_end, from_end = clauses.body("from")
     fstart = _skip_ws(stmt, fkw_end)
     from_src = stmt[fstart:from_end].strip()
     if not from_src:
-        return stmt
+        return orig
 
-    where_edit: tuple[int, int, str] | None = None
+    where_edit: tuple[int, int] | None = None
     pred = None
     where_c = clauses.first("where")
     if where_c is not None:
         if where_c[1] < clauses.first("from")[1]:
-            return stmt  # WHERE before FROM — malformed; don't touch
+            return orig  # WHERE before FROM — malformed; don't touch
         wkw_start = where_c[1]
         wkw_end, w_end = clauses.body("where")
         pred = stmt[wkw_end:w_end].strip()
         if not pred:
-            return stmt
-        where_edit = (wkw_start, w_end, " ")
+            return orig
+        where_edit = (wkw_start, w_end)
 
     sub = f"(select *, {', '.join(drs)} from {from_src}"
     if pred is not None:
@@ -2746,12 +2771,9 @@ def rewrite_groups_frames(stmt: str) -> str:
     # trailing space: the replaced region [fstart, from_end) includes the
     # whitespace that separated the FROM source from the next clause
     sub += " "
-    edits = windows + [(fstart, from_end, sub)]
     if where_edit is not None:
-        edits.append(where_edit)
-    for start, end, repl in sorted(edits, reverse=True):
-        stmt = stmt[:start] + repl + stmt[end:]
-    return stmt
+        stmt = stmt[: where_edit[0]] + " " + stmt[where_edit[1] :]
+    return stmt[:fstart] + sub + stmt[from_end:]
 
 
 _FRAME_KW_RE = re.compile(r"\b(rows|range)\b", re.IGNORECASE)
@@ -2763,8 +2785,9 @@ def rewrite_plain_frame_excludes(stmt: str, classes: dict[str, str]) -> str:
     ≥ 3.28 accepts EXCLUDE on every frame type — lang_window.html
     §frame_exclusion; Spark parses EXCLUDE on none). Runs after
     rewrite_groups_frames, so any window still carrying EXCLUDE here
-    is ROWS- or RANGE-framed. All edits come from one scan of the
-    pristine statement; emitted SQL is never rescanned.
+    is ROWS- or RANGE-framed. The call-site walker visits each OVER
+    once more after its edit: the emitted windows carry no EXCLUDE,
+    and a frame swapped to GROUPS is kept by its position.
 
     Decompositions, each exact:
 
@@ -2808,100 +2831,93 @@ def rewrite_plain_frame_excludes(stmt: str, classes: dict[str, str]) -> str:
     real SQLite in tests/test_groups_property.py."""
     if not re.search(r"\bexclude\b", stmt, re.IGNORECASE):
         return stmt
-    edits: list[tuple[int, int, str]] = []
-    swapped = False
-    for m in sqllex.finditer(_OVER_OPEN_RE, stmt):
-        open_p = m.end() - 1
-        close = sqllex.close_paren(stmt, open_p)
-        win = stmt[open_p + 1 : close - 1]
-        if not re.search(r"\bexclude\b", win, re.IGNORECASE):
-            continue
+    swapped: set[int] = set()  # where a frame keyword became GROUPS
+    bailed = False
+
+    def lower(m: re.Match[str], win: str) -> _Lowered:
+        nonlocal bailed
+        if (
+            bailed
+            or m.start() in swapped
+            or not re.search(r"\bexclude\b", win, re.IGNORECASE)
+        ):
+            return None
         ex_m = next(sqllex.finditer(_EXCLUDE_RE, win), None)
-        if ex_m is None or win[ex_m.end() :].strip():
-            return stmt  # malformed / trailing text — Spark raises
         fm = next(sqllex.finditer(_FRAME_KW_RE, win), None)
-        if fm is None or fm.start() > ex_m.start():
-            return stmt  # no ROWS/RANGE frame — not a shape we handle
+        if (
+            # malformed / trailing text, or no ROWS/RANGE frame
+            ex_m is None
+            or win[ex_m.end() :].strip()
+            or fm is None
+            or fm.start() > ex_m.start()
+        ):
+            bailed = True
+            return None
         kw = fm.group(1).lower()
         kind = " ".join(ex_m.group(1).lower().split())
         frame_body = win[fm.end() : ex_m.start()].strip()
-        win_keep = win[: ex_m.start()].rstrip()
+        win_keep = f"{m.group(0)}{win[: ex_m.start()].rstrip()})"
         if kind == "no others":
-            edits.append((open_p + 1, close - 1, win_keep))
-            continue
+            return win_keep
         b = _frame_bounds(frame_body)
         if b is None:
-            return stmt  # dynamic bound — bail
-        s_off, e_off, b1, b2 = b
+            bailed = True  # dynamic bound
+            return None
+        s_off, e_off = b[:2]
         unb = (float("-inf"), float("inf"))
         if (kw == "range" and s_off in (unb[0], 0.0) and e_off in (0.0, unb[1])) or (
             kw == "rows" and s_off == unb[0] and e_off == unb[1]
         ):
-            edits.append(
-                (open_p + 1 + fm.start(), open_p + 1 + fm.end(), "groups")
-            )
-            swapped = True
-            continue
+            swapped.add(m.start())
+            return f"{m.group(0)}{win[: fm.start()]}groups{win[fm.end() :]})"
         om = next(sqllex.finditer(_ORDER_BY_RE, win), None)
-        if om is None or om.start() > fm.start():
-            return stmt  # frame precedes ORDER BY — malformed
-        outside = s_off > 0 or e_off < 0
-        if kw == "rows" and kind != "current row":
-            return stmt  # tie-order-dependent (see docstring)
-        if outside:
+        if (
+            om is None
+            or om.start() > fm.start()  # frame precedes ORDER BY
+            or kw == "rows" and kind != "current row"  # see docstring
+        ):
+            bailed = True
+            return None
+        if s_off > 0 or e_off < 0:
             # current row (and, for RANGE, its whole peer group at
             # value distance 0) is not in the frame: EXCLUDE no-op
-            edits.append((open_p + 1, close - 1, win_keep))
-            continue
+            return win_keep
         partition = win[: om.start()].strip()
         order_clause = win[om.start() : fm.start()].strip()
         key_expr = _ORDER_DIR_RE.sub("", win[om.end() : fm.start()].strip())
-        if kw == "range":
-            if "," in key_expr:
-                return stmt  # RANGE offsets need exactly one key
-            cls = (
-                classes.get(key_expr.split(".")[-1].lower())
-                if _AFF_IDENT_RE.match(key_expr)
-                else None
-            )
-            edit = _rewrite_excluded_agg(
-                stmt,
-                m.start(),
-                close,
-                partition,
-                key_expr,
-                frame_body,
-                kind,
-                order_by=order_clause,
-                frame_kw="range",
-                # 'long' is the load-time catalog's name for all-
-                # integer storage; 'integer' kept for direct callers.
-                # (The catalog never says 'integer', so min/max RANGE
-                # EXCLUDE used to bail — and Spark parse-error — on
-                # every real run: fuzz seed 424242 script 129.)
-                unit_gap=cls in ("integer", "long"),
-            )
-        else:
-            edit = _rewrite_excluded_agg(
-                stmt,
-                m.start(),
-                close,
-                partition,
-                order_clause,  # alias unused: self_contig skips peers
-                frame_body,
-                kind,
-                order_by=order_clause,
-                frame_kw="rows",
-                self_contig=True,
-            )
+        if kw == "range" and "," in key_expr:
+            bailed = True  # RANGE offsets need exactly one key
+            return None
+        edit = _rewrite_excluded_agg(
+            m.string,
+            m.start(),
+            m.end() + len(win) + 1,
+            partition,
+            # ROWS: alias unused, self_contig skips peers
+            key_expr if kw == "range" else order_clause,
+            frame_body,
+            kind,
+            order_by=order_clause,
+            frame_kw=kw,
+            # 'long' is the load-time catalog's name for all-integer
+            # storage; 'integer' kept for direct callers.  (The
+            # catalog never says 'integer', so min/max RANGE EXCLUDE
+            # used to bail — and Spark parse-error — on every real
+            # run: fuzz seed 424242 script 129.)
+            unit_gap=kw == "rows"
+            or bool(_AFF_IDENT_RE.match(key_expr))
+            and classes.get(key_expr.split(".")[-1].lower())
+            in ("integer", "long"),
+            self_contig=kw == "rows",
+        )
         if edit is None:
-            return stmt  # unsupported aggregate/key — bail hard
-        edits.append(edit)
-    if not edits:
+            bailed = True  # unsupported aggregate/key
+        return edit
+
+    out = _rewrite_calls(stmt, _OVER_OPEN_RE, lower)
+    if bailed:
         return stmt
-    for start, end, repl in sorted(edits, reverse=True):
-        stmt = stmt[:start] + repl + stmt[end:]
-    return rewrite_groups_frames(stmt) if swapped else stmt
+    return rewrite_groups_frames(out) if swapped else out
 
 
 def rewrite_double_quoted_idents(stmt: str, columns: set[str]) -> str:
@@ -3180,6 +3196,16 @@ def _minmax_classify(a: str, classes: dict[str, str]) -> tuple[str, str] | None:
     return d
 
 
+def _minmax_families(inner: str, classes: dict[str, str]) -> set[str | None]:
+    """The ``_aff_family`` of each argument of a scalar min/max call
+    (``inner``: the text between its parens), NULL literals aside."""
+    return {
+        _aff_family(_minmax_classify(a, classes))
+        for a in sqllex.split_top(inner)
+        if a.lower() != "null"
+    }
+
+
 def mark_mixed_minmax(stmt: str, classes: dict[str, str]) -> str:
     """``sqawk_scalar_min`` / ``sqawk_scalar_max`` (SQLite's scalar
     min/max, renamed by ``rewrite_scalar_calls``) whose arguments mix
@@ -3196,12 +3222,7 @@ def mark_mixed_minmax(stmt: str, classes: dict[str, str]) -> str:
     comparisons key it by class."""
 
     def lower(m: re.Match[str], inner: str) -> str | None:
-        args = [a.strip() for a in sqllex.split_top(inner)]
-        families = {
-            _aff_family(_minmax_classify(a, classes))
-            for a in args
-            if a.lower() != "null"
-        }
+        families = _minmax_families(inner, classes)
         if len(families) <= 1 and "dynamic" not in families:
             return None
         return _renamed(m, f"sqawk_mixed_{m.group(1).lower()}")
@@ -3240,7 +3261,7 @@ def rewrite_scalar_minmax(stmt: str, classes: dict[str, str]) -> str:
             ds = [_minmax_classify(a, classes) for a in args]
             picked = fn + "(" + ", ".join(
                 f"named_struct('k', {_minmax_key(a, d)}, "
-                f"'p', {len(args) - i}, 'v', {_minmax_text(a, d)})"
+                f"'p', {len(args) - i}, 'v', {_minmax_text(a, d, classes)})"
                 for i, (a, d) in enumerate(zip(args, ds))
             ) + ").v"
         return f"(CASE WHEN {null_guard} THEN NULL ELSE {picked} END)"
@@ -3256,12 +3277,23 @@ def _minmax_key(a: str, d: tuple[str, str] | None) -> str:
     return _aff_key_sql(d, a)
 
 
-def _minmax_text(a: str, d: tuple[str, str] | None) -> str:
-    """Argument ``a`` as SQLite prints it."""
+def _minmax_text(
+    a: str, d: tuple[str, str] | None, classes: dict[str, str]
+) -> str:
+    """Argument ``a`` as SQLite prints it: an arithmetic argument with
+    a REAL operand is REAL, in CPython's repr (``1e+20``), not Java's
+    (``1.0E20``)."""
     if d is not None and d[0] == "numlit":
         return _quote_sql(_sqlite_num_as_text(d[1]))
     if d is not None and d[0] == "strlit":
         return a
+    chain = None if d else _parse_arith_chain(a, classes)
+    if chain and any(
+        _arith_tok_int_test(tok, td) is False for _, tok, td in chain[0]
+    ):
+        from sqawk_spark.affinity import python_real_repr_sql
+
+        return python_real_repr_sql(f"CAST(({a}) AS DOUBLE)")
     return f"CAST(({a}) AS STRING)"
 
 
@@ -3654,10 +3686,18 @@ def _aff_classify(
         if cls in ("long", "dynamic", "text", "none"):
             return ("agg", cls)
     # a scalar min/max over mixed storage classes yields the winner's
-    # SQLite text, its class varying per row; a function result, it
-    # has no affinity
+    # SQLite text, its class varying per row; over one class, a value
+    # of that class (REAL keys like a dynamic value).  A function
+    # result, it has no affinity
     if _is_mixed_minmax(t):
         return ("agg", "dynamic")
+    m = _SCALAR_MINMAX_RE.match(t)
+    if m is not None and sqllex.close_paren(t, m.end() - 1) == len(t):
+        families = _minmax_families(t[m.end() : -1], classes)
+        if len(families) == 1 and None not in families:
+            family = families.pop()
+            storage = {"integer": "long", "real": "dynamic"}
+            return ("agg", storage.get(family, family))
     return None
 
 
@@ -4320,57 +4360,48 @@ def rewrite_affinity_minmax(stmt: str, classes: dict[str, str]) -> str:
     INTEGER precedes — and value semantics either way, since the
     tied values are equal)."""
     arrival = _scope_arrival_col(stmt, classes, deep_scan=True)
-    while True:
-        edited = False
-        for m in sqllex.finditer(_MINMAX_AGG_RE, stmt):
-            close = sqllex.close_paren(stmt, m.end() - 1)
-            inner = stmt[m.end() : close - 1].strip()
-            arg = re.sub(
-                r"^(distinct|all)\s+", "", inner, flags=re.IGNORECASE
-            )
-            fc = None
-            col = arg
-            if not (
-                _AFF_IDENT_RE.match(arg)
-                and _aff_classify(arg, classes) == ("col", "dynamic")
-            ) and not _is_mixed_minmax(arg):
-                # FILTER-lowered argument: the filtered subset still
-                # picks its winner by storage-class order
-                fc = _aff_filter_case_parts(arg)
-                if fc is None or _aff_classify(
-                    fc[1], classes
-                ) != ("col", "dynamic"):
-                    continue
-                col = fc[1]
-            fn = m.group(1).lower()
-            key = _aff_key_col_sql(col, "dynamic")
-            # arrival column when known (first tied row in scan order,
-            # SQLite-exact); else 0 for integer-rendered values, 1
-            # otherwise — negated for max so BOTH directions prefer
-            # the first/integer at a key tie
-            pref = arrival or (
-                f"(CASE WHEN TRY_CAST(CAST({col} AS STRING) AS BIGINT) "
-                f"IS NULL THEN 1 ELSE 0 END)"
-            )
-            if fn == "max":
-                pref = f"(0 - {pref})"
-            alive = (
-                f"({fc[0]}) AND {col} IS NOT NULL"
-                if fc
-                else f"{col} IS NOT NULL"
-            )
-            tkey = (
-                f"(CASE WHEN {alive} THEN "
-                f"named_struct('k', {key}, 'p', {pref}) "
-                f"ELSE NULL END)"
-            )
-            stmt = (
-                stmt[: m.start()] + f"{fn}_by({arg}, {tkey})" + stmt[close:]
-            )
-            edited = True
-            break
-        if not edited:
-            return stmt
+
+    def lower(m: re.Match[str], inner: str) -> str | None:
+        arg = re.sub(
+            r"^(distinct|all)\s+", "", inner.strip(), flags=re.IGNORECASE
+        )
+        fc = None
+        col = arg
+        if not (
+            _AFF_IDENT_RE.match(arg)
+            and _aff_classify(arg, classes) == ("col", "dynamic")
+        ) and not _is_mixed_minmax(arg):
+            # FILTER-lowered argument: the filtered subset still
+            # picks its winner by storage-class order
+            fc = _aff_filter_case_parts(arg)
+            if fc is None or _aff_classify(fc[1], classes) != ("col", "dynamic"):
+                return None
+            col = fc[1]
+        fn = m.group(1).lower()
+        key = _aff_key_col_sql(col, "dynamic")
+        # arrival column when known (first tied row in scan order,
+        # SQLite-exact); else 0 for integer-rendered values, 1
+        # otherwise — negated for max so BOTH directions prefer
+        # the first/integer at a key tie
+        pref = arrival or (
+            f"(CASE WHEN TRY_CAST(CAST({col} AS STRING) AS BIGINT) "
+            f"IS NULL THEN 1 ELSE 0 END)"
+        )
+        if fn == "max":
+            pref = f"(0 - {pref})"
+        alive = (
+            f"({fc[0]}) AND {col} IS NOT NULL"
+            if fc
+            else f"{col} IS NOT NULL"
+        )
+        tkey = (
+            f"(CASE WHEN {alive} THEN "
+            f"named_struct('k', {key}, 'p', {pref}) "
+            f"ELSE NULL END)"
+        )
+        return f"{fn}_by({arg}, {tkey})"
+
+    return _rewrite_calls(stmt, _MINMAX_AGG_RE, lower)
 
 
 _AFF_BETWEEN_RE = re.compile(r"\b(not\s+)?between\b", re.IGNORECASE)
@@ -4422,44 +4453,33 @@ def rewrite_affinity_in(stmt: str, classes: dict[str, str]) -> str:
     OR-chain, which the comparison pass keys per element. Long columns
     and all-text lists keep Spark's native IN (same semantics, and the
     optimizer's InSet). Subquery/expression elements: verbatim."""
-    while True:
-        edited = False
-        for m in sqllex.finditer(_AFF_IN_RE, stmt):
-            xs = _operand_back(stmt, m.start())
-            x = stmt[xs : m.start()].strip()
-            dx = _aff_classify(x, classes)
-            if (
-                dx is None
-                or dx[0] not in ("col", "agg")
-                or dx == ("col", "long")  # native numeric IN + InSet
-                or not (
-                    _AFF_IDENT_RE.match(x) or _AFF_MINMAX_ARG_RE.match(x)
-                )
-            ):
-                continue
-            close = sqllex.close_paren(stmt, m.end() - 1)
-            elems = sqllex.split_top(stmt[m.end() : close - 1])
-            descs = [_aff_classify(e, classes) for e in elems]
-            if not elems or any(
-                d is None or d[0] == "col" and d[1] == "long"
-                for d in descs
-            ):
-                continue
-            if dx[1] in ("text", "none") and all(
-                d[0] == "strlit"
-                or (d[0] == "col" and d[1] in ("text", "none"))
-                for d in descs
-            ):
-                continue  # all-text list: Spark IN already bytewise
-            chain = " OR ".join(f"{x} = {e.strip()}" for e in elems)
-            body = f"({chain})"
-            if m.group(1):
-                body = f"(NOT {body})"
-            stmt = stmt[:xs] + " " + body + stmt[close:]
-            edited = True
-            break
-        if not edited:
-            return stmt
+
+    def lower(m: re.Match[str], inner: str) -> _Lowered:
+        xs = _operand_back(m.string, m.start())
+        x = m.string[xs : m.start()].strip()
+        dx = _aff_classify(x, classes)
+        if (
+            dx is None
+            or dx[0] not in ("col", "agg")
+            or dx == ("col", "long")  # native numeric IN + InSet
+            or not (_AFF_IDENT_RE.match(x) or _AFF_MINMAX_ARG_RE.match(x))
+        ):
+            return None
+        elems = sqllex.split_top(inner)
+        descs = [_aff_classify(e, classes) for e in elems]
+        if any(d is None or d[0] == "col" and d[1] == "long" for d in descs):
+            return None
+        if dx[1] in ("text", "none") and all(
+            d[0] == "strlit" or (d[0] == "col" and d[1] in ("text", "none"))
+            for d in descs
+        ):
+            return None  # all-text list: Spark IN already bytewise
+        body = "(" + " OR ".join(f"{x} = {e}" for e in elems) + ")"
+        if m.group(1):
+            body = f"(NOT {body})"
+        return xs, m.end() + len(inner) + 1, " " + body
+
+    return _rewrite_calls(stmt, _AFF_IN_RE, lower)
 
 
 _AFF_SUMAGG_RE = re.compile(r"\b(sum|avg|total)\s*\(", re.IGNORECASE)
@@ -5846,128 +5866,118 @@ def rewrite_affinity_aggregates(stmt: str, classes: dict[str, str]) -> str:
     coerce to 1.0), which argument-level coercion cannot express."""
     if not classes:
         return stmt
-    while True:
-        edited = False
-        for m in sqllex.finditer(_AFF_SUMAGG_RE, stmt):
-            fn = m.group(1).lower()
-            close = sqllex.close_paren(stmt, m.end() - 1)
-            arg = stmt[m.end() : close - 1].strip()
-            if re.match(r"^(distinct|all)\s", arg, re.IGNORECASE):
-                continue
-            fc = None
-            generic = False
-            if not _AFF_IDENT_RE.match(arg):
-                fc = _aff_filter_case_parts(arg)
-                if fc is not None and (
-                    not _AFF_IDENT_RE.match(fc[1])
-                    or classes.get(fc[1].split(".")[-1].lower()) is None
+
+    def lower(m: re.Match[str], inner: str) -> _Lowered:
+        fn = m.group(1).lower()
+        close = m.end() + len(inner) + 1
+        arg = inner.strip()
+        if re.match(r"^(distinct|all)\s", arg, re.IGNORECASE):
+            return None
+        fc = None
+        generic = False
+        if not _AFF_IDENT_RE.match(arg):
+            fc = _aff_filter_case_parts(arg)
+            if fc is not None and (
+                not _AFF_IDENT_RE.match(fc[1])
+                or classes.get(fc[1].split(".")[-1].lower()) is None
+            ):
+                # FILTER shape whose payload is not a classed bare
+                # column (CAST / literal): the whole CASE coerces
+                # generically — excluded rows are NULL either way
+                fc = None
+            if fc is None:
+                # arbitrary argument expression: coerce its VALUE
+                # generically (trim + numeric-prefix parse of the
+                # canonical string rendering) when the expression
+                # can produce text-class values — and for total()
+                # ALWAYS, replacing the Pandas UDAF (which Spark
+                # refuses to mix with JVM aggregates) with a
+                # partial-aggregating JVM sum
+                if fn != "total" and not _aff_expr_textish(
+                    arg, classes
                 ):
-                    # FILTER shape whose payload is not a classed bare
-                    # column (CAST / literal): the whole CASE coerces
-                    # generically — excluded rows are NULL either way
-                    fc = None
-                if fc is None:
-                    # arbitrary argument expression: coerce its VALUE
-                    # generically (trim + numeric-prefix parse of the
-                    # canonical string rendering) when the expression
-                    # can produce text-class values — and for total()
-                    # ALWAYS, replacing the Pandas UDAF (which Spark
-                    # refuses to mix with JVM aggregates) with a
-                    # partial-aggregating JVM sum
-                    if fn != "total" and not _aff_expr_textish(
-                        arg, classes
-                    ):
-                        # numeric-only argument: native eval is exact
-                        # UNLESS the expression is a '/'-or-'%' chain
-                        # whose per-step int truncation Spark's double
-                        # arithmetic misses (avg(a1/2) averages the
-                        # per-row truncated quotients in SQLite)
-                        ch0 = _parse_arith_chain(arg, classes)
-                        if (
-                            ch0 is None
-                            or _arith_chain_sensitivity(ch0) is None
-                        ):
-                            continue
+                    # numeric-only argument: native eval is exact
+                    # UNLESS the expression is a '/'-or-'%' chain
+                    # whose per-step int truncation Spark's double
+                    # arithmetic misses (avg(a1/2) averages the
+                    # per-row truncated quotients in SQLite)
+                    ch0 = _parse_arith_chain(arg, classes)
                     if (
-                        _AFF_GENERIC_DONE_RE.match(arg)
-                        or _FC_BOOL01_RE.match(arg)
-                        or re.search(
-                            r"\b(try_cast|py_real_repr|named_struct"
-                            r"|regexp_extract|regexp_replace)\s*\(",
-                            arg,
-                            re.IGNORECASE,
-                        )
+                        ch0 is None
+                        or _arith_chain_sensitivity(ch0) is None
                     ):
-                        # engine-emitted machinery (Spark-only
-                        # spellings a SQLite script cannot contain):
-                        # already coerced — rewrapping would erase the
-                        # per-group INTEGER result class.  total()
-                        # must STILL lower to the JVM coalesce(sum)
-                        # form: the Pandas UDAF fallback cannot mix
-                        # with JVM aggregates in one aggregation
-                        # (fuzz seed 20240815 script 131:
-                        # ``total(p), sum(like(...))``)
-                        if fn == "total":
-                            win0 = _aff_window_suffix(stmt, close)
-                            end0 = win0[1] if win0 else close
-                            w0 = win0[0] if win0 else ""
-                            stmt = (
-                                stmt[: m.start()]
-                                + f"coalesce(sum({arg}){w0}, "
-                                f"CAST(0 AS DOUBLE))"
-                                + stmt[end0:]
-                            )
-                            edited = True
-                            break
-                        continue
-                    generic = True
-            col = fc[1] if fc else arg
-            if generic:
-                cls = None
-            else:
-                cls = classes.get(col.split(".")[-1].lower())
-                if cls is None:
-                    continue
-                if fn in ("sum", "avg") and cls not in (
-                    "dynamic",
-                    "text",
-                    "none",
+                        return None
+                if (
+                    _AFF_GENERIC_DONE_RE.match(arg)
+                    or _FC_BOOL01_RE.match(arg)
+                    or re.search(
+                        r"\b(try_cast|py_real_repr|named_struct"
+                        r"|regexp_extract|regexp_replace)\s*\(",
+                        arg,
+                        re.IGNORECASE,
+                    )
                 ):
-                    continue
-            win = _aff_window_suffix(stmt, close)
-            if generic:
-                ch = _parse_arith_chain(arg, classes)
-                if ch is not None:
-                    # arithmetic argument: coerce per OPERAND (the
-                    # outer value would be Spark's NULL-on-text)
-                    cv = f"({_arith_chain_coerced_sql(ch)})"
-                else:
-                    t = (
-                        f"regexp_replace(CAST(({arg}) AS STRING), "
-                        f"{_AFF_TRIM_PAT}, '')"
-                    )
-                    cv = (
-                        f"(CASE WHEN ({arg}) IS NULL THEN NULL "
-                        f"ELSE {_sqlite_num_prefix_sql(t)} END)"
-                    )
+                    # engine-emitted machinery (Spark-only
+                    # spellings a SQLite script cannot contain):
+                    # already coerced — rewrapping would erase the
+                    # per-group INTEGER result class.  total()
+                    # must STILL lower to the JVM coalesce(sum)
+                    # form: the Pandas UDAF fallback cannot mix
+                    # with JVM aggregates in one aggregation
+                    # (fuzz seed 20240815 script 131:
+                    # ``total(p), sum(like(...))``)
+                    if fn == "total":
+                        win0 = _aff_window_suffix(m.string, close)
+                        end0 = win0[1] if win0 else close
+                        w0 = win0[0] if win0 else ""
+                        return (
+                            m.start(),
+                            end0,
+                            f"coalesce(sum({arg}){w0}, CAST(0 AS DOUBLE))",
+                        )
+                    return None
+                generic = True
+        col = fc[1] if fc else arg
+        if generic:
+            cls = None
+        else:
+            cls = classes.get(col.split(".")[-1].lower())
+            if cls is None:
+                return None
+            if fn in ("sum", "avg") and cls not in ("dynamic", "text", "none"):
+                return None
+        win = _aff_window_suffix(m.string, close)
+        if generic:
+            ch = _parse_arith_chain(arg, classes)
+            if ch is not None:
+                # arithmetic argument: coerce per OPERAND (the
+                # outer value would be Spark's NULL-on-text)
+                cv = f"({_arith_chain_coerced_sql(ch)})"
             else:
-                cv = _aff_sum_coerce_sql(col, cls)
-            c = f"CASE WHEN {fc[0]} THEN {cv} END" if fc else cv
-            end = win[1] if win else close
-            w = win[0] if win else ""
-            if fn == "sum":
-                if stmt[m.end() : close - 1].strip() == c:
-                    continue  # already rewritten
-                repl = f"sum({c}){w}"
-            elif fn == "avg":
-                repl = f"(sum({c}){w} / count({arg}){w})"
-            else:  # total
-                repl = f"coalesce(sum({c}){w}, CAST(0 AS DOUBLE))"
-            stmt = stmt[: m.start()] + repl + stmt[end:]
-            edited = True
-            break
-        if not edited:
-            return stmt
+                t = (
+                    f"regexp_replace(CAST(({arg}) AS STRING), "
+                    f"{_AFF_TRIM_PAT}, '')"
+                )
+                cv = (
+                    f"(CASE WHEN ({arg}) IS NULL THEN NULL "
+                    f"ELSE {_sqlite_num_prefix_sql(t)} END)"
+                )
+        else:
+            cv = _aff_sum_coerce_sql(col, cls)
+        c = f"CASE WHEN {fc[0]} THEN {cv} END" if fc else cv
+        end = win[1] if win else close
+        w = win[0] if win else ""
+        if fn == "sum":
+            if arg == c:
+                return None  # already rewritten
+            repl = f"sum({c}){w}"
+        elif fn == "avg":
+            repl = f"(sum({c}){w} / count({arg}){w})"
+        else:  # total
+            repl = f"coalesce(sum({c}){w}, CAST(0 AS DOUBLE))"
+        return m.start(), end, repl
+
+    return _rewrite_calls(stmt, _AFF_SUMAGG_RE, lower)
 
 
 _CAST_CALL_RE = re.compile(r"\bcast\s*\(", re.IGNORECASE)
@@ -6026,49 +6036,28 @@ def rewrite_affinity_casts(stmt: str, classes: dict[str, str]) -> str:
     RENDERING lives in _rewrite_cast_select_items."""
     from sqawk_spark.affinity import normalize_affinity
 
-    # single left-to-right cursor: everything before ``pos`` is
-    # already lowered (Spark-native or non-cast) and never rescanned.
-    # After an edit the cursor returns to the edit site — the value
-    # expression copied into the replacement may itself hold SQLite
-    # casts — but the (possibly huge, emitted) prefix does not pay
-    # again.  The old restart-from-zero loop made statements with
-    # hundreds of emitted Spark-native casts (e.g. total(chain)
-    # FILTER encodings) take tens of seconds.
-    pos = 0
-    while True:
-        edited = False
-        for m in _CAST_CALL_RE.finditer(stmt, pos):
-            if sqllex.in_string(stmt, m.start()):
-                continue
-            close = sqllex.close_paren(stmt, m.end() - 1)
-            parts = _cast_split_as(stmt[m.end() : close - 1])
-            if parts is None:
-                continue
-            x, tname = parts
-            if not re.fullmatch(r"[A-Za-z_][A-Za-z_0-9 ]*", tname):
-                continue
-            # Spark-native spellings stay untouched (engine-internal
-            # rewrites already emit them; they have no SQLite meaning)
-            # Spark-native spellings the engine's OWN rewrites emit
-            # stay untouched (rewriting 'AS DOUBLE' would re-match the
-            # pass's output and loop); every other name — including
-            # INT, FLOAT, VARCHAR — takes its SQLite affinity. 'long'
-            # stays Spark-native too (SQLite would class it NUMERIC;
-            # documented residue, Spark code uses it constantly).
-            if tname.strip().lower() in (
-                "string", "bigint", "double", "long", "binary",
-                "boolean", "timestamp", "date", "decimal", "interval",
-                "map", "array", "struct",
-            ):
-                continue
-            aff = normalize_affinity(tname)
-            repl = _cast_value_sql(x, aff, classes)
-            stmt = stmt[: m.start()] + repl + stmt[close:]
-            pos = m.start()
-            edited = True
-            break
-        if not edited:
-            return stmt
+    def lower(m: re.Match[str], inner: str) -> str | None:
+        parts = _cast_split_as(inner)
+        if parts is None:
+            return None
+        x, tname = parts
+        if not re.fullmatch(r"[A-Za-z_][A-Za-z_0-9 ]*", tname):
+            return None
+        # Spark-native spellings the engine's OWN rewrites emit stay
+        # untouched (rewriting 'AS DOUBLE' would re-match the pass's
+        # output and loop); every other name — including INT, FLOAT,
+        # VARCHAR — takes its SQLite affinity. 'long' stays
+        # Spark-native too (SQLite would class it NUMERIC; documented
+        # residue, Spark code uses it constantly).
+        if tname.strip().lower() in (
+            "string", "bigint", "double", "long", "binary",
+            "boolean", "timestamp", "date", "decimal", "interval",
+            "map", "array", "struct",
+        ):
+            return None
+        return _cast_value_sql(x, normalize_affinity(tname), classes)
+
+    return _rewrite_calls(stmt, _CAST_CALL_RE, lower)
 
 
 def _items_span(stmt: str):
@@ -7336,28 +7325,21 @@ _IIF_RE = re.compile(r"\biif\s*\(", re.IGNORECASE)
 def rewrite_boolean_contexts(stmt: str, classes: dict[str, str]) -> str:
     """Apply the numeric-as-boolean coercion to every WHERE / HAVING /
     ON / searched-CASE WHEN condition, and lower ``iif(c, a, b)`` to
-    ``if(<coerced c>, a, b)`` (SQLite 3.32 surface).  One edit per
-    scan, rightmost-first, then re-scan — nested contexts (a WHEN
-    inside a WHERE) stay index-correct, and the fixpoint is reached
-    because predicates re-parse as predicates."""
+    ``if(<coerced c>, a, b)`` (SQLite 3.32 surface).  The iif calls
+    first, then one condition edit per scan, rightmost-first, then
+    re-scan — nested contexts (a WHEN inside a WHERE) stay
+    index-correct, and the fixpoint is reached because predicates
+    re-parse as predicates."""
+
+    def lower_iif(m: re.Match[str], inner: str) -> str | None:
+        args = sqllex.split_top(inner)
+        if len(args) != 3:
+            return None
+        return f"if({_boolify(args[0], classes)}, {args[1]}, {args[2]})"
+
     for _ in range(400):
+        stmt = _rewrite_calls(stmt, _IIF_RE, lower_iif)
         edited = False
-        m = None
-        for m in sqllex.finditer(_IIF_RE, stmt):
-            close = sqllex.close_paren(stmt, m.end() - 1)
-            args = _split_call_args(stmt, m.end() - 1)
-            if args is None or len(args) != 3:
-                continue
-            cond = _boolify(args[0], classes)
-            stmt = (
-                stmt[: m.start()]
-                + f"if({cond}, {args[1].strip()}, {args[2].strip()})"
-                + stmt[close:]
-            )
-            edited = True
-            break
-        if edited:
-            continue
         spans: list[tuple[int, int]] = []
         for m in sqllex.finditer(_BOOL_CTX_KW_RE, stmt):
             kw = m.group(1).lower()
@@ -7620,55 +7602,51 @@ def rewrite_predicate_values(stmt: str, classes: dict[str, str]) -> str:
     text)``), CASE branch payloads (including the FILTER lowering's),
     and parenthesized operands adjacent to arithmetic / concat /
     comparison operators (``(a1 > 0) + 1``, ``-(a1 = 1)``,
-    ``(a1 > 0) || 'x'``).  One edit per scan, rightmost-first within
-    each family; a wrapped payload re-parses as a CASE (not a
-    predicate), so the fixpoint is reached."""
-    for _ in range(200):
-        edited = False
-        for m in sqllex.finditer(_PRED_FN_RE, stmt):
-            fn = m.group(1).lower()
-            if fn != "cast" and fn not in _PRED_WRAP_FNS:
-                continue
-            close = sqllex.close_paren(stmt, m.end() - 1)
-            if fn == "cast":
-                parts = _cast_split_as(stmt[m.end() : close - 1])
-                if parts is not None and _is_value_pred(parts[0]):
-                    stmt = (
-                        stmt[: m.end()]
-                        + _pred_wrap(parts[0])
-                        + " AS "
-                        + parts[1].strip()
-                        + stmt[close - 1 :]
-                    )
-                    edited = True
-                    break
-                continue
-            args = _split_call_args(stmt, m.end() - 1)
-            if not args:
-                continue
-            new_args, changed = [], False
-            for idx, a in enumerate(args):
-                if fn == "iif" and idx == 0:
-                    new_args.append(a.strip())
-                    continue
-                pm = re.match(r"\s*(distinct|all)\s+", a, re.IGNORECASE)
+    ``(a1 > 0) || 'x'``).  Function arguments and EXISTS operands go
+    through the call-site walker; CASE payloads and paren groups take
+    one edit per scan, rightmost-first; a wrapped payload re-parses as
+    a CASE (not a predicate), so the fixpoint is reached."""
+
+    def lower_fn(m: re.Match[str], inner: str) -> str | None:
+        fn = m.group(1).lower()
+        if fn == "cast":
+            parts = _cast_split_as(inner)
+            if parts is None or not _is_value_pred(parts[0]):
+                return None
+            wrap = _pred_wrap(parts[0])
+            return f"{m.group(0)}{wrap} AS {parts[1].strip()})"
+        if fn not in _PRED_WRAP_FNS:
+            return None
+        new_args, changed = [], False
+        for idx, a in enumerate(sqllex.split_top(inner)):
+            pm = re.match(r"(distinct|all)\s+", a, re.IGNORECASE)
+            expr = a[pm.end() :] if pm else a
+            if (fn != "iif" or idx) and _is_value_pred(expr):
                 prefix = a[: pm.end()].strip() + " " if pm else ""
-                expr = a[pm.end() :] if pm else a
-                if _is_value_pred(expr):
-                    new_args.append(prefix + _pred_wrap(expr))
-                    changed = True
-                else:
-                    new_args.append(a.strip())
-            if changed:
-                stmt = (
-                    stmt[: m.end()]
-                    + ", ".join(new_args)
-                    + stmt[close - 1 :]
-                )
-                edited = True
-                break
-        if edited:
-            continue
+                new_args.append(prefix + _pred_wrap(expr))
+                changed = True
+            else:
+                new_args.append(a)
+        return f"{m.group(0)}{', '.join(new_args)})" if changed else None
+
+    def lower_exists(m: re.Match[str], inner: str) -> str | None:
+        s = m.string
+        close = m.end() + len(inner) + 1
+        j = close
+        while j < len(s) and s[j] in " \t\n":
+            j += 1
+        k = m.start() - 1
+        while k >= 0 and s[k] in " \t\n":
+            k -= 1
+        if (k >= 0 and s[k] in _PRED_ADJ_PREV) or (
+            j < len(s) and s[j] in _PRED_ADJ_NEXT
+        ):
+            return _pred_wrap(s[m.start() : close])
+        return None
+
+    for _ in range(200):
+        stmt = _rewrite_calls(stmt, _PRED_FN_RE, lower_fn)
+        edited = False
         values = [v for c in sqllex.cases(stmt).values() for v in c.values()]
         for s, e in sorted(values, key=lambda p: -p[0]):
             body = stmt[s:e]
@@ -7711,30 +7689,10 @@ def rewrite_predicate_values(stmt: str, classes: dict[str, str]) -> str:
         # skips it (its group is a subquery, not a value predicate),
         # so wrap the whole EXISTS expression here.  A boolean-context
         # EXISTS (WHERE/AND/OR/end-of-clause neighbors) stays native.
-        for m in sorted(
-            _EXISTS_EXPR_RE.finditer(stmt), key=lambda m: -m.start()
-        ):
-            if sqllex.in_string(stmt, m.start()):
-                continue
-            close = sqllex.close_paren(stmt, m.end() - 1)
-            j = close
-            while j < len(stmt) and stmt[j] in " \t\n":
-                j += 1
-            nxt = stmt[j] if j < len(stmt) else None
-            k = m.start() - 1
-            while k >= 0 and stmt[k] in " \t\n":
-                k -= 1
-            prev = stmt[k] if k >= 0 else None
-            if (prev in _PRED_ADJ_PREV) or (nxt in _PRED_ADJ_NEXT):
-                stmt = (
-                    stmt[: m.start()]
-                    + _pred_wrap(stmt[m.start() : close])
-                    + stmt[close:]
-                )
-                edited = True
-                break
-        if not edited:
+        wrapped = _rewrite_calls(stmt, _EXISTS_EXPR_RE, lower_exists)
+        if wrapped == stmt:
             return stmt
+        stmt = wrapped
     return stmt
 
 
@@ -7876,11 +7834,10 @@ def rewrite_statement(
     # explicit COLLATE BINARY names the default collation — a no-op
     # on sqawk tables (no declared column collations), stripped so
     # the shape runs instead of hitting Spark's parse error
-    while True:
-        bm = next(sqllex.finditer(_COLLATE_BINARY_RE, stmt), None)
-        if bm is None:
-            break
-        stmt = stmt[: bm.start()] + stmt[bm.end() :]
+    stmt = _COLLATE_BINARY_RE.sub(
+        lambda m: m[0] if sqllex.in_string(m.string, m.start()) else "",
+        stmt,
+    )
     stmt = rewrite_values_clause(stmt)
     # FILTER next: the CASE lowering produces plain aggregate calls
     # the later passes (group_concat arity, GROUPS frames) then see
@@ -7908,7 +7865,7 @@ def rewrite_statement(
     stmt = rewrite_is_equality(stmt)
     # ordinals first so every class/collation pass below sees the
     # output column they name
-    stmt = rewrite_positional_order_by(stmt)
+    stmt = rewrite_positional_order_by(stmt, classes or {})
     # expression-collation propagation BEFORE the collate lowering
     # passes consume the COLLATE tokens it scans for
     stmt = rewrite_collate_propagation(stmt, classes or {})

@@ -1131,16 +1131,6 @@ _CALL_SITE_PASSES = [
     "rewrite_nullif_calls",
     "mark_mixed_minmax",
     "rewrite_scalar_minmax",
-]
-
-# every other function that pairs a finditer scan with
-# sqllex.close_paren, i.e. still walks call sites by hand; a port onto
-# _rewrite_calls removes its name here
-_HAND_ROLLED_CALL_LOOPS = [
-    "rewrite_values_clause",
-    "_over_spans",
-    "rewrite_like_nocase",
-    "rewrite_collate_positions",
     "rewrite_filter_clause",
     "rewrite_groups_frames",
     "rewrite_plain_frame_excludes",
@@ -1148,8 +1138,7 @@ _HAND_ROLLED_CALL_LOOPS = [
     "rewrite_affinity_in",
     "rewrite_affinity_aggregates",
     "rewrite_affinity_casts",
-    "rewrite_boolean_contexts",
-    "rewrite_predicate_values",
+    "_strip_nocase",
 ]
 
 
@@ -1178,13 +1167,18 @@ def test_call_site_loops_ratchet():
         and any(isinstance(n, (ast.For, ast.While)) for n in ast.walk(fn))
     ]
     assert looped == []
+    assert not any(
+        isinstance(n, ast.While) for n in ast.walk(funcs["rewrite_statement"])
+    )
+    # every other scan for call sites is the walker's: only it, and
+    # the read-only window-span finder, pair a finditer scan with
+    # sqllex.close_paren
     paired = sorted(
         name
         for name, fn in funcs.items()
-        if name != "_rewrite_calls"
-        and {"finditer", "close_paren"} <= called(fn)
+        if {"finditer", "close_paren"} <= called(fn)
     )
-    assert paired == sorted(_HAND_ROLLED_CALL_LOOPS)
+    assert paired == ["_over_spans", "_rewrite_calls"]
 
 
 _NESTED_LINES = ["1 7 ab", "2 3 xAx", "3 9 straße"]
@@ -1239,8 +1233,51 @@ def test_scalar_minmax_mixed_classes_vs_sqlite(tmp_path):
         "select a1 from a where max(a3, 5) > 7 and max(a1, 1.5) <> '2'",
         "select max(a1, 1.5) * 2, -min(a3, 5), max(a1, 1.5) / 2 from a",
         "select max(a1, 1.5) from a union select 3 order by 1",
+        "select min(a1 * 1e20, a3) from a",
     ]:
         assert run([q, str(f)]) == sqlite_awk(q, lines, recs), q
+
+
+_CLASS_LINES = ["1 7 ab", "2 3 xAx", "10 9 straße", "4 12 10"]
+
+
+def _vs_sqlite(tmp_path, queries):
+    from tests.test_load_path import run, sqlite_awk
+
+    f = tmp_path / "c.txt"
+    f.write_text("\n".join(_CLASS_LINES) + "\n")
+    recs = [ln.split() for ln in _CLASS_LINES]
+    for q in queries:
+        assert run([q, str(f)]) == sqlite_awk(q, _CLASS_LINES, recs), q
+
+
+def test_same_class_scalar_minmax_has_no_affinity_vs_sqlite(tmp_path):
+    """A scalar min/max over one storage class is a function result:
+    a value of that class without affinity, so a text literal beside
+    it is not converted to a number (``max(a1, 2) = '2'`` matched
+    rows that SQLite does not)."""
+    _vs_sqlite(
+        tmp_path,
+        [
+            "select a1 from a where max(a1, 2) = '2'",
+            "select a1 from a where max(a1, a2) = '7'",
+            "select a1 from a where max(a1, 2) = 2",
+        ],
+    )
+
+
+def test_distinct_positional_order_by_vs_sqlite(tmp_path):
+    """``ORDER BY N`` naming an unaliased expression under SELECT
+    DISTINCT resolves (it raised UNRESOLVED_COLUMN) and sorts by the
+    output's storage class."""
+    _vs_sqlite(
+        tmp_path,
+        [
+            "select distinct a1 + 0 from a order by 1",
+            "select distinct abs(a1) from a order by 1",
+            "select distinct max(a1, 1.5) from a order by 1",
+        ],
+    )
 
 
 def test_string_agg_collate_vs_sqlite(tmp_path):

@@ -787,22 +787,30 @@ def test_walker_differences_are_malformed():
 #
 # Before ``dialect._rewrite_calls``, nine passes (rewrite_substr_calls
 # among them) each held the loop below around their own lowering: on
-# a kept call it recursed on the text after the call's close paren,
-# so a call nested inside a kept one was never lowered.  Everywhere
-# else the walker must lower exactly as the loop did, but for one
-# change made since: a call whose paren never closes is not a call
-# (the loop lowered it as if it ran to the end of the text), and the
-# scan goes on inside it.
+# a kept call it went on after the call's close paren, so a call
+# nested inside a kept one was never lowered.  Everywhere else the
+# walker must lower exactly as the loop did, but for one change made
+# since: a call whose paren never closes is not a call (the loop
+# lowered it as if it ran to the end of the text), and the scan goes
+# on inside it.  The loop takes the walker's ``(start, end, text)``
+# edits too, the form of the passes whose edit owns text around the
+# call (FILTER's aggregate before it, VALUES's rows after it): the
+# edit may reach back before a kept call, and the scan starts again
+# from the edit's start.
 
 
 def _ref_rewrite_calls(stmt, call_re, lower):
+    done = 0  # no call before here is left to lower
     while True:
         m = next(
             (
                 m
                 for m in sqllex.finditer(call_re, stmt)
-                if m.start() == 0
-                or not dialect._IDENT.match(stmt[m.start() - 1])
+                if m.start() >= done
+                and (
+                    m.start() == 0
+                    or not dialect._IDENT.match(stmt[m.start() - 1])
+                )
             ),
             None,
         )
@@ -810,15 +818,18 @@ def _ref_rewrite_calls(stmt, call_re, lower):
             return stmt
         open_p = m.end() - 1
         if not sqllex.closes(stmt, open_p):
-            tail = _ref_rewrite_calls(stmt[m.end() :], call_re, lower)
-            return stmt[: m.end()] + tail
+            done = m.end()
+            continue
         close = sqllex.close_paren(stmt, open_p)  # one past ')'
-        inner = stmt[open_p + 1 : close - 1]
-        repl = lower(m, inner)
+        repl = lower(m, stmt[open_p + 1 : close - 1])
         if repl is None:
-            tail = _ref_rewrite_calls(stmt[close:], call_re, lower)
-            return stmt[:close] + tail
-        stmt = stmt[: m.start()] + repl + stmt[close:]
+            done = close
+            continue
+        if isinstance(repl, str):
+            repl = (m.start(), close, repl)
+        start, end, text = repl
+        stmt = stmt[:start] + text + stmt[end:]
+        done = min(done, start)
 
 
 def _nests_in_kept(s, call_re, lower) -> bool:
@@ -855,6 +866,34 @@ def _toy_lower(m, inner):
     return f"h({inner})" if len(sqllex.split_top(inner)) == 2 else None
 
 
+_SPAN_CALL_RE = re.compile(r"\b(f|g|k|v)\s*\(")
+
+
+def _span_lower(m, inner):
+    """``_toy_lower``, and two lowerings whose edit owns text around
+    the call: ``f(a) k(b)`` → ``f(a, b)`` (k's group joins the call
+    before it, as FILTER's joins its aggregate) and ``v(a), (b)`` →
+    ``[a; b]`` (v takes the paren groups after it, as VALUES takes
+    its rows)."""
+    s = m.string
+    end = m.end() + len(inner) + 1
+    if m.group(1) == "k":
+        pm = re.search(r"\bf\(([^()']*)\)\s*$", s[: m.start()])
+        if pm is None:
+            return None
+        return pm.start(), end, f"f({pm.group(1)}, {inner})"
+    if m.group(1) == "v":
+        rows = [inner]
+        while (gm := re.match(r"\s*,\s*\(", s[end:])) and sqllex.closes(
+            s, end + gm.end() - 1
+        ):
+            close = sqllex.close_paren(s, end + gm.end() - 1)
+            rows.append(s[end + gm.end() : close - 1])
+            end = close
+        return m.start(), end, "[" + "; ".join(rows) + "]"
+    return _toy_lower(m, inner)
+
+
 def _scalar_lower(m, inner):
     return dialect._SCALAR_LOWERINGS[m.group(1).lower()](m, inner)
 
@@ -879,8 +918,9 @@ def _call_texts(names):
             _scalar_lower,
             ["substr", "max", "upper", "likelihood", "trim"],
         ),
+        (_SPAN_CALL_RE, _span_lower, ["f", "k", "v", "g"]),
     ],
-    ids=["toy", "scalar"],
+    ids=["toy", "scalar", "span"],
 )
 def test_rewrite_calls_vs_old_loop(call_re, lower, names):
     @given(_call_texts(names))
@@ -888,6 +928,8 @@ def test_rewrite_calls_vs_old_loop(call_re, lower, names):
     @example("f(1, f(2, 3))")
     @example("g(f(1,2), g(a)) f(")
     @example("f(1,'2)' f(3,4)")
+    @example("f(a) k(b)")  # the edit's start is before the k call
+    @example("v(1), (f(2, 3)) g(4)")  # a consumed row holds a call
     def check(s):
         assume(not _nests_in_kept(s, call_re, lower))
         assert dialect._rewrite_calls(s, call_re, lower) == (
@@ -895,6 +937,20 @@ def test_rewrite_calls_vs_old_loop(call_re, lower, names):
         )
 
     check()
+
+
+def test_rewrite_calls_span_edits():
+    """An edit that owns text around its call is scanned again from
+    its start: the call it reached back to, and a call in the group
+    it took after it, are lowered too."""
+
+    def walk(s):
+        return dialect._rewrite_calls(s, _SPAN_CALL_RE, _span_lower)
+
+    assert walk("f(a) k(b)") == "h(a, b)"
+    # a FILTER-like group holding a call that must still be lowered
+    assert walk("f(a) k(f(1, 2))") == "h(a, h(1, 2))"
+    assert walk("x v(1), (f(2, 3)), (g(4)) y") == "x [1; h(2, 3); [4]] y"
 
 
 def test_rewrite_calls_lowers_inside_kept_calls():
