@@ -107,9 +107,12 @@ def column_class_for(decl: str, promoted: bool) -> str:
 # Canonicalization as Spark SQL text. The table build projects every
 # column through one ``selectExpr`` batch, so the expressions below are
 # strings built in pure Python: a Column tree costs one py4j round trip
-# per node, thousands per table. ``apply_affinity`` and
-# ``_python_real_repr`` bind a Column into the same text for callers
-# that hold Columns.
+# per node, thousands per table. ``apply_affinity`` binds a Column into
+# the same text for callers that hold Columns. A REAL value prints
+# through ``py_real_repr``, the JVM function every engine session
+# registers (``sqawk_spark/jvm``): CPython's repr of the double, which
+# is what SQLite's shell and Python's sqlite3 print (``12345678.5``
+# where Spark's cast to string gives ``1.23456785E7``).
 
 
 def sql_str(s: str) -> str:
@@ -118,138 +121,7 @@ def sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _let(var: str, bindings: dict[str, str], body: str) -> str:
-    """Evaluate-once let-binding in SQL text.
-
-    Repeating an operand in the text repeats its evaluation and its
-    subtree — a formatter that mentions an intermediate eight times
-    inflates the expression tree exponentially (the first double
-    formatter here generated >64 KB of Java per column and janino
-    refused to compile it). A higher-order function's lambda
-    variable is a genuine evaluated-once reference, so
-    ``transform(array(named_struct(<bindings>)), var -> body)[0]`` is a
-    ``let``: each binding computes once per row, ``body`` reads it as
-    ``var.<name>``, and the tree stays linear in the source size. Nested
-    lets capture outer lambda variables (Spark resolves them lexically),
-    so nested lets take distinct variable names."""
-    fields = ", ".join(f"{sql_str(k)}, {v}" for k, v in bindings.items())
-    return f"transform(array(named_struct({fields})), {var} -> {body})[0]"
-
-
-_DOT = sql_str(r"\.")
 _EDGE_SPACE = sql_str(r"^\s+|\s+$")
-
-
-def _strip_digits(mantissa: str) -> str:
-    """The digit run of a rendered mantissa: no point, no trailing 0s."""
-    return (
-        f"regexp_replace(regexp_replace({mantissa}, {_DOT}, ''), '0+$', '')"
-    )
-
-
-def python_real_repr_sql(d: str) -> str:
-    """CPython/SQLite ``repr()`` of the double expression ``d``, as
-    Spark SQL text — Spark's ``cast(string)`` emits Java formatting
-    (``1.23456785E7``) where SQLite's shell and Python's sqlite3
-    render CPython repr (``12345678.5``). Java 17's ``toString`` is
-    also not always shortest-digits (pre-Ryū ``FloatingDecimal`` can
-    emit 17 where 16 suffice), so the digits are derived the way
-    CPython derives them: toString's digits when they number ≤ 15
-    (provably shortest there — the FloatingDecimal bug class needs
-    16+), else the shortest of the 14..17-digit ``%e`` renderings
-    that parses back to the same double; the digits are then
-    formatted by CPython's rules — fixed-point for decimal exponent
-    in [-4, 15], scientific (``1.5e+16`` / ``9.9e-05``: bare
-    mantissa, explicit sign, exponent ≥ 2 digits) outside.
-
-    Built on :func:`_let` so every intermediate (Java string, digit
-    run, decimal exponent) is computed once per row.
-
-    Residual (documented; fuzz-measured ~0.01% of bit-random doubles,
-    zero in realistic data): values whose shortest repr needs ≥ 16
-    digits can render with a last digit off-by-one or one extra digit
-    versus CPython (Java's Formatter double-rounds through toString
-    digits; e.g. the subnormal 5e-324 renders '4.9e-324') — the
-    output still parses back to the IDENTICAL double, so every
-    comparison/join/order semantic is unaffected; only the printed
-    string can differ.
-    """
-    # formatting, over the let variable __q (digits, exp, sa, has_e,
-    # fa, neg)
-    digits, exp, sa = "__q.digits", "__q.exp", "__q.sa"
-    n = f"length({digits})"
-    expabs = f"CAST(abs({exp}) AS STRING)"
-    sci = (
-        f"concat(substring({digits}, 1, 1), "
-        f"CASE WHEN {n} > 1 THEN concat('.', substring({digits}, 2, {n})) "
-        f"ELSE '' END, 'e', CASE WHEN {exp} >= 0 THEN '+' ELSE '-' END, "
-        # zero-pad to ≥2 digits; lpad would TRUNCATE 3-digit exponents
-        f"CASE WHEN length({expabs}) < 2 THEN concat('0', {expabs}) "
-        f"ELSE {expabs} END)"
-    )
-    intlen = f"({exp} + 1)"
-    fixed_pos = (
-        f"CASE WHEN {n} > {intlen} THEN concat(substring({digits}, 1, "
-        f"{intlen}), '.', substring({digits}, {intlen} + 1, {n})) "
-        f"ELSE concat({digits}, repeat('0', {intlen} - {n}), '.0') END"
-    )
-    fixed_neg = f"concat('0.', repeat('0', -{exp} - 1), {digits})"
-    body = (
-        f"CASE WHEN __q.fa = 0.0D THEN '0.0' "
-        f"WHEN {sa} = 'Infinity' THEN 'inf' "
-        # Java fixed-point (1e-3 ≤ |d| < 1e7) == Python fixed-point
-        f"WHEN NOT __q.has_e THEN {sa} "
-        f"WHEN ({exp} >= 16) OR ({exp} <= -5) THEN {sci} "
-        f"WHEN {exp} >= 0 THEN {fixed_pos} ELSE {fixed_neg} END"
-    )
-    fmt = f"CASE WHEN __q.neg THEN concat('-', {body}) ELSE {body} END"
-
-    # digit derivation, over the let variable __r (fa, sa, neg)
-    fa, sa = "__r.fa", "__r.sa"
-    # Tier 1: Java toString digits — shortest whenever ≤ 15 digits
-    # (FloatingDecimal's non-shortest bug class needs 16+), the
-    # overwhelmingly common case, and free to extract.
-    p0 = f"split({sa}, 'E')"
-    d0s = _strip_digits(f"{p0}[0]")
-    d0 = f"CASE WHEN {d0s} = '' THEN '0' ELSE {d0s} END"
-    # Tier 2 (toString gave ≥ 16 digits): shortest of the 14..17-digit
-    # renderings that parses back — non-shortest toString can
-    # overshoot by a digit, so the search starts below it.
-    sel = " ".join(
-        f"WHEN CAST(format_string('%.{k}e', {fa}) AS DOUBLE) = {fa} "
-        f"THEN format_string('%.{k}e', {fa})"
-        for k in (13, 14, 15)
-    )
-    p1 = f"split(CASE {sel} ELSE format_string('%.16e', {fa}) END, 'e')"
-    d1s = _strip_digits(f"{p1}[0]")
-    use0 = f"length({d0}) <= 15"
-    derive = _let(
-        "__q",
-        {
-            "digits": f"CASE WHEN {use0} THEN {d0} "
-            f"ELSE CASE WHEN {d1s} = '' THEN '0' ELSE {d1s} END END",
-            # get(), not [1]: bindings evaluate eagerly (struct
-            # fields), and fixed-point Java strings have no "E" part —
-            # [1] would throw under ANSI instead of NULLing
-            "exp": f"CAST(CASE WHEN {use0} THEN get({p0}, 1) "
-            f"ELSE {p1}[1] END AS INT)",
-            "sa": sa,
-            "has_e": f"size({p0}) = 2",
-            "fa": fa,
-            "neg": "__r.neg",
-        },
-        fmt,
-    )
-    return _let(
-        "__r",
-        {
-            "fa": f"abs({d})",
-            "sa": f"CAST(abs({d}) AS STRING)",
-            # sign probed from the Java string so -0.0 keeps its minus
-            "neg": f"startswith(CAST({d} AS STRING), '-')",
-        },
-        derive,
-    )
 
 
 def affinity_sql(x: str, affinity: str) -> str:
@@ -268,15 +140,11 @@ def affinity_sql(x: str, affinity: str) -> str:
     d = f"CAST({t} AS DOUBLE)"
 
     if affinity == "real":
-        # fixed-point "N.0" for every integral double below 1e16 —
-        # the exact window where CPython/SQLite float repr stays
-        # fixed-point (repr(9007199254740992.0) = '9007199254740992.0'
-        # but repr(1e16) = '1e+16'); long-cast is exact there
+        # SQLite stores a REAL zero without its sign ('-0' prints 0.0)
         return (
             f"CASE WHEN {is_int} OR {is_real} THEN "
-            f"CASE WHEN {d} = floor({d}) AND abs({d}) < 1e16 "
-            f"THEN concat(CAST(CAST({d} AS BIGINT) AS STRING), '.0') "
-            f"ELSE {python_real_repr_sql(d)} END ELSE {x} END"
+            f"CASE WHEN {d} = 0 THEN '0.0' ELSE py_real_repr({d}) END "
+            f"ELSE {x} END"
         )
 
     # integer / numeric: lossless-integral → integer form, else real.
@@ -301,26 +169,16 @@ def affinity_sql(x: str, affinity: str) -> str:
         # matching SQLite's lossless-only integer conversion
         f"CASE WHEN {is_int} AND {long_form} IS NOT NULL THEN {long_form} "
         f"WHEN {is_real} AND {integral} THEN CAST({li} AS STRING) "
-        f"WHEN {is_real} OR {is_int} THEN {python_real_repr_sql(d)} "
+        f"WHEN {is_real} OR {is_int} THEN py_real_repr({d}) "
         f"ELSE {x} END"
     )
 
 
-def _over(col: Column, text_of) -> Column:
-    """The SQL text ``text_of(name)`` evaluated over ``col``'s value:
-    ``col`` is bound to a lambda variable, and the text names it."""
-    lam = F.expr(f"__v -> {text_of('__v')}")
-    return F.call_function("transform", F.array(col), lam)[0]
-
-
-def _python_real_repr(d: Column) -> Column:
-    """:func:`python_real_repr_sql` over a double Column."""
-    return _over(d, python_real_repr_sql)
-
-
 def apply_affinity(col: Column, affinity: str) -> Column:
     """Canonicalize a raw text field Column per its column affinity
-    (:func:`affinity_sql`)."""
+    (:func:`affinity_sql`): ``col`` is bound to a lambda variable, and
+    the text names it."""
     if normalize_affinity(affinity) in ("text", "blob"):
         return col
-    return _over(col, lambda v: affinity_sql(v, affinity))
+    lam = F.expr(f"__v -> {affinity_sql('__v', affinity)}")
+    return F.call_function("transform", F.array(col), lam)[0]

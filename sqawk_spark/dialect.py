@@ -3281,8 +3281,8 @@ def _minmax_text(
     a: str, d: tuple[str, str] | None, classes: dict[str, str]
 ) -> str:
     """Argument ``a`` as SQLite prints it: an arithmetic argument with
-    a REAL operand is REAL, in CPython's repr (``1e+20``), not Java's
-    (``1.0E20``)."""
+    a REAL operand is REAL, printed by ``py_real_repr`` (CPython's
+    ``1e+20``, not Java's ``1.0E20``)."""
     if d is not None and d[0] == "numlit":
         return _quote_sql(_sqlite_num_as_text(d[1]))
     if d is not None and d[0] == "strlit":
@@ -3291,9 +3291,7 @@ def _minmax_text(
     if chain and any(
         _arith_tok_int_test(tok, td) is False for _, tok, td in chain[0]
     ):
-        from sqawk_spark.affinity import python_real_repr_sql
-
-        return python_real_repr_sql(f"CAST(({a}) AS DOUBLE)")
+        return f"py_real_repr(CAST(({a}) AS DOUBLE))"
     return f"CAST(({a}) AS STRING)"
 
 

@@ -9,6 +9,10 @@ dict_exists) genuinely need Tcl quoting rules → Python UDFs, defined
 as closures over a vendored tokenizer so executors never import this
 package. They're interop helpers for small-side data, not the bulk
 path.
+
+CPython's ``repr`` of a double, the text SQLite prints for a REAL, is
+not here: it is the JVM function ``py_real_repr`` (``sqawk_spark/jvm``),
+which every engine session registers.
 """
 
 from __future__ import annotations
@@ -748,16 +752,6 @@ def register_udfs(spark: SparkSession) -> None:
     spark.udf.register("group_concat_distinct", group_concat_distinct_agg)
     spark.udf.register(
         "group_concat_distinct_nocase", group_concat_distinct_nocase_agg
-    )
-
-    # CPython repr of a double — used by the dialect's sum() rendering
-    # for dynamic columns (the REAL branch of SQLite's per-group
-    # INTEGER/REAL sum type). Row-at-a-time is fine: it runs on
-    # group-level aggregate OUTPUTS, never on the scan.
-    spark.udf.register(
-        "py_real_repr",
-        lambda d: None if d is None else repr(float(d)),
-        T.StringType(),
     )
 
     spark.udf.register("typeof", typeof, T.StringType())

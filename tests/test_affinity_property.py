@@ -339,20 +339,19 @@ def test_cli_end_to_end_storage_class(tmp_path, spark):
 
 
 def test_python_real_repr_vs_cpython(spark):
-    """The JVM-side double renderer (affinity._python_real_repr) must
-    emit CPython ``repr`` — that is what SQLite values round-trip
+    """The JVM function ``py_real_repr`` (sqawk_spark/jvm) must emit
+    CPython ``repr`` exactly — that is what SQLite values round-trip
     through in every oracle comparison (str() on sqlite3 floats).
     Deterministic corpus: realistic magnitudes, decimal-fraction
-    texts, exponent extremes, and bit-pattern doubles. The one
-    documented residual (shortest repr needing >= 16 digits can carry
-    a last-digit wobble that still parses to the identical double,
-    e.g. the subnormal 5e-324) is filtered by construction: every
-    expected repr here is <= 15 significant digits or survives a
-    16-digit round-trip check in Java's own formatting tier."""
+    texts, exponent extremes, bit-pattern doubles, every power of two
+    (where the gap below a double is half the gap above it), the
+    subnormals at the bottom of the range, and values whose shortest
+    repr needs 16 or 17 digits."""
     import random
     import struct
 
-    from sqawk_spark.affinity import _python_real_repr
+    def from_bits(b: int) -> float:
+        return struct.unpack("<d", struct.pack("<Q", b))[0]
 
     rng = random.Random(20260814)
     vals: list[float] = []
@@ -369,25 +368,30 @@ def test_python_real_repr_vs_cpython(spark):
         e = rng.randint(-300, 307)
         vals.append(float(f"{m}e{e}"))
     for _ in range(400):
-        b = rng.getrandbits(64)
-        d = struct.unpack("<d", struct.pack("<Q", b))[0]
-        # exclude NaN/inf (handled separately) and the documented
-        # >= 16-digit-repr residual
-        if d == d and abs(d) != float("inf") and len(
-            repr(abs(d)).split("e")[0].replace(".", "").rstrip("0")
-        ) <= 15:
+        d = from_bits(rng.getrandbits(64))
+        if d == d:  # NaN's repr is checked once below
             vals.append(d)
+    for e in range(-1074, 1024):
+        vals.append(2.0**e)
+        vals.append(-(2.0**e))
+    for b in list(range(1, 40)) + [2**52 - 1, 2**52, 2**52 + 1]:
+        vals.append(from_bits(b))  # subnormals and the normal boundary
+    long_reprs = [
+        v for v in (rng.uniform(0, 1) * 10 ** rng.randint(-20, 20) for _ in range(4000))
+        if len(repr(v).split("e")[0].replace(".", "").replace("-", "").strip("0")) >= 16
+    ]
+    assert len(long_reprs) > 1000
+    vals += long_reprs
     vals += [0.0, -0.0, 1e16, -1e16, 9.5e15, 1.5e16, 1e-4, 9.9e-5,
              1e-5, 123456789.5, 2.0**63, -(2.0**63), float("inf"),
-             float("-inf"), 1e308, 1e-308]
+             float("-inf"), 1e308, 1e-308, 5e-324, -5e-324, 0.1 + 0.2,
+             9007199254740993.0, 1.7976931348623157e308, 2.2250738585072014e-308]
 
     rows = [(i, v) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "i long, d double")
     got = {
         r["i"]: r["s"]
-        for r in df.select(
-            "i", _python_real_repr(F.col("d")).alias("s")
-        ).collect()
+        for r in df.selectExpr("i", "py_real_repr(d) AS s").collect()
     }
     bad = [
         (v.hex(), repr(v), got[i])
@@ -395,6 +399,10 @@ def test_python_real_repr_vs_cpython(spark):
         if got[i] != repr(v)
     ]
     assert not bad, f"{len(bad)} repr mismatches; first 5: {bad[:5]}"
+    nan, null = spark.sql(
+        "SELECT py_real_repr(CAST('NaN' AS DOUBLE)), py_real_repr(CAST(NULL AS DOUBLE))"
+    ).first()
+    assert (nan, null) == ("nan", None)
 
 
 def test_affinity_goldens_from_reference(spark):

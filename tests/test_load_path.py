@@ -432,7 +432,9 @@ def test_warm_run_job_budget(spark, tmp_path, monkeypatch):
     listing) and samples no range partitioner: its shuffles start at
     one partition, so an ORDER BY's exchange samples nothing and the
     Python stage under it runs once, and a -dbfile read-back mutated
-    by DML is written back without a job."""
+    by DML is written back without a job. The group-by's REAL sums
+    print through the JVM ``py_real_repr``, so its plan evaluates no
+    Python."""
     listed: list[tuple] = []
     orig = Catalog.listTables
 
@@ -441,6 +443,14 @@ def test_warm_run_job_budget(spark, tmp_path, monkeypatch):
         return orig(self, *args, **kwargs)
 
     monkeypatch.setattr(Catalog, "listTables", list_tables)
+    frames: list[DataFrame] = []
+    orig_statement = cli._run_statement_with
+
+    def run_statement_with(*args, **kwargs):
+        frames.append(orig_statement(*args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(cli, "_run_statement_with", run_statement_with)
     texts, reals = ["x", "ab", "Q"], ["0.5", "1.25", "-2.25", "3"]
     mixed_lines = [
         f"{texts[i % 3] if i % 11 == 0 else i * 7 % 500},{reals[i % 4]},g{i % 12}"
@@ -476,6 +486,8 @@ def test_warm_run_job_budget(spark, tmp_path, monkeypatch):
     # the first run of each shape warms it; the second one counts
     run(groupby)
     out_groupby, jobs_groupby = _run_counting_jobs(spark, groupby)
+    (groupby_frame,) = frames[-1:]
+    groupby_plan = groupby_frame._jdf.queryExecution().executedPlan().toString()
     run(dml_argv(tmp_path / "1.db"))
     out_dml, jobs_dml = _run_counting_jobs(spark, dml_argv(tmp_path / "2.db"))
     run(read)
@@ -491,6 +503,9 @@ def test_warm_run_job_budget(spark, tmp_path, monkeypatch):
     )
     assert out_read == _sqlite_out(str(tmp_path / "2.db"), q_read)
     assert listed == []
+    assert "Aggregate" in groupby_plan and "py_real_repr(" in groupby_plan, groupby_plan
+    for node in ("BatchEvalPython", "ArrowEvalPython"):
+        assert node not in groupby_plan, groupby_plan
     # with catalog listings and 2-partition starts: 8, 13 and 6 jobs
     jobs = (jobs_groupby, jobs_dml, jobs_read)
     assert all(n <= limit for n, limit in zip(jobs, (5, 7, 3))), jobs

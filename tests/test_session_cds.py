@@ -218,6 +218,10 @@ def test_cli_output_is_byte_identical_in_every_cache_state(tmp_path):
         assert proc.stdout == want
         for stream in (proc.stdout, proc.stderr):
             assert "[cds" not in stream
+        # no WARN per SQLite function registered over a Spark built-in,
+        # no progress bar
+        for noise in ("SimpleFunctionRegistry", "[Stage"):
+            assert noise not in proc.stderr, proc.stderr[-2000:]
 
     def archives():
         return sorted(p for p in cds.iterdir() if p.name != "conf")
