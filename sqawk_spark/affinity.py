@@ -42,8 +42,10 @@ Affinity canonicalization per SQLite rules:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+
+from sqawk_spark import jvm
 
 INT_RE = r"^[+-]?\d+$"
 REAL_RE = r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$"
@@ -109,8 +111,8 @@ def column_class_for(decl: str, promoted: bool) -> str:
 # strings built in pure Python: a Column tree costs one py4j round trip
 # per node, thousands per table. ``apply_affinity`` binds a Column into
 # the same text for callers that hold Columns. A REAL value prints
-# through ``py_real_repr``, the JVM function every engine session
-# registers (``sqawk_spark/jvm``): CPython's repr of the double, which
+# through ``py_real_repr``, a JVM function (``sqawk_spark/jvm``) that
+# the session must have registered: CPython's repr of the double, which
 # is what SQLite's shell and Python's sqlite3 print (``12345678.5``
 # where Spark's cast to string gives ``1.23456785E7``).
 
@@ -180,5 +182,6 @@ def apply_affinity(col: Column, affinity: str) -> Column:
     the text names it."""
     if normalize_affinity(affinity) in ("text", "blob"):
         return col
+    jvm.register(SparkSession.active())
     lam = F.expr(f"__v -> {affinity_sql('__v', affinity)}")
     return F.call_function("transform", F.array(col), lam)[0]

@@ -12,7 +12,7 @@ path.
 
 CPython's ``repr`` of a double, the text SQLite prints for a REAL, is
 not here: it is the JVM function ``py_real_repr`` (``sqawk_spark/jvm``),
-which every engine session registers.
+which ``register_udfs`` registers with the rest.
 """
 
 from __future__ import annotations
@@ -22,8 +22,19 @@ import pandas as pd  # module-scope: pandas_udf type hints resolve here
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from sqawk_spark import jvm
+
+
+# logs a WARN for each function below that replaces a Spark built-in of
+# the same name (typeof, printf, date, ...); sqawk writes nothing on
+# stderr
+_FUNCTION_REGISTRY = "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry"
+
 
 def register_udfs(spark: SparkSession) -> None:
+    log4j = spark._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(_FUNCTION_REGISTRY, log4j.Level.ERROR)
+    jvm.register(spark)  # py_real_repr, in the rewriter's REAL renderings
     # NOTE: tokenize is defined inside this function ON PURPOSE, even
     # though sources/tcl.py has the same logic: a nested function is
     # pickled by value into the UDF closures, while an imported one is

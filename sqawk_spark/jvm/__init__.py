@@ -4,9 +4,9 @@ beside this module.
 ``pysqawk.jar`` holds ``src/pysqawk/RealRepr.java``, the SQL function
 ``py_real_repr``: CPython's ``repr`` of a double, the text sqlite3 and
 sqawk print for a REAL value. The load path's affinity text and the
-rewriter's REAL renderings call it, so every engine session registers it
-(``session.get_session``). It runs in the executor JVM, so no Python
-worker starts for it.
+rewriter's REAL renderings call it, so :func:`register` runs wherever
+those are evaluated. It runs in the executor JVM, so no Python worker
+starts for it.
 
 The jar is committed; ``python -m sqawk_spark.jvm`` rebuilds it from the
 source with ``javac --release 17`` against ``$SPARK_HOME/jars``, and
@@ -25,22 +25,31 @@ from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StringType
 
+from sqawk_spark.operators.session_cache import SessionCache
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 JAR = os.path.join(HERE, "pysqawk.jar")
 SOURCES = os.path.join(HERE, "src")
 # fixed entry times and modes, so the same classes give the same bytes
 _ENTRY_TIME = (1980, 1, 1, 0, 0, 0)
+# the functions live in the session's function registry
+_REGISTERED = SessionCache()
 
 
 def register(spark: SparkSession) -> None:
-    """Add the jar to ``spark``'s session and register its functions.
+    """Make the functions callable in ``spark``'s session, once per
+    session. The load path, ``affinity.apply_affinity`` and
+    ``functions.register_udfs`` call this, so a session pays for it
+    only when it can run one of the functions."""
+    _REGISTERED.get_or_build(spark, ("functions",), lambda: _add(spark))
 
-    This is what ``ADD JAR`` does: it puts the jar on the session's
-    class loader and ships it to the executors. The SQL statement
-    itself would first build the SQL parser, ≈0.3 s of a fresh
-    session's set-up. ``spark.driver.extraClassPath`` would serve the
-    driver only, and it rules out the start-up class cache
-    (``session.py``)."""
+
+def _add(spark: SparkSession) -> None:
+    # what ADD JAR does: the jar joins the session's class loader and
+    # ships to the executors. The SQL statement itself would first build
+    # the SQL parser (≈0.3 s in a fresh session), and
+    # spark.driver.extraClassPath would serve the driver only and rule
+    # out the start-up class cache (session.py)
     spark._jsparkSession.sessionState().resourceLoader().addJar(JAR)
     spark.udf.registerJavaFunction("py_real_repr", "pysqawk.RealRepr", StringType())
 

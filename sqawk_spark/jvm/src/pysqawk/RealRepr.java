@@ -10,10 +10,11 @@ import org.apache.spark.sql.api.java.UDF1;
  * for a REAL value. Registered as the SQL function {@code py_real_repr}.
  *
  * <p>The digits are the shortest decimal that reads back as the same
- * double. At each precision p both p-digit neighbours of the exact value
- * are tried, because at a power of two the gap below the double is half
- * the gap above it; when both read back, the closer one wins, a tie going
- * to the even last digit. The layout follows CPython: exponent form when
+ * double. At a precision p both p-digit neighbours of the exact value are
+ * tried, because at a power of two the gap below the double is half the
+ * gap above it; when both read back, the closer one wins, a tie going to
+ * the even last digit. The work is in {@code long} arithmetic on the
+ * exact value's first 18 digits. The layout follows CPython: exponent form when
  * the decimal point sits at or before the fourth place after it or more
  * than 16 places to the right of the first digit ({@code 1e-05},
  * {@code 1e+16}), a two-digit exponent at least, and {@code .0} on an
@@ -38,16 +39,10 @@ public final class RealRepr implements UDF1<Object, String> {
     }
   }
 
-  /** A number is read as its double; any other value as its text. */
+  /** Any number (a sum may be a long or a decimal) is read as its double. */
   @Override
   public String call(Object v) {
-    if (v == null) {
-      return null;
-    }
-    if (v instanceof Number) {
-      return repr(((Number) v).doubleValue());
-    }
-    return repr(Double.parseDouble(v.toString().trim()));
+    return v == null ? null : repr(((Number) v).doubleValue());
   }
 
   public static String repr(double d) {

@@ -15,9 +15,7 @@ chosen so the same logical plans scale to a multi-executor cluster:
   samples nothing. File scans keep Spark's own split sizing.
 - Arrow enabled: every Pandas-UDF hop is Arrow-batched, never per-row.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
-- Each session registers the JVM SQL functions of ``sqawk_spark/jvm``
-  (``py_real_repr``) once, and no Spark progress bar or function-
-  replacement WARN reaches stderr, which sqawk leaves empty.
+- No progress bar on stderr, which sqawk leaves empty.
 
 Start-up class cache. Every sqawk invocation is a fresh process, and
 its driver JVM spends most of its set-up loading classes. So the driver
@@ -60,9 +58,6 @@ from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
-from sqawk_spark import jvm
-from sqawk_spark.operators.session_cache import SessionCache
-
 # the JVM prints its CDS warnings (an archive it cannot use, signed jars
 # it skips while dumping) on stdout, which carries the result
 _QUIET = "-Xlog:cds*=off"
@@ -73,13 +68,6 @@ _CLASSPATH_ENV = (
 # the dumping JVM writes the archive as it exits; one slower than this
 # is killed and its archive dropped
 _DUMP_WAIT_S = 120
-# logs a WARN for each SQLite function the CLI registers over a Spark
-# built-in of the same name (typeof, printf, date, ...); sqawk writes
-# nothing on stderr
-_FUNCTION_REGISTRY = "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry"
-# the JVM functions live in the session's function registry, so each
-# session registers them once
-_JVM_FUNCTIONS = SessionCache()
 
 
 @dataclass(frozen=True)
@@ -279,7 +267,6 @@ def get_session(
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.ui.enabled": "false",
-        # no [Stage N:> progress bar on stderr
         "spark.ui.showConsoleProgress": "false",
         "spark.driver.memory": os.environ.get("SQAWK_SPARK_DRIVER_MEM", "8g"),
         **(extra_conf or {}),
@@ -301,11 +288,4 @@ def get_session(
         if launch:
             del os.environ["SPARK_CONF_DIR"]
     spark.sparkContext.setLogLevel("WARN")
-    _JVM_FUNCTIONS.get_or_build(spark, ("jvm",), lambda: _prepare(spark))
     return spark
-
-
-def _prepare(spark: SparkSession) -> None:
-    log4j = spark._jvm.org.apache.logging.log4j
-    log4j.core.config.Configurator.setLevel(_FUNCTION_REGISTRY, log4j.Level.ERROR)
-    jvm.register(spark)

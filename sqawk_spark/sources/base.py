@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sqawk_spark import jvm
 from sqawk_spark.affinity import (
     INT_RE,
     affinity_sql,
@@ -370,4 +371,5 @@ def build_table(
             value = affinity_sql(raw, decl(i))
         cols.append(f"{value} AS {_ident(names[i])}")
         classes[names[i].lower()] = column_class_for(decl(i), int_flags[i])
+    jvm.register(spark)  # affinity_sql prints REAL values with py_real_repr
     return body.selectExpr(*cols)

@@ -431,9 +431,9 @@ def test_warm_run_job_budget(spark, tmp_path, monkeypatch):
     """A warm run over small inputs lists no catalog (two jobs per
     listing) and samples no range partitioner: its shuffles start at
     one partition, so an ORDER BY's exchange samples nothing and the
-    Python stage under it runs once, and a -dbfile read-back mutated
-    by DML is written back without a job. The group-by's REAL sums
-    print through the JVM ``py_real_repr``, so its plan evaluates no
+    stage under it runs once, and a -dbfile read-back mutated by DML
+    is written back without a job. The group-by's REAL sums print
+    through the JVM ``py_real_repr``, so its plan evaluates no
     Python."""
     listed: list[tuple] = []
     orig = Catalog.listTables
@@ -486,8 +486,7 @@ def test_warm_run_job_budget(spark, tmp_path, monkeypatch):
     # the first run of each shape warms it; the second one counts
     run(groupby)
     out_groupby, jobs_groupby = _run_counting_jobs(spark, groupby)
-    (groupby_frame,) = frames[-1:]
-    groupby_plan = groupby_frame._jdf.queryExecution().executedPlan().toString()
+    groupby_plan = frames[-1]._jdf.queryExecution().executedPlan().toString()
     run(dml_argv(tmp_path / "1.db"))
     out_dml, jobs_dml = _run_counting_jobs(spark, dml_argv(tmp_path / "2.db"))
     run(read)
