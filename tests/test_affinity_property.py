@@ -378,7 +378,7 @@ def test_python_real_repr_vs_cpython(spark):
         vals.append(from_bits(b))  # subnormals and the normal boundary
     long_reprs = [
         v for v in (rng.uniform(0, 1) * 10 ** rng.randint(-20, 20) for _ in range(4000))
-        if len(repr(v).split("e")[0].replace(".", "").replace("-", "").strip("0")) >= 16
+        if len(repr(v).split("e")[0].replace(".", "").strip("0")) >= 16
     ]
     assert len(long_reprs) > 1000
     vals += long_reprs

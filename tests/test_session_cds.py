@@ -155,7 +155,7 @@ def test_publish_leaves_one_archive(install):
     with open(launch.dump, "wb") as f:
         f.write(b"archive")
     session.publish_archive(_Exited(0), launch)
-    assert sorted(p.name for p in install.cds.iterdir()) == [f"{key}.7.jsa", "conf"]
+    assert sorted(p.name for p in install.cds.iterdir()) == sorted([f"{key}.7.jsa", "conf"])
 
 
 def test_failed_dump_publishes_nothing(install):
